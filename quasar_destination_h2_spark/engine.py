@@ -316,10 +316,11 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Incremental index append — the nightly-crawl story
         for the ANN index (the dedup_cross_corpus analogue): assign
-        ``new_emb`` against the STORED centroids (bounded n_list
-        broadcast, one pass over the batch only — the corpus is
-        never rescanned), append the scored assignment to the
-        bucketed inverted lists under the SAME build id (probes keep
+        ``new_emb`` against the STORED centroids (one driver read of
+        the n_list-row table serves the build-id check, the drift
+        baseline and the assign literals; one pass over the batch
+        only — the corpus is never rescanned), append the scored
+        assignment to the bucketed inverted lists under the SAME build id (probes keep
         reading co-located buckets; ann_topk's torn-build check
         still holds because the id matches), and return a one-row
         drift report:
@@ -342,18 +343,22 @@ class Engine:
         from .idents import storage_safe_name
         from .operators import similarity
 
-        cents = self.table(f"{name}_centroids")
-        cid = [
-            r.build_id for r in cents.select("build_id").distinct().collect()
-        ]
+        # one read of the n_list-row centroid table serves the
+        # build-id check, the drift baseline and the assign literals
+        rows = (
+            self.table(f"{name}_centroids")
+            .select("centroid_id", "cvec", "build_id", "build_mean_sim_micro")
+            .collect()
+        )
+        cid = list(dict.fromkeys(r.build_id for r in rows))
         if len(cid) != 1:
             raise ValueError(
                 f"ANN index {name!r} centroids carry build ids {cid} — "
                 "re-run build_ivf_index before appending"
             )
-        build_mean = cents.select("build_mean_sim_micro").first()[0]
+        build_mean = rows[0].build_mean_sim_micro
         batch = similarity._assign_scored(
-            new_emb, cents.select("centroid_id", "cvec"), id_col, vec_col
+            new_emb, rows, id_col, vec_col
         ).withColumn("build_id", F.lit(cid[0])).localCheckpoint()
         physical = storage_safe_name(f"{name}_assigned")
         self._ann_verified.pop(name, None)
@@ -392,14 +397,27 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Query-table-driven ANN search over an index built by
         :meth:`build_ivf_index` — probes the stored bucketed
-        inverted lists; no rebuild, no per-query replanning. Raises
-        if the two index tables carry different build ids (a torn
-        rebuild — see build_ivf_index)."""
+        inverted lists; no rebuild, no per-query replanning.
+
+        One driver read of the n_list-row centroid table (centroid
+        id, vector, build id) serves both the torn-build check —
+        raises if the two index tables carry different build ids (a
+        torn rebuild, see build_ivf_index) — and the centroid
+        literals of similarity.ann_search: each query picks its
+        ``nprobe`` lists in a per-row expression, the probe frame is
+        broadcast into one equality join on the co-located
+        centroid_id buckets, and a per-query window keeps the top
+        ``k``. Four Spark jobs per steady-state call, centroid read
+        included (pinned by tests/test_bucketing.py)."""
         from .operators import similarity
 
         assigned = self.table(f"{name}_assigned")
-        cents = self.table(f"{name}_centroids")
-        cid = [r.build_id for r in cents.select("build_id").distinct().collect()]
+        rows = (
+            self.table(f"{name}_centroids")
+            .select("centroid_id", "cvec", "build_id")
+            .collect()
+        )
+        cid = list(dict.fromkeys(r.build_id for r in rows))
         # DISTINCT over the assignment side, not limit(1): a torn
         # overwrite / bad append can leave rows from SEVERAL builds
         # interleaved, and a sampled single row can accidentally
@@ -431,7 +449,7 @@ class Engine:
             self._ann_verified[name] = cid[0]
         return similarity.ann_search(
             assigned,
-            cents,
+            rows,
             queries,
             k=k,
             nprobe=nprobe,
@@ -1573,7 +1591,7 @@ class Engine:
         sibling of :meth:`build_ivf_index`: tokenize the corpus ONCE
         (text.build_postings), materialize the (doc_id, dl, tok, tf)
         postings as ``{name}_postings`` BUCKETED by ``tok`` (every
-        :meth:`text_search` term semi-join and df groupBy reads
+        :meth:`text_search` term prune and df window reads
         co-located inverted lists — no index-side exchange; pinned
         by tests/test_text_index.py) and the one-row corpus stats
         (n_docs, sum_dl) as ``{name}_stats``.
@@ -1723,41 +1741,52 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Query-table-driven BM25 retrieval over an index
         built by :meth:`build_text_index` — probes the stored
-        bucketed postings via text.bm25_probe; no re-tokenization,
-        no corpus scan, no per-query replanning. Raises if the two
-        index tables disagree on build id or revision (a torn build
-        or append — see build_text_index). Verification is one
-        column-pruned scan of the postings' (build_id, revision),
-        memoized per (id, revision) exactly like ann_topk's check —
-        serving calls after the first pay only the one-row stats
-        read.
+        bucketed postings; no re-tokenization, no corpus scan, no
+        per-query replanning.
 
-        Term pushdown: a serving batch's vocabulary is bounded, so
-        its distinct terms are collected (driver-side, capped at
-        ``max_pushdown_terms``) and pushed as a literal IN filter on
-        the postings scan — Spark then BUCKET-PRUNES the read to the
-        buckets holding query terms (``SelectedBucketsCount`` k out
-        of n in the plan) and row-group-prunes within them via the
-        tok-sorted layout, so probe I/O is sized by the query terms'
-        postings, not the index (pinned by tests/test_text_index.py).
-        Semantics are unchanged — the IN set is exactly the term set
-        bm25_probe's semi-join prunes to. A batch with more distinct
-        terms than the cap skips the pushdown and falls back to the
-        pure semi-join plan (set ``max_pushdown_terms=0`` to force
-        that path)."""
-        from pyspark.sql import functions as F
+        The plan is built from two driver reads of bounded inputs:
 
+        - the one-row stats table, read ONCE: its build id and
+          revision serve the torn-state check, and its n_docs /
+          sum_dl enter the BM25 expression as literals
+          (text.bm25_probe_held). Raises if the two index tables
+          disagree on build id or revision (a torn build or append —
+          see build_text_index). The postings side of that check is
+          one column-pruned scan of (build_id, revision), memoized
+          per (id, revision), so serving calls after the first pay
+          only the stats read;
+        - the query batch, read in one job and capped at
+          ``max_pushdown_terms`` rows (text.held_batch). Its distinct
+          terms become a literal IN filter on the postings scan, so
+          Spark BUCKET-PRUNES the read to the buckets holding query
+          terms (``SelectedBucketsCount`` k out of n in the plan) and
+          row-group-prunes within them via the tok-sorted layout; a
+          literal term -> query ids map replaces any join with the
+          query table.
+
+        The executed plan is then one bucketed postings scan (df as
+        a tok-partitioned window, co-located), one exchange on
+        query_id, and the per-query sum and top-``topn`` window:
+        four Spark jobs per steady-state call, both reads included
+        (pinned by tests/test_text_index.py).
+
+        A batch of more than ``max_pushdown_terms`` rows (or whose
+        query_id type has no literal form) is not held on the
+        driver: it runs text.bm25_probe's semi-join plan against the
+        unpruned postings, with the same results (set
+        ``max_pushdown_terms=0`` to force that path)."""
         from .operators import text
 
         postings = self.table(f"{name}_postings")
         stats_tbl = self.table(f"{name}_stats")
-        srows = stats_tbl.select("build_id", "revision").collect()
+        srows = stats_tbl.collect()
         if len(srows) != 1:
             raise ValueError(
                 f"text index {name!r} stats table has {len(srows)} rows — "
                 "re-run build_text_index"
             )
-        want = (srows[0].build_id, int(srows[0].revision))
+        srow = srows[0]
+        want = (srow.build_id, int(srow.revision))
         if self._text_verified.get(name) != want:
             seen = sorted(
                 (r.build_id, int(r.revision))
@@ -1779,21 +1808,14 @@ class Engine:
                 )
             self._text_verified[name] = want
         index = postings.select("doc_id", "dl", "tok", "tf")
-        if max_pushdown_terms > 0:
-            terms = [
-                r.term
-                for r in queries.select("term")
-                .distinct()
-                .limit(max_pushdown_terms + 1)
-                .collect()
-            ]
-            if len(terms) <= max_pushdown_terms:
-                index = index.where(F.col("tok").isin(terms))
-        return text.bm25_probe(
-            index,
-            stats_tbl.select("n_docs", "sum_dl"),
-            queries,
-            topn,
+        held = text.held_batch(queries, max_pushdown_terms)
+        if held is None:
+            return text.bm25_probe(
+                index, stats_tbl.select("n_docs", "sum_dl"), queries, topn
+            )
+        batch, qid_type = held
+        return text.bm25_probe_held(
+            index, srow.n_docs, srow.sum_dl, batch, qid_type, topn
         )
 
     def build_graph_index(

@@ -191,9 +191,14 @@ def ivf_centroids(
     )
 
 
-def _centroid_rows(cents: DataFrame) -> list[tuple[int, list[float]]]:
+def _centroid_rows(
+    cents: "DataFrame | list",
+) -> list[tuple[int, list[float]]]:
     """Driver-collected (centroid_id, cvec) pairs of a BOUNDED
     quantizer frame (n_list or m x k rows — never corpus-sized).
+    ``cents`` may also be rows the caller already collected (any Row
+    carrying ``centroid_id`` and ``cvec``), so one read of a stored
+    centroid table can serve a build-id check and the literals.
 
     r16 optimization (guide §2.4 — remove shuffles outright): the
     assign/encode argmaxes used to be broadcast-crossJoin + groupBy
@@ -207,9 +212,13 @@ def _centroid_rows(cents: DataFrame) -> list[tuple[int, list[float]]]:
     training rounds no longer need per-round checkpoints. float32
     values widen to double exactly; every cosine here already cast to
     double, so the arithmetic is bit-identical."""
+    rows = (
+        cents
+        if isinstance(cents, list)
+        else cents.select("centroid_id", "cvec").collect()
+    )
     return [
-        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
-        for r in cents.select("centroid_id", "cvec").collect()
+        (int(r["centroid_id"]), [float(x) for x in r["cvec"]]) for r in rows
     ]
 
 
@@ -281,14 +290,24 @@ def _nearest_struct(vec_sql: str, rows: list[tuple[int, list[float]]]) -> Column
     one cosine subtree per entry) measured 3-5 s of pure DRIVER time
     per call site at n_list=16 x dim=64; the one-string form parses
     in milliseconds and evaluates identically."""
+    return F.expr(_entry_scores_sql(vec_sql, rows, "array_max({})"))
+
+
+def _entry_scores_sql(
+    vec_sql: str, rows: list[tuple[int, list[float]]], reduce: str
+) -> str:
+    """SQL of ``reduce`` (a format string, ``{}`` = the array) applied
+    to the per-entry array<struct<s, nc>> of one vector against the
+    literal entries: s = round(cosine(vec, cv), 6), nc = -id, the
+    vector's norm bound once. See :func:`_nearest_struct`."""
     norm_v = f"SQRT({_SQL_DOT.format(a=vec_sql, b=vec_sql)})"
     dot = _SQL_DOT.format(a=vec_sql, b="c.cv")
-    return F.expr(
-        f"transform(array({norm_v}), nv -> "
-        f"array_max(transform({_sql_entries(rows)}, c -> named_struct("
+    scores = (
+        f"transform({_sql_entries(rows)}, c -> named_struct("
         f"'s', round({dot} / (nv * c.n), 6), "
-        f"'nc', -c.id))))[0]"
+        f"'nc', -c.id))"
     )
+    return f"transform(array({norm_v}), nv -> {reduce.format(scores)})[0]"
 
 
 def _nearest_l2_struct(
@@ -453,7 +472,7 @@ def kmeans_refine(
 
 def _assign_scored(
     emb: DataFrame,
-    cents: DataFrame,
+    cents: "DataFrame | list",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -784,7 +803,7 @@ def ivf_topk_nprobe(
 
 def ann_search(
     assigned: DataFrame,
-    cents: DataFrame,
+    cents: "DataFrame | list",
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 2,
@@ -801,15 +820,22 @@ def ann_search(
     (ivf_assign + ivf_centroids/kmeans_refine), typically stored
     ONCE via ``engine.build_ivf_index`` with the assignment
     bucketed BY centroid_id so every probe join reads co-located
-    inverted lists.
+    inverted lists. ``cents`` is the centroid frame or its rows
+    already collected (engine.ann_topk reads them once for its
+    build-id check and passes them on).
 
-    Shape: the n_list-row centroid frame broadcasts onto the query
-    table (bounded work per query, window top-nprobe per query over
-    the n_list-scored frame), then ONE equality join on centroid_id
-    against the stored lists — per query, nprobe lists are scanned,
-    never the corpus — and a per-query row_number top-k. No rebuild,
-    no per-query replanning; query count scales the probe join's
-    small side only.
+    Shape: the n_list centroids are driver-held plan LITERALS
+    (:func:`_centroid_rows`, the literal-argmax of :func:`ivf_assign`).
+    Each query row scores every literal centroid in one per-row
+    expression, ``sort_array``s the (6-rounded cosine, -centroid_id)
+    structs descending and keeps the first ``nprobe`` — the same
+    scores and the same lower-id tie order as a window top-nprobe,
+    with no centroid broadcast, no cross join and no window. The
+    exploded (query, list) frame then meets the stored lists in ONE
+    equality join on centroid_id — per query, nprobe lists are
+    scanned, never the corpus — and a per-query row_number top-k.
+    No rebuild, no per-query replanning; query count scales the
+    probe join's small side only.
 
     ``broadcast_queries`` (default True — the serving contract: a
     probe call carries a bounded query BATCH) hints the probe frame
@@ -821,23 +847,22 @@ def ann_search(
     co-located buckets without a shuffle.
 
     Output: (query_id, neighbor_id, centroid_id, cos_sim, rank)."""
-    probes = queries.select(
+    rows = _centroid_rows(cents)
+    qv = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("qv"),
-    ).crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "qv",
-        "centroid_id",
-        F.round(cosine(F.col("qv"), F.col("cvec")), 6).alias("_sim"),
     )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("centroid_id")
-    )
-    q = (
-        probes.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
+    if rows:
+        top = _entry_scores_sql(
+            "qv", rows, f"slice(sort_array({{}}, false), 1, {max(nprobe, 0)})"
+        )
+        q = qv.select(
+            "query_id", "qv", F.explode(F.expr(top)).alias("_p")
+        ).select("query_id", "qv", (-F.col("_p.nc")).alias("centroid_id"))
+    else:
+        q = qv.select(
+            "query_id", "qv", F.lit(None).cast("bigint").alias("centroid_id")
+        ).where(F.lit(False))
     c = assigned.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),

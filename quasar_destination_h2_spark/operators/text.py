@@ -14,6 +14,9 @@ xxhash64 (8x faster, still stable) — the plan shape is unchanged.
 
 from __future__ import annotations
 
+import json
+import zlib
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 #: Marker stopword sets for the n-gram/stopword language-ID heuristic.
@@ -1091,6 +1094,23 @@ def build_postings(
     return postings, stats
 
 
+def _bm25_u12_sql(n_docs: str, sum_dl: str) -> str:
+    """SQL of one posting's exact integer-u12 BM25 contribution over
+    the columns ``df``, ``tf`` and ``dl``: 6-rounded idf times the
+    6-rounded tf-norm, each lifted to bigint micro-units through
+    DECIMAL (the :func:`bm25_search` arithmetic). ``n_docs`` and
+    ``sum_dl`` are bigint SQL operands: the stats columns, or literals
+    of the driver-read stats row (same types, same operations, so the
+    same doubles)."""
+    return (
+        f"CAST(CAST(round(ln(1.0 + ({n_docs} - df + 0.5) / (df + 0.5)), 6)"
+        f" AS DECIMAL(28,10)) * 1000000 AS BIGINT)"
+        f" * CAST(CAST(round(tf * ({BM25_K1} + 1) / (tf + {BM25_K1} * "
+        f"(1 - {BM25_B} + {BM25_B} * dl / ({sum_dl} / {n_docs}))), 6)"
+        f" AS DECIMAL(28,10)) * 1000000 AS BIGINT)"
+    )
+
+
 def bm25_probe(
     postings: DataFrame,
     stats: DataFrame,
@@ -1099,8 +1119,10 @@ def bm25_probe(
 ) -> DataFrame:
     """The probe half of :func:`bm25_search_many`: score a
     (query_id, term) query table against a prebuilt postings index
-    (see :func:`build_postings`) — the serving path
-    engine.text_search runs against the STORED bucketed index.
+    (see :func:`build_postings`) entirely inside the plan. It is the
+    batch path of bm25_search_many and engine.text_search's path for a
+    batch too large to hold on the driver (:func:`held_batch`);
+    smaller batches go through :func:`bm25_probe_held`.
 
     Postings are pruned to the query term set by a semi-join BEFORE
     anything else touches them (over a tok-bucketed store both the
@@ -1117,13 +1139,7 @@ def bm25_probe(
     dfreq = pruned.groupBy("tok").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )
-    u12 = F.expr(
-        f"CAST(CAST(round(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6)"
-        f" AS DECIMAL(28,10)) * 1000000 AS BIGINT)"
-        f" * CAST(CAST(round(tf * ({BM25_K1} + 1) / (tf + {BM25_K1} * "
-        f"(1 - {BM25_B} + {BM25_B} * dl / (sum_dl / n_docs))), 6)"
-        f" AS DECIMAL(28,10)) * 1000000 AS BIGINT)"
-    )
+    u12 = F.expr(_bm25_u12_sql("n_docs", "sum_dl"))
     # distinct BEFORE the join: a query table carrying duplicate
     # (query_id, term) rows (easy in a mined table) must count a
     # term ONCE — BM25 scores a term SET; a raw join would sum that
@@ -1141,6 +1157,12 @@ def bm25_probe(
         F.max("dl").alias("dl"),
         F.sum("u12").cast("bigint").alias("score_u12"),
     )
+    return _top_per_query(scored, topn)
+
+
+def _top_per_query(scored: DataFrame, topn: int) -> DataFrame:
+    """Per-query row_number top-N of a (query_id, doc_id, dl,
+    score_u12) frame: best score first, ties to the lower doc id."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_u12").desc(), F.col("doc_id")
     )
@@ -1149,6 +1171,144 @@ def bm25_probe(
         .where(F.col("rank") <= topn)
         .select("query_id", "doc_id", "dl", "score_u12", "rank")
     )
+
+
+#: query_id types whose values a JSON literal carries exactly (the
+#: term -> query ids map of :func:`bm25_probe_held`)
+_HELD_QID_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "string"})
+
+
+def _sql_string(s: str) -> str:
+    """SQL literal of a string. A string holding a quote or a backslash
+    becomes its UTF-8 bytes as a binary literal cast back to STRING,
+    which no parser setting can misread (constant-folded to a plain
+    string literal before planning, so IN-list pushdown and bucket
+    pruning still see an ordinary literal)."""
+    if "'" in s or "\\" in s:
+        return f"CAST(X'{s.encode('utf-8').hex()}' AS STRING)"
+    return f"'{s}'"
+
+
+def held_batch(
+    queries: DataFrame, cap: int
+) -> "tuple[list[tuple], str] | None":
+    """Read a bounded (query_id, term) query batch to the driver for
+    :func:`bm25_probe_held`: ``(rows, query_id type)``, or None when
+    the batch cannot be held — more than ``cap`` rows (``cap`` <= 0
+    never holds), a non-string ``term`` or a query_id type the literal
+    plan does not render. The limited batch comes back through Arrow:
+    ONE job whose tasks read every partition in parallel (a plain
+    limit-collect scans one partition first and the rest in a second
+    job; a coalesce to one partition reads them one after another)."""
+    if cap <= 0:
+        return None
+    batch = queries.select("query_id", "term")
+    types = dict(batch.dtypes)
+    if types["term"] != "string" or types["query_id"] not in _HELD_QID_TYPES:
+        return None
+    table = batch.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    rows = zip(
+        table.column("query_id").to_pylist(), table.column("term").to_pylist()
+    )
+    return list(rows), types["query_id"]
+
+
+def bm25_probe_held(
+    postings: DataFrame,
+    n_docs: int,
+    sum_dl: "int | None",
+    batch: "list[tuple]",
+    query_id_type: str,
+    topn: int = 10,
+) -> DataFrame:
+    """BM25 probe of a driver-held query batch (:func:`held_batch`)
+    against a postings index, with the corpus stats row already read
+    (``n_docs``, ``sum_dl``): the serving plan engine.text_search
+    runs. Everything bounded is a plan literal, so the only inputs
+    the plan reads are the postings:
+
+    - the batch's distinct terms are a literal IN filter on the
+      postings scan (bucket pruning on a tok-bucketed store,
+      row-group pruning on its tok-sorted files);
+    - df per term is a count window partitioned by tok over the
+      pruned scan — co-located on the tok buckets, one scan;
+    - a literal ``map<term, array<query_id>>`` explodes each posting
+      onto the queries holding its term (a duplicate (query_id, term)
+      row counts once; a NULL term matches nothing);
+    - n_docs / sum_dl are bigint literals in the u12 expression;
+    - one repartition by query_id serves both the (query_id, doc_id)
+      sum and the per-query top-N window.
+
+    Same integer-u12 arithmetic and tie order as :func:`bm25_probe`,
+    so the rows are identical (parity pinned in
+    tests/test_text_index.py). Output: (query_id, doc_id, dl,
+    score_u12, rank)."""
+    by_term: dict[str, dict] = {}
+    for qid, term in batch:
+        if term is not None:
+            by_term.setdefault(term, {})[qid] = None
+    if not by_term or not n_docs:
+        # nothing to score (and a 0-document corpus has no postings;
+        # its 0/0 average length would fail constant folding)
+        return postings.select(
+            F.lit(None).cast(query_id_type).alias("query_id"),
+            "doc_id",
+            "dl",
+            F.lit(None).cast("bigint").alias("score_u12"),
+            F.lit(None).cast("bigint").alias("rank"),
+        ).where(F.lit(False))
+
+    # the term -> query ids map is ONE json string literal that
+    # from_json turns into a map literal at constant folding (a SQL
+    # map of thousands of typed literals costs seconds to parse and
+    # optimize). Spark looks a map key up by linear scan, so it is
+    # split into ~8-entry maps by crc32(term) — the same bytes hash on
+    # the driver (zlib) and in Spark — and a posting reads only its
+    # term's map, however many terms the batch holds.
+    terms = sorted(by_term)
+    n_maps = max(1, len(terms) // 8)
+    parts: list[dict] = [{} for _ in range(n_maps)]
+    for t in terms:
+        parts[zlib.crc32(t.encode("utf-8")) % n_maps][t] = list(by_term[t])
+    lookup = (
+        f"from_json({_sql_string(json.dumps(parts, ensure_ascii=False))}, "
+        f"'array<map<string, array<{query_id_type}>>>')"
+        f"[CAST(crc32(tok) % {n_maps} AS INT)][tok]"
+    )
+    in_list = ", ".join(map(_sql_string, terms))
+    u12 = _bm25_u12_sql(
+        f"CAST({int(n_docs)} AS BIGINT)", f"CAST({int(sum_dl)} AS BIGINT)"
+    )
+    hits = (
+        postings.where(F.expr(f"tok IN ({in_list})"))
+        .select(
+            "tok",
+            "doc_id",
+            "dl",
+            "tf",
+            F.count(F.lit(1)).over(Window.partitionBy("tok")).alias("df"),
+        )
+        .select(
+            "doc_id",
+            "dl",
+            F.expr(u12).alias("u12"),
+            F.expr(lookup).alias("_qids"),
+        )
+    )
+    scored = (
+        hits.select(
+            F.explode("_qids").alias("query_id"), "doc_id", "dl", "u12"
+        )
+        .repartition("query_id")
+        .groupBy("query_id", "doc_id")
+        .agg(
+            F.max("dl").alias("dl"),
+            F.sum("u12").cast("bigint").alias("score_u12"),
+        )
+    )
+    return _top_per_query(scored, topn)
 
 
 def vocab_drift(

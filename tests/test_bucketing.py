@@ -210,12 +210,14 @@ def test_ann_index_lifecycle(engine, spark):
             map(tuple, engine.ann_topk("annix", queries, k=3, nprobe=2).collect())
         )
     # probe-many: identical answers, and the probe reads the STORED
-    # index tables — the only embeddings scan is the query-table
-    # input itself (queries here are derived from the corpus)
+    # index — the assignment table in the plan, the centroids as
+    # driver-read literals (so no centroid scan) — and the only
+    # embeddings scan is the query-table input itself (queries here
+    # are derived from the corpus)
     import re as _re
 
     assert rows1 == rows2 and len(rows1) == 15
-    assert "annix_centroids" in plan and "annix_assigned" in plan
+    assert "annix_assigned" in plan and "annix_centroids" not in plan
     n_emb_scans = len(
         _re.findall(r"FileScan parquet [^\n]*embeddings\.parquet", plan)
     )
@@ -252,6 +254,143 @@ def test_ann_index_lifecycle(engine, spark):
     # kmeans_iters=0 keeps the md5 seeds (baseline index)
     engine.build_ivf_index("annix0", emb, n_list=8, kmeans_iters=0)
     assert engine.table("annix0_centroids").count() == 8
+
+
+def _window_ann_reference(assigned, cents, queries, k, nprobe):
+    """The reference IVF probe, all in the plan: every centroid scored
+    against every query through a cross join, a window top-nprobe per
+    query (ties to the lower centroid id), the list join and a
+    per-query window top-k."""
+    from pyspark.sql import Window
+
+    from quasar_destination_h2_spark.operators import similarity
+
+    sim = lambda a, b: F.round(similarity.cosine(F.col(a), F.col(b)), 6)  # noqa: E731
+    lists = (
+        queries.crossJoin(cents.select("centroid_id", "cvec"))
+        .withColumn(
+            "_rn",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    sim("qv", "cvec").desc(), "centroid_id"
+                )
+            ),
+        )
+        .where(F.col("_rn") <= nprobe)
+        .select("query_id", "qv", "centroid_id")
+    )
+    scored = (
+        assigned.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("cv"),
+            "centroid_id",
+        )
+        .join(lists, "centroid_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "centroid_id",
+            sim("qv", "cv").alias("cos_sim"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "centroid_id", "cos_sim", "rank")
+    )
+
+
+def _probe_queries(spark, n=5, dim=64):
+    """Query vectors near the _clustered blocks (not corpus rows)."""
+    rows = []
+    for q in range(n):
+        c = (q * 3) % 8
+        rows.append(
+            (q, [(1.0 if c * 8 <= d < c * 8 + 8 else 0.0) + ((q * 5 + d) % 7 - 3) / 9.0
+                 for d in range(dim)])
+        )
+    return spark.createDataFrame(rows, "query_id int, qv array<double>")
+
+
+@pytest.fixture(scope="module")
+def probe_index(engine, spark):
+    engine.build_ivf_index(
+        "annp", _clustered(spark, per=10), n_list=8, kmeans_iters=1, n_buckets=4
+    )
+    return engine.table("annp_assigned"), engine.table("annp_centroids")
+
+
+@pytest.mark.parametrize("nprobe", [1, 3, 8, 20])
+def test_ann_probe_matches_window_reference(engine, spark, probe_index, nprobe):
+    """The literal-centroid probe equals the cross-join + window
+    reference row for row at nprobe=1, a middle value, nprobe = n_list
+    and nprobe > n_list — and probing every list is the exact top-k."""
+    assigned, cents = probe_index
+    queries = _probe_queries(spark)
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    got = rows(engine.ann_topk("annp", queries, k=6, nprobe=nprobe))
+    assert got == rows(_window_ann_reference(assigned, cents, queries, 6, nprobe))
+    assert len(got) == 5 * 6
+    if nprobe >= cents.count():
+        # every list probed: the exact top-k over the whole assignment
+        from pyspark.sql import Window
+
+        from quasar_destination_h2_spark.operators import similarity
+
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("cos_sim"), "neighbor_id"
+        )
+        exact = (
+            assigned.crossJoin(queries)
+            .select(
+                "query_id",
+                F.col("vec_id").alias("neighbor_id"),
+                "centroid_id",
+                F.round(
+                    similarity.cosine(F.col("qv"), F.col("embedding")), 6
+                ).alias("cos_sim"),
+            )
+            .withColumn("rank", F.row_number().over(w).cast("int"))
+            .where("rank <= 6")
+        )
+        assert got == rows(exact)
+
+
+def test_ann_probe_tied_centroids_pick_lower_id(spark):
+    """Centroids 3 and 5 are the same vector, so every query scores
+    them equally: nprobe=1 probes list 3 only, nprobe=2 both — the
+    window reference's lower-id tie order."""
+    from quasar_destination_h2_spark.operators import similarity
+
+    cents = spark.createDataFrame(
+        [(5, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0]), (9, [0.0, 1.0, 0.0])],
+        "centroid_id bigint, cvec array<double>",
+    )
+    assigned = spark.createDataFrame(
+        [(i, [1.0, 0.1 * i, 0.0], [3, 5, 9][i % 3]) for i in range(12)],
+        "vec_id bigint, embedding array<double>, centroid_id bigint",
+    )
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.2, 0.0]), (1, [0.9, 0.0, 0.1])], "query_id int, qv array<double>"
+    )
+    for nprobe, lists in ((1, {3}), (2, {3, 5})):
+        got = similarity.ann_search(assigned, cents, queries, k=10, nprobe=nprobe)
+        ref = _window_ann_reference(assigned, cents, queries, 10, nprobe)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+        assert {r.centroid_id for r in got.collect()} == lists
+
+
+def test_ann_probe_job_budget(engine, spark, probe_index):
+    """A steady-state probe (verify memo warm) runs at most 4 Spark
+    jobs: the centroid read, the probe-frame broadcast, the list-join
+    stage and the per-query top-k stage."""
+    sched = spark._jsparkSession.sparkContext().dagScheduler()
+    engine.ann_topk("annp", _probe_queries(spark), k=6, nprobe=3).collect()
+    queries = _probe_queries(spark)
+    start = sched.nextJobId()
+    engine.ann_topk("annp", queries, k=6, nprobe=3).collect()
+    assert sched.nextJobId() - start <= 4
 
 
 def _clustered(spark, K=8, per=40, dim=64, start=0, shift=0.0):

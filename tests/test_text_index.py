@@ -7,9 +7,14 @@ index lifecycle:
 - exact appends: (build + append) serves bit-identical scores to a
   rebuild on the union — BM25 state is additive (postings union,
   stats sums), unlike the ANN index's frozen centroids;
-- co-location: the probe's term semi-join and df groupBy over the
+- co-location: the probe's literal term prune and df window over the
   tok-bucketed postings run WITHOUT a hash-partitioning exchange on
-  the index side;
+  the index side, and bucket pruning reads exactly the query terms'
+  buckets;
+- the driver-held plan (text.bm25_probe_held) equals the reference
+  bm25_search_many on awkward batches, the over-cap batch falls back
+  to the semi-join plan, and a steady-state probe stays within its
+  Spark job budget;
 - torn-state detection: postings revision ahead of the stats row
   (an append whose stats rewrite failed) refuses to serve;
 - the vocabulary-drift report: new_term_ppm is 0 for a same-vocab
@@ -140,12 +145,11 @@ def test_probe_is_colocated_on_bucketed_postings(engine, spark):
             .executedPlan()
             .toString()
         )
-    # the index side (semi-join prune + df groupBy) must reuse the
+    # the index side (literal IN prune + df window) must reuse the
     # bucketed layout: bucketed reads active on every postings scan,
     # never planner-disabled, and no Exchange sits between a
-    # postings scan and its consuming join/aggregate. Exchanges on
-    # the bounded query-table side are fine (and disappear entirely
-    # once broadcast is re-enabled).
+    # postings scan and its consuming window. The one exchange is
+    # the query_id repartition above the scored postings.
     assert "disabled by query planner" not in plan, plan
     lines = plan.splitlines()
     scan_ix = [
@@ -153,41 +157,115 @@ def test_probe_is_colocated_on_bucketed_postings(engine, spark):
         for i, l in enumerate(lines)
         if "FileScan parquet" in l and "_postings" in l
     ]
-    assert len(scan_ix) >= 2, plan  # prune branch + df branch
+    assert len(scan_ix) == 1, plan  # one scan feeds the prune and df
     for i in scan_ix:
         assert "SelectedBucketsCount" in lines[i], lines[i]
         above = "\n".join(lines[max(0, i - 3) : i])
         assert "Exchange hashpartitioning" not in above, plan
 
 
-def test_probe_bucket_prunes_to_query_terms(engine, spark):
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _selected_buckets(plan: str) -> list[tuple[int, int]]:
     import re
 
-    engine.build_text_index("ti_prune", docs_df(spark, DOCS_A), n_buckets=nb(spark))
+    return [
+        (int(m.group(1)), int(m.group(2)))
+        for m in re.finditer(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
+    ]
+
+
+def test_probe_bucket_prunes_to_query_terms(engine, spark):
+    n = nb(spark)
+    engine.build_text_index("ti_prune", docs_df(spark, DOCS_A), n_buckets=n)
     plan = (
         engine.text_search("ti_prune", qdf(spark), topn=3)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    # the literal IN pushdown must reach the postings scans and
-    # bucket-prune the read: probe I/O is sized by the query terms'
+    # the literal IN pushdown must reach the postings scan and
+    # bucket-prune the read to exactly the buckets Spark's bucket hash
+    # puts the query terms in: probe I/O is sized by the query terms'
     # buckets, never the whole index
-    counts = [
-        m.group(1, 2)
-        for m in re.finditer(
-            r"SelectedBucketsCount: (\d+) out of (\d+)", plan
-        )
-    ]
+    terms = sorted({t for _, t in QUERY_ROWS})
+    want = (
+        spark.createDataFrame([(t,) for t in terms], "tok string")
+        .select(F.expr(f"pmod(hash(tok), {n})").alias("b"))
+        .distinct()
+        .count()
+    )
+    counts = _selected_buckets(plan)
     assert counts, plan
-    assert all(int(a) < int(b) for a, b in counts), counts
+    assert counts == [(want, n)] * len(counts), (counts, want)
     assert "In(tok" in plan, plan
+    # a one-term probe reads one bucket of n
+    one = _plan(
+        engine.text_search(
+            "ti_prune",
+            spark.createDataFrame([(1, "query")], "query_id bigint, term string"),
+            topn=3,
+        )
+    )
+    assert _selected_buckets(one) == [(1, n)], one
     # the cap falls back to the pure semi-join plan, same results
     got = rows_of(engine.text_search("ti_prune", qdf(spark), topn=3))
     fallback = rows_of(
         engine.text_search("ti_prune", qdf(spark), topn=3, max_pushdown_terms=0)
     )
     assert got == fallback and got
+
+
+@pytest.fixture(scope="module")
+def edge_docs(engine, spark):
+    docs = docs_df(spark, DOCS_A + DOCS_B)
+    engine.build_text_index("ti_edge", docs, n_buckets=nb(spark))
+    return docs
+
+
+EDGE_BATCHES = {
+    # a duplicate (query_id, term) row counts its term once
+    "duplicate_rows": [(1, "query"), (1, "query"), (1, "spark"), (2, "join")],
+    # a NULL term matches nothing; its query still scores its others
+    "null_term": [(1, None), (1, "window"), (2, None)],
+    # a term the index never saw contributes nothing
+    "absent_term": [(1, "zyzzyva"), (1, "state"), (2, "zyzzyva")],
+    "empty": [],
+    "string_query_ids": [("alpha", "query"), ("alpha", "spark"), ("b'q", "join")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(EDGE_BATCHES))
+def test_held_probe_matches_bm25_search_many(engine, spark, edge_docs, case):
+    qid = "string" if case == "string_query_ids" else "bigint"
+    q = spark.createDataFrame(EDGE_BATCHES[case], f"query_id {qid}, term string")
+    probe = engine.text_search("ti_edge", q, topn=5)
+    # the held plan joins nothing: the batch and the stats are literals
+    assert "Join" not in _plan(probe), _plan(probe)
+    got = rows_of(probe)
+    assert got == rows_of(text.bm25_search_many(edge_docs, q, topn=5))
+    assert bool(got) == (case != "empty")
+
+
+def test_over_cap_batch_runs_semi_join_plan(engine, spark, edge_docs):
+    probe = engine.text_search("ti_edge", qdf(spark), topn=5, max_pushdown_terms=1)
+    assert "LeftSemi" in _plan(probe), _plan(probe)
+    got = rows_of(probe)
+    assert got == rows_of(text.bm25_search_many(edge_docs, qdf(spark), topn=5))
+    assert got == rows_of(engine.text_search("ti_edge", qdf(spark), topn=5))
+
+
+def test_text_probe_job_budget(engine, spark, edge_docs):
+    """A steady-state probe (verify memo warm) runs at most 4 Spark
+    jobs: the stats read, the batch read, the postings stage and the
+    per-query top-N stage."""
+    sched = spark._jsparkSession.sparkContext().dagScheduler()
+    engine.text_search("ti_edge", qdf(spark), topn=5).collect()
+    start = sched.nextJobId()
+    engine.text_search("ti_edge", qdf(spark), topn=5).collect()
+    assert sched.nextJobId() - start <= 4
 
 
 def test_torn_append_refuses_to_serve(engine, spark):

@@ -194,21 +194,13 @@ NLJ_OK = frozenset({
     "kmeans_convergence",
     "ann_ivf_recall_kmeans",
     "ivf_kmeans_profile",
-    # r9: the serving probe broadcasts the same bounded n_list-row
-    # centroid frame onto the QUERY table (query-side work only)
-    "ann_index_search",
     # r10: the 1-row drift-report frame crossJoin-broadcast onto the
-    # n_list-row per-centroid aggregate (both sides bounded), plus
-    # the same centroid broadcasts as the serving family
+    # n_list-row per-centroid aggregate (both sides bounded)
     "ann_index_append",
     # r10 PQ recall contract: the exact side is brute_force-shaped —
     # bounded query rows (vec_id < 3) broadcast-NLJ onto the corpus,
     # the accepted ann_ivf_recall shape
     "ann_pq_recall",
-    # r10 text-index serving: the bm25_search_many one-row
-    # corpus-stats broadcast, probed through build_postings +
-    # bm25_probe (the engine.text_search code path)
-    "text_index_search",
     # r10: the 1-row new-terms aggregate crossJoin-broadcast onto
     # the 1-row batch-vocab aggregate (both sides single rows)
     "text_index_drift",

@@ -24,8 +24,9 @@ surfaces COLUMN_DEFAULT / IS_NULLABLE / REMARKS, and SCRIPT re-emits
 every clause so the dump round-trips through a real H2.
 
 Durable state is a tiny JSON file in the warehouse directory under
-the same advisory-flock protocol as the sequence/constraint/view
-registries — bounded driver-side metadata, never data-path work.
+the locked-JSON protocol (:mod:`.locked_json`) the table catalog
+and the sequence/constraint/view registries share — bounded
+driver-side metadata, never data-path work.
 
 State shape::
 
@@ -49,13 +50,8 @@ remaining content are pruned so the file never accumulates husks).
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 
-try:
-    import fcntl
-except ImportError:  # pragma: no cover — non-POSIX fallback
-    fcntl = None  # type: ignore[assignment]
+from .locked_json import LockedJson
 
 
 class ColumnMetaError(ValueError):
@@ -97,37 +93,16 @@ class ColumnMeta:
     COMMENT)."""
 
     def __init__(self, warehouse_dir: str):
-        self.dir = warehouse_dir
-        self.path = os.path.join(warehouse_dir, "_colmeta.json")
+        self._store = LockedJson(warehouse_dir, "_colmeta")
+        self.path = self._store.path
 
     # -- locked state I/O ---------------------------------------------------
-
-    def _locked(self):
-        os.makedirs(self.dir, exist_ok=True)
-        fh = open(os.path.join(self.dir, "_colmeta.lock"), "w")
-        if fcntl is not None:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-        return fh
 
     def _read(self) -> dict:
         """Absence = empty registry; corruption surfaces (the
         constraints._read rationale: silently resetting metadata
         would break the restore contract this module exists for)."""
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-        except (json.JSONDecodeError, OSError) as e:
-            raise ColumnMetaError(
-                f"column-metadata state unreadable at {self.path!r}: {e}"
-            ) from e
-
-    def _write(self, state: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix="_cm")
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        return self._store.read(ColumnMetaError, "column-metadata state")
 
     # -- mutations ------------------------------------------------------
 
@@ -157,7 +132,7 @@ class ColumnMeta:
         if not per_column:
             return
         tkey = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             tentry = state.setdefault(tkey, {})
             cols = tentry.setdefault("columns", {})
@@ -169,13 +144,13 @@ class ColumnMeta:
                 else:
                     cols[ckey] = entry
             self._prune(state, tkey)
-            self._write(state)
+            self._store.write(state)
 
     def set_table_remarks(self, table: str, remarks: "str | None") -> None:
         """COMMENT ON TABLE — ``None`` clears (H2: COMMENT ... IS
         NULL removes the remark)."""
         tkey = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             tentry = state.setdefault(tkey, {})
             if remarks is None:
@@ -183,7 +158,7 @@ class ColumnMeta:
             else:
                 tentry["remarks"] = remarks
             self._prune(state, tkey)
-            self._write(state)
+            self._store.write(state)
 
     @staticmethod
     def _prune(state: dict, tkey: str) -> None:
@@ -216,19 +191,19 @@ class ColumnMeta:
 
     def drop_table(self, table: str) -> None:
         tkey = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if tkey in state:
                 del state[tkey]
-                self._write(state)
+                self._store.write(state)
 
     def rename_table(self, old: str, new: str) -> None:
         okey, nkey = old.casefold(), new.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if okey in state:
                 state[nkey] = state.pop(okey)
-                self._write(state)
+                self._store.write(state)
 
     def rename_sequences(self, mapping: dict) -> None:
         """ALTER SCHEMA ... RENAME TO migration: rewrite recorded
@@ -242,7 +217,7 @@ class ColumnMeta:
         if not mapping:
             return
         cf = {k.casefold(): v for k, v in mapping.items()}
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             changed = False
             for tentry in state.values():
@@ -252,11 +227,11 @@ class ColumnMeta:
                         e["sequence"] = cf[s]
                         changed = True
             if changed:
-                self._write(state)
+                self._store.write(state)
 
     def rename_column(self, table: str, old: str, new: str) -> None:
         tkey = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             cols = state.get(tkey, {}).get("columns", {})
             okey = old.casefold()
@@ -264,19 +239,19 @@ class ColumnMeta:
                 entry = cols.pop(okey)
                 entry["column"] = new
                 cols[new.casefold()] = entry
-                self._write(state)
+                self._store.write(state)
 
     def drop_column(self, table: str, column: str) -> None:
         tkey = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             cols = state.get(tkey, {}).get("columns", {})
             if column.casefold() in cols:
                 del cols[column.casefold()]
                 self._prune(state, tkey)
-                self._write(state)
+                self._store.write(state)
 
     def drop_all(self) -> None:
         """DROP ALL OBJECTS clears every record."""
-        with self._locked():
-            self._write({})
+        with self._store.locked():
+            self._store.write({})

@@ -39,20 +39,14 @@ is already an accepted no-op on this engine (sql_dml._SET_NOOP) —
 the registry is a faithful restore carrier, not a promise.
 
 Durable state is a tiny JSON file in the warehouse directory under
-the same advisory-flock protocol as the sequence registry
-(sequences.py) — bounded driver-side metadata, never data-path work.
+the locked-JSON protocol (:mod:`.locked_json`) the table catalog
+and the other registries share — bounded driver-side metadata,
+never data-path work.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
-try:
-    import fcntl
-except ImportError:  # pragma: no cover — non-POSIX fallback
-    fcntl = None  # type: ignore[assignment]
+from .locked_json import LockedJson
 
 
 class ConstraintError(ValueError):
@@ -75,37 +69,16 @@ class Constraints:
     casefolded logical names; column names are stored as spelled."""
 
     def __init__(self, warehouse_dir: str):
-        self.dir = warehouse_dir
-        self.path = os.path.join(warehouse_dir, "_constraints.json")
+        self._store = LockedJson(warehouse_dir, "_constraints")
+        self.path = self._store.path
 
     # -- locked state I/O ---------------------------------------------------
-
-    def _locked(self):
-        os.makedirs(self.dir, exist_ok=True)
-        fh = open(os.path.join(self.dir, "_constraints.lock"), "w")
-        if fcntl is not None:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-        return fh
 
     def _read(self) -> dict:
         """Absence = empty registry; corruption surfaces (the
         sequences._read rationale: silently resetting metadata would
         break the restore contract this module exists for)."""
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-        except (json.JSONDecodeError, OSError) as e:
-            raise ConstraintError(
-                f"constraint state unreadable at {self.path!r}: {e}"
-            ) from e
-
-    def _write(self, state: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix="_con")
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        return self._store.read(ConstraintError, "constraint state")
 
     # -- mutations ------------------------------------------------------
 
@@ -195,12 +168,12 @@ class Constraints:
     ) -> str:
         """Record one constraint; returns its (possibly generated)
         name. See :meth:`_add_to_state` for the H2-parity rules."""
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             name = self._add_to_state(
                 state, table, ctype, columns, name, predicate, foreign
             )
-            self._write(state)
+            self._store.write(state)
         return name
 
     def add_many(self, table: str, cons: list[tuple]) -> list[str]:
@@ -215,7 +188,7 @@ class Constraints:
         KEY. All-or-nothing: any invalid entry raises before
         anything is written."""
         names = []
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             for item in cons:
                 cname, ctype, cols = item[0], item[1], item[2]
@@ -228,7 +201,7 @@ class Constraints:
                     )
                 )
             if names:
-                self._write(state)
+                self._store.write(state)
         return names
 
     def referencing(self, table: str) -> list[tuple[str, dict]]:
@@ -251,7 +224,7 @@ class Constraints:
 
     def drop(self, table: str, name: str, if_exists: bool = False) -> None:
         key = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             entries = state.get(key, [])
             kept = [
@@ -267,17 +240,17 @@ class Constraints:
                 state[key] = kept
             else:
                 state.pop(key, None)
-            self._write(state)
+            self._store.write(state)
 
     def drop_table(self, table: str) -> None:
         """Forget every constraint of a dropped table (no-op when
         none are recorded)."""
         key = table.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key in state:
                 del state[key]
-                self._write(state)
+                self._store.write(state)
 
     def rename_table(self, old: str, new: str) -> None:
         """Migrate recorded constraints on ALTER TABLE RENAME — both
@@ -286,7 +259,7 @@ class Constraints:
         track referential constraints; a stale ref_table would dump
         an unrestorable SCRIPT)."""
         okey, nkey = old.casefold(), new.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             changed = False
             if okey in state:
@@ -301,7 +274,7 @@ class Constraints:
                         e["ref_table"] = new
                         changed = True
             if changed:
-                self._write(state)
+                self._store.write(state)
 
     def rename_column(self, table: str, old: str, new: str) -> None:
         """Migrate recorded constraint column lists on ALTER TABLE
@@ -311,7 +284,7 @@ class Constraints:
         THIS table (a stale spelling would dump an unrestorable
         SCRIPT — the rename_table rationale)."""
         tkey, okey = table.casefold(), old.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             changed = False
             for e in state.get(tkey, []):
@@ -336,7 +309,7 @@ class Constraints:
                             e["ref_columns"] = rcols
                             changed = True
             if changed:
-                self._write(state)
+                self._store.write(state)
 
     def column_members(self, table: str, column: str) -> list[str]:
         """Names of recorded constraints whose member (or, for an

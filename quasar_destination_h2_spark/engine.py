@@ -2151,14 +2151,10 @@ class Engine:
         durable JSON state in the warehouse directory under the same
         flock protocol as the table catalog (see sequences.py)."""
         if self._sequences is None:
-            import os
-
             from .sequences import Sequences
-            from .sources.sink import CATALOG_TABLE, warehouse_path
+            from .sources.sink import warehouse_dir
 
-            self._sequences = Sequences(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            )
+            self._sequences = Sequences(warehouse_dir(self.spark))
         return self._sequences
 
     @property
@@ -2167,14 +2163,10 @@ class Engine:
         dotted-logical-name prefix for non-PUBLIC objects): durable
         JSON state beside the sequence registry (see schemas.py)."""
         if self._schemas is None:
-            import os
-
             from .schemas import Schemas
-            from .sources.sink import CATALOG_TABLE, warehouse_path
+            from .sources.sink import warehouse_dir
 
-            self._schemas = Schemas(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            )
+            self._schemas = Schemas(warehouse_dir(self.spark))
         return self._schemas
 
     @property
@@ -2183,14 +2175,10 @@ class Engine:
         the CREATE INDEX no-op precedent): durable JSON state beside
         the sequence registry (see constraints.py)."""
         if self._constraints is None:
-            import os
-
             from .constraints import Constraints
-            from .sources.sink import CATALOG_TABLE, warehouse_path
+            from .sources.sink import warehouse_dir
 
-            self._constraints = Constraints(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            )
+            self._constraints = Constraints(warehouse_dir(self.spark))
         return self._constraints
 
     @property
@@ -2202,14 +2190,10 @@ class Engine:
         analysis time, so Catalyst pushes filters through it into
         the parquet scans (zero materialization at any scale)."""
         if self._views is None:
-            import os
-
             from .views import Views
-            from .sources.sink import CATALOG_TABLE, warehouse_path
+            from .sources.sink import warehouse_dir
 
-            self._views = Views(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            )
+            self._views = Views(warehouse_dir(self.spark))
         return self._views
 
     @property
@@ -2221,14 +2205,10 @@ class Engine:
         these, so the registry is what INSERT defaults, NOT NULL
         enforcement, INFORMATION_SCHEMA and SCRIPT dumps read."""
         if self._colmeta is None:
-            import os
-
             from .colmeta import ColumnMeta
-            from .sources.sink import CATALOG_TABLE, warehouse_path
+            from .sources.sink import warehouse_dir
 
-            self._colmeta = ColumnMeta(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            )
+            self._colmeta = ColumnMeta(warehouse_dir(self.spark))
         return self._colmeta
 
     # -- surface (H2Destination.scala:37-46) ---------------------------

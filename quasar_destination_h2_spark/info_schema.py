@@ -281,10 +281,9 @@ def _catalog_name(engine: "Engine") -> str:
     analogue is the warehouse directory's basename."""
     import os
 
-    from .sources.sink import CATALOG_TABLE, warehouse_path
+    from .sources.sink import warehouse_dir
 
-    wh = os.path.dirname(warehouse_path(engine.spark, CATALOG_TABLE))
-    base = os.path.basename(wh.rstrip("/"))
+    base = os.path.basename(warehouse_dir(engine.spark))
     return (base or "UNNAMED").upper()
 
 

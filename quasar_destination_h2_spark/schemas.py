@@ -11,7 +11,8 @@ dies on the first multi-schema dump (r13 verdict, "What's missing"
 logical-name catalog, so schemas are statement-layer state:
 
 * durable state is a tiny JSON file in the warehouse directory under
-  the same advisory-flock protocol as the table catalog — same-host
+  the flock + fsync + ``os.replace`` protocol of :mod:`.locked_json`,
+  which the table catalog (``_catalog.json``) shares — same-host
   multi-process writers agree on the schema set; multi-HOST
   warehouses need a transactional store, the documented catalog
   limitation;
@@ -42,12 +43,8 @@ from __future__ import annotations
 import json
 import os
 import re
-import tempfile
 
-try:
-    import fcntl
-except ImportError:  # pragma: no cover — non-POSIX fallback
-    fcntl = None  # type: ignore[assignment]
+from .locked_json import LockedJson
 
 
 class SchemaError(ValueError):
@@ -72,8 +69,8 @@ class Schemas:
     """
 
     def __init__(self, warehouse_dir: str):
-        self.dir = warehouse_dir
-        self.path = os.path.join(warehouse_dir, "_schemas.json")
+        self._store = LockedJson(warehouse_dir, "_schemas")
+        self.path = self._store.path
         #: stat-guarded read cache: (mtime_ns, size, state) — the
         #: resolver calls exists() per qualified identifier on the
         #: statement hot path, so re-parsing the JSON per call would
@@ -84,13 +81,6 @@ class Schemas:
         self._cache: "tuple | None" = None
 
     # -- locked state I/O ---------------------------------------------------
-
-    def _locked(self):
-        os.makedirs(self.dir, exist_ok=True)
-        fh = open(os.path.join(self.dir, "_schemas.lock"), "w")
-        if fcntl is not None:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-        return fh
 
     def _read(self) -> dict:
         """Absence = empty registry; corruption surfaces loudly (the
@@ -126,12 +116,6 @@ class Schemas:
         self._cache = (sig, state)
         return dict(state)
 
-    def _write(self, state: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix="_sch")
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
-
     # -- DDL ----------------------------------------------------------------
 
     def create(self, name: str, if_not_exists: bool = False) -> None:
@@ -144,14 +128,14 @@ class Schemas:
                 "logical names and Spark database bindings, which "
                 "reject anything else)"
             )
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key == PUBLIC or key in state:
                 if if_not_exists:
                     return
                 raise SchemaError(f"schema already exists: {name!r}")
             state[key] = {"name": name}
-            self._write(state)
+            self._store.write(state)
 
     def drop(self, name: str, if_exists: bool = False) -> None:
         """Unregister only — emptiness checks (RESTRICT) and CASCADE
@@ -160,14 +144,14 @@ class Schemas:
         key = name.casefold()
         if key == PUBLIC:
             raise SchemaError("DROP SCHEMA: PUBLIC cannot be dropped (H2)")
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 if if_exists:
                     return
                 raise SchemaError(f"schema not found: {name!r}")
             del state[key]
-            self._write(state)
+            self._store.write(state)
 
     def rename(self, old: str, new: str) -> None:
         """``ALTER SCHEMA old RENAME TO new`` at the registry level:
@@ -193,7 +177,7 @@ class Schemas:
                 "prefixes dotted logical names and Spark database "
                 "bindings, which reject anything else)"
             )
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if okey not in state:
                 raise SchemaError(f"schema not found: {old!r}")
@@ -202,7 +186,7 @@ class Schemas:
             entry = state.pop(okey)
             entry["name"] = new
             state[nkey] = entry
-            self._write(state)
+            self._store.write(state)
 
     # -- reads ----------------------------------------------------------
 

@@ -9,10 +9,11 @@ in INSERTs), ``CURRVAL('s')``, ``ALTER SEQUENCE ... RESTART``,
 implements them as statement-layer state:
 
 * durable state is a tiny JSON file in the warehouse directory,
-  read-modify-written under the same advisory-flock protocol as the
-  table catalog (``sources/sink.py``) — same-host multi-process
-  writers allocate disjoint values; multi-HOST warehouses need a
-  transactional store, exactly the documented catalog limitation;
+  read-modify-written under the flock + fsync + ``os.replace``
+  protocol of :mod:`.locked_json`, which the table catalog and the
+  other registries share — same-host multi-process writers allocate
+  disjoint values; multi-HOST warehouses need a transactional store,
+  exactly the documented catalog limitation;
 * ``NEXTVAL`` allocates one value per TEXTUAL occurrence in the
   statement (H2 evaluates per row; in ``INSERT ... VALUES`` every
   row spells its own NEXTVAL, so the two coincide). A NEXTVAL over a
@@ -30,14 +31,7 @@ implements them as statement-layer state:
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
-try:
-    import fcntl
-except ImportError:  # pragma: no cover — non-POSIX fallback
-    fcntl = None  # type: ignore[assignment]
+from .locked_json import LockedJson
 
 
 class SequenceError(ValueError):
@@ -50,18 +44,11 @@ class Sequences:
     """Durable sequence registry for one warehouse directory."""
 
     def __init__(self, warehouse_dir: str):
-        self.dir = warehouse_dir
-        self.path = os.path.join(warehouse_dir, "_sequences.json")
+        self._store = LockedJson(warehouse_dir, "_sequences")
+        self.path = self._store.path
         self._currval: dict[str, int] = {}  # session-scoped
 
     # -- locked state I/O ---------------------------------------------------
-
-    def _locked(self):
-        os.makedirs(self.dir, exist_ok=True)
-        fh = open(os.path.join(self.dir, "_sequences.lock"), "w")
-        if fcntl is not None:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-        return fh
 
     def _read(self) -> dict:
         """Absence means an empty registry; anything ELSE (corrupt
@@ -69,22 +56,7 @@ class Sequences:
         absence would silently reset every sequence and re-dispense
         already-allocated values, breaking the durable-uniqueness
         guarantee this module exists to provide."""
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-        except (json.JSONDecodeError, OSError) as e:
-            raise SequenceError(
-                f"sequence state unreadable at {self.path!r}: {e}"
-            ) from e
-
-    def _write(self, state: dict) -> None:
-        # temp + rename: a reader never observes a half-written file
-        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix="_seq")
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        return self._store.read(SequenceError, "sequence state")
 
     # -- DDL ----------------------------------------------------------------
 
@@ -143,7 +115,7 @@ class Sequences:
                 f"[{min_value}, {max_value}]"
             )
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key in state:
                 if if_not_exists:
@@ -160,18 +132,18 @@ class Sequences:
             }
             if belongs_to_table:
                 state[key]["belongs_to_table"] = True
-            self._write(state)
+            self._store.write(state)
 
     def drop(self, name: str, if_exists: bool = False) -> None:
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 if if_exists:
                     return
                 raise SequenceError(f"sequence not found: {name!r}")
             del state[key]
-            self._write(state)
+            self._store.write(state)
         self._currval.pop(key, None)
 
     def rename(self, old: str, new: str) -> None:
@@ -183,14 +155,14 @@ class Sequences:
         okey, nkey = old.casefold(), new.casefold()
         if okey == nkey:
             return
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if okey not in state:
                 raise SequenceError(f"sequence not found: {old!r}")
             if nkey in state:
                 raise SequenceError(f"sequence already exists: {new!r}")
             state[nkey] = state.pop(okey)
-            self._write(state)
+            self._store.write(state)
         if okey in self._currval:
             self._currval[nkey] = self._currval.pop(okey)
 
@@ -226,7 +198,7 @@ class Sequences:
         changes the step without touching the current position;
         MINVALUE/MAXVALUE/[NO]CYCLE adjust the bounds in place."""
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 raise SequenceError(f"sequence not found: {name!r}")
@@ -250,7 +222,7 @@ class Sequences:
                     f"ALTER SEQUENCE: MINVALUE {s['min']} exceeds "
                     f"MAXVALUE {s['max']}"
                 )
-            self._write(state)
+            self._store.write(state)
 
     # -- values -------------------------------------------------------------
 
@@ -263,7 +235,7 @@ class Sequences:
         MINVALUE changes phase after the first wrap, exactly like H2
         — or raises H2's exhaustion error when it does not."""
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 raise SequenceError(f"sequence not found: {name!r}")
@@ -285,7 +257,7 @@ class Sequences:
                 vals.append(cur)
                 cur += inc
             s["next"] = cur
-            self._write(state)
+            self._store.write(state)
         if vals:
             self._currval[key] = vals[-1]
         return vals
@@ -296,7 +268,7 @@ class Sequences:
         INFORMATION_SCHEMA.SEQUENCES.REMARKS and SCRIPT COMMENT
         lines."""
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 raise SequenceError(f"sequence not found: {name!r}")
@@ -304,7 +276,7 @@ class Sequences:
                 state[key].pop("remarks", None)
             else:
                 state[key]["remarks"] = remarks
-            self._write(state)
+            self._store.write(state)
 
     def advance_past(self, name: str, value: int) -> None:
         """H2 1.4.200 ``Column.updateSequenceIfRequired``: an
@@ -315,7 +287,7 @@ class Sequences:
         (4,...) followed by an auto-id row re-dispenses 4 (advice
         r14). No-op when the sequence already points past ``value``."""
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 raise SequenceError(f"sequence not found: {name!r}")
@@ -324,7 +296,7 @@ class Sequences:
             last = s["next"] - inc
             if (inc > 0 and value > last) or (inc < 0 and value < last):
                 s["next"] = value + inc
-                self._write(state)
+                self._store.write(state)
 
     def currval(self, name: str) -> int:
         key = name.casefold()

@@ -19,11 +19,21 @@ Scale notes: the CSV scan is splittable (multiLine=false), so a
 ever collected to the driver. The written table is Parquet —
 columnar, so downstream Tier-B queries get column pruning + predicate
 pushdown for free.
+
+The logical -> physical table-name catalog is ``_catalog.json`` in
+the warehouse directory, committed after each load through the
+flock + fsync + ``os.replace`` protocol the statement-layer
+registries share (:mod:`..locked_json`). The commit is one small
+file write, no Spark job, so a push costs one job: the load itself
+(the reference's catalog update is likewise an in-transaction
+metadata write, ``H2CsvCreateSink.scala:106-126``). Warehouses
+written before kept the catalog in a Parquet table
+(:data:`CATALOG_TABLE`); it is read while ``_catalog.json`` is
+absent and removed by the first JSON commit.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
@@ -32,33 +42,34 @@ import warnings
 from dataclasses import dataclass, field
 from typing import IO, Iterable, Sequence, Union
 
-try:  # POSIX advisory locks for the multi-writer catalog protocol
-    import fcntl
-except ImportError:  # pragma: no cover - non-POSIX: single-writer only
-    fcntl = None  # type: ignore[assignment]
-
 from pyspark.sql import SparkSession
 from pyspark.errors import AnalysisException
 
 from ..errors import NotAResource
 from ..idents import storage_safe_name
+from ..locked_json import LockedJson
 from ..types import Column, TypeOptions, DEFAULT_OPTIONS, ensure_valid_columns
 from .csv_format import read_csv
 
 CsvSource = Union[str, bytes, IO[bytes], Iterable[bytes]]
 
-#: Warehouse-side metadata table persisting the logical -> physical
-#: name mapping, so hostile-named tables survive engine restarts (the
-#: reference's H2 catalog is durable; an in-memory dict was not).
+#: The Parquet metadata table older warehouses kept the logical ->
+#: physical name map in; read only to migrate it to ``_catalog.json``.
 CATALOG_TABLE = "h2spark_catalog"
+
+
+def warehouse_dir(spark: SparkSession) -> str:
+    """Local filesystem path of the session's warehouse directory —
+    home of the managed tables, the table catalog and the registries."""
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    if wh.startswith("file:"):
+        wh = wh[len("file:"):]
+    return wh.rstrip("/") or wh
 
 
 def warehouse_path(spark: SparkSession, physical: str) -> str:
     """Local filesystem path of a managed table's data directory."""
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        wh = wh[len("file:"):]
-    return os.path.join(wh, physical.lower())
+    return os.path.join(warehouse_dir(spark), physical.lower())
 
 
 def clear_stale_location(spark: SparkSession, physical: str) -> None:
@@ -200,57 +211,59 @@ class CsvCreateSink:
     # best-effort post-persist hook (the owning Engine republishes
     # the INFORMATION_SCHEMA views to wire clients; see info_schema)
     on_catalog_change: object = None
+    # _catalog.json + _catalog.lock in the warehouse directory
+    _store: LockedJson = field(init=False, repr=False)
 
     def __post_init__(self) -> None:
+        self._store = LockedJson(warehouse_dir(self.spark), "_catalog")
         if self.catalog is None:
             self.catalog = {}
             self._rehydrate_catalog()
 
-    @contextlib.contextmanager
-    def _catalog_lock(self, exclusive: bool = True):
-        """Advisory flock serializing catalog read-modify-write across
-        engine PROCESSES sharing one warehouse (same host). Shared
-        mode guards readers from observing a half-replaced metadata
-        table. On non-POSIX (no fcntl) this degrades to the
-        documented single-writer contract; multi-HOST warehouses
-        (NFS/object store) still need a transactional table format —
-        Delta/Iceberg — where flock does not hold."""
-        if fcntl is None:
-            yield
-            return
-        lock_dir = os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-        os.makedirs(lock_dir, exist_ok=True)
-        with open(os.path.join(lock_dir, "_catalog.lock"), "w") as fh:
-            fcntl.flock(fh, fcntl.LOCK_EX if exclusive else fcntl.LOCK_SH)
-            try:
-                yield
-            finally:
-                fcntl.flock(fh, fcntl.LOCK_UN)
-
     def _read_disk_catalog(self) -> dict:
         """Current logical->physical mapping as persisted on disk.
+        Callers must hold the catalog lock.
+
+        Reads ``_catalog.json``; while it is absent, a legacy Parquet
+        catalog is read instead (:meth:`_read_legacy_catalog`), so a
+        warehouse written before the JSON catalog keeps its tables.
+        A partial/empty read here would make the merge-persist
+        clobber a concurrent writer's entries — the exact lost-update
+        the flock protocol exists to prevent — so only the
+        provably-empty case (no file) returns ``{}`` directly.
+        PROVABLY-CORRUPT state (undecodable JSON, or JSON that is not
+        a name -> name object) is quarantined — renamed aside with a
+        ``RuntimeWarning``, never deleted — and treated as empty:
+        physical names are sha-deterministic and re-derivable, and
+        without the rename a permanently-bad file would block every
+        future consume(). I/O errors, which may be transient,
+        propagate rather than merging as empty."""
+        path = self._store.path
+        if not os.path.exists(path):
+            return self._read_legacy_catalog()
+        try:
+            state = self._store.read()
+            if not isinstance(state, dict) or not all(
+                isinstance(v, str) for v in state.values()
+            ):
+                raise ValueError("not a logical -> physical name map")
+        except ValueError as ex:  # JSONDecodeError, UnicodeDecodeError
+            self._quarantine(path, ex)
+            return {}
+        return state
+
+    def _read_legacy_catalog(self) -> dict:
+        """The mapping a pre-JSON warehouse kept in the Parquet table
+        :data:`CATALOG_TABLE`, or ``{}`` when there is none.
 
         Always reads the warehouse parquet path with a fresh
         ``spark.read`` — never ``spark.table`` — because another
-        PROCESS may have overwritten the metadata table since this
-        session last resolved it, and Spark's cached table relation
-        would then serve stale entries or fail on deleted part files.
-        A partial/empty read here would make the merge-persist
-        clobber the concurrent writer's entries — the exact
-        lost-update the flock protocol exists to prevent — so the
-        provably-empty cases (no directory, no readable parquet
-        footer) return ``{}``, PROVABLY-CORRUPT metadata (a crashed
-        writer's truncated part file: footer/magic-number decode
-        errors at scan time) is quarantined — renamed aside, never
-        deleted — and treated as empty (physical names are
-        sha-deterministic and re-derivable, and without the rename a
-        permanently-bad file would block every future consume()),
-        and only genuinely ambiguous mid-read failures (I/O errors
-        that may be transient) propagate rather than merging as
-        empty. The session's cached relation for the table name is
-        invalidated so later ``spark.table(CATALOG_TABLE)`` callers
-        also see the fresh files. Callers must hold
-        ``_catalog_lock``."""
+        PROCESS may have rewritten the table since this session last
+        resolved it. No directory or no readable parquet footer means
+        nothing to merge; decode-time corruption (a crashed writer's
+        truncated part file) quarantines the directory; anything
+        else propagates. The first :meth:`_persist_catalog` removes
+        the table, so this costs Spark jobs only until then."""
         path = warehouse_path(self.spark, CATALOG_TABLE)
         if not os.path.isdir(path):
             return {}
@@ -270,11 +283,27 @@ class CsvCreateSink:
             return {}
         except Exception as ex:
             if self._is_parquet_corruption(ex):
-                self._quarantine_catalog_dir(path, ex)
+                self._quarantine(path, ex)
                 return {}
             raise
 
-    # Decode-time signatures of a truncated/garbled parquet part file.
+    def _drop_legacy_catalog(self) -> None:
+        """Remove the legacy Parquet catalog once ``_catalog.json``
+        holds its entries (caller holds the exclusive lock), so a
+        later quarantine of the JSON file can never fall back to it
+        and resurrect names dropped since."""
+        path = warehouse_path(self.spark, CATALOG_TABLE)
+        if not os.path.isdir(path):
+            return
+        try:
+            self.spark.sql(f"DROP TABLE IF EXISTS {CATALOG_TABLE}")
+        except Exception:
+            pass  # the directory removal below is the durable part
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+
+    # Decode-time signatures of a truncated/garbled legacy parquet part
+    # file.
     # Deliberately narrow: an executor-lost or filesystem I/O error
     # must NOT match (those are transient and retryable).
     _CORRUPTION_MARKERS = (
@@ -295,11 +324,12 @@ class CsvCreateSink:
         text = str(ex).lower()
         return any(marker in text for marker in cls._CORRUPTION_MARKERS)
 
-    def _quarantine_catalog_dir(self, path: str, ex: Exception) -> None:
-        """Move a corrupt metadata dir aside (never delete — it is the
-        only forensic evidence of the crashed writer) so the next
-        persist cycle starts from a clean slate instead of failing on
-        the same truncated file forever."""
+    def _quarantine(self, path: str, ex: Exception) -> None:
+        """Move corrupt catalog state (the JSON file or a legacy
+        metadata dir) aside — never delete: it is the only forensic
+        evidence of the crashed writer — so the next persist cycle
+        starts from a clean slate instead of failing on the same
+        corrupt bytes forever."""
         quarantine = f"{path}.corrupt-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         os.rename(path, quarantine)
         warnings.warn(
@@ -312,14 +342,15 @@ class CsvCreateSink:
 
     def _rehydrate_catalog(self) -> None:
         """Reload the logical->physical mapping from the warehouse
-        metadata table (written by _persist_catalog) so tables loaded
-        by a previous engine instance stay addressable by name.
+        catalog (written by _persist_catalog) so tables loaded by a
+        previous engine instance stay addressable by name.
 
-        Read-only and best-effort: a corrupt metadata table must not
-        block engine construction (worst case the engine starts with
-        an empty in-memory catalog). The strictness lives in
-        _persist_catalog, where an empty merge would lose entries."""
-        with self._catalog_lock(exclusive=False):
+        Read under the shared lock, and best-effort: corrupt catalog
+        state must not block engine construction (worst case the
+        engine starts with an empty in-memory catalog). The
+        strictness lives in _persist_catalog, where an empty merge
+        would lose entries."""
+        with self._store.locked(exclusive=False):
             try:
                 self.catalog.update(self._read_disk_catalog())
             except Exception:
@@ -334,37 +365,31 @@ class CsvCreateSink:
         self._persist_catalog()
 
     def _persist_catalog(self) -> None:
-        """Merge-overwrite the metadata table. The table is
-        metadata-scale (one row per loaded table), so a full rewrite
-        per push is O(tables), not O(data).
+        """Merge-write the catalog to ``_catalog.json``: one small
+        file write and no Spark job (one entry per loaded table, so
+        the rewrite is O(tables), not O(data)).
 
-        Concurrency protocol (same-host multi-writer): under an
+        Concurrency protocol (same-host multi-writer): under the
         exclusive flock, re-read the disk state, overlay this
         engine's entries (its writes win their own keys), subtract
-        its tombstones, and persist the merge — a concurrent engine's
+        its tombstones, and write the merge to a temp file that
+        ``os.replace`` moves into place — a concurrent engine's
         additions survive instead of being clobbered by a stale full
         overwrite (pinned by
-        tests/test_dml_catalog.py::test_concurrent_engines_do_not_lose_entries).
-        Multi-HOST deployments still need Delta/Iceberg for the
-        metadata table (the reference delegates this to H2's
+        tests/test_dml_catalog.py::test_concurrent_engines_do_not_lose_entries
+        and ::test_cross_process_persist_merges). Over a legacy
+        warehouse the first write also removes the Parquet catalog
+        it migrated. Multi-HOST deployments still need a
+        transactional store (the reference delegates this to H2's
         server-side catalog)."""
-        with self._catalog_lock():
+        with self._store.locked():
             merged = self._read_disk_catalog()
             merged.update(self.catalog)
             for k in self._dropped:
                 merged.pop(k, None)
+            self._store.write(merged)
+            self._drop_legacy_catalog()
             self.catalog = merged
-            rows = [(k, v) for k, v in merged.items()]
-            # NOTE no coalesce(1): coalescing a parallelized local
-            # relation costs seconds at high local[*] parallelism (one
-            # task dragging 32 empty slices); a few tiny files are free.
-            df = self.spark.createDataFrame(
-                rows, "logical string, physical string"
-            )
-            clear_stale_location(self.spark, CATALOG_TABLE)
-            df.write.mode("overwrite").format("parquet").saveAsTable(
-                CATALOG_TABLE
-            )
             self._dropped.clear()
         if self.on_catalog_change is not None:
             self.on_catalog_change()
@@ -384,12 +409,7 @@ class CsvCreateSink:
         # does, not silently shadow the view (self-review r12)
         from ..views import Views
 
-        if (
-            Views(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            ).get(table)
-            is not None
-        ):
+        if Views(warehouse_dir(self.spark)).get(table) is not None:
             raise ValueError(
                 f"cannot load table {table!r}: a view with this name "
                 "exists (DROP VIEW it first)"
@@ -426,9 +446,7 @@ class CsvCreateSink:
             # table die with it — the new table declared none
             from ..constraints import Constraints
 
-            Constraints(
-                os.path.dirname(warehouse_path(self.spark, CATALOG_TABLE))
-            ).drop_table(table)
+            Constraints(warehouse_dir(self.spark)).drop_table(table)
             return physical
         finally:
             if tmp is not None:

@@ -24,20 +24,14 @@ pushes filters/projections THROUGH the view into the parquet scan —
 a view adds zero materialization and zero extra I/O.
 
 Durable state is a tiny JSON file in the warehouse directory under
-the same advisory-flock protocol as the sequence and constraint
-registries — bounded driver-side metadata, never data-path work.
+the locked-JSON protocol (:mod:`.locked_json`) the table catalog
+and the sequence and constraint registries share — bounded
+driver-side metadata, never data-path work.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import tempfile
-
-try:
-    import fcntl
-except ImportError:  # pragma: no cover — non-POSIX fallback
-    fcntl = None  # type: ignore[assignment]
+from .locked_json import LockedJson
 
 
 class ViewError(ValueError):
@@ -54,37 +48,16 @@ class Views:
     casefolded view names; definitions are Spark-dialect SQL."""
 
     def __init__(self, warehouse_dir: str):
-        self.dir = warehouse_dir
-        self.path = os.path.join(warehouse_dir, "_views.json")
+        self._store = LockedJson(warehouse_dir, "_views")
+        self.path = self._store.path
 
     # -- locked state I/O ---------------------------------------------------
-
-    def _locked(self):
-        os.makedirs(self.dir, exist_ok=True)
-        fh = open(os.path.join(self.dir, "_views.lock"), "w")
-        if fcntl is not None:
-            fcntl.flock(fh, fcntl.LOCK_EX)
-        return fh
 
     def _read(self) -> dict:
         """Absence = empty registry; corruption surfaces (the
         sequences._read rationale: silently resetting metadata would
         break the restore contract this module exists for)."""
-        try:
-            with open(self.path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {}
-        except (json.JSONDecodeError, OSError) as e:
-            raise ViewError(
-                f"view state unreadable at {self.path!r}: {e}"
-            ) from e
-
-    def _write(self, state: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, prefix="_vw")
-        with os.fdopen(fd, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        return self._store.read(ViewError, "view state")
 
     # -- mutations ------------------------------------------------------
 
@@ -104,7 +77,7 @@ class Views:
         if not definition.strip():
             raise ViewError(f"view {name!r}: empty definition")
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key in state and not or_replace:
                 if if_not_exists:
@@ -116,19 +89,19 @@ class Views:
                 "columns": list(columns) if columns else None,
                 "force": bool(force),
             }
-            self._write(state)
+            self._store.write(state)
         return True
 
     def drop(self, name: str, if_exists: bool = False) -> bool:
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 if if_exists:
                     return False
                 raise ViewError(f"view not found: {name!r}")
             del state[key]
-            self._write(state)
+            self._store.write(state)
         return True
 
     def set_remarks(self, name: str, remarks: "str | None") -> None:
@@ -136,7 +109,7 @@ class Views:
         recordable (the colmeta convention); surfaces through
         INFORMATION_SCHEMA.VIEWS.REMARKS and SCRIPT COMMENT lines."""
         key = name.casefold()
-        with self._locked():
+        with self._store.locked():
             state = self._read()
             if key not in state:
                 raise ViewError(f"view not found: {name!r}")
@@ -144,12 +117,12 @@ class Views:
                 state[key].pop("remarks", None)
             else:
                 state[key]["remarks"] = remarks
-            self._write(state)
+            self._store.write(state)
 
     def drop_all(self) -> None:
         """Forget every view (DROP ALL OBJECTS)."""
-        with self._locked():
-            self._write({})
+        with self._store.locked():
+            self._store.write({})
 
     # -- reads ----------------------------------------------------------
 

@@ -186,23 +186,16 @@ finally:
 def test_cross_process_persist_merges(spark, warehouse_dir, tmp_path):
     """The cross-PROCESS half of the r4 multi-writer protocol, which
     test_concurrent_engines_do_not_lose_entries cannot see (all its
-    engines share one SparkSession, whose saveAsTable invalidates the
-    shared relation cache for free).
+    engines share one process and one SparkSession).
 
-    Reproduces the r4-advice lost-update: the parent session primes
-    its relation cache for the metadata table, a SEPARATE process
-    overwrites the metadata parquet (deleting the cached part files),
-    and the parent then persists. _read_disk_catalog must re-read the
-    warehouse files fresh — a stale/partial read swallowed to {}
+    Reproduces the r4-advice lost-update: a SEPARATE process
+    rewrites the catalog after the parent's first persist, and the
+    parent then persists again. _read_disk_catalog must re-read the
+    file fresh under the lock — a stale/partial read swallowed to {}
     would merge-clobber the child's entry."""
-    from quasar_destination_h2_spark.sources.sink import CATALOG_TABLE
-
     cfg = json.dumps({"connectionUri": warehouse_dir})
     e_parent = Engine.from_config(cfg, spark=spark)
     e_parent.csv_create_sink().consume("/xp_parent", COLS, b"1,p\r\n")
-    # Prime this session's cached relation (incl. its file listing)
-    # for the metadata table — the ingredient of the stale read.
-    spark.table(CATALOG_TABLE).collect()
 
     repo_root = os.path.dirname(
         os.path.dirname(os.path.abspath(sys.modules[Engine.__module__].__file__))
@@ -231,29 +224,24 @@ def test_cross_process_persist_merges(spark, warehouse_dir, tmp_path):
 
 
 def test_corrupt_catalog_metadata_quarantined(spark, warehouse_dir):
-    """A crashed writer's truncated metadata part file must not block
-    consume() forever: decode-time corruption is quarantined (renamed
+    """A crashed writer's truncated catalog file must not block
+    consume() forever: undecodable JSON is quarantined (renamed
     aside with a warning — never deleted) and the catalog rebuilds
     from sha-deterministic physical names (r5-advice item 4)."""
     import glob
     import warnings as warnings_mod
 
-    from quasar_destination_h2_spark.sources.sink import (
-        CATALOG_TABLE,
-        warehouse_path,
-    )
-
     cfg = json.dumps({"connectionUri": warehouse_dir})
     e1 = Engine.from_config(cfg, spark=spark)
     e1.csv_create_sink().consume("/quarantine_t1", COLS, b"1,a\r\n")
-    meta = warehouse_path(spark, CATALOG_TABLE)
-    parts = glob.glob(os.path.join(meta, "part-*"))
-    assert parts, "catalog metadata table was never persisted"
-    for p in parts:
-        # keep the head magic, destroy the footer: the decode-time
-        # signature of a writer that died mid-stream
-        with open(p, "wb") as fh:
-            fh.write(b"PAR1truncated-mid-write-no-footer")
+    meta = os.path.join(warehouse_dir, "_catalog.json")
+    assert os.path.isfile(meta), "catalog was never persisted"
+    with open(meta) as fh:
+        text = fh.read()
+    # cut the object off mid-entry: the signature of a writer that
+    # died mid-stream
+    with open(meta, "w") as fh:
+        fh.write(text[: len(text) // 2])
 
     with warnings_mod.catch_warnings(record=True) as caught:
         warnings_mod.simplefilter("always")
@@ -264,6 +252,77 @@ def test_corrupt_catalog_metadata_quarantined(spark, warehouse_dir):
     assert glob.glob(meta + ".corrupt-*"), "corrupt dir was not renamed aside"
     assert any("quarantined" in str(w.message) for w in caught)
     assert e2.table("quarantine_t2").count() == 1
+
+
+def test_legacy_parquet_catalog_migrates(spark, warehouse_dir):
+    """A warehouse written before the JSON catalog kept its
+    logical -> physical map as rows of the Parquet table
+    ``h2spark_catalog``. Its tables stay addressable: the table is
+    read while ``_catalog.json`` is absent, the first persist moves
+    the map into ``_catalog.json`` and removes the legacy table, so a
+    name dropped afterwards can never come back from it."""
+    from quasar_destination_h2_spark.sources.sink import (
+        CATALOG_TABLE,
+        warehouse_path,
+    )
+
+    cfg = json.dumps({"connectionUri": warehouse_dir})
+    e0 = Engine.from_config(cfg, spark=spark)
+    e0.csv_create_sink().consume("/legacy_keep", COLS, b"1,a\r\n")
+    e0.csv_create_sink().consume("/legacy_gone", COLS, b"2,b\r\n")
+    # put the warehouse in the old format: the whole catalog (every
+    # table the shared warehouse holds) as a Parquet table, no JSON
+    meta = os.path.join(warehouse_dir, "_catalog.json")
+    with open(meta) as fh:
+        mapping = json.load(fh)
+    spark.createDataFrame(
+        sorted(mapping.items()), "logical string, physical string"
+    ).write.mode("overwrite").format("parquet").saveAsTable(CATALOG_TABLE)
+    os.remove(meta)
+    legacy = warehouse_path(spark, CATALOG_TABLE)
+    assert os.path.isdir(legacy)
+
+    e1 = Engine.from_config(cfg, spark=spark)
+    assert e1.sink.catalog == mapping
+    assert [(float(r.k), r.v) for r in e1.table("legacy_keep").collect()] == [
+        (1.0, "a")
+    ]
+    assert os.path.isdir(legacy) and not os.path.exists(meta)
+
+    # first persist: the JSON file takes over, the legacy table goes
+    e1.csv_create_sink().consume("/legacy_new", COLS, b"3,c\r\n")
+    with open(meta) as fh:
+        on_disk = json.load(fh)
+    assert on_disk == {**mapping, "legacy_new": e1.sink.catalog["legacy_new"]}
+    assert not os.path.exists(legacy)
+    assert not spark.catalog.tableExists(CATALOG_TABLE)
+
+    e1.execute_sql("DROP TABLE legacy_gone")
+    e2 = Engine.from_config(cfg, spark=spark)
+    assert "legacy_gone" not in e2.sink.catalog
+    assert "legacy_keep" in e2.sink.catalog and "legacy_new" in e2.sink.catalog
+
+
+def test_catalog_commit_runs_no_spark_job(spark, warehouse_dir):
+    """The catalog commit is a file write, not a Spark job: a
+    steady-state push runs exactly its one load job, DROP TABLE runs
+    none, and an Engine start over a loaded warehouse runs at most
+    its SELECT 1 validation probe."""
+    sched = spark._jsparkSession.sparkContext().dagScheduler()
+    cfg = json.dumps({"connectionUri": warehouse_dir})
+    eng = Engine.from_config(cfg, spark=spark)
+    sink = eng.csv_create_sink()
+    sink.consume("/budget_t", COLS, b"1,a\r\n")
+    start = sched.nextJobId()
+    sink.consume("/budget_t", COLS, b"2,b\r\n3,c\r\n")
+    assert sched.nextJobId() - start == 1
+    start = sched.nextJobId()
+    Engine.from_config(cfg, spark=spark)
+    assert sched.nextJobId() - start <= 1
+    start = sched.nextJobId()
+    eng.execute_sql("DROP TABLE budget_t")
+    assert sched.nextJobId() - start == 0
+    assert "budget_t" not in Engine.from_config(cfg, spark=spark).sink.catalog
 
 
 def test_alter_table_rename_to(engine):

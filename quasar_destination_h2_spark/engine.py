@@ -17,17 +17,19 @@ Parity with ``H2DestinationModule.destination``
 
 from __future__ import annotations
 
+import functools
 import logging
 import random
 import string
 from concurrent.futures import ThreadPoolExecutor, TimeoutError as FutTimeout
 from typing import Any, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .config import Config
 from .errors import ConnectionFailed
-from .idents import hygienic_ident
+from .idents import hygienic_ident, storage_safe_name
+from .operators import similarity, text
 from .sources.sink import CsvCreateSink
 from .types import TypeOptions, DEFAULT_OPTIONS
 
@@ -67,6 +69,206 @@ DEFAULT_SPARK_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
 }
+
+
+# -- stored-index protocol ------------------------------------------------
+#
+# The seven stored index families (IVF, PQ, IVFPQ, IVFBQ, cascade, BM25
+# text, graph) share one write/verify protocol, built from the helpers
+# below and the Engine helpers beside build_ivf_index:
+#
+# * every member table of one build carries the build's random id
+#   (_stamp); the text and graph indexes also carry a revision that
+#   each append bumps;
+# * heavy (corpus-sized) tables are written FIRST and bounded tables
+#   (centroids, codebook, stats, degrees, nodes) LAST, each replaced by
+#   drop + CTAS (Engine._replace_table) — a crash between two writes
+#   leaves members that disagree on build id or revision;
+# * an append reads the bounded quantizer tables once
+#   (Engine._read_quantizers), refuses a torn index before it writes,
+#   and appends to the heavy tables without rewriting them
+#   (_append_stored);
+# * a search verifies that its members agree — build ids, revisions,
+#   and each family's per-build count identity (_member_builds) —
+#   before it serves, and remembers the verified state in
+#   Engine._verified under (family, name). Every build or append
+#   clears that entry before its first write, so the heavy check runs
+#   once per build or append, never per steady-state probe. An
+#   out-of-band writer forging rows under a verified id is the one
+#   case this trusts — the same trust the catalog's flock protocol
+#   extends to same-warehouse writers.
+
+
+def _stamp(df: DataFrame, build_id: str, revision: Optional[int] = None) -> DataFrame:
+    """``df`` with the build id (and, for the revisioned text and
+    graph indexes, the revision) that every member table of one
+    index build carries."""
+    df = df.withColumn("build_id", F.lit(build_id))
+    if revision is None:
+        return df
+    return df.withColumn("revision", F.lit(revision).cast("bigint"))
+
+
+def _list_rows(df: DataFrame, build_id: str, *cols: Any) -> DataFrame:
+    """Rows of a centroid-PARTITIONED member table: ``cols``, the
+    build id, then the partition column ``centroid_id``."""
+    return df.select(*cols, F.lit(build_id).alias("build_id"), "centroid_id")
+
+
+def _vector_rows(
+    assigned: DataFrame, build_id: str, id_col: str, vec_col: str
+) -> DataFrame:
+    """``{name}_vectors`` rows of the IVFPQ / IVFBQ / cascade indexes
+    from a scored assignment: (vec_id, embedding, sim_micro, build_id,
+    centroid_id). sim_micro (the winning 6-rounded cosine in integer
+    micro-units, which the assign argmax computes anyway) feeds the
+    drift instrument."""
+    return _list_rows(
+        assigned,
+        build_id,
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+        "sim_micro",
+    )
+
+
+def _bq_codes(
+    src: DataFrame, build_id: str, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """Centroid-partitioned sign-code rows (vec_id, sig_lo, sig_hi,
+    build_id, centroid_id) of ``src``'s assigned vectors: the sign
+    quantizer is parameterless, so the encode is one projection and
+    the centroid id rides the row."""
+    codes = similarity.ivfbq_encode(src, None, id_col, vec_col, assigned=src)
+    return _list_rows(codes, build_id, "vec_id", "sig_lo", "sig_hi")
+
+
+def _pq_codes(
+    src: DataFrame,
+    cb: "DataFrame | list",
+    m: int,
+    build_id: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Centroid-partitioned PQ code rows (vec_id, m, code, build_id,
+    centroid_id) of ``src``'s assigned vectors, encoded against the
+    codebook ``cb`` (a frame or its collected rows); the centroid id
+    rides the row, so no join with the assignment is needed."""
+    codes = similarity.ivfpq_encode(src, None, cb, m, id_col, vec_col, assigned=src)
+    return _list_rows(codes, build_id, "vec_id", "m", "code")
+
+
+def _coarse_quantizer(
+    emb: DataFrame, id_col: str, vec_col: str, n_list: int, kmeans_iters: int
+) -> DataFrame:
+    """The IVF coarse quantizer: k-means-refined centroids, or the md5
+    seeds themselves when ``kmeans_iters`` is 0."""
+    if kmeans_iters:
+        return similarity.kmeans_refine(
+            emb, id_col, vec_col, n_list, iters=kmeans_iters
+        )
+    return similarity.ivf_centroids(emb, id_col, vec_col, n_list).localCheckpoint()
+
+
+def _pq_params(m: Optional[int], k: Optional[int], iters: Optional[int]) -> tuple:
+    """PQ (m, k, training iterations), operator defaults filled in."""
+    return (
+        similarity.PQ_M if m is None else m,
+        similarity.PQ_K if k is None else k,
+        similarity.PQ_ITERS if iters is None else iters,
+    )
+
+
+def _mean_sim_micro(df: DataFrame) -> tuple:
+    """(rows, mean sim_micro) of a scored assignment in one job —
+    integer division of exact micro sums, so the mean is
+    engine-reproducible; None for an empty assignment."""
+    row = df.agg(
+        F.sum("sim_micro").alias("s"), F.count(F.lit(1)).alias("n")
+    ).collect()[0]
+    return int(row.n), (int(row.s) // int(row.n) if row.s is not None else None)
+
+
+def _quantizer_state(*frames: DataFrame) -> tuple:
+    """(sorted build ids, pq_m) of an index's bounded quantizer tables
+    in ONE distinct collect — the steady-state freshness read of the
+    compressed searches. A codebook contributes its pq_m; pq_m is
+    None when no frame carries one (or the codebook is empty)."""
+    rows = (
+        functools.reduce(
+            DataFrame.unionByName,
+            [
+                f.select(
+                    "build_id",
+                    (F.col("pq_m") if "pq_m" in f.columns else F.lit(None))
+                    .cast("int")
+                    .alias("pq_m"),
+                )
+                for f in frames
+            ],
+        )
+        .distinct()
+        .collect()
+    )
+    ms = sorted({int(r.pq_m) for r in rows if r.pq_m is not None})
+    return sorted({r.build_id for r in rows}), (ms[0] if ms else None)
+
+
+def _member_builds(**members: DataFrame) -> tuple:
+    """(sorted build ids, row count per member) of an index's heavy
+    member tables in ONE aggregation job — a per-build count of each
+    member, unioned. The ids meet the quantizers' id in the tear
+    check; the counts feed the family's count identity (m code rows
+    per vector for IVFPQ, one sign code per vector for IVFBQ, both
+    for cascade), which catches a half-applied append that the ids
+    cannot see."""
+    rows = functools.reduce(
+        DataFrame.unionByName,
+        [
+            df.groupBy("build_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select("build_id", "n", F.lit(side).alias("side"))
+            for side, df in members.items()
+        ],
+    ).collect()
+    counts = dict.fromkeys(members, 0)
+    for r in rows:
+        counts[r.side] += int(r.n)
+    return sorted({r.build_id for r in rows}), counts
+
+
+def _states(df: DataFrame) -> list:
+    """Sorted distinct (build_id, revision) pairs of a revisioned
+    member table (one column-pruned scan)."""
+    return sorted(
+        (r.build_id, int(r.revision))
+        for r in df.select("build_id", "revision").distinct().collect()
+    )
+
+
+def _torn_codebook(label: str, name: str, family: str) -> ValueError:
+    """An EMPTY codebook contributes no build id, so every id check
+    passes vacuously on it — name the missing rows instead."""
+    return ValueError(
+        f"{label} index {name!r} is torn: the codebook table has no rows "
+        f"— re-run build_{family}_index"
+    )
+
+
+def _append_stored(
+    logical: str, df: DataFrame, key: str, n_buckets: Optional[int] = None
+) -> None:
+    """Append ``df`` to a stored member table as it is: into its
+    ``key``-partitioned directories or, given ``n_buckets``, its
+    ``key``-bucketed files (``n_buckets`` must match the build's —
+    Spark refuses a mismatched bucket spec loudly)."""
+    w = df.write.mode("append").format("parquet")
+    if n_buckets is None:
+        w = w.partitionBy(key)
+    else:
+        w = w.bucketBy(n_buckets, key).sortBy(key)
+    w.saveAsTable(storage_safe_name(logical))
 
 
 class Engine:
@@ -110,12 +312,11 @@ class Engine:
         #: current_schema; empty = strict current-schema (H2's
         #: default). See sql_dml._resolution_order.
         self.schema_search_path: list = []
-        #: ANN serving: build ids whose assignment-side integrity this
-        #: engine has already verified (see ann_topk) — keyed by index
-        #: name. Invalidated whenever THIS engine rebuilds or appends.
-        self._ann_verified: dict = {}
-        self._text_verified: dict = {}
-        self._graph_verified: dict = {}
+        #: index state this engine has verified, keyed by (family,
+        #: index name) — see the stored-index protocol above _stamp.
+        #: Set only after a check passes; cleared before every build
+        #: or append through THIS engine writes.
+        self._verified: dict = {}
         #: per-index persisted (prepared, nodes) frames of the LAST
         #: pagerank_served call — unpersisted on the next call so a
         #: long-lived session never accumulates pinned blocks
@@ -231,6 +432,154 @@ class Engine:
             stop_sql_endpoint(self._servers.pop())
         self.endpoint_started = False
 
+    # -- stored-index protocol (see the comment above _stamp) ----------
+
+    def _replace_table(self, logical_name: str, df: DataFrame) -> None:
+        """DROP TABLE IF EXISTS, then CREATE TABLE AS — how an index
+        (re)writes its bounded tables (the reference's load protocol,
+        H2CsvCreateSink.scala:106-126)."""
+        self.drop_table_if_exists(logical_name)
+        self.create_table_as(logical_name, df)
+
+    def _write_centroids(
+        self, name: str, members: str, cents: DataFrame, build_id: str
+    ) -> None:
+        """Write ``{name}_centroids`` (after the heavy tables), frozen
+        with the build's drift baseline: the mean sim_micro of the
+        just-stored ``{name}_{members}`` assignment, which every
+        append's drift report compares its batch against. One
+        column-pruned scan of the stored int column."""
+        _, mean = _mean_sim_micro(self.table(f"{name}_{members}"))
+        self._replace_table(
+            f"{name}_centroids",
+            _stamp(cents, build_id).withColumn(
+                "build_mean_sim_micro", F.lit(mean).cast("bigint")
+            ),
+        )
+
+    def _write_codebook(
+        self, name: str, cb: DataFrame, build_id: str, m: int, k: int
+    ) -> None:
+        """Write ``{name}_codebook`` (the m x k PQ codebooks) with the
+        build id and its (pq_m, pq_k) parameters."""
+        self._replace_table(
+            f"{name}_codebook",
+            _stamp(cb, build_id)
+            .withColumn("pq_m", F.lit(m).cast("int"))
+            .withColumn("pq_k", F.lit(k).cast("int")),
+        )
+
+    def _read_quantizers(
+        self, name: str, label: str, family: str, codebook: bool = False
+    ) -> tuple:
+        """An append's read of the index's bounded quantizer tables:
+        ONE collect per table (n_list centroid rows, m x k codebook
+        rows) serves the build-id check, the drift baseline, pq_m and
+        the assign/encode literals — the appends plan from these rows,
+        never from the tables. Raises before the append writes
+        anything when the tables disagree on the build id or the
+        codebook is empty (encoding against an empty codebook would
+        append vectors without codes). Returns (build_id,
+        build_mean_sim_micro, centroid rows, codebook rows, pq_m)."""
+        cents = (
+            self.table(f"{name}_centroids")
+            .select("centroid_id", "cvec", "build_id", "build_mean_sim_micro")
+            .collect()
+        )
+        cb = (
+            self.table(f"{name}_codebook")
+            .select("m", "code", "cvec", "build_id", "pq_m")
+            .collect()
+            if codebook
+            else []
+        )
+        ids = sorted({r.build_id for r in cents + cb})
+        if len(ids) != 1 or not cents:
+            raise ValueError(
+                f"{label} index {name!r} "
+                f"{'quantizers' if codebook else 'centroids'} carry build "
+                f"ids {ids} — re-run build_{family}_index before appending"
+            )
+        if codebook and not cb:
+            raise _torn_codebook(label, name, family)
+        pq_m = int(cb[0].pq_m) if cb else None
+        return ids[0], cents[0].build_mean_sim_micro, cents, cb, pq_m
+
+    def _drift_report(self, batch: DataFrame, build_mean: Optional[int]) -> DataFrame:
+        """The one-row drift report every ANN append returns:
+        (appended_rows, batch_mean_sim_micro, build_mean_sim_micro,
+        drift_micro) — drift_micro = build mean − batch mean assigned
+        similarity, in integer micro-units."""
+        n, batch_mean = _mean_sim_micro(batch)
+        drift = (
+            build_mean - batch_mean
+            if build_mean is not None and batch_mean is not None
+            else None
+        )
+        return self.spark.createDataFrame(
+            [(n, batch_mean, build_mean, drift)],
+            "appended_rows bigint, batch_mean_sim_micro bigint, "
+            "build_mean_sim_micro bigint, drift_micro bigint",
+        )
+
+    def _build_lists(
+        self,
+        family: str,
+        name: str,
+        emb: DataFrame,
+        n_list: int,
+        kmeans_iters: int,
+        id_col: str,
+        vec_col: str,
+        encode,
+    ) -> str:
+        """The shared build of the centroid-PARTITIONED families
+        (IVFPQ, IVFBQ, and cascade through IVFBQ): train the coarse
+        quantizer, store the scored assignment as ``{name}_vectors``,
+        store ``encode(stored vectors, build_id)`` as ``{name}_codes``
+        (the encode reads the stored table, whose centroid_id rides
+        each row), then freeze ``{name}_centroids`` with the drift
+        baseline. Returns the build id."""
+        cents = _coarse_quantizer(emb, id_col, vec_col, n_list, kmeans_iters)
+        build_id = random_alphanum()
+        self._verified.pop((family, name), None)
+        assigned = similarity._assign_scored(emb, cents, id_col, vec_col)
+        self.materialize_partitioned(
+            f"{name}_vectors",
+            _vector_rows(assigned, build_id, id_col, vec_col),
+            ["centroid_id"],
+        )
+        self.materialize_partitioned(
+            f"{name}_codes",
+            encode(self.table(f"{name}_vectors"), build_id),
+            ["centroid_id"],
+        )
+        self._write_centroids(name, "vectors", cents, build_id)
+        return build_id
+
+    def _text_stats(self, name: str) -> tuple:
+        """(stats table, its one row) of a BM25 text index; raises
+        unless the table holds exactly one row."""
+        stats_tbl = self.table(f"{name}_stats")
+        rows = stats_tbl.collect()
+        if len(rows) != 1:
+            raise ValueError(
+                f"text index {name!r} stats table has {len(rows)} rows — "
+                "re-run build_text_index"
+            )
+        return stats_tbl, rows[0]
+
+    def _release_graph_frames(self, name: str) -> None:
+        """Unpersist the frames the last pagerank_served call cached
+        for graph index ``name``."""
+        for prior in self._graph_frames.pop(name, (None,))[1:]:
+            try:
+                prior.unpersist()
+            except Exception:
+                pass
+
+    # -- index families ---------------------------------------------------
+
     def build_ivf_index(
         self,
         name: str,
@@ -250,61 +599,24 @@ class Engine:
         shuffle (the semantic_dedup ``assigned=`` story, productized;
         pinned by tests/test_bucketing.py::test_ann_index_lifecycle).
         Rebuild cost is paid ONCE per corpus refresh, probes pay
-        only their own bounded work."""
-        from pyspark.sql import functions as F
+        only their own bounded work.
 
-        from .operators import similarity
-
-        cents = (
-            similarity.kmeans_refine(
-                emb, id_col, vec_col, n_list, iters=kmeans_iters
-            )
-            if kmeans_iters
-            else similarity.ivf_centroids(
-                emb, id_col, vec_col, n_list
-            ).localCheckpoint()
-        )
-        # the stored assignment carries sim_micro (the winning
-        # 6-rounded cosine in integer micro-units): appends need it
-        # for the drift instrument, and it costs nothing extra — the
-        # argmax already computes the score
+        The stored assignment carries sim_micro, the drift
+        instrument's input. Both tables carry a shared build id, and
+        the heavy bucketed assignment lands FIRST: a failure between
+        the two writes leaves tables from DIFFERENT builds, whose
+        centroid ids would still join silently — ann_topk verifies
+        the build ids match and errors instead of serving wrong
+        neighbors from a torn rebuild (the stored-index protocol,
+        see :func:`_stamp`)."""
+        cents = _coarse_quantizer(emb, id_col, vec_col, n_list, kmeans_iters)
         assigned = similarity._assign_scored(emb, cents, id_col, vec_col)
-        # Both tables carry a shared build id, and the heavy write
-        # (the bucketed assignment) lands FIRST: a failure between
-        # the two writes leaves tables from DIFFERENT builds, whose
-        # centroid ids would still join silently — ann_topk verifies
-        # the build ids match and errors instead of serving wrong
-        # neighbors from a torn rebuild.
         build_id = random_alphanum()
-        self._ann_verified.pop(name, None)
+        self._verified.pop(("ivf", name), None)
         self.materialize_bucketed(
-            f"{name}_assigned",
-            assigned.withColumn("build_id", F.lit(build_id)),
-            ["centroid_id"],
-            n_buckets,
+            f"{name}_assigned", _stamp(assigned, build_id), ["centroid_id"], n_buckets
         )
-        # the build's mean assigned similarity, frozen on the
-        # centroids table — the drift baseline append_to_ivf_index
-        # compares new batches against. Integer division of exact
-        # micro sums -> engine-reproducible. One column-pruned scan
-        # of the just-written int column; bounded driver work.
-        row = (
-            self.table(f"{name}_assigned")
-            .agg(
-                F.sum("sim_micro").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()[0]
-        )
-        mean_micro = int(row.s) // int(row.n) if row.s is not None else None
-        self.drop_table_if_exists(f"{name}_centroids")
-        self.create_table_as(
-            f"{name}_centroids",
-            cents.withColumn("build_id", F.lit(build_id)).withColumn(
-                "build_mean_sim_micro",
-                F.lit(mean_micro).cast("bigint"),
-            ),
-        )
+        self._write_centroids(name, "assigned", cents, build_id)
 
     def append_to_ivf_index(
         self,
@@ -338,51 +650,13 @@ class Engine:
         mismatched bucket spec loudly). Appended rows ≡ what a
         rebuild-on-union would assign AGAINST THE SAME centroids —
         pinned by tests/test_bucketing.py."""
-        from pyspark.sql import functions as F
-
-        from .idents import storage_safe_name
-        from .operators import similarity
-
-        # one read of the n_list-row centroid table serves the
-        # build-id check, the drift baseline and the assign literals
-        rows = (
-            self.table(f"{name}_centroids")
-            .select("centroid_id", "cvec", "build_id", "build_mean_sim_micro")
-            .collect()
-        )
-        cid = list(dict.fromkeys(r.build_id for r in rows))
-        if len(cid) != 1:
-            raise ValueError(
-                f"ANN index {name!r} centroids carry build ids {cid} — "
-                "re-run build_ivf_index before appending"
-            )
-        build_mean = rows[0].build_mean_sim_micro
-        batch = similarity._assign_scored(
-            new_emb, rows, id_col, vec_col
-        ).withColumn("build_id", F.lit(cid[0])).localCheckpoint()
-        physical = storage_safe_name(f"{name}_assigned")
-        self._ann_verified.pop(name, None)
-        (
-            batch.write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "centroid_id")
-            .sortBy("centroid_id")
-            .saveAsTable(physical)
-        )
-        row = batch.agg(
-            F.sum("sim_micro").alias("s"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        batch_mean = int(row.s) // int(row.n) if row.s is not None else None
-        drift = (
-            build_mean - batch_mean
-            if build_mean is not None and batch_mean is not None
-            else None
-        )
-        return self.spark.createDataFrame(
-            [(int(row.n), batch_mean, build_mean, drift)],
-            "appended_rows bigint, batch_mean_sim_micro bigint, "
-            "build_mean_sim_micro bigint, drift_micro bigint",
-        )
+        build_id, build_mean, cents, _, _ = self._read_quantizers(name, "ANN", "ivf")
+        batch = _stamp(
+            similarity._assign_scored(new_emb, cents, id_col, vec_col), build_id
+        ).localCheckpoint()
+        self._verified.pop(("ivf", name), None)
+        _append_stored(f"{name}_assigned", batch, "centroid_id", n_buckets)
+        return self._drift_report(batch, build_mean)
 
     def ann_topk(
         self,
@@ -409,44 +683,32 @@ class Engine:
         centroid_id buckets, and a per-query window keeps the top
         ``k``. Four Spark jobs per steady-state call, centroid read
         included (pinned by tests/test_bucketing.py)."""
-        from .operators import similarity
-
         assigned = self.table(f"{name}_assigned")
         rows = (
             self.table(f"{name}_centroids")
             .select("centroid_id", "cvec", "build_id")
             .collect()
         )
-        cid = list(dict.fromkeys(r.build_id for r in rows))
+        cid = sorted({r.build_id for r in rows})
         # DISTINCT over the assignment side, not limit(1): a torn
         # overwrite / bad append can leave rows from SEVERAL builds
         # interleaved, and a sampled single row can accidentally
         # match the centroids' id while wrong-build rows still
-        # serve. The distinct is one column-pruned scan — too much
-        # to pay on EVERY serving call at 100 TB, so the result is
-        # memoized per build id: once this engine has verified the
-        # assignment for the centroids' current id, later probes pay
-        # only the n_list-row centroid check. Rebuilds get a fresh
-        # id (cache miss -> re-verify); appends through
-        # append_to_ivf_index invalidate the memo explicitly. An
-        # out-of-band writer forging rows under a verified id is the
-        # one case this trusts — the same trust the catalog's flock
-        # protocol already extends to same-warehouse writers.
-        if len(cid) == 1 and self._ann_verified.get(name) == cid[0]:
-            aid = cid
-        else:
+        # serve. The distinct is one column-pruned scan, paid once
+        # per build or append (the verified-state memo).
+        if self._verified.get(("ivf", name)) != cid:
             aid = sorted(
                 r.build_id
                 for r in assigned.select("build_id").distinct().collect()
             )
-        if len(cid) != 1 or (aid and aid != cid):
-            raise ValueError(
-                f"ANN index {name!r} is torn (centroids build "
-                f"{cid} vs assignment build {aid}) — re-run "
-                "build_ivf_index"
-            )
-        if aid:
-            self._ann_verified[name] = cid[0]
+            if len(cid) != 1 or (aid and aid != cid):
+                raise ValueError(
+                    f"ANN index {name!r} is torn (centroids build "
+                    f"{cid} vs assignment build {aid}) — re-run "
+                    "build_ivf_index"
+                )
+            if aid:
+                self._verified[("ivf", name)] = cid
         return similarity.ann_search(
             assigned,
             rows,
@@ -484,43 +746,25 @@ class Engine:
         runs WITHOUT an index-side exchange (pinned by
         tests/test_bucketing.py::test_pq_index_lifecycle).
 
-        Torn-state discipline (the build_ivf_index protocol): all
-        three tables share a build id, heavy writes land first, and
-        :meth:`pq_search` verifies agreement before serving."""
-        from pyspark.sql import functions as F
-
-        from .operators import similarity
-
-        m = similarity.PQ_M if m is None else m
-        k = similarity.PQ_K if k is None else k
-        iters = similarity.PQ_ITERS if kmeans_iters is None else kmeans_iters
+        Torn-state discipline (the stored-index protocol, see
+        :func:`_stamp`): all three tables share a build id, heavy
+        writes land first, and :meth:`pq_search` verifies agreement
+        before serving."""
+        m, k, iters = _pq_params(m, k, kmeans_iters)
         cb = similarity.pq_codebooks(emb, m, k, iters, id_col, vec_col)
         codes = similarity.pq_encode(emb, cb, m, id_col, vec_col)
         build_id = random_alphanum()
-        self._ann_verified.pop(f"pq:{name}", None)
+        self._verified.pop(("pq", name), None)
         self.materialize_bucketed(
-            f"{name}_codes",
-            codes.withColumnRenamed(id_col, "vec_id").withColumn(
-                "build_id", F.lit(build_id)
-            ),
-            ["vec_id"],
-            n_buckets,
+            f"{name}_codes", _stamp(codes, build_id), ["vec_id"], n_buckets
+        )
+        vectors = emb.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         )
         self.materialize_bucketed(
-            f"{name}_vectors",
-            emb.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-            ).withColumn("build_id", F.lit(build_id)),
-            ["vec_id"],
-            n_buckets,
+            f"{name}_vectors", _stamp(vectors, build_id), ["vec_id"], n_buckets
         )
-        self.drop_table_if_exists(f"{name}_codebook")
-        self.create_table_as(
-            f"{name}_codebook",
-            cb.withColumn("build_id", F.lit(build_id))
-            .withColumn("pq_m", F.lit(m).cast("int"))
-            .withColumn("pq_k", F.lit(k).cast("int")),
-        )
+        self._write_codebook(name, cb, build_id, m, k)
 
     def pq_search(
         self,
@@ -549,42 +793,22 @@ class Engine:
         query id space may COLLIDE with vec_ids, or a same-id corpus
         vector is silently excluded from that query's top-k. Raises
         on a torn build (mismatched build ids across the three
-        tables); the heavy distinct scans are memoized per build id
+        tables); the heavy member scan is memoized per build id
         like ann_topk's."""
-        from .operators import similarity
-
-        codes = self.table(f"{name}_codes")
-        vectors = self.table(f"{name}_vectors")
-        cb = self.table(f"{name}_codebook")
-        # ONE collect serves the freshness check AND pq_m (r16: the
-        # steady-state probe used to pay two driver actions on the
-        # bounded codebook before searching); the memo carries
-        # (build_id, m) so the verified path never re-reads pq_m
-        meta = cb.select("build_id", "pq_m").distinct().collect()
-        cid = sorted({r.build_id for r in meta})
-        memo_key = f"pq:{name}"
-        memo = self._ann_verified.get(memo_key)
-        if len(cid) == 1 and memo and memo[0] == cid[0]:
-            heavy = cid
-            m = memo[1]
-        else:
-            heavy = sorted(
-                set(
-                    r.build_id
-                    for r in codes.select("build_id")
-                    .distinct()
-                    .union(vectors.select("build_id").distinct())
-                    .collect()
+        codes, vectors, cb = (
+            self.table(f"{name}_{t}") for t in ("codes", "vectors", "codebook")
+        )
+        # ONE collect serves the freshness check AND pq_m
+        cid, m = _quantizer_state(cb)
+        if self._verified.get(("pq", name)) != (cid, m):
+            heavy, _ = _member_builds(codes=codes, vectors=vectors)
+            if len(cid) != 1 or (heavy and heavy != cid):
+                raise ValueError(
+                    f"PQ index {name!r} is torn (codebook build {cid} vs "
+                    f"codes/vectors builds {heavy}) — re-run build_pq_index"
                 )
-            )
-            m = int(meta[0].pq_m) if meta else similarity.PQ_M
-        if len(cid) != 1 or (heavy and heavy != cid):
-            raise ValueError(
-                f"PQ index {name!r} is torn (codebook build {cid} vs "
-                f"codes/vectors builds {heavy}) — re-run build_pq_index"
-            )
-        if heavy:
-            self._ann_verified[memo_key] = (cid[0], m)
+            if heavy:
+                self._verified[("pq", name)] = (cid, m)
         lut = similarity.pq_query_lut(
             queries, cb.select("m", "code", "cvec"), m, query_id_col, query_vec_col
         )
@@ -639,83 +863,21 @@ class Engine:
         coarse assignment + codebook training + one encode pass —
         never a join between corpus-sized frames. Heavy writes land
         first; :meth:`ivfpq_search` verifies build-id agreement
-        before serving (the build_ivf_index torn-state protocol)."""
-        from pyspark.sql import functions as F
-
-        from .operators import similarity
-
-        m = similarity.PQ_M if m is None else m
-        k = similarity.PQ_K if k is None else k
-        iters = similarity.PQ_ITERS if pq_iters is None else pq_iters
-        cents = (
-            similarity.kmeans_refine(
-                emb, id_col, vec_col, n_list, iters=kmeans_iters
-            )
-            if kmeans_iters
-            else similarity.ivf_centroids(
-                emb, id_col, vec_col, n_list
-            ).localCheckpoint()
-        )
+        before serving (the stored-index protocol, see
+        :func:`_stamp`)."""
+        m, k, iters = _pq_params(m, k, pq_iters)
         cb = similarity.pq_codebooks(emb, m, k, iters, id_col, vec_col)
-        build_id = random_alphanum()
-        self._ann_verified.pop(f"ivfpq:{name}", None)
-        # the stored assignment carries sim_micro (the winning
-        # 6-rounded cosine in integer micro-units): appends need it
-        # for the drift instrument, and the argmax already computes it
-        assigned = similarity._assign_scored(emb, cents, id_col, vec_col)
-        self.materialize_partitioned(
-            f"{name}_vectors",
-            assigned.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                "sim_micro",
-                F.lit(build_id).alias("build_id"),
-                "centroid_id",
-            ),
-            ["centroid_id"],
+        build_id = self._build_lists(
+            "ivfpq",
+            name,
+            emb,
+            n_list,
+            kmeans_iters,
+            id_col,
+            vec_col,
+            lambda stored, bid: _pq_codes(stored, cb, m, bid),
         )
-        stored = self.table(f"{name}_vectors")
-        codes = similarity.ivfpq_encode(
-            stored, cents, cb, m, dim=similarity.EMBED_DIM, assigned=stored
-        )
-        self.materialize_partitioned(
-            f"{name}_codes",
-            codes.select(
-                "vec_id",
-                "m",
-                "code",
-                F.lit(build_id).alias("build_id"),
-                "centroid_id",
-            ),
-            ["centroid_id"],
-        )
-        # the build's mean assigned similarity, frozen on the
-        # centroids table — the drift baseline append_to_ivfpq_index
-        # compares new batches against (the build_ivf_index protocol)
-        row = (
-            self.table(f"{name}_vectors")
-            .agg(
-                F.sum("sim_micro").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()[0]
-        )
-        mean_micro = int(row.s) // int(row.n) if row.s is not None else None
-        self.drop_table_if_exists(f"{name}_centroids")
-        self.create_table_as(
-            f"{name}_centroids",
-            cents.withColumn("build_id", F.lit(build_id)).withColumn(
-                "build_mean_sim_micro",
-                F.lit(mean_micro).cast("bigint"),
-            ),
-        )
-        self.drop_table_if_exists(f"{name}_codebook")
-        self.create_table_as(
-            f"{name}_codebook",
-            cb.withColumn("build_id", F.lit(build_id))
-            .withColumn("pq_m", F.lit(m).cast("int"))
-            .withColumn("pq_k", F.lit(k).cast("int")),
-        )
+        self._write_codebook(name, cb, build_id, m, k)
 
     def append_to_ivfpq_index(
         self,
@@ -727,8 +889,8 @@ class Engine:
         """[EXT] Incremental append to the composed IVF+PQ index —
         the nightly-crawl story extended to both quantizers: the
         batch is assigned against the STORED centroids and encoded
-        against the STORED codebooks (two bounded broadcasts, one
-        pass over the batch only — the corpus is never rescanned,
+        against the STORED codebooks (both read once, as literals;
+        one pass over the batch only — the corpus is never rescanned,
         neither quantizer re-trains), appended to BOTH
         centroid-partitioned tables under the build's id (probes
         keep pruning to their lists; ivfpq_search's torn check still
@@ -742,83 +904,21 @@ class Engine:
         caught by ivfpq_search's m-codes-per-vector count identity
         (checked whenever the build-id memo misses), which refuses
         to serve a half-appended index."""
-        from pyspark.sql import functions as F
-
-        from .idents import storage_safe_name
-        from .operators import similarity
-
-        cents = self.table(f"{name}_centroids")
-        cb = self.table(f"{name}_codebook")
-        cid = sorted(
-            set(
-                r.build_id
-                for r in cents.select("build_id")
-                .distinct()
-                .union(cb.select("build_id").distinct())
-                .collect()
-            )
+        build_id, build_mean, cents, cb, m = self._read_quantizers(
+            name, "IVFPQ", "ivfpq", codebook=True
         )
-        if len(cid) != 1:
-            raise ValueError(
-                f"IVFPQ index {name!r} quantizers carry build ids {cid} — "
-                "re-run build_ivfpq_index before appending"
-            )
-        build_mean = cents.select("build_mean_sim_micro").first()[0]
-        mrow = cb.select("pq_m").first()
-        m = int(mrow.pq_m) if mrow else similarity.PQ_M
         batch = similarity._assign_scored(
-            new_emb, cents.select("centroid_id", "cvec"), id_col, vec_col
+            new_emb, cents, id_col, vec_col
         ).localCheckpoint()
-        codes = similarity.ivfpq_encode(
-            batch,
-            cents,
-            cb.select("m", "code", "cvec"),
-            m,
-            id_col,
-            vec_col,
-            assigned=batch,
-        ).localCheckpoint()
-        self._ann_verified.pop(f"ivfpq:{name}", None)
-        (
-            batch.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                "sim_micro",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_vectors"))
+        codes = _pq_codes(batch, cb, m, build_id, id_col, vec_col).localCheckpoint()
+        self._verified.pop(("ivfpq", name), None)
+        _append_stored(
+            f"{name}_vectors",
+            _vector_rows(batch, build_id, id_col, vec_col),
+            "centroid_id",
         )
-        (
-            codes.select(
-                "vec_id",
-                "m",
-                "code",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_codes"))
-        )
-        row = batch.agg(
-            F.sum("sim_micro").alias("s"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        batch_mean = int(row.s) // int(row.n) if row.s is not None else None
-        drift = (
-            build_mean - batch_mean
-            if build_mean is not None and batch_mean is not None
-            else None
-        )
-        return self.spark.createDataFrame(
-            [(int(row.n), batch_mean, build_mean, drift)],
-            "appended_rows bigint, batch_mean_sim_micro bigint, "
-            "build_mean_sim_micro bigint, drift_micro bigint",
-        )
+        _append_stored(f"{name}_codes", codes, "centroid_id")
+        return self._drift_report(batch, build_mean)
 
     def ivfpq_search(
         self,
@@ -849,73 +949,38 @@ class Engine:
         :func:`operators.similarity.ann_ivfpq_topk`.
         ``exclude_query_ids`` as in :meth:`pq_search`: pass False
         when the external query id space may collide with vec_ids.
-        Raises on a torn build; heavy distinct scans memoized per
+        Raises on a torn build; the heavy member scan is memoized per
         build id like ann_topk's."""
-        from .operators import similarity
-
-        from pyspark.sql import functions as F
-
-        codes = self.table(f"{name}_codes")
-        vectors = self.table(f"{name}_vectors")
-        cents = self.table(f"{name}_centroids")
-        cb = self.table(f"{name}_codebook")
-        # ONE collect over the two bounded quantizer tables serves the
-        # freshness check AND pq_m (r16: previously two driver
-        # actions per probe); the memo carries (build_id, m) so the
-        # verified steady state never re-reads pq_m either
-        meta = (
-            cents.select(
-                "build_id", F.lit(None).cast("int").alias("pq_m")
-            )
-            .unionByName(cb.select("build_id", "pq_m"))
-            .distinct()
-            .collect()
+        codes, vectors, cents, cb = (
+            self.table(f"{name}_{t}")
+            for t in ("codes", "vectors", "centroids", "codebook")
         )
-        cid = sorted({r.build_id for r in meta})
-        m_vals = sorted({int(r.pq_m) for r in meta if r.pq_m is not None})
-        m = m_vals[0] if m_vals else similarity.PQ_M
-        memo_key = f"ivfpq:{name}"
-        memo = self._ann_verified.get(memo_key)
-        if len(cid) == 1 and memo and memo[0] == cid[0]:
-            heavy = cid
-            m = memo[1]
-        else:
+        # ONE collect over the two bounded quantizer tables serves the
+        # freshness check AND pq_m
+        cid, m = _quantizer_state(cents, cb)
+        if self._verified.get(("ivfpq", name)) != (cid, m):
+            if m is None:
+                raise _torn_codebook("IVFPQ", name, "ivfpq")
             # a failure BETWEEN append_to_ivfpq_index's two table
             # appends leaves vectors without codes under the SAME
             # build id — invisible to the id check, silently absent
             # from ADC scoring. Every vector carries exactly m code
-            # rows, so the count identity detects the tear. The ids
-            # AND both counts ride ONE per-build aggregation job
-            # (r16: previously three — a distinct-union collect plus
-            # two count jobs), paid once per build/append, never per
-            # steady-state probe.
-            stats = (
-                codes.groupBy("build_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select("build_id", "n", F.lit("codes").alias("side"))
-                .unionByName(
-                    vectors.groupBy("build_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .select("build_id", "n", F.lit("vectors").alias("side"))
-                )
-                .collect()
-            )
-            heavy = sorted({r.build_id for r in stats})
-            n_codes = sum(int(r.n) for r in stats if r.side == "codes")
-            n_vecs = sum(int(r.n) for r in stats if r.side == "vectors")
-            if n_codes != m * n_vecs:
+            # rows, so the count identity detects the tear.
+            heavy, n = _member_builds(codes=codes, vectors=vectors)
+            if n["codes"] != m * n["vectors"]:
                 raise ValueError(
-                    f"IVFPQ index {name!r} is torn: {n_vecs} vectors "
-                    f"but {n_codes} code rows (expected {m * n_vecs}) "
-                    "— a failed append; re-run build_ivfpq_index"
+                    f"IVFPQ index {name!r} is torn: {n['vectors']} vectors "
+                    f"but {n['codes']} code rows (expected "
+                    f"{m * n['vectors']}) — a failed append; re-run "
+                    "build_ivfpq_index"
                 )
-        if len(cid) != 1 or (heavy and heavy != cid):
-            raise ValueError(
-                f"IVFPQ index {name!r} is torn (quantizer builds {cid} vs "
-                f"codes/vectors builds {heavy}) — re-run build_ivfpq_index"
-            )
-        if heavy:
-            self._ann_verified[memo_key] = (cid[0], m)
+            if len(cid) != 1 or (heavy and heavy != cid):
+                raise ValueError(
+                    f"IVFPQ index {name!r} is torn (quantizer builds {cid} vs "
+                    f"codes/vectors builds {heavy}) — re-run build_ivfpq_index"
+                )
+            if heavy:
+                self._verified[("ivfpq", name)] = (cid, m)
         probes = similarity.ivfpq_probe_lists(
             queries,
             cents.select("centroid_id", "cvec"),
@@ -988,69 +1053,12 @@ class Engine:
         assignment (zero extra corpus pass); heavy writes land
         first; :meth:`ivfbq_search` verifies build-id agreement and
         the 1-code-per-vector count identity before serving (the
-        build_ivf_index torn-state protocol)."""
-        from pyspark.sql import functions as F
-
-        from .operators import similarity
-
-        cents = (
-            similarity.kmeans_refine(
-                emb, id_col, vec_col, n_list, iters=kmeans_iters
-            )
-            if kmeans_iters
-            else similarity.ivf_centroids(
-                emb, id_col, vec_col, n_list
-            ).localCheckpoint()
+        stored-index protocol, see :func:`_stamp`). Returns the
+        build id, so build_cascade_index composes without re-reading
+        the just-written centroids."""
+        return self._build_lists(
+            "ivfbq", name, emb, n_list, kmeans_iters, id_col, vec_col, _bq_codes
         )
-        build_id = random_alphanum()
-        self._ann_verified.pop(f"ivfbq:{name}", None)
-        assigned = similarity._assign_scored(emb, cents, id_col, vec_col)
-        self.materialize_partitioned(
-            f"{name}_vectors",
-            assigned.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                "sim_micro",
-                F.lit(build_id).alias("build_id"),
-                "centroid_id",
-            ),
-            ["centroid_id"],
-        )
-        stored = self.table(f"{name}_vectors")
-        codes = similarity.ivfbq_encode(
-            stored, cents, assigned=stored
-        )
-        self.materialize_partitioned(
-            f"{name}_codes",
-            codes.select(
-                "vec_id",
-                "sig_lo",
-                "sig_hi",
-                F.lit(build_id).alias("build_id"),
-                "centroid_id",
-            ),
-            ["centroid_id"],
-        )
-        row = (
-            self.table(f"{name}_vectors")
-            .agg(
-                F.sum("sim_micro").alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()[0]
-        )
-        mean_micro = int(row.s) // int(row.n) if row.s is not None else None
-        self.drop_table_if_exists(f"{name}_centroids")
-        self.create_table_as(
-            f"{name}_centroids",
-            cents.withColumn("build_id", F.lit(build_id)).withColumn(
-                "build_mean_sim_micro",
-                F.lit(mean_micro).cast("bigint"),
-            ),
-        )
-        # returned so build_cascade_index composes without re-reading
-        # the just-written centroids (r16)
-        return build_id
 
     def append_to_ivfbq_index(
         self,
@@ -1060,9 +1068,9 @@ class Engine:
         vec_col: str = "embedding",
     ) -> DataFrame:
         """[EXT] Incremental append to the IVF+BQ index: the batch is
-        assigned against the STORED centroids (one bounded broadcast,
-        one pass over the batch only — the corpus is never rescanned)
-        and sign-packed in the same projection; both
+        assigned against the STORED centroids (read once, as
+        literals; one pass over the batch only — the corpus is never
+        rescanned) and sign-packed in the same projection; both
         centroid-partitioned tables grow under the build's id, and
         the one-row drift report of :meth:`append_to_ivf_index`
         returns — (appended_rows, batch_mean_sim_micro,
@@ -1074,67 +1082,22 @@ class Engine:
         appends are not atomic; a failure between them is caught by
         ivfbq_search's 1-code-per-vector count identity (checked
         whenever the build-id memo misses)."""
-        from pyspark.sql import functions as F
-
-        from .idents import storage_safe_name
-        from .operators import similarity
-
-        cents = self.table(f"{name}_centroids")
-        cid = [
-            r.build_id
-            for r in cents.select("build_id").distinct().collect()
-        ]
-        if len(cid) != 1:
-            raise ValueError(
-                f"IVFBQ index {name!r} centroids carry build ids "
-                f"{sorted(cid)} — re-run build_ivfbq_index before appending"
-            )
-        build_mean = cents.select("build_mean_sim_micro").first()[0]
+        build_id, build_mean, cents, _, _ = self._read_quantizers(
+            name, "IVFBQ", "ivfbq"
+        )
         batch = similarity._assign_scored(
-            new_emb, cents.select("centroid_id", "cvec"), id_col, vec_col
+            new_emb, cents, id_col, vec_col
         ).localCheckpoint()
-        self._ann_verified.pop(f"ivfbq:{name}", None)
-        (
-            batch.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                "sim_micro",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_vectors"))
+        self._verified.pop(("ivfbq", name), None)
+        _append_stored(
+            f"{name}_vectors",
+            _vector_rows(batch, build_id, id_col, vec_col),
+            "centroid_id",
         )
-        (
-            similarity.ivfbq_encode(batch, cents, id_col, vec_col, assigned=batch)
-            .select(
-                "vec_id",
-                "sig_lo",
-                "sig_hi",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_codes"))
+        _append_stored(
+            f"{name}_codes", _bq_codes(batch, build_id, id_col, vec_col), "centroid_id"
         )
-        row = batch.agg(
-            F.sum("sim_micro").alias("s"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        batch_mean = int(row.s) // int(row.n) if row.s is not None else None
-        drift = (
-            build_mean - batch_mean
-            if build_mean is not None and batch_mean is not None
-            else None
-        )
-        return self.spark.createDataFrame(
-            [(int(row.n), batch_mean, build_mean, drift)],
-            "appended_rows bigint, batch_mean_sim_micro bigint, "
-            "build_mean_sim_micro bigint, drift_micro bigint",
-        )
+        return self._drift_report(batch, build_mean)
 
     def ivfbq_search(
         self,
@@ -1163,59 +1126,33 @@ class Engine:
         ``filter_ids`` / ``exclude_query_ids`` as in
         :meth:`ivfpq_search`. Raises on a torn build (mismatched
         build ids, or a half-appended index caught by the
-        1-code-per-vector count identity); heavy distinct scans
+        1-code-per-vector count identity); the heavy member scan is
         memoized per build id like ann_topk's."""
-        from .operators import similarity
-
-        from pyspark.sql import functions as F
-
-        codes = self.table(f"{name}_codes")
-        vectors = self.table(f"{name}_vectors")
-        cents = self.table(f"{name}_centroids")
-        cid = [
-            r.build_id
-            for r in cents.select("build_id").distinct().collect()
-        ]
-        memo_key = f"ivfbq:{name}"
-        if len(cid) == 1 and self._ann_verified.get(memo_key) == cid[0]:
-            heavy = cid
-        else:
+        codes, vectors, cents = (
+            self.table(f"{name}_{t}") for t in ("codes", "vectors", "centroids")
+        )
+        cid, _ = _quantizer_state(cents)
+        if self._verified.get(("ivfbq", name)) != cid:
             # a failure BETWEEN append_to_ivfbq_index's two appends
             # leaves vectors without sign codes under the SAME build
             # id — invisible to the id check, silently absent from
             # Hamming scoring. Every vector carries exactly one code
-            # row; the ids AND both counts ride ONE per-build
-            # aggregation job (r16: previously a distinct-union
-            # collect plus two count jobs), paid once per
-            # build/append, never per steady-state probe.
-            stats = (
-                codes.groupBy("build_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select("build_id", "n", F.lit("codes").alias("side"))
-                .unionByName(
-                    vectors.groupBy("build_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .select("build_id", "n", F.lit("vectors").alias("side"))
-                )
-                .collect()
-            )
-            heavy = sorted({r.build_id for r in stats})
-            n_codes = sum(int(r.n) for r in stats if r.side == "codes")
-            n_vecs = sum(int(r.n) for r in stats if r.side == "vectors")
-            if n_codes != n_vecs:
+            # row.
+            heavy, n = _member_builds(codes=codes, vectors=vectors)
+            if n["codes"] != n["vectors"]:
                 raise ValueError(
-                    f"IVFBQ index {name!r} is torn: {n_vecs} vectors "
-                    f"but {n_codes} code rows — a failed append; "
+                    f"IVFBQ index {name!r} is torn: {n['vectors']} vectors "
+                    f"but {n['codes']} code rows — a failed append; "
                     "re-run build_ivfbq_index"
                 )
-        if len(cid) != 1 or (heavy and heavy != sorted(cid)):
-            raise ValueError(
-                f"IVFBQ index {name!r} is torn (centroid builds "
-                f"{sorted(cid)} vs codes/vectors builds {heavy}) — "
-                "re-run build_ivfbq_index"
-            )
-        if heavy:
-            self._ann_verified[memo_key] = cid[0]
+            if len(cid) != 1 or (heavy and heavy != cid):
+                raise ValueError(
+                    f"IVFBQ index {name!r} is torn (centroid builds "
+                    f"{cid} vs codes/vectors builds {heavy}) — "
+                    "re-run build_ivfbq_index"
+                )
+            if heavy:
+                self._verified[("ivfbq", name)] = cid
         probes = similarity.ivfpq_probe_lists(
             queries,
             cents.select("centroid_id", "cvec"),
@@ -1278,47 +1215,19 @@ class Engine:
         nprobe/n_list-pruned shape as the other stages. Training
         reads the STORED vectors (deterministic: the md5-seeded PQ
         init keys on vec_id, so codebooks equal an emb-direct
-        train)."""
-        from pyspark.sql import functions as F
-
-        from .operators import similarity
-
+        train), and the PQ encode reads them too, so each code row
+        carries its vector's centroid_id without a join."""
+        self._verified.pop(("cascade", name), None)
         build_id = self.build_ivfbq_index(
             name, emb, n_list, kmeans_iters, id_col, vec_col
         )
-        m = similarity.PQ_M if m is None else m
-        k = similarity.PQ_K if k is None else k
-        iters = similarity.PQ_ITERS if pq_iters is None else pq_iters
+        m, k, iters = _pq_params(m, k, pq_iters)
         stored = self.table(f"{name}_vectors")
-        # pq_codebooks returns a LocalRelation since r16 — no
-        # checkpoint needed to make its consumers free
-        cb = similarity.pq_codebooks(
-            stored, m, k, iters, "vec_id", "embedding"
-        )
-        codes = similarity.pq_encode(stored, cb, m, "vec_id", "embedding")
-        # one build-time corpus join pins each code row to its list so
-        # the SERVING scan prunes; steady-state probes never pay it
+        cb = similarity.pq_codebooks(stored, m, k, iters, "vec_id", "embedding")
         self.materialize_partitioned(
-            f"{name}_codes_pq",
-            codes.join(
-                stored.select("vec_id", "centroid_id"), "vec_id"
-            ).select(
-                "vec_id",
-                "m",
-                "code",
-                F.lit(build_id).alias("build_id"),
-                "centroid_id",
-            ),
-            ["centroid_id"],
+            f"{name}_codes_pq", _pq_codes(stored, cb, m, build_id), ["centroid_id"]
         )
-        self.drop_table_if_exists(f"{name}_codebook")
-        self.create_table_as(
-            f"{name}_codebook",
-            cb.withColumn("build_id", F.lit(build_id))
-            .withColumn("pq_m", F.lit(m).cast("int"))
-            .withColumn("pq_k", F.lit(k).cast("int")),
-        )
-        self._ann_verified.pop(f"cascade:{name}", None)
+        self._write_codebook(name, cb, build_id, m, k)
 
     def cascade_search(
         self,
@@ -1350,81 +1259,30 @@ class Engine:
         corpus. Torn-build discipline: all five tables must agree on
         one build id and both code tables must carry exactly one row
         per vector (memoized per build like :meth:`ivfbq_search`)."""
-        from .operators import similarity
-
-        codes_bq = self.table(f"{name}_codes")
-        codes_pq = self.table(f"{name}_codes_pq")
-        vectors = self.table(f"{name}_vectors")
-        cents = self.table(f"{name}_centroids")
-        cb = self.table(f"{name}_codebook")
-        cid = [
-            r.build_id
-            for r in cents.select("build_id").distinct().collect()
-        ]
-        memo_key = f"cascade:{name}"
-        memo = self._ann_verified.get(memo_key)
-        if len(cid) == 1 and memo and memo[0] == cid[0]:
-            # steady-state probe: build verified; pq_m rides the memo
-            # so serving never re-collects it (self-review r12)
-            pq_m = memo[1]
-        else:
-            from pyspark.sql import functions as F
-
-            # ids, per-tier counts AND pq_m in ONE aggregation job
-            # (r16: previously a 4-way distinct-union collect plus
-            # pq_m first() plus three count jobs), paid once per
-            # build, never per steady-state probe
-            def _leg(df, side):
-                return (
-                    df.groupBy("build_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .select(
-                        "build_id",
-                        "n",
-                        F.lit(None).cast("int").alias("pq_m"),
-                        F.lit(side).alias("side"),
-                    )
-                )
-
-            stats = (
-                _leg(codes_bq, "bq")
-                .unionByName(_leg(codes_pq, "pq"))
-                .unionByName(_leg(vectors, "vec"))
-                .unionByName(
-                    cb.groupBy("build_id", "pq_m")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .select("build_id", "n", "pq_m", F.lit("cb").alias("side"))
-                )
-                .collect()
-            )
-            heavy = sorted({r.build_id for r in stats})
-            if len(cid) != 1 or heavy != sorted(cid):
+        codes_bq, codes_pq, vectors, cents, cb = (
+            self.table(f"{name}_{t}")
+            for t in ("codes", "codes_pq", "vectors", "centroids", "codebook")
+        )
+        # ONE collect over the two bounded quantizer tables serves the
+        # freshness check AND pq_m
+        cid, pq_m = _quantizer_state(cents, cb)
+        if self._verified.get(("cascade", name)) != (cid, pq_m):
+            heavy, n = _member_builds(bq=codes_bq, pq=codes_pq, vec=vectors)
+            if len(cid) != 1 or heavy != cid:
                 raise ValueError(
                     f"cascade index {name!r} is torn (centroid builds "
-                    f"{sorted(cid)} vs member builds {heavy}) — re-run "
+                    f"{cid} vs member builds {heavy}) — re-run "
                     "build_cascade_index"
                 )
-            n_vecs = sum(int(r.n) for r in stats if r.side == "vec")
-            n_bq = sum(int(r.n) for r in stats if r.side == "bq")
-            n_pq = sum(int(r.n) for r in stats if r.side == "pq")
-            cb_ms = [r.pq_m for r in stats if r.side == "cb"]
-            if not cb_ms:
-                # an EMPTY codebook table contributes no build ids, so
-                # the tear check above passes vacuously on that leg
-                # (advisor r16) — name the missing rows instead of
-                # dying on a bare IndexError
-                raise ValueError(
-                    f"cascade index {name!r} is torn: the codebook "
-                    f"table has no rows — re-run build_cascade_index"
-                )
-            pq_m = int(cb_ms[0])
-            if n_bq != n_vecs or n_pq != n_vecs * pq_m:
+            if pq_m is None:
+                raise _torn_codebook("cascade", name, "cascade")
+            if n["bq"] != n["vec"] or n["pq"] != n["vec"] * pq_m:
                 raise ValueError(
                     f"cascade index {name!r} is torn: code counts do "
                     "not match the vector count — a failed write; "
                     "re-run build_cascade_index"
                 )
-            self._ann_verified[memo_key] = (cid[0], pq_m)
+            self._verified[("cascade", name)] = (cid, pq_m)
         probes = similarity.ivfpq_probe_lists(
             queries,
             cents.select("centroid_id", "cvec"),
@@ -1486,99 +1344,28 @@ class Engine:
         caught by cascade_search's per-tier count identities
         (1 sign-code row and exactly M PQ-code rows per vector),
         checked whenever the build-id memo misses."""
-        from pyspark.sql import functions as F
-
-        from .idents import storage_safe_name
-        from .operators import similarity
-
-        cents = self.table(f"{name}_centroids")
-        cb = self.table(f"{name}_codebook")
-        cid = sorted(
-            set(
-                r.build_id
-                for r in cents.select("build_id")
-                .distinct()
-                .union(cb.select("build_id").distinct())
-                .collect()
-            )
+        build_id, build_mean, cents, cb, pq_m = self._read_quantizers(
+            name, "cascade", "cascade", codebook=True
         )
-        if len(cid) != 1:
-            raise ValueError(
-                f"cascade index {name!r} quantizers carry build ids "
-                f"{cid} — re-run build_cascade_index before appending"
-            )
-        build_mean = cents.select("build_mean_sim_micro").first()[0]
-        pq_m = int(cb.select("pq_m").first()[0])
         batch = similarity._assign_scored(
-            new_emb, cents.select("centroid_id", "cvec"), id_col, vec_col
+            new_emb, cents, id_col, vec_col
         ).localCheckpoint()
-        self._ann_verified.pop(f"cascade:{name}", None)
-        self._ann_verified.pop(f"ivfbq:{name}", None)
-        (
-            batch.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).alias("embedding"),
-                "sim_micro",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_vectors"))
+        self._verified.pop(("cascade", name), None)
+        self._verified.pop(("ivfbq", name), None)
+        _append_stored(
+            f"{name}_vectors",
+            _vector_rows(batch, build_id, id_col, vec_col),
+            "centroid_id",
         )
-        (
-            similarity.ivfbq_encode(
-                batch, cents, id_col, vec_col, assigned=batch
-            )
-            .select(
-                "vec_id",
-                "sig_lo",
-                "sig_hi",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_codes"))
+        _append_stored(
+            f"{name}_codes", _bq_codes(batch, build_id, id_col, vec_col), "centroid_id"
         )
-        (
-            similarity.pq_encode(
-                batch, cb.select("m", "code", "cvec"), pq_m, id_col, vec_col
-            )
-            .join(
-                batch.select(
-                    F.col(id_col).alias("vec_id"), "centroid_id"
-                ),
-                "vec_id",
-            )
-            .select(
-                "vec_id",
-                "m",
-                "code",
-                F.lit(cid[0]).alias("build_id"),
-                "centroid_id",
-            )
-            .write.mode("append")
-            .format("parquet")
-            .partitionBy("centroid_id")
-            .saveAsTable(storage_safe_name(f"{name}_codes_pq"))
+        _append_stored(
+            f"{name}_codes_pq",
+            _pq_codes(batch, cb, pq_m, build_id, id_col, vec_col),
+            "centroid_id",
         )
-        row = batch.agg(
-            F.sum("sim_micro").alias("s"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        batch_mean = int(row.s) // int(row.n) if row.s is not None else None
-        drift = (
-            build_mean - batch_mean
-            if build_mean is not None and batch_mean is not None
-            else None
-        )
-        return self.spark.createDataFrame(
-            [(int(row.n), batch_mean, build_mean, drift)],
-            "appended_rows bigint, batch_mean_sim_micro bigint, "
-            "build_mean_sim_micro bigint, drift_micro bigint",
-        )
+        return self._drift_report(batch, build_mean)
 
     def build_text_index(
         self,
@@ -1614,28 +1401,13 @@ class Engine:
         FIRST, and text_search verifies id + revision agreement
         before serving (a failure between the two writes leaves a
         detectable mismatch instead of silently wrong df/stats)."""
-        from pyspark.sql import functions as F
-
-        from .operators import text
-
         postings, stats = text.build_postings(docs, text_col)
         build_id = random_alphanum()
-        self._text_verified.pop(name, None)
+        self._verified.pop(("text", name), None)
         self.materialize_bucketed(
-            f"{name}_postings",
-            postings.withColumn("build_id", F.lit(build_id)).withColumn(
-                "revision", F.lit(0).cast("bigint")
-            ),
-            ["tok"],
-            n_buckets,
+            f"{name}_postings", _stamp(postings, build_id, 0), ["tok"], n_buckets
         )
-        self.drop_table_if_exists(f"{name}_stats")
-        self.create_table_as(
-            f"{name}_stats",
-            stats.withColumn("build_id", F.lit(build_id)).withColumn(
-                "revision", F.lit(0).cast("bigint")
-            ),
-        )
+        self._replace_table(f"{name}_stats", _stamp(stats, build_id, 0))
 
     def append_to_text_index(
         self,
@@ -1668,19 +1440,7 @@ class Engine:
 
         ``n_buckets`` must match the build's (Spark refuses a
         mismatched bucket spec loudly)."""
-        from pyspark.sql import functions as F
-
-        from .idents import storage_safe_name
-        from .operators import text
-
-        stats_tbl = self.table(f"{name}_stats")
-        srow = stats_tbl.collect()
-        if len(srow) != 1:
-            raise ValueError(
-                f"text index {name!r} stats table has {len(srow)} rows — "
-                "re-run build_text_index"
-            )
-        srow = srow[0]
+        _, srow = self._text_stats(name)
         batch_postings, batch_stats = text.build_postings(new_docs, text_col)
         batch_postings = batch_postings.localCheckpoint()
         brow = batch_stats.collect()[0]
@@ -1691,19 +1451,14 @@ class Engine:
         ).collect()[0]
         n_postings = batch_postings.count()
         revision = int(srow.revision) + 1
-        self._text_verified.pop(name, None)
-        physical = storage_safe_name(f"{name}_postings")
-        (
-            batch_postings.withColumn("build_id", F.lit(srow.build_id))
-            .withColumn("revision", F.lit(revision).cast("bigint"))
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "tok")
-            .sortBy("tok")
-            .saveAsTable(physical)
+        self._verified.pop(("text", name), None)
+        _append_stored(
+            f"{name}_postings",
+            _stamp(batch_postings, srow.build_id, revision),
+            "tok",
+            n_buckets,
         )
-        self.drop_table_if_exists(f"{name}_stats")
-        self.create_table_as(
+        self._replace_table(
             f"{name}_stats",
             self.spark.createDataFrame(
                 [
@@ -1775,25 +1530,11 @@ class Engine:
         driver: it runs text.bm25_probe's semi-join plan against the
         unpruned postings, with the same results (set
         ``max_pushdown_terms=0`` to force that path)."""
-        from .operators import text
-
         postings = self.table(f"{name}_postings")
-        stats_tbl = self.table(f"{name}_stats")
-        srows = stats_tbl.collect()
-        if len(srows) != 1:
-            raise ValueError(
-                f"text index {name!r} stats table has {len(srows)} rows — "
-                "re-run build_text_index"
-            )
-        srow = srows[0]
+        stats_tbl, srow = self._text_stats(name)
         want = (srow.build_id, int(srow.revision))
-        if self._text_verified.get(name) != want:
-            seen = sorted(
-                (r.build_id, int(r.revision))
-                for r in postings.select("build_id", "revision")
-                .distinct()
-                .collect()
-            )
+        if self._verified.get(("text", name)) != want:
+            seen = _states(postings)
             # postings land BEFORE the stats rewrite, so a torn
             # append shows postings AHEAD of the stats revision (or
             # under a foreign build id); postings trailing is the
@@ -1806,7 +1547,7 @@ class Engine:
                     f"text index {name!r} is torn (stats build/revision "
                     f"{want} vs postings {seen}) — re-run build_text_index"
                 )
-            self._text_verified[name] = want
+            self._verified[("text", name)] = want
         index = postings.select("doc_id", "dl", "tok", "tf")
         held = text.held_batch(queries, max_pushdown_terms)
         if held is None:
@@ -1855,8 +1596,6 @@ class Engine:
         revision (crash after the edge append) or nodes lag it
         (crash between the side-table rewrites), as well as on any
         build-id mismatch."""
-        from pyspark.sql import functions as F
-
         deduped = (
             edges.select(
                 F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -1865,30 +1604,21 @@ class Engine:
             .localCheckpoint()  # reused by all three writes below
         )
         build_id = random_alphanum()
-        self._graph_verified.pop(name, None)
-        for prior in self._graph_frames.pop(name, (None,))[1:]:
-            try:
-                prior.unpersist()
-            except Exception:
-                pass
-        stamp = lambda df: df.withColumn(  # noqa: E731
-            "build_id", F.lit(build_id)
-        ).withColumn("revision", F.lit(0).cast("bigint"))
+        self._verified.pop(("graph", name), None)
+        self._release_graph_frames(name)
         self.materialize_bucketed(
-            f"{name}_edges", stamp(deduped), ["src"], n_buckets
+            f"{name}_edges", _stamp(deduped, build_id, 0), ["src"], n_buckets
         )
         degrees = deduped.groupBy("src").agg(
             F.count(F.lit(1)).cast("bigint").alias("deg")
         )
-        self.drop_table_if_exists(f"{name}_degrees")
-        self.create_table_as(f"{name}_degrees", stamp(degrees))
+        self._replace_table(f"{name}_degrees", _stamp(degrees, build_id, 0))
         nodes = (
             deduped.select(F.col("src").alias("node"))
             .union(deduped.select(F.col("dst").alias("node")))
             .distinct()
         )
-        self.drop_table_if_exists(f"{name}_nodes")
-        self.create_table_as(f"{name}_nodes", stamp(nodes))
+        self._replace_table(f"{name}_nodes", _stamp(nodes, build_id, 0))
 
     def append_to_graph_index(
         self,
@@ -1923,17 +1653,8 @@ class Engine:
         text-index revision discipline). ``n_buckets`` must match
         the build's (Spark refuses a mismatched bucket spec
         loudly)."""
-        from pyspark.sql import functions as F
-
-        from .idents import storage_safe_name
-
         degrees_tbl = self.table(f"{name}_degrees")
-        state = [
-            (r.build_id, int(r.revision))
-            for r in degrees_tbl.select("build_id", "revision")
-            .distinct()
-            .collect()
-        ]
+        state = _states(degrees_tbl)
         if len(state) != 1:
             raise ValueError(
                 f"graph index {name!r} degrees carry build/revision "
@@ -1941,9 +1662,6 @@ class Engine:
                 "appending"
             )
         bid, revision = state[0][0], state[0][1] + 1
-        stamp = lambda df: df.withColumn(  # noqa: E731
-            "build_id", F.lit(bid)
-        ).withColumn("revision", F.lit(revision).cast("bigint"))
         batch = (
             new_edges.select(
                 F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -1957,20 +1675,9 @@ class Engine:
             "left_anti",
         ).localCheckpoint()  # frozen before the append writes below
         n_batch, n_fresh = batch.count(), fresh.count()
-        self._graph_verified.pop(name, None)
-        for prior in self._graph_frames.pop(name, (None,))[1:]:
-            try:
-                prior.unpersist()
-            except Exception:
-                pass
-        (
-            stamp(fresh)
-            .write.mode("append")
-            .format("parquet")
-            .bucketBy(n_buckets, "src")
-            .sortBy("src")
-            .saveAsTable(storage_safe_name(f"{name}_edges"))
-        )
+        self._verified.pop(("graph", name), None)
+        self._release_graph_frames(name)
+        _append_stored(f"{name}_edges", _stamp(fresh, bid, revision), "src", n_buckets)
         merged_deg = (
             degrees_tbl.select("src", "deg")
             .join(
@@ -1989,8 +1696,7 @@ class Engine:
             )
             .localCheckpoint()  # materialized BEFORE its source drops
         )
-        self.drop_table_if_exists(f"{name}_degrees")
-        self.create_table_as(f"{name}_degrees", stamp(merged_deg))
+        self._replace_table(f"{name}_degrees", _stamp(merged_deg, bid, revision))
         nodes_tbl = self.table(f"{name}_nodes")
         new_nodes = (
             fresh.select(F.col("src").alias("node"))
@@ -2004,8 +1710,7 @@ class Engine:
             nodes_tbl.select("node").union(new_nodes).localCheckpoint()
         )
         n_total = merged_nodes.count()
-        self.drop_table_if_exists(f"{name}_nodes")
-        self.create_table_as(f"{name}_nodes", stamp(merged_nodes))
+        self._replace_table(f"{name}_nodes", _stamp(merged_nodes, bid, revision))
         return self.spark.createDataFrame(
             [(n_fresh, n_batch - n_fresh, n_new_nodes, n_total)],
             "appended_edges bigint, duplicate_edges bigint, "
@@ -2041,26 +1746,10 @@ class Engine:
         edges = self.table(f"{name}_edges")
         degrees_tbl = self.table(f"{name}_degrees")
         nodes_tbl = self.table(f"{name}_nodes")
-        dstate = sorted(
-            (r.build_id, int(r.revision))
-            for r in degrees_tbl.select("build_id", "revision")
-            .distinct()
-            .collect()
-        )
+        dstate = _states(degrees_tbl)
         want = dstate[0] if len(dstate) == 1 else None
-        if want is None or self._graph_verified.get(name) != want:
-            estate = sorted(
-                (r.build_id, int(r.revision))
-                for r in edges.select("build_id", "revision")
-                .distinct()
-                .collect()
-            )
-            nstate = sorted(
-                (r.build_id, int(r.revision))
-                for r in nodes_tbl.select("build_id", "revision")
-                .distinct()
-                .collect()
-            )
+        if want is None or self._verified.get(("graph", name)) != want:
+            estate, nstate = _states(edges), _states(nodes_tbl)
             torn = (
                 want is None
                 # foreign build id anywhere, or edges from a FUTURE
@@ -2080,7 +1769,7 @@ class Engine:
                     f"build/revision {dstate} vs edges {estate} / "
                     f"nodes {nstate}) — re-run build_graph_index"
                 )
-            self._graph_verified[name] = want
+            self._verified[("graph", name)] = want
         from . import cache
 
         # persist the degree-attached edge frame and the node frame
@@ -2096,11 +1785,11 @@ class Engine:
         # nodes.count() doubles as the materializing action.
         #
         # The frames are MEMOIZED per (build_id, revision) alongside
-        # _graph_verified (advisor r16: repeated pagerank_served
+        # the verified state (advisor r16: repeated pagerank_served
         # calls in a long-lived session must not accumulate pinned
         # blocks) — a serving session pays the cache build once, and
-        # a rebuild/append (new build id or revision, memo popped by
-        # build/append) or a harness cache.release() (storage level
+        # a rebuild/append (new build id or revision, frames released
+        # by build/append) or a harness cache.release() (storage level
         # drops to NONE, checked below) invalidates it. Input-frame
         # reuse only, never query results: the rank iterations run in
         # full on every call.
@@ -2111,12 +1800,7 @@ class Engine:
         ):
             prepared, nodes = memo[1], memo[2]
         else:
-            if memo is not None:
-                for prior in memo[1:]:
-                    try:
-                        prior.unpersist()
-                    except Exception:
-                        pass
+            self._release_graph_frames(name)
             prepared = cache.persisted(
                 edges.select("src", "dst")
                 .join(degrees_tbl.select("src", "deg"), "src")
@@ -2550,8 +2234,6 @@ class Engine:
         if not checks and not not_null:
             return rows
         rows = rows.localCheckpoint(eager=True)
-        from pyspark.sql import functions as F
-
         from .constraints import CheckViolation
         from .colmeta import NullViolation
 
@@ -2605,8 +2287,6 @@ class Engine:
         SCRIPT dumps spell (skip the existing-row scan; the analysis
         check always runs — an unparseable predicate must fail the
         DDL, not the first INSERT months later)."""
-        from pyspark.sql import functions as F
-
         target = self.table(logical_name)
         try:
             target.where(F.expr(predicate)).schema  # analysis only
@@ -2653,7 +2333,6 @@ class Engine:
         engine-cataloged table (same storage-safe naming + durable
         catalog as the CSV sink). Returns the physical name. Errors if
         the table exists, unless `if_not_exists` (then no-op)."""
-        from .idents import storage_safe_name
         from .sources.sink import prepare_replace
 
         if logical_name in self.sink.catalog:
@@ -2738,8 +2417,6 @@ class Engine:
         (default / NOT NULL / SELECTIVITY / COMMENT) records in the
         column-metadata registry for later INSERTs, enforcement and
         SCRIPT dumps."""
-        from pyspark.sql import functions as F
-
         target = self.table(logical_name)
         if col_name in target.columns:
             raise ValueError(f"column already exists: {col_name!r}")
@@ -2898,8 +2575,6 @@ class Engine:
         the cast is validated FIRST with one aggregation counting
         non-NULL values that cast to NULL (try_cast probe) — a lossy
         retype errors loudly instead of silently nulling data."""
-        from pyspark.sql import functions as F
-
         target = self.table(logical_name)
         if col_name not in target.columns:
             raise ValueError(f"no such column: {col_name!r}")
@@ -2934,8 +2609,6 @@ class Engine:
         H2's own behavior — then records the intent in the column
         metadata registry so every subsequent DML write enforces it
         (engine._enforce_check_constraints)."""
-        from pyspark.sql import functions as F
-
         from .colmeta import NullViolation
 
         target = self.table(logical_name)
@@ -3136,7 +2809,6 @@ class Engine:
         everything), which is what keeps the oracle-paired battery
         deterministic. Returns the number of tables analyzed."""
         from pyspark.errors import AnalysisException
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         from .errors import NotAResource
@@ -3224,8 +2896,6 @@ class Engine:
         target = self.table(logical_name)
         physical = self.sink.catalog[logical_name]
         before = target.count()
-        from pyspark.sql import functions as F
-
         kept = target.where(~F.expr(condition) | F.expr(condition).isNull())
         self._rewrite(physical, kept)
         return before - self.table(logical_name).count()
@@ -3237,8 +2907,6 @@ class Engine:
         Returns the number of rows matching the condition."""
         target = self.table(logical_name)
         physical = self.sink.catalog[logical_name]
-        from pyspark.sql import functions as F
-
         # H2 parity: a misspelled assignment target raises 'Column
         # not found'; silently ignoring it diverges without a signal
         # (same guard as MERGE USING, sql_dml._execute_merge_using).
@@ -3305,7 +2973,6 @@ class Engine:
         the on-disk hash partitioning) — the co-located-join strategy
         for repeated 100 TB fact-fact joins. Pinned by
         tests/test_bucketing.py (no Exchange in the joined plan)."""
-        from .idents import storage_safe_name
         from .sources.sink import prepare_replace
 
         physical = storage_safe_name(logical_name)
@@ -3355,7 +3022,6 @@ class Engine:
         point of IVF at 100 TB. Use only for low-cardinality keys
         (n_list centroid ids, dates) — per-value directories explode
         on high-cardinality columns."""
-        from .idents import storage_safe_name
         from .sources.sink import prepare_replace
 
         physical = storage_safe_name(logical_name)
@@ -3402,8 +3068,6 @@ class Engine:
         identity values pre-allocated for rows that turn out matched
         go unused — a sequence gap, which sequences are defined to
         tolerate."""
-        from pyspark.sql import functions as F
-
         target = self.table(logical_name)
         physical = self.sink.catalog[logical_name]
         if preserve_cols:

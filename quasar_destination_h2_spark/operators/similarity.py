@@ -1399,11 +1399,17 @@ def pq_seed_codebooks(
     return seeds.select("code", F.posexplode(slices).alias("m", "cvec"))
 
 
-def _codebook_by_m(cb: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
+def _codebook_by_m(
+    cb: "DataFrame | list",
+) -> dict[int, list[tuple[int, list[float]]]]:
     """Driver-collected codebook grouped by subspace — the
-    _centroid_rows idiom for the m x k PQ quantizer."""
+    _centroid_rows idiom for the m x k PQ quantizer. ``cb`` may also
+    be rows the caller already collected (any Row carrying ``m``,
+    ``code`` and ``cvec``), so one read of a stored codebook table can
+    serve a build-id check and the encode literals."""
+    rows = cb if isinstance(cb, list) else cb.select("m", "code", "cvec").collect()
     by_m: dict[int, list[tuple[int, list[float]]]] = {}
-    for r in cb.select("m", "code", "cvec").collect():
+    for r in rows:
         by_m.setdefault(int(r["m"]), []).append(
             (int(r["code"]), [float(x) for x in r["cvec"]])
         )
@@ -1436,7 +1442,7 @@ def _code_branches(by_m, nearest, pick) -> Column:
     return expr
 
 
-def pq_assign_codes(sub: DataFrame, cb: DataFrame) -> DataFrame:
+def pq_assign_codes(sub: DataFrame, cb: "DataFrame | list") -> DataFrame:
     """Assign every (vec_id, m) subvector its nearest code (max
     rounded cosine, ties to the lower code id). The m x k codebook is
     driver-collected and embedded as plan literals (r16 — the
@@ -1518,7 +1524,7 @@ def pq_codebooks(
 
 def pq_encode(
     emb: DataFrame,
-    cb: DataFrame,
+    cb: "DataFrame | list",
     m: int = PQ_M,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -1743,8 +1749,8 @@ def ann_pq_rerank(
 
 def ivfpq_encode(
     emb: DataFrame,
-    cents: DataFrame,
-    cb: DataFrame,
+    cents: DataFrame | None,
+    cb: "DataFrame | list",
     m: int = PQ_M,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -2398,7 +2404,7 @@ def ann_bq_rerank(
 
 def ivfbq_encode(
     emb: DataFrame,
-    cents: DataFrame,
+    cents: DataFrame | None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = EMBED_DIM,

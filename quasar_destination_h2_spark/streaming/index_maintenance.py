@@ -2,7 +2,8 @@
 engine's incremental index appends.
 
 The batch appends (``engine.append_to_ivf_index`` /
-``append_to_ivfpq_index`` / ``append_to_text_index``) already carry
+``append_to_ivfpq_index`` / ``append_to_ivfbq_index`` /
+``append_to_cascade_index`` / ``append_to_text_index``) already carry
 the nightly-crawl story: assign/encode ONLY the new batch against the
 frozen stored quantizers (or tokenize only the new docs), land it in
 the co-located store under the build's id, and report a drift
@@ -70,10 +71,10 @@ def stream_append_to_index(
     **append_kwargs,
 ):
     """Feed a streaming DataFrame of new rows (embeddings for
-    ``ivf``/``ivfpq``, documents for ``text``) into the ``name``
-    index, one engine append per micro-batch; persist every drift
-    report to the ``{name}_drift_log`` catalog table as
-    (batch_id, <report columns>, rebuild_due). ``rebuild_threshold``
+    ``ivf``/``ivfpq``/``ivfbq``/``cascade``, documents for ``text``)
+    into the ``name`` index, one engine append per micro-batch;
+    persist every drift report to the ``{name}_drift_log`` catalog
+    table as (batch_id, <report columns>, rebuild_due). ``rebuild_threshold``
     is compared against the kind's drift column (integer micro-units
     for the ANN kinds, new-term ppm for text); without one,
     ``rebuild_due`` stays false and the log is purely the time

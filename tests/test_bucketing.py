@@ -393,6 +393,89 @@ def test_ann_probe_job_budget(engine, spark, probe_index):
     assert sched.nextJobId() - start <= 4
 
 
+@pytest.fixture(scope="module")
+def compressed_indexes(engine, spark):
+    """One small, untrained (seed-quantizer) build of each compressed
+    family for the job-budget pins below."""
+    base = _clustered(spark, per=10)
+    untrained = dict(n_list=8, kmeans_iters=0)
+    engine.build_pq_index("budpq", base, kmeans_iters=0, n_buckets=4)
+    engine.build_ivfpq_index("budipq", base, pq_iters=0, **untrained)
+    engine.build_ivfbq_index("budibq", base, **untrained)
+    engine.build_cascade_index("budcas", base, pq_iters=0, **untrained)
+
+
+@pytest.mark.parametrize(
+    "search, name, budget",
+    [
+        ("pq_search", "budpq", 8),
+        ("ivfpq_search", "budipq", 13),
+        ("ivfbq_search", "budibq", 13),
+        ("cascade_search", "budcas", 18),
+    ],
+)
+def test_compressed_probe_job_budget(
+    engine, spark, compressed_indexes, search, name, budget
+):
+    """A steady-state compressed-family probe (verify memo warm)
+    stays within its Spark job budget: one freshness read of the
+    bounded quantizer tables plus the probe's own stages — the heavy
+    member verification is not repeated."""
+    sched = spark._jsparkSession.sparkContext().dagScheduler()
+    probe = getattr(engine, search)
+    probe(name, _probe_queries(spark), topk=5).collect()
+    queries = _probe_queries(spark)
+    start = sched.nextJobId()
+    probe(name, queries, topk=5).collect()
+    assert sched.nextJobId() - start <= budget
+
+
+@pytest.mark.parametrize(
+    "append, name, budget",
+    [
+        ("append_to_ivfpq_index", "budipq", 9),
+        ("append_to_ivfbq_index", "budibq", 7),
+        ("append_to_cascade_index", "budcas", 10),
+    ],
+)
+def test_compressed_append_job_budget(
+    engine, spark, compressed_indexes, append, name, budget
+):
+    """An append reads each bounded quantizer table (centroids,
+    codebook) once and plans its assign/encode from those rows."""
+    sched = spark._jsparkSession.sparkContext().dagScheduler()
+    batch = _clustered(spark, per=2, start=50_000)
+    start = sched.nextJobId()
+    getattr(engine, append)(name, batch).collect()
+    assert sched.nextJobId() - start <= budget
+
+
+@pytest.mark.parametrize(
+    "family, name", [("ivfpq", "ecbipq"), ("cascade", "ecbcas")]
+)
+def test_append_refuses_empty_codebook(engine, spark, family, name):
+    """An empty codebook contributes no build id, so the id check
+    passes vacuously; encoding against it would append vectors with
+    no code rows. The append refuses with the torn-index error
+    before it writes anything, and the search refuses to serve."""
+    getattr(engine, f"build_{family}_index")(
+        name, _clustered(spark, per=10), n_list=8, kmeans_iters=0, pq_iters=0
+    )
+    empty = (
+        engine.table(f"{name}_codebook").where(F.lit(False)).localCheckpoint()
+    )
+    engine.drop_table_if_exists(f"{name}_codebook")
+    engine.create_table_as(f"{name}_codebook", empty)
+    n_vectors = engine.table(f"{name}_vectors").count()
+    with pytest.raises(ValueError, match="torn.*codebook.*re-run build_"):
+        getattr(engine, f"append_to_{family}_index")(
+            name, _clustered(spark, per=2, start=60_000)
+        )
+    assert engine.table(f"{name}_vectors").count() == n_vectors
+    with pytest.raises(ValueError, match="torn"):
+        getattr(engine, f"{family}_search")(name, _probe_queries(spark), topk=3)
+
+
 def _clustered(spark, K=8, per=40, dim=64, start=0, shift=0.0):
     """Deterministic clustered corpus (the test_ext_operators shape):
     K axis-aligned blocks + integer jitter; ``shift`` leans every
@@ -540,7 +623,7 @@ def test_pq_index_lifecycle(engine, spark):
         .localCheckpoint(),  # break lineage: can't overwrite a read target
         ["vec_id"],
     )
-    engine._ann_verified.pop("pq:pqix", None)
+    engine._verified.pop(("pq", "pqix"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.pq_search("pqix", queries, topk=5)
 
@@ -609,7 +692,7 @@ def test_ivfpq_index_lifecycle(engine, spark):
         .localCheckpoint(),
         ["centroid_id"],
     )
-    engine._ann_verified.pop("ivfpq:ipqix", None)
+    engine._verified.pop(("ivfpq", "ipqix"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.ivfpq_search("ipqix", queries, topk=5)
 
@@ -711,7 +794,7 @@ def test_ivfpq_search_detects_half_appended_index(engine, spark):
         .partitionBy("centroid_id")
         .saveAsTable(storage_safe_name("ipqtear_vectors"))
     )
-    engine._ann_verified.pop("ivfpq:ipqtear", None)
+    engine._verified.pop(("ivfpq", "ipqtear"), None)
     queries = emb.where("vec_id < 2").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
@@ -813,7 +896,7 @@ def test_ivfbq_index_lifecycle(engine, spark):
         .localCheckpoint(),
         ["centroid_id"],
     )
-    engine._ann_verified.pop("ivfbq:ibqix", None)
+    engine._verified.pop(("ivfbq", "ibqix"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.ivfbq_search("ibqix", queries, topk=5)
 
@@ -877,7 +960,7 @@ def test_ivfbq_index_append_and_tear(engine, spark):
         .partitionBy("centroid_id")
         .saveAsTable(storage_safe_name("ibqap_vectors"))
     )
-    engine._ann_verified.pop("ivfbq:ibqap", None)
+    engine._verified.pop(("ivfbq", "ibqap"), None)
     with pytest.raises(ValueError, match="torn.*code rows"):
         engine.ivfbq_search("ibqap", queries, topk=3)
 
@@ -962,7 +1045,7 @@ def test_cascade_index_lifecycle(engine, spark):
         .localCheckpoint(),
         ["centroid_id"],
     )
-    engine._ann_verified.pop("cascade:cascix", None)
+    engine._verified.pop(("cascade", "cascix"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.cascade_search("cascix", queries, topk=5)
 
@@ -1042,7 +1125,7 @@ def test_cascade_index_append_and_tear(engine, spark):
         .saveAsTable(storage_safe_name("cscap_codes"))
     )
     engine.spark.catalog.refreshTable(storage_safe_name("cscap_codes"))
-    engine._ann_verified.pop("cascade:cscap", None)
+    engine._verified.pop(("cascade", "cscap"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.cascade_search("cscap", queries, topk=3)
 
@@ -1159,7 +1242,7 @@ def test_graph_index_append_and_tear(engine, spark):
     deg_state = engine.table("gix2_degrees").select(
         "build_id", "revision"
     ).first()
-    engine._graph_verified.pop("gix2", None)
+    engine._verified.pop(("graph", "gix2"), None)
     (
         spark.createDataFrame([(999999, 999998)], "src long, dst long")
         .withColumn("build_id", F.lit(deg_state.build_id))

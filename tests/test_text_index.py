@@ -290,7 +290,7 @@ def test_torn_append_refuses_to_serve(engine, spark):
         .sortBy("tok")
         .saveAsTable(storage_safe_name("ti_torn_postings"))
     )
-    engine._text_verified.pop("ti_torn", None)
+    engine._verified.pop(("text", "ti_torn"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.text_search("ti_torn", qdf(spark), topn=3)
     # a fresh build repairs the index
@@ -312,7 +312,7 @@ def test_foreign_build_id_refuses_to_serve(engine, spark):
         .sortBy("tok")
         .saveAsTable(storage_safe_name("ti_mix_postings"))
     )
-    engine._text_verified.pop("ti_mix", None)
+    engine._verified.pop(("text", "ti_mix"), None)
     with pytest.raises(ValueError, match="torn"):
         engine.text_search("ti_mix", qdf(spark), topn=3)
 

@@ -19,12 +19,15 @@ from __future__ import annotations
 
 import functools
 import logging
+import os
 import random
+import shutil
 import string
+import uuid
 from concurrent.futures import ThreadPoolExecutor, TimeoutError as FutTimeout
 from typing import Any, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .config import Config
 from .errors import ConnectionFailed
@@ -60,8 +63,14 @@ def _is_null_literal(expr: str) -> bool:
 #: keeping every knob that matters at cluster scale explicit: AQE for
 #: runtime re-planning (partition coalescing + skew-join splitting),
 #: Arrow for any Pandas-UDF path, UTC so results are tz-stable.
+#: ``openCostInBytes`` sets the split floor of file scans: Spark sizes
+#: a split as min(maxPartitionBytes, max(openCostInBytes, bytes/cores)),
+#: so at the 4 MB default a 5 MB bulk CSV reads in 2 tasks on 4 cores;
+#: at 1 MB it reads in one task per core. Spark 4.1 reads both knobs
+#: only from the session conf — as reader options they are ignored.
 DEFAULT_SPARK_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": "32",
+    "spark.sql.files.openCostInBytes": "1048576",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -69,6 +78,73 @@ DEFAULT_SPARK_CONF: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
 }
+
+
+# -- one-write DML ---------------------------------------------------------
+#
+# A DML statement writes the table's new rows once, into the sibling
+# directory ``{location}__next``, then swaps directories
+# (Engine._rewrite). A crash or failed rename leaves at most a
+# ``__next`` and an ``__old`` beside the location; the first
+# Engine._ensure_registered of the name in a process settles them
+# (_settle_swap). Changed-row counts come from an Observation on the
+# frame being written (_match_counted), so a statement is one job.
+
+
+def _settle_swap(location: str) -> bool:
+    """Finish or undo a directory swap :meth:`Engine._rewrite` left
+    behind. A missing ``location`` takes a complete ``__next`` (the
+    write committed: it holds ``_SUCCESS``), else its ``__old``; every
+    other leftover is removed. Returns True when ``location``'s
+    contents changed."""
+    nxt, old = location + "__next", location + "__old"
+    changed = False
+    if not os.path.isdir(location):
+        if os.path.isfile(os.path.join(nxt, "_SUCCESS")):
+            os.rename(nxt, location)
+            changed = True
+        elif os.path.isdir(old):
+            os.rename(old, location)
+            changed = True
+    for leftover in (nxt, old):
+        shutil.rmtree(leftover, ignore_errors=True)
+    return changed
+
+
+def _has_partition_dirs(*paths: str) -> bool:
+    """True when any of ``paths`` holds ``col=value`` subdirectories —
+    the data layout of a directory-partitioned table, whose partition
+    list lives in the session catalog and must be re-synced whenever
+    the directories change underneath it."""
+    for path in paths:
+        try:
+            with os.scandir(path) as entries:
+                if any("=" in e.name and e.is_dir() for e in entries):
+                    return True
+        except OSError:
+            continue
+    return False
+
+
+def _match_counted(target: DataFrame, condition: str):
+    """``(frame, hit, obs)``: ``target`` with the DML ``condition``
+    evaluated once into the non-null boolean flag column ``hit`` —
+    TRUE where the condition is TRUE, FALSE where it is FALSE or NULL
+    (SQL: NULL does not match) — under an Observation whose ``n``
+    counts the matched rows, read after the write from that write's
+    own pass.
+
+    Callers filter or project on ``hit``, never on ``condition``: a
+    constant condition (``DELETE`` without ``WHERE``, ``TRUNCATE``,
+    ``... OR 1 = 1``) would otherwise fold the filter into an empty
+    relation and drop the observed node with it, while a filter over
+    the observed flag column cannot be folded through it."""
+    name = f"__dml_hit_{uuid.uuid4().hex[:8]}__"
+    obs = Observation()
+    frame = target.withColumn(
+        name, F.expr(condition).eqNullSafe(True)
+    ).observe(obs, F.count(F.when(F.col(name), 1)).alias("n"))
+    return frame, F.col(name), obs
 
 
 # -- stored-index protocol ------------------------------------------------
@@ -2076,25 +2152,30 @@ class Engine:
         has never heard of a table a previous engine materialized, so
         append/overwrite ``saveAsTable`` would take the create-table
         path and fail with LOCATION_ALREADY_EXISTS. Re-register the
-        warehouse directory as a parquet table (schema inferred from
-        the existing files) before any DML write. No-op when the
-        session already knows the table."""
-        import os
-
+        warehouse directory as a parquet table (schema and partition
+        columns inferred from the existing files, partition list
+        recovered from its ``col=value`` directories) before any DML
+        write. The first call per name in a process also settles a
+        directory swap a failed :meth:`_rewrite` left behind
+        (:func:`_settle_swap`). No-op when already memoized."""
         from .sources.sink import warehouse_path
 
         if physical in self._registered:
             return
+        path = warehouse_path(self.spark, physical)
+        swapped = _settle_swap(path)
         if self.spark.catalog.tableExists(physical):
+            if swapped:
+                self._refresh_files(physical, path)
             self._registered.add(physical)
             return
-        path = warehouse_path(self.spark, physical)
         if os.path.isdir(path):
             escaped = path.replace("'", "''")
             self.spark.sql(
                 f"CREATE TABLE {hygienic_ident(physical)} USING parquet "
                 f"LOCATION '{escaped}'"
             )
+            self._refresh_files(physical, path)
             # metadata-only ADD COLUMNs (colmeta 'added_type') are
             # invisible to footer inference until some file carries
             # them — re-apply the declared columns the inferred
@@ -2155,6 +2236,8 @@ class Engine:
             else:
                 tmp = self.sink._spool(source)
                 csv_path = tmp
+            counts = []
+
             def _checked_append(d):
                 # recorded CHECK constraints hold on the wire-append
                 # path too — same bounded pre-write filter as
@@ -2163,18 +2246,14 @@ class Engine:
                 d = self._enforce_check_constraints(
                     logical_name, d, "INSERT"
                 )
-                d.write.mode("append").format("parquet").saveAsTable(
-                    physical
-                )
+                counts.append(self._append_counted(physical, d))
 
-            df = load_csv_with_fallback(
+            load_csv_with_fallback(
                 self.spark, csv_path, schema, _checked_append
             )
-            return df.count()
+            return counts[0]
         finally:
             if tmp is not None:
-                import os
-
                 try:
                     os.unlink(tmp)
                 except OSError:
@@ -2313,8 +2392,9 @@ class Engine:
     def insert_rows(self, logical_name: str, df: DataFrame) -> int:
         """INSERT (append) of an arbitrary DataFrame whose schema
         already matches the target (the SQL front door conforms it).
-        Returns the number of appended rows. Recorded CHECK
-        constraints are enforced on the incoming rows first."""
+        Recorded CHECK constraints are enforced on the incoming rows
+        first. Returns the number of appended rows, observed during
+        the append itself: the statement is one job."""
         physical = self.sink.catalog.get(logical_name)
         if physical is None:
             from .errors import NotAResource
@@ -2322,9 +2402,16 @@ class Engine:
             raise NotAResource(logical_name)
         self._ensure_registered(physical)
         df = self._enforce_check_constraints(logical_name, df, "INSERT")
-        n = df.count()
-        df.write.mode("append").format("parquet").saveAsTable(physical)
-        return n
+        return self._append_counted(physical, df)
+
+    def _append_counted(self, physical: str, df: DataFrame) -> int:
+        """Append ``df`` to ``physical``; returns the appended row
+        count, observed during the append itself (one job)."""
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "append"
+        ).format("parquet").saveAsTable(physical)
+        return obs.get["n"]
 
     def create_table_as(
         self, logical_name: str, df: DataFrame, if_not_exists: bool = False
@@ -2351,39 +2438,69 @@ class Engine:
         return physical
 
     def _rewrite(self, physical: str, df: DataFrame) -> None:
-        """Overwrite `physical` with `df` via a staging table (Spark
-        cannot overwrite a parquet table from a plan that reads it —
-        the staging hop materializes first). Two sequential parallel
-        writes; at cluster scale both are shuffle-free scans.
+        """Replace the rows of ``physical`` with ``df`` in one write —
+        the commit of UPDATE, DELETE and MERGE.
 
-        The final write is ``insertInto(overwrite=True)`` when the
-        table exists: DML preserves the table's schema, and unlike
-        ``saveAsTable(mode=overwrite)`` it truncates IN PLACE — which
-        also works on a table re-registered EXTERNAL after a process
-        restart (saveAsTable would drop it and refuse to recreate a
-        managed table over the surviving location)."""
-        from .sources.sink import clear_stale_location
+        Spark cannot overwrite a table from a plan that reads it, so
+        the new rows go to the sibling directory ``{location}__next``
+        through an empty ``CREATE TABLE ... LIKE`` staging entry: its
+        ``insertInto`` keeps the by-position store-assignment casts
+        to the stored schema, and dropping it afterwards is metadata
+        only. The directories then swap (``location -> __old``,
+        ``__next -> location``), the table's cached file listing is
+        refreshed and ``__old`` removed. The table's catalog entry,
+        physical name and schema never change, so a table
+        re-registered EXTERNAL after a restart swaps the same way.
+
+        A failure before the swap completes leaves at most a
+        ``__next`` and an ``__old``: the memo entry is dropped, so the
+        next :meth:`_ensure_registered` of the name promotes a
+        complete ``__next`` into a missing location and removes the
+        rest (:func:`_settle_swap`)."""
+        from .sources.sink import warehouse_path
 
         self._ensure_registered(physical)
+        location = warehouse_path(self.spark, physical)
+        nxt, old = location + "__next", location + "__old"
         staging = f"{physical}_rw"
-        clear_stale_location(self.spark, staging)
-        df.write.mode("overwrite").format("parquet").saveAsTable(staging)
+        cols = self.spark.table(physical).columns
         try:
-            staged = self.spark.table(staging)
-            if self.spark.catalog.tableExists(physical):
-                cols = self.spark.table(physical).columns
-                staged.select(*cols).write.insertInto(physical, overwrite=True)
-            else:
-                staged.write.mode("overwrite").format("parquet").saveAsTable(
-                    physical
-                )
-        finally:
             self.spark.sql(f"DROP TABLE IF EXISTS {hygienic_ident(staging)}")
+            self.spark.sql(
+                f"CREATE TABLE {hygienic_ident(staging)} LIKE "
+                f"{hygienic_ident(physical)} USING parquet "
+                "LOCATION '" + nxt.replace("'", "''") + "'"
+            )
+            try:
+                df.select(
+                    *[F.col(hygienic_ident(c)) for c in cols]
+                ).write.insertInto(staging, overwrite=True)
+            finally:
+                self.spark.sql(f"DROP TABLE IF EXISTS {hygienic_ident(staging)}")
+            os.rename(location, old)
+            os.rename(nxt, location)
+        except BaseException:
+            self._registered.discard(physical)
+            raise
+        self._refresh_files(physical, location, old)
+        shutil.rmtree(old, ignore_errors=True)
+
+    def _refresh_files(self, physical: str, *paths: str) -> None:
+        """Point the session catalog at the files now under
+        ``physical``'s location: drop its cached file listing and,
+        for a directory-partitioned table (``col=value``
+        subdirectories in any of ``paths``), re-sync its partition
+        list — which no refresh does."""
+        self.spark.catalog.refreshTable(physical)
+        if _has_partition_dirs(*paths):
+            self.spark.sql(
+                f"REPAIR TABLE {hygienic_ident(physical)} SYNC PARTITIONS"
+            )
 
     def _rewrite_new_schema(self, physical: str, df: DataFrame) -> None:
-        """Schema-CHANGING overwrite (ALTER TABLE): the in-place
-        ``insertInto`` of :meth:`_rewrite` requires the old schema, so
-        here the staging hop is followed by a real drop+recreate (the
+        """Schema-CHANGING overwrite (ALTER TABLE): the directory swap
+        of :meth:`_rewrite` keeps the table's catalog schema, so here
+        the staging hop is followed by a real drop+recreate (the
         catalog commit of the final create is the atomicity point)."""
         from .sources.sink import clear_stale_location
 
@@ -2891,20 +3008,25 @@ class Engine:
         self._republish_info_schema()
 
     def delete_where(self, logical_name: str, condition: str) -> int:
-        """DELETE FROM t WHERE cond (overwrite-rewrite). Returns the
-        number of deleted rows."""
+        """DELETE FROM t WHERE cond: one :meth:`_rewrite` of the rows
+        the condition does not match (a NULL condition keeps its
+        row). Returns the number of deleted rows, counted during that
+        write (:func:`_match_counted`) — the statement is one job."""
         target = self.table(logical_name)
         physical = self.sink.catalog[logical_name]
-        before = target.count()
-        kept = target.where(~F.expr(condition) | F.expr(condition).isNull())
-        self._rewrite(physical, kept)
-        return before - self.table(logical_name).count()
+        frame, hit, obs = _match_counted(target, condition)
+        self._rewrite(physical, frame.where(~hit).drop(hit))
+        return obs.get["n"]
 
     def update_where(
         self, logical_name: str, assignments: dict[str, str], condition: str
     ) -> int:
-        """UPDATE t SET col=expr, ... WHERE cond (overwrite-rewrite).
-        Returns the number of rows matching the condition."""
+        """UPDATE t SET col=expr, ... WHERE cond: one :meth:`_rewrite`
+        of every row, the matched ones with the assignments applied.
+        Returns the number of rows matching the condition, counted
+        during that write (:func:`_match_counted`) — the statement is
+        one job. A table with CHECK or NOT NULL constraints takes the
+        checkpointed enforcement path below instead."""
         target = self.table(logical_name)
         physical = self.sink.catalog[logical_name]
         # H2 parity: a misspelled assignment target raises 'Column
@@ -2919,9 +3041,9 @@ class Engine:
             assignments, target.columns, "UPDATE: column not found in SET"
         )
         assignments = {res[c]: e for c, e in assignments.items()}
-        cond = F.expr(condition)
-        n = target.where(cond).count()
         if self._has_check_constraints(logical_name):
+            cond = F.expr(condition)
+            n = target.where(cond).count()
             # CHECK enforcement over ONLY the changed rows, with the
             # assignments applied and cast to the stored schema (the
             # values that land). The enforced frame comes back
@@ -2948,16 +3070,19 @@ class Engine:
             kept = target.where(~cond | cond.isNull())
             self._rewrite(physical, kept.unionByName(checked))
             return n
-        updated = target.select(
+        frame, hit, obs = _match_counted(target, condition)
+        updated = frame.select(
             *[
-                F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)).alias(c)
+                F.when(hit, F.expr(assignments[c]))
+                .otherwise(F.col(hygienic_ident(c)))
+                .alias(c)
                 if c in assignments
-                else F.col(c)
+                else F.col(hygienic_ident(c))
                 for c in target.columns
             ]
         )
         self._rewrite(physical, updated)
-        return n
+        return obs.get["n"]
 
     def materialize_bucketed(
         self,

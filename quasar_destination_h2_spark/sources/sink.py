@@ -16,9 +16,15 @@ Pipeline parity with ``H2CsvCreateSink.scala:37-64`` (SURVEY §3 EP2):
 
 Scale notes: the CSV scan is splittable (multiLine=false), so a
 1000-executor cluster reads a 100 TB push in parallel; nothing is
-ever collected to the driver. The written table is Parquet —
-columnar, so downstream Tier-B queries get column pruning + predicate
-pushdown for free.
+ever collected to the driver. A split is at least
+``spark.sql.files.openCostInBytes`` long — 1 MB under the engine's
+``DEFAULT_SPARK_CONF``, against Spark's 4 MB default — so a push of
+at least 1 MB per core reads in one task per core (a 5 MB file on 4
+cores: 4 tasks, not 2). The session conf is the only place that
+floor takes effect: Spark ignores it as a reader option. The
+``multiLine`` fallback reads each file whole. The written table is
+Parquet — columnar, so downstream Tier-B queries get column pruning
++ predicate pushdown for free.
 
 The logical -> physical table-name catalog is ``_catalog.json`` in
 the warehouse directory, committed after each load through the

@@ -2829,7 +2829,12 @@ def _execute_verb(engine, statement: str, shadow: str, m):
     src = _conform_source(
         engine, target, names, kind, source, verb="MERGE", logical=logical
     )
-    n = src.count()
+    # the update count is the source's row count: a VALUES list's is
+    # its spelled row count (no job); a SELECT source is counted
+    if kind == "values":
+        n = len(_split_top_level(source, _shadow(source), 0, len(source)))
+    else:
+        n = src.count()
     # columns the statement OMITTED that carry recorded defaults or
     # an identity binding: matched rows must keep the TARGET's value
     # (H2 never re-defaults an existing row through MERGE)

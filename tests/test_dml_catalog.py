@@ -360,3 +360,134 @@ def test_drop_all_objects(engine):
     assert engine.sink.catalog == {}
     assert engine.sequences.names() == []
     assert engine.execute_sql("SHOW TABLES").count() == 0
+
+
+def test_dml_statement_job_budget(engine, spark):
+    """A one-row DML statement on a 10,000-row table is one pass over
+    the data: DELETE, UPDATE and INSERT run exactly one Spark job (the
+    write, with the changed-row count observed during it); MERGE ...
+    KEY ... VALUES adds at most the broadcast of its source rows."""
+    rows = b"".join(b"%d,v%d\r\n" % (i, i) for i in range(1, 10_001))
+    _load(engine, "budget_dml", rows)
+    sched = spark._jsparkSession.sparkContext().dagScheduler()
+    for stmt, budget, count in (
+        ("DELETE FROM budget_dml WHERE k = 5", 1, 1),
+        ("UPDATE budget_dml SET v = 'z' WHERE k = 6", 1, 1),
+        ("INSERT INTO budget_dml (k, v) VALUES (20001, 'n')", 1, 1),
+        ("MERGE INTO budget_dml (k, v) KEY (k) VALUES (7, 'm')", 2, 1),
+    ):
+        start = sched.nextJobId()
+        assert engine.execute_sql(stmt) == count, stmt
+        assert sched.nextJobId() - start <= budget, stmt
+    got = {
+        (int(r.k), r.v)
+        for r in engine.table("budget_dml").where("k IN (5, 6, 7, 20001)").collect()
+    }
+    assert got == {(6, "z"), (7, "m"), (20001, "n")}
+    assert engine.table("budget_dml").count() == 10_000
+
+
+def test_bulk_csv_push_reads_on_every_core(engine, spark, tmp_path):
+    """Under the engine's default split floor (DEFAULT_SPARK_CONF's
+    ``openCostInBytes``) a single-file CSV push of at least one MB
+    per core reads in ``defaultParallelism`` tasks — at Spark's 4 MB
+    default a 5 MB file reads in 2."""
+    from quasar_destination_h2_spark.engine import DEFAULT_SPARK_CONF
+
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.openCostInBytes"
+    path = tmp_path / "bulk.csv"
+    line = b"%d,%s\r\n"
+    pad = b"x" * 90
+    want = max(4, cores + 1) << 20
+    with open(path, "wb") as out:
+        i = 0
+        while out.tell() < want:
+            out.write(b"".join(line % (i + j, pad) for j in range(1000)))
+            i += 1000
+    prior = spark.conf.get(key)
+    spark.conf.set(key, DEFAULT_SPARK_CONF[key])
+    try:
+        sched = spark._jsparkSession.sparkContext().dagScheduler()
+        start = sched.nextJobId()
+        engine.csv_create_sink().consume("/bulk_split", COLS, str(path))
+        end = sched.nextJobId()
+    finally:
+        spark.conf.set(key, prior)
+    assert end - start == 1
+    st = spark.sparkContext.statusTracker()
+    tasks = [st.getStageInfo(s).numTasks for s in st.getJobInfo(start).stageIds]
+    assert tasks == [cores]
+    assert engine.table("bulk_split").count() == i
+
+
+def _failing_rename(monkeypatch, fail_at):
+    """Make the ``fail_at``-th ``os.rename`` call raise."""
+    real = os.rename
+    calls = []
+
+    def rename(src, dst):
+        calls.append(src)
+        if len(calls) == fail_at:
+            raise OSError("injected rename failure")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+def test_rewrite_failure_before_swap_serves_old_rows(engine, spark, monkeypatch):
+    """A DML write that lands in ``__next`` but fails before the swap
+    leaves the table's rows untouched; the next read sweeps the
+    orphaned ``__next``."""
+    from quasar_destination_h2_spark.sources.sink import warehouse_path
+
+    t = _load(engine, "crash_pre")
+    location = warehouse_path(spark, engine.sink.catalog[t])
+    _failing_rename(monkeypatch, 1)
+    with pytest.raises(OSError, match="injected"):
+        engine.delete_where(t, "k = 1")
+    monkeypatch.undo()
+    assert os.path.isdir(location + "__next")
+    got = sorted((float(r.k), r.v) for r in engine.table(t).collect())
+    assert got == [(1.0, "a"), (2.0, "b"), (3.0, "c")]
+    assert not os.path.exists(location + "__next")
+    assert not os.path.exists(location + "__old")
+    assert engine.delete_where(t, "k = 1") == 1
+
+
+def test_rewrite_failure_between_renames_recovers_new_rows(
+    engine, spark, monkeypatch
+):
+    """A DML write that fails between the two renames (the old
+    directory moved aside, the new one not yet in place) recovers on
+    the next read: the complete ``__next`` is promoted, ``__old``
+    removed, and the statement's rows are served."""
+    from quasar_destination_h2_spark.sources.sink import warehouse_path
+
+    t = _load(engine, "crash_mid")
+    location = warehouse_path(spark, engine.sink.catalog[t])
+    _failing_rename(monkeypatch, 2)
+    with pytest.raises(OSError, match="injected"):
+        engine.update_where(t, {"v": "'z'"}, "k = 2")
+    monkeypatch.undo()
+    assert not os.path.exists(location)
+    got = sorted((float(r.k), r.v) for r in engine.table(t).collect())
+    assert got == [(1.0, "a"), (2.0, "z"), (3.0, "c")]
+    assert not os.path.exists(location + "__next")
+    assert not os.path.exists(location + "__old")
+    got = sorted(
+        (float(r.k), r.v)
+        for r in engine.execute_sql("SELECT * FROM crash_mid").collect()
+    )
+    assert got == [(1.0, "a"), (2.0, "z"), (3.0, "c")]
+
+
+def test_delete_with_null_condition_counts_removed_rows(engine):
+    """SQL three-valued logic: a row whose condition is NULL is kept,
+    and the returned count equals the rows actually removed."""
+    t = _load(engine, "null_del", b"1,a\r\n2,\r\n3,c\r\n4,\r\n")
+    assert engine.execute_sql("DELETE FROM null_del WHERE v <> 'a'") == 1
+    got = sorted((float(r.k), r.v) for r in engine.table(t).collect())
+    assert got == [(1.0, "a"), (2.0, None), (4.0, None)]
+    assert engine.delete_where(t, "NULL") == 0
+    assert engine.table(t).count() == 3

@@ -145,6 +145,22 @@ SCRIPT_ADDCOL_A = textwrap.dedent(
     e.execute_sql('CREATE CACHED TABLE "rs_mo"("a" INT)')
     e.execute_sql("INSERT INTO rs_mo VALUES (1), (2)")
     e.execute_sql('ALTER TABLE rs_mo ADD COLUMN "b" BIGINT')
+    # a centroid-partitioned index: its member tables are read back
+    # in the next process from their col=value directories
+    base = spark.createDataFrame(
+        [(i, [float(i % 8 == d // 8) + ((i * 31 + d * 7) % 13 - 6) / 12.0
+              for d in range(64)]) for i in range(32)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(q, [float(q == d // 8) for d in range(64)]) for q in range(4)],
+        "query_id int, qv array<double>",
+    )
+    e.build_ivfpq_index("rs_ipq", base, n_list=4, kmeans_iters=0, pq_iters=0)
+    hits = sorted(tuple(r) for r in
+                  e.ivfpq_search("rs_ipq", queries, topk=3).collect())
+    assert len(hits) == 12, hits
+    print("IVFPQ=" + json.dumps(hits))
     print("ADDED")
     spark.stop()
     """
@@ -172,6 +188,13 @@ SCRIPT_ADDCOL_B = textwrap.dedent(
     e.execute_sql("INSERT INTO rs_mo VALUES (3, 30)")
     got = {{(r.a, r.b) for r in e.execute_sql("SELECT * FROM rs_mo").collect()}}
     assert got == {{(1, None), (2, None), (3, 30)}}, got
+    queries = spark.createDataFrame(
+        [(q, [float(q == d // 8) for d in range(64)]) for q in range(4)],
+        "query_id int, qv array<double>",
+    )
+    hits = sorted(list(r) for r in
+                  e.ivfpq_search("rs_ipq", queries, topk=3).collect())
+    assert hits == {hits!r}, hits
     print("ADDCOL-OK")
     spark.stop()
     """
@@ -181,12 +204,19 @@ SCRIPT_ADDCOL_B = textwrap.dedent(
 def test_metadata_only_add_column_survives_restart():
     """A metadata-only ADD COLUMN (colmeta 'added_type') must survive
     a process restart: footer inference never sees the column, so
-    _ensure_registered re-applies the declared type."""
+    _ensure_registered re-applies the declared type. So must a
+    directory-partitioned table: the IVFPQ index's centroid-partitioned
+    members serve the same hits in the next process, because
+    _ensure_registered recovers their partition list."""
+    import json
     import os
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     wh = tempfile.mkdtemp(prefix="restart-wh-")
     out1 = _run(SCRIPT_ADDCOL_A.format(repo=repo, wh=wh))
     assert "ADDED" in out1
-    out2 = _run(SCRIPT_ADDCOL_B.format(repo=repo, wh=wh))
+    hits = json.loads(
+        next(l for l in out1.splitlines() if l.startswith("IVFPQ="))[6:]
+    )
+    out2 = _run(SCRIPT_ADDCOL_B.format(repo=repo, wh=wh, hits=hits))
     assert "ADDCOL-OK" in out2

@@ -18,6 +18,7 @@ Parity with ``H2DestinationModule.destination``
 from __future__ import annotations
 
 import functools
+import glob
 import logging
 import os
 import random
@@ -28,12 +29,14 @@ from concurrent.futures import ThreadPoolExecutor, TimeoutError as FutTimeout
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .config import Config
 from .errors import ConnectionFailed
 from .idents import hygienic_ident, storage_safe_name
+from .locked_json import LockedJson
 from .operators import similarity, text
-from .sources.sink import CsvCreateSink
+from .sources.sink import CsvCreateSink, warehouse_dir
 from .types import TypeOptions, DEFAULT_OPTIONS
 
 log = logging.getLogger(__name__)
@@ -150,30 +153,40 @@ def _match_counted(target: DataFrame, condition: str):
 # -- stored-index protocol ------------------------------------------------
 #
 # The seven stored index families (IVF, PQ, IVFPQ, IVFBQ, cascade, BM25
-# text, graph) share one write/verify protocol, built from the helpers
-# below and the Engine helpers beside build_ivf_index:
+# text, graph) share one write, read and verify path, built from the
+# helpers below and the Engine helpers beside build_ivf_index:
 #
-# * every member table of one build carries the build's random id
-#   (_stamp); the text and graph indexes also carry a revision that
-#   each append bumps;
-# * heavy (corpus-sized) tables are written FIRST and bounded tables
-#   (centroids, codebook, stats, degrees, nodes) LAST, each replaced by
-#   drop + CTAS (Engine._replace_table) — a crash between two writes
-#   leaves members that disagree on build id or revision;
-# * an append reads the bounded quantizer tables once
-#   (Engine._read_quantizers), refuses a torn index before it writes,
-#   and appends to the heavy tables without rewriting them
-#   (_append_stored);
-# * a search verifies that its members agree — build ids, revisions,
-#   and each family's per-build count identity (_member_builds) —
-#   before it serves, and remembers the verified state in
-#   Engine._verified under (family, name). Every build or append
-#   clears that entry before its first write, so the heavy check runs
-#   once per build or append, never per steady-state probe. An
-#   out-of-band writer forging rows under a verified id is the one
-#   case this trusts — the same trust the catalog's flock protocol
-#   extends to same-warehouse writers.
-
+# * an index is its member tables (corpus- or node-sized: assignments,
+#   vectors, codes, postings, edges, degrees, nodes) plus ONE manifest,
+#   ``_index_<storage_safe_name(name)>.json`` in the warehouse
+#   directory (a LockedJson file). The manifest holds the family, the
+#   build id and revision, the parameters (n_list, pq_m, pq_k), each
+#   member's committed row count (plus the bucket key and count of a
+#   bucketed member), the drift baseline, and the bounded state itself:
+#   IVF centroids, the PQ codebook, the BM25 (n_docs, sum_dl);
+# * every member row carries the build's random id (_stamp); text and
+#   graph member rows also carry the revision that wrote them;
+# * a build writes its members, then commits the manifest at revision 0
+#   with the member counts (Engine._commit_build); an append reads the
+#   manifest, appends its rows without rewriting the members
+#   (_append_stored), then commits revision + 1 with the counts grown by
+#   what it wrote (_grown). The manifest write (Engine._commit) is the
+#   commit point: a crash before it leaves members that disagree with
+#   the committed manifest;
+# * a search or append reads the manifest through a stat-guarded memo
+#   (Engine._read_manifest, no Spark job) and plans the bounded state as
+#   literals. Once per (build id, revision) — remembered in
+#   Engine._verified under the index name, cleared before every build
+#   or append writes — ONE aggregation (Engine._verify) checks that
+#   each member holds exactly its committed row count, all under the
+#   committed build id and at no later revision: a torn build shows a
+#   foreign id, a half-applied append a member above its count. An
+#   out-of-band writer forging rows under a verified id is the one case
+#   this trusts — the same trust the catalog's flock protocol extends
+#   to same-warehouse writers.
+#
+# An index without a manifest (never built, or stored before manifests
+# existed) is refused with "re-run build_<family>_index".
 
 def _stamp(df: DataFrame, build_id: str, revision: Optional[int] = None) -> DataFrame:
     """``df`` with the build id (and, for the revisioned text and
@@ -266,70 +279,29 @@ def _mean_sim_micro(df: DataFrame) -> tuple:
     return int(row.n), (int(row.s) // int(row.n) if row.s is not None else None)
 
 
-def _quantizer_state(*frames: DataFrame) -> tuple:
-    """(sorted build ids, pq_m) of an index's bounded quantizer tables
-    in ONE distinct collect — the steady-state freshness read of the
-    compressed searches. A codebook contributes its pq_m; pq_m is
-    None when no frame carries one (or the codebook is empty)."""
-    rows = (
-        functools.reduce(
-            DataFrame.unionByName,
-            [
-                f.select(
-                    "build_id",
-                    (F.col("pq_m") if "pq_m" in f.columns else F.lit(None))
-                    .cast("int")
-                    .alias("pq_m"),
-                )
-                for f in frames
-            ],
-        )
-        .distinct()
-        .collect()
-    )
-    ms = sorted({int(r.pq_m) for r in rows if r.pq_m is not None})
-    return sorted({r.build_id for r in rows}), (ms[0] if ms else None)
+def _bounded(df: DataFrame) -> dict:
+    """A bounded frame (centroids, codebook) as manifest state: its
+    schema and collected rows. JSON writes every double as its
+    round-tripping ``repr``, so the literals planned from the manifest
+    equal the frame's values bit for bit."""
+    return {"schema": df.schema.jsonValue(), "rows": [list(r) for r in df.collect()]}
 
 
-def _member_builds(**members: DataFrame) -> tuple:
-    """(sorted build ids, row count per member) of an index's heavy
-    member tables in ONE aggregation job — a per-build count of each
-    member, unioned. The ids meet the quantizers' id in the tear
-    check; the counts feed the family's count identity (m code rows
-    per vector for IVFPQ, one sign code per vector for IVFBQ, both
-    for cascade), which catches a half-applied append that the ids
-    cannot see."""
-    rows = functools.reduce(
-        DataFrame.unionByName,
-        [
-            df.groupBy("build_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select("build_id", "n", F.lit(side).alias("side"))
-            for side, df in members.items()
-        ],
-    ).collect()
-    counts = dict.fromkeys(members, 0)
-    for r in rows:
-        counts[r.side] += int(r.n)
-    return sorted({r.build_id for r in rows}), counts
+def _rows(state: dict) -> list:
+    """Manifest state as rows for the literal planners, which read
+    fields by name (similarity._centroid_rows, _codebook_by_m)."""
+    names = [f["name"] for f in state["schema"]["fields"]]
+    return [dict(zip(names, r)) for r in state["rows"]]
 
 
-def _states(df: DataFrame) -> list:
-    """Sorted distinct (build_id, revision) pairs of a revisioned
-    member table (one column-pruned scan)."""
-    return sorted(
-        (r.build_id, int(r.revision))
-        for r in df.select("build_id", "revision").distinct().collect()
-    )
-
-
-def _torn_codebook(label: str, name: str, family: str) -> ValueError:
-    """An EMPTY codebook contributes no build id, so every id check
-    passes vacuously on it — name the missing rows instead."""
-    return ValueError(
-        f"{label} index {name!r} is torn: the codebook table has no rows "
-        f"— re-run build_{family}_index"
-    )
+def _grown(man: dict, **added: int) -> dict:
+    """``man`` at revision + 1 with ``added`` rows on the named
+    members: the manifest an append commits."""
+    members = {
+        m: dict(spec, rows=spec["rows"] + added.get(m, 0))
+        for m, spec in man["members"].items()
+    }
+    return dict(man, revision=man["revision"] + 1, members=members)
 
 
 def _append_stored(
@@ -388,11 +360,13 @@ class Engine:
         #: current_schema; empty = strict current-schema (H2's
         #: default). See sql_dml._resolution_order.
         self.schema_search_path: list = []
-        #: index state this engine has verified, keyed by (family,
-        #: index name) — see the stored-index protocol above _stamp.
-        #: Set only after a check passes; cleared before every build
-        #: or append through THIS engine writes.
+        #: (build id, revision) this engine has verified, keyed by
+        #: index name — see the stored-index protocol above _stamp.
+        #: Set only after a check passes or a build commits; cleared
+        #: before every build or append through THIS engine writes.
         self._verified: dict = {}
+        #: index name -> (manifest file stat, parsed manifest)
+        self._manifests: dict = {}
         #: per-index persisted (prepared, nodes) frames of the LAST
         #: pagerank_served call — unpersisted on the next call so a
         #: long-lived session never accumulates pinned blocks
@@ -510,140 +484,181 @@ class Engine:
 
     # -- stored-index protocol (see the comment above _stamp) ----------
 
-    def _replace_table(self, logical_name: str, df: DataFrame) -> None:
-        """DROP TABLE IF EXISTS, then CREATE TABLE AS — how an index
-        (re)writes its bounded tables (the reference's load protocol,
-        H2CsvCreateSink.scala:106-126)."""
-        self.drop_table_if_exists(logical_name)
-        self.create_table_as(logical_name, df)
+    def _index_store(self, name: str) -> LockedJson:
+        """Index ``name``'s manifest file in the warehouse directory."""
+        stem = "_index_" + storage_safe_name(name)
+        return LockedJson(warehouse_dir(self.spark), stem)
 
-    def _write_centroids(
-        self, name: str, members: str, cents: DataFrame, build_id: str
-    ) -> None:
-        """Write ``{name}_centroids`` (after the heavy tables), frozen
-        with the build's drift baseline: the mean sim_micro of the
-        just-stored ``{name}_{members}`` assignment, which every
-        append's drift report compares its batch against. One
-        column-pruned scan of the stored int column."""
-        _, mean = _mean_sim_micro(self.table(f"{name}_{members}"))
-        self._replace_table(
-            f"{name}_centroids",
-            _stamp(cents, build_id).withColumn(
-                "build_mean_sim_micro", F.lit(mean).cast("bigint")
-            ),
-        )
+    def _read_manifest(self, name: str) -> Optional[dict]:
+        """Index ``name``'s committed manifest, or None. Memoized
+        against the file's (inode, mtime, size): every commit
+        replaces the file, so a steady-state read costs one stat."""
+        store = self._index_store(name)
+        try:
+            st = os.stat(store.path)
+        except FileNotFoundError:
+            return None
+        sig = (st.st_ino, st.st_mtime_ns, st.st_size)
+        if self._manifests.get(name, (None,))[0] != sig:
+            self._manifests[name] = (sig, store.read())
+        return self._manifests[name][1]
 
-    def _write_codebook(
-        self, name: str, cb: DataFrame, build_id: str, m: int, k: int
-    ) -> None:
-        """Write ``{name}_codebook`` (the m x k PQ codebooks) with the
-        build id and its (pq_m, pq_k) parameters."""
-        self._replace_table(
-            f"{name}_codebook",
-            _stamp(cb, build_id)
-            .withColumn("pq_m", F.lit(m).cast("int"))
-            .withColumn("pq_k", F.lit(k).cast("int")),
-        )
-
-    def _read_quantizers(
-        self, name: str, label: str, family: str, codebook: bool = False
-    ) -> tuple:
-        """An append's read of the index's bounded quantizer tables:
-        ONE collect per table (n_list centroid rows, m x k codebook
-        rows) serves the build-id check, the drift baseline, pq_m and
-        the assign/encode literals — the appends plan from these rows,
-        never from the tables. Raises before the append writes
-        anything when the tables disagree on the build id or the
-        codebook is empty (encoding against an empty codebook would
-        append vectors without codes). Returns (build_id,
-        build_mean_sim_micro, centroid rows, codebook rows, pq_m)."""
-        cents = (
-            self.table(f"{name}_centroids")
-            .select("centroid_id", "cvec", "build_id", "build_mean_sim_micro")
-            .collect()
-        )
-        cb = (
-            self.table(f"{name}_codebook")
-            .select("m", "code", "cvec", "build_id", "pq_m")
-            .collect()
-            if codebook
-            else []
-        )
-        ids = sorted({r.build_id for r in cents + cb})
-        if len(ids) != 1 or not cents:
+    def _manifest(self, name: str, family: str) -> dict:
+        """The one read and verify path of every search and append:
+        the manifest of ``family`` index ``name``, refused when there
+        is none. Once per (build id, revision), each member table
+        must hold exactly the rows the manifest committed, all under
+        its build id and at no later revision."""
+        man = self._read_manifest(name) or {}
+        hint = f"— re-run build_{family}_index"
+        if man.get("family") != family:
             raise ValueError(
-                f"{label} index {name!r} "
-                f"{'quantizers' if codebook else 'centroids'} carry build "
-                f"ids {ids} — re-run build_{family}_index before appending"
+                f"{family} index {name!r} has no committed manifest {hint}"
             )
-        if codebook and not cb:
-            raise _torn_codebook(label, name, family)
-        pq_m = int(cb[0].pq_m) if cb else None
-        return ids[0], cents[0].build_mean_sim_micro, cents, cb, pq_m
+        state = (man["build_id"], man["revision"])
+        if self._verified.get(name) != state:
+            for m, seen in self._member_states(name, man["members"]).items():
+                rows, committed = sum(n for *_, n in seen), man["members"][m]["rows"]
+                if rows != committed or any(
+                    b != state[0] or (r or 0) > state[1] for b, r, _ in seen
+                ):
+                    raise ValueError(
+                        f"{family} index {name!r} is torn: {name}_{m} holds {rows} "
+                        f"rows as (build, revision, rows) {seen}; the manifest "
+                        f"committed {committed} of build {state[0]!r} up to "
+                        f"revision {state[1]} {hint}"
+                    )
+            self._verified[name] = state
+        return man
 
-    def _drift_report(self, batch: DataFrame, build_mean: Optional[int]) -> DataFrame:
-        """The one-row drift report every ANN append returns:
+    def _member_states(self, name: str, members) -> dict:
+        """{member: [(build_id, revision, rows)]} of index ``name``'s
+        member tables in ONE aggregation: the column-pruned member
+        scans, unioned, counted per (member, build, revision) — one
+        shuffle whatever the member count (revision None for members
+        that carry none)."""
+
+        def ids(m: str) -> DataFrame:
+            df = self.table(f"{name}_{m}")
+            rev = df["revision"] if "revision" in df.columns else F.lit(None)
+            return df.select(
+                F.lit(m).alias("member"), "build_id", rev.alias("revision")
+            )
+
+        counted = functools.reduce(DataFrame.unionByName, map(ids, members))
+        states: dict = {m: [] for m in members}
+        for r in counted.groupBy("member", "build_id", "revision").count().collect():
+            states[r.member].append((r.build_id, r.revision, r["count"]))
+        return states
+
+    def _commit(self, name: str, man: dict) -> None:
+        """Write ``man`` as index ``name``'s manifest — an atomic
+        replace under the index's flock, the commit point of every
+        build and append."""
+        store = self._index_store(name)
+        with store.locked():
+            store.write(man)
+
+    def _commit_build(self, name, family, build_id, members, **state) -> None:
+        """Commit a build whose member tables are written: count them
+        in the verify aggregation, commit the counts at revision 0 and
+        remember the index as verified. ``members`` maps each member to
+        its spec (``{"bucket": [key, n_buckets]}`` for a bucketed one);
+        ``state`` is the rest of the manifest (params, bounded state)."""
+        for m, seen in self._member_states(name, members).items():
+            members[m]["rows"] = sum(n for *_, n in seen)
+        man = dict(family=family, build_id=build_id, revision=0, members=members)
+        self._commit(name, {**man, **state})
+        self._verified[name] = (build_id, 0)
+
+    def _commit_append(self, name: str, man: dict, batch, **per_vector) -> DataFrame:
+        """Commit an ANN append whose rows are written (revision + 1,
+        each member grown by ``per_vector`` rows per appended vector)
+        and return the one-row drift report every ANN append returns:
         (appended_rows, batch_mean_sim_micro, build_mean_sim_micro,
         drift_micro) — drift_micro = build mean − batch mean assigned
         similarity, in integer micro-units."""
         n, batch_mean = _mean_sim_micro(batch)
-        drift = (
-            build_mean - batch_mean
-            if build_mean is not None and batch_mean is not None
-            else None
-        )
+        self._commit(name, _grown(man, **{m: k * n for m, k in per_vector.items()}))
+        build_mean = man["build_mean_sim_micro"]
+        drift = None if None in (build_mean, batch_mean) else build_mean - batch_mean
         return self.spark.createDataFrame(
             [(n, batch_mean, build_mean, drift)],
             "appended_rows bigint, batch_mean_sim_micro bigint, "
             "build_mean_sim_micro bigint, drift_micro bigint",
         )
 
-    def _build_lists(
-        self,
-        family: str,
-        name: str,
-        emb: DataFrame,
-        n_list: int,
-        kmeans_iters: int,
-        id_col: str,
-        vec_col: str,
-        encode,
-    ) -> str:
-        """The shared build of the centroid-PARTITIONED families
-        (IVFPQ, IVFBQ, and cascade through IVFBQ): train the coarse
-        quantizer, store the scored assignment as ``{name}_vectors``,
-        store ``encode(stored vectors, build_id)`` as ``{name}_codes``
-        (the encode reads the stored table, whose centroid_id rides
-        each row), then freeze ``{name}_centroids`` with the drift
-        baseline. Returns the build id."""
-        cents = _coarse_quantizer(emb, id_col, vec_col, n_list, kmeans_iters)
-        build_id = random_alphanum()
-        self._verified.pop((family, name), None)
-        assigned = similarity._assign_scored(emb, cents, id_col, vec_col)
-        self.materialize_partitioned(
-            f"{name}_vectors",
-            _vector_rows(assigned, build_id, id_col, vec_col),
-            ["centroid_id"],
-        )
-        self.materialize_partitioned(
-            f"{name}_codes",
-            encode(self.table(f"{name}_vectors"), build_id),
-            ["centroid_id"],
-        )
-        self._write_centroids(name, "vectors", cents, build_id)
-        return build_id
+    def _frame(self, state: dict) -> DataFrame:
+        """Manifest state (centroids, codebook) as a local frame — a
+        plan literal, read from no stored table."""
+        schema = StructType.fromJson(state["schema"])
+        return self.spark.createDataFrame(state["rows"], schema)
 
-    def _text_stats(self, name: str) -> tuple:
-        """(stats table, its one row) of a BM25 text index; raises
-        unless the table holds exactly one row."""
-        stats_tbl = self.table(f"{name}_stats")
-        rows = stats_tbl.collect()
-        if len(rows) != 1:
-            raise ValueError(
-                f"text index {name!r} stats table has {len(rows)} rows — "
-                "re-run build_text_index"
-            )
-        return stats_tbl, rows[0]
+    def _coarse_state(self, name: str, member: str, cents: dict, n_list: int) -> dict:
+        """Manifest entries of an IVF coarse quantizer: n_list, the
+        centroid rows and the drift baseline — the mean sim_micro of
+        the just-stored ``{name}_{member}`` assignment (one
+        column-pruned scan of the stored int column), which every
+        append's drift report compares its batch against."""
+        _, mean = _mean_sim_micro(self.table(f"{name}_{member}"))
+        return dict(
+            params={"n_list": n_list}, centroids=cents, build_mean_sim_micro=mean
+        )
+
+    def _replace_table(self, logical_name: str, df: DataFrame) -> None:
+        """DROP TABLE IF EXISTS, then CREATE TABLE AS — how the graph
+        index (re)writes its node-sized members."""
+        self.drop_table_if_exists(logical_name)
+        self.create_table_as(logical_name, df)
+
+    def _build_lists(
+        self, name, emb, n_list, kmeans_iters, id_col, vec_col, encode
+    ) -> tuple:
+        """The shared build of the centroid-PARTITIONED families
+        (IVFPQ, IVFBQ, cascade): train the coarse quantizer, store the
+        scored assignment as ``{name}_vectors``, then
+        ``encode(stored vectors, build_id)`` as ``{name}_codes`` (the
+        encode reads the stored table, whose centroid_id rides each
+        row). Returns (build id, the quantizer's manifest entries)."""
+        cents = _bounded(_coarse_quantizer(emb, id_col, vec_col, n_list, kmeans_iters))
+        build_id = random_alphanum()
+        self._verified.pop(name, None)
+        assigned = similarity._assign_scored(emb, _rows(cents), id_col, vec_col)
+        vectors = _vector_rows(assigned, build_id, id_col, vec_col)
+        self.materialize_partitioned(f"{name}_vectors", vectors, ["centroid_id"])
+        codes = encode(self.table(f"{name}_vectors"), build_id)
+        self.materialize_partitioned(f"{name}_codes", codes, ["centroid_id"])
+        return build_id, self._coarse_state(name, "vectors", cents, n_list)
+
+    def _lut(self, man: dict, queries: DataFrame, qid_col: str, qvec_col: str):
+        """The ADC lookup table of a query batch against the manifest's
+        PQ codebook."""
+        cb, m = self._frame(man["codebook"]), man["params"]["pq_m"]
+        return similarity.pq_query_lut(queries, cb, m, qid_col, qvec_col)
+
+    def _probe_lists(self, man, queries, nprobe, qid_col, qvec_col) -> DataFrame:
+        """Each query's ``nprobe`` nearest lists against the manifest's
+        centroids (similarity.ivfpq_probe_lists)."""
+        cents = self._frame(man["centroids"])
+        return similarity.ivfpq_probe_lists(queries, cents, nprobe, qid_col, qvec_col)
+
+    def _index_tables(self, name: str) -> list:
+        """Logical names of index ``name``'s member tables, as its
+        committed manifest lists them (none without one)."""
+        man = self._read_manifest(name) or {}
+        return [f"{name}_{m}" for m in man.get("members", ())]
+
+    def _bucket_spec(self, logical: str) -> "list | None":
+        """[key, n_buckets] when ``logical`` is a bucketed member of a
+        committed index (``{index}_{member}``, split at any
+        underscore), else None."""
+        for i, ch in enumerate(logical):
+            if ch == "_":
+                man = self._read_manifest(logical[:i]) or {}
+                spec = man.get("members", {}).get(logical[i + 1 :], {}).get("bucket")
+                if spec:
+                    return spec
+        return None
 
     def _release_graph_frames(self, name: str) -> None:
         """Unpersist the frames the last pagerank_served call cached
@@ -668,8 +683,8 @@ class Engine:
     ) -> None:
         """[EXT] Build-once ANN index lifecycle: k-means-refine the
         IVF coarse quantizer (``kmeans_iters`` = 0 keeps the md5
-        seeds), materialize the centroids as ``{name}_centroids``
-        (n_list rows) and the assignment as ``{name}_assigned``
+        seeds), keep its n_list centroids in the index manifest and
+        materialize the assignment as ``{name}_assigned``
         BUCKETED by centroid_id — every subsequent :meth:`ann_topk`
         probe joins co-located inverted lists with no corpus-side
         shuffle (the semantic_dedup ``assigned=`` story, productized;
@@ -678,21 +693,21 @@ class Engine:
         only their own bounded work.
 
         The stored assignment carries sim_micro, the drift
-        instrument's input. Both tables carry a shared build id, and
-        the heavy bucketed assignment lands FIRST: a failure between
-        the two writes leaves tables from DIFFERENT builds, whose
-        centroid ids would still join silently — ann_topk verifies
-        the build ids match and errors instead of serving wrong
-        neighbors from a torn rebuild (the stored-index protocol,
-        see :func:`_stamp`)."""
-        cents = _coarse_quantizer(emb, id_col, vec_col, n_list, kmeans_iters)
-        assigned = similarity._assign_scored(emb, cents, id_col, vec_col)
+        instrument's input, and the build id; the manifest commits
+        after it, so a failure between the two leaves an assignment
+        from a build the manifest does not name — ann_topk refuses
+        it instead of serving wrong neighbors from a torn rebuild
+        (the stored-index protocol, see :func:`_stamp`)."""
+        cents = _bounded(_coarse_quantizer(emb, id_col, vec_col, n_list, kmeans_iters))
+        assigned = similarity._assign_scored(emb, _rows(cents), id_col, vec_col)
         build_id = random_alphanum()
-        self._verified.pop(("ivf", name), None)
+        self._verified.pop(name, None)
         self.materialize_bucketed(
             f"{name}_assigned", _stamp(assigned, build_id), ["centroid_id"], n_buckets
         )
-        self._write_centroids(name, "assigned", cents, build_id)
+        state = self._coarse_state(name, "assigned", cents, n_list)
+        members = {"assigned": {"bucket": ["centroid_id", n_buckets]}}
+        self._commit_build(name, "ivf", build_id, members, **state)
 
     def append_to_ivf_index(
         self,
@@ -704,14 +719,12 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Incremental index append — the nightly-crawl story
         for the ANN index (the dedup_cross_corpus analogue): assign
-        ``new_emb`` against the STORED centroids (one driver read of
-        the n_list-row table serves the build-id check, the drift
-        baseline and the assign literals; one pass over the batch
-        only — the corpus is never rescanned), append the scored
-        assignment to the bucketed inverted lists under the SAME build id (probes keep
-        reading co-located buckets; ann_topk's torn-build check
-        still holds because the id matches), and return a one-row
-        drift report:
+        ``new_emb`` against the manifest's centroids (plan literals;
+        one pass over the batch only — the corpus is never
+        rescanned), append the scored assignment to the bucketed
+        inverted lists under the SAME build id (probes keep reading
+        co-located buckets), commit the grown row count at revision
+        + 1, and return a one-row drift report:
 
         (appended_rows, batch_mean_sim_micro, build_mean_sim_micro,
         drift_micro) — drift_micro = build mean − batch mean
@@ -726,13 +739,13 @@ class Engine:
         mismatched bucket spec loudly). Appended rows ≡ what a
         rebuild-on-union would assign AGAINST THE SAME centroids —
         pinned by tests/test_bucketing.py."""
-        build_id, build_mean, cents, _, _ = self._read_quantizers(name, "ANN", "ivf")
-        batch = _stamp(
-            similarity._assign_scored(new_emb, cents, id_col, vec_col), build_id
-        ).localCheckpoint()
-        self._verified.pop(("ivf", name), None)
+        man = self._manifest(name, "ivf")
+        cents = _rows(man["centroids"])
+        batch = similarity._assign_scored(new_emb, cents, id_col, vec_col)
+        batch = _stamp(batch, man["build_id"]).localCheckpoint()
+        self._verified.pop(name, None)
         _append_stored(f"{name}_assigned", batch, "centroid_id", n_buckets)
-        return self._drift_report(batch, build_mean)
+        return self._commit_append(name, man, batch, assigned=1)
 
     def ann_topk(
         self,
@@ -749,45 +762,17 @@ class Engine:
         :meth:`build_ivf_index` — probes the stored bucketed
         inverted lists; no rebuild, no per-query replanning.
 
-        One driver read of the n_list-row centroid table (centroid
-        id, vector, build id) serves both the torn-build check —
-        raises if the two index tables carry different build ids (a
-        torn rebuild, see build_ivf_index) — and the centroid
-        literals of similarity.ann_search: each query picks its
-        ``nprobe`` lists in a per-row expression, the probe frame is
-        broadcast into one equality join on the co-located
-        centroid_id buckets, and a per-query window keeps the top
-        ``k``. Four Spark jobs per steady-state call, centroid read
-        included (pinned by tests/test_bucketing.py)."""
-        assigned = self.table(f"{name}_assigned")
-        rows = (
-            self.table(f"{name}_centroids")
-            .select("centroid_id", "cvec", "build_id")
-            .collect()
-        )
-        cid = sorted({r.build_id for r in rows})
-        # DISTINCT over the assignment side, not limit(1): a torn
-        # overwrite / bad append can leave rows from SEVERAL builds
-        # interleaved, and a sampled single row can accidentally
-        # match the centroids' id while wrong-build rows still
-        # serve. The distinct is one column-pruned scan, paid once
-        # per build or append (the verified-state memo).
-        if self._verified.get(("ivf", name)) != cid:
-            aid = sorted(
-                r.build_id
-                for r in assigned.select("build_id").distinct().collect()
-            )
-            if len(cid) != 1 or (aid and aid != cid):
-                raise ValueError(
-                    f"ANN index {name!r} is torn (centroids build "
-                    f"{cid} vs assignment build {aid}) — re-run "
-                    "build_ivf_index"
-                )
-            if aid:
-                self._verified[("ivf", name)] = cid
+        The manifest's centroids are the literals of
+        similarity.ann_search: each query picks its ``nprobe`` lists
+        in a per-row expression, the probe frame is broadcast into
+        one equality join on the co-located centroid_id buckets, and
+        a per-query window keeps the top ``k``. Raises on a torn
+        index (see :func:`_stamp`). Three Spark jobs per
+        steady-state call (pinned by tests/test_bucketing.py)."""
+        man = self._manifest(name, "ivf")
         return similarity.ann_search(
-            assigned,
-            rows,
+            self.table(f"{name}_assigned"),
+            _rows(man["centroids"]),
             queries,
             k=k,
             nprobe=nprobe,
@@ -811,11 +796,11 @@ class Engine:
         """[EXT] Build-once product-quantization index — the
         compressed sibling of :meth:`build_ivf_index`: train the
         per-subspace codebooks (similarity.pq_codebooks), encode the
-        corpus, and store three tables: ``{name}_codebook`` (m x k
-        rows), ``{name}_codes`` (the M-int compressed corpus — what
-        probes scan; 16-64x fewer bytes than the vectors) and
-        ``{name}_vectors`` (the floats, read back ONLY for the
-        per-query shortlist rerank). Codes and vectors are BUCKETED
+        corpus, keep the m x k codebook in the index manifest and
+        store two tables: ``{name}_codes`` (the M-int compressed
+        corpus — what probes scan; 16-64x fewer bytes than the
+        vectors) and ``{name}_vectors`` (the floats, read back ONLY
+        for the per-query shortlist rerank). Both are BUCKETED
         by ``vec_id``: the ADC per-(query, vector) aggregation
         groups on a superset of the bucket key, so the stored
         distribution satisfies it and the probe's score aggregation
@@ -823,14 +808,14 @@ class Engine:
         tests/test_bucketing.py::test_pq_index_lifecycle).
 
         Torn-state discipline (the stored-index protocol, see
-        :func:`_stamp`): all three tables share a build id, heavy
-        writes land first, and :meth:`pq_search` verifies agreement
+        :func:`_stamp`): both tables carry the build id, the manifest
+        commits last, and :meth:`pq_search` verifies them against it
         before serving."""
         m, k, iters = _pq_params(m, k, kmeans_iters)
-        cb = similarity.pq_codebooks(emb, m, k, iters, id_col, vec_col)
-        codes = similarity.pq_encode(emb, cb, m, id_col, vec_col)
+        cb = _bounded(similarity.pq_codebooks(emb, m, k, iters, id_col, vec_col))
+        codes = similarity.pq_encode(emb, _rows(cb), m, id_col, vec_col)
         build_id = random_alphanum()
-        self._verified.pop(("pq", name), None)
+        self._verified.pop(name, None)
         self.materialize_bucketed(
             f"{name}_codes", _stamp(codes, build_id), ["vec_id"], n_buckets
         )
@@ -840,7 +825,9 @@ class Engine:
         self.materialize_bucketed(
             f"{name}_vectors", _stamp(vectors, build_id), ["vec_id"], n_buckets
         )
-        self._write_codebook(name, cb, build_id, m, k)
+        members = {t: {"bucket": ["vec_id", n_buckets]} for t in ("codes", "vectors")}
+        params = {"pq_m": m, "pq_k": k}
+        self._commit_build(name, "pq", build_id, members, params=params, codebook=cb)
 
     def pq_search(
         self,
@@ -868,26 +855,10 @@ class Engine:
         callers re-using doc ids); pass False when the external
         query id space may COLLIDE with vec_ids, or a same-id corpus
         vector is silently excluded from that query's top-k. Raises
-        on a torn build (mismatched build ids across the three
-        tables); the heavy member scan is memoized per build id
-        like ann_topk's."""
-        codes, vectors, cb = (
-            self.table(f"{name}_{t}") for t in ("codes", "vectors", "codebook")
-        )
-        # ONE collect serves the freshness check AND pq_m
-        cid, m = _quantizer_state(cb)
-        if self._verified.get(("pq", name)) != (cid, m):
-            heavy, _ = _member_builds(codes=codes, vectors=vectors)
-            if len(cid) != 1 or (heavy and heavy != cid):
-                raise ValueError(
-                    f"PQ index {name!r} is torn (codebook build {cid} vs "
-                    f"codes/vectors builds {heavy}) — re-run build_pq_index"
-                )
-            if heavy:
-                self._verified[("pq", name)] = (cid, m)
-        lut = similarity.pq_query_lut(
-            queries, cb.select("m", "code", "cvec"), m, query_id_col, query_vec_col
-        )
+        on a torn index (see :func:`_stamp`)."""
+        man = self._manifest(name, "pq")
+        codes, vectors = (self.table(f"{name}_{t}") for t in ("codes", "vectors"))
+        lut = self._lut(man, queries, query_id_col, query_vec_col)
         n_short = similarity.PQ_SHORTLIST if shortlist is None else shortlist
         if not rerank:
             return similarity.ann_pq_topk(
@@ -927,33 +898,31 @@ class Engine:
         touched vector COSTS (M codes instead of dim floats). Probe
         I/O at 100 TB ~ corpus x (nprobe/n_list) x (1/compression).
 
-        Stores four tables under a shared build id:
+        Stores two tables under a shared build id,
         ``{name}_vectors`` (vec_id, centroid_id, embedding) and
         ``{name}_codes`` (vec_id, centroid_id, m, code), both
         directory-PARTITIONED by centroid_id so a probe's broadcast
         list join dynamically prunes the files read to the probed
-        lists; ``{name}_centroids`` (the k-means-refined coarse
-        quantizer) and ``{name}_codebook`` (the m x k PQ codebooks).
-        The PQ encode reuses the stored vectors table (its
-        centroid_id rides the code argmax), so the build costs the
-        coarse assignment + codebook training + one encode pass —
-        never a join between corpus-sized frames. Heavy writes land
-        first; :meth:`ivfpq_search` verifies build-id agreement
-        before serving (the stored-index protocol, see
-        :func:`_stamp`)."""
+        lists; the k-means-refined coarse quantizer and the m x k PQ
+        codebooks live in the index manifest. The PQ encode reuses
+        the stored vectors table (its centroid_id rides the code
+        argmax), so the build costs the coarse assignment + codebook
+        training + one encode pass — never a join between
+        corpus-sized frames. The manifest commits last;
+        :meth:`ivfpq_search` verifies the tables against it before
+        serving (the stored-index protocol, see :func:`_stamp`)."""
         m, k, iters = _pq_params(m, k, pq_iters)
-        cb = similarity.pq_codebooks(emb, m, k, iters, id_col, vec_col)
-        build_id = self._build_lists(
-            "ivfpq",
-            name,
-            emb,
-            n_list,
-            kmeans_iters,
-            id_col,
-            vec_col,
-            lambda stored, bid: _pq_codes(stored, cb, m, bid),
+        cb = _bounded(similarity.pq_codebooks(emb, m, k, iters, id_col, vec_col))
+
+        def encode(stored: DataFrame, bid: str) -> DataFrame:
+            return _pq_codes(stored, _rows(cb), m, bid)
+
+        build_id, state = self._build_lists(
+            name, emb, n_list, kmeans_iters, id_col, vec_col, encode
         )
-        self._write_codebook(name, cb, build_id, m, k)
+        state["params"].update(pq_m=m, pq_k=k)
+        members = {"vectors": {}, "codes": {}}
+        self._commit_build(name, "ivfpq", build_id, members, codebook=cb, **state)
 
     def append_to_ivfpq_index(
         self,
@@ -964,37 +933,30 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Incremental append to the composed IVF+PQ index —
         the nightly-crawl story extended to both quantizers: the
-        batch is assigned against the STORED centroids and encoded
-        against the STORED codebooks (both read once, as literals;
-        one pass over the batch only — the corpus is never rescanned,
-        neither quantizer re-trains), appended to BOTH
-        centroid-partitioned tables under the build's id (probes
-        keep pruning to their lists; ivfpq_search's torn check still
-        holds because the id matches), and returns the one-row drift
-        report of :meth:`append_to_ivf_index` — (appended_rows,
-        batch_mean_sim_micro, build_mean_sim_micro, drift_micro),
-        the REBUILD TRIGGER. Appended codes ≡ what a rebuild against
-        the SAME quantizers would assign (pinned by
-        tests/test_bucketing.py::test_ivfpq_index_append). The two
-        table appends are not atomic; a failure between them is
-        caught by ivfpq_search's m-codes-per-vector count identity
-        (checked whenever the build-id memo misses), which refuses
-        to serve a half-appended index."""
-        build_id, build_mean, cents, cb, m = self._read_quantizers(
-            name, "IVFPQ", "ivfpq", codebook=True
-        )
-        batch = similarity._assign_scored(
-            new_emb, cents, id_col, vec_col
-        ).localCheckpoint()
+        batch is assigned against the manifest's centroids and
+        encoded against its codebooks (plan literals; one pass over
+        the batch only — the corpus is never rescanned, neither
+        quantizer re-trains), appended to BOTH centroid-partitioned
+        tables under the build's id (probes keep pruning to their
+        lists), committed at revision + 1, and returns the one-row
+        drift report of :meth:`append_to_ivf_index` —
+        (appended_rows, batch_mean_sim_micro, build_mean_sim_micro,
+        drift_micro), the REBUILD TRIGGER. Appended codes ≡ what a
+        rebuild against the SAME quantizers would assign (pinned by
+        tests/test_bucketing.py::test_ivfpq_index_append). A failure
+        before the commit leaves member counts above the committed
+        ones, which every later search and append refuses."""
+        man = self._manifest(name, "ivfpq")
+        m, build_id = man["params"]["pq_m"], man["build_id"]
+        cents, cb = _rows(man["centroids"]), _rows(man["codebook"])
+        batch = similarity._assign_scored(new_emb, cents, id_col, vec_col)
+        batch = batch.localCheckpoint()
         codes = _pq_codes(batch, cb, m, build_id, id_col, vec_col).localCheckpoint()
-        self._verified.pop(("ivfpq", name), None)
-        _append_stored(
-            f"{name}_vectors",
-            _vector_rows(batch, build_id, id_col, vec_col),
-            "centroid_id",
-        )
+        self._verified.pop(name, None)
+        vectors = _vector_rows(batch, build_id, id_col, vec_col)
+        _append_stored(f"{name}_vectors", vectors, "centroid_id")
         _append_stored(f"{name}_codes", codes, "centroid_id")
-        return self._drift_report(batch, build_mean)
+        return self._commit_append(name, man, batch, vectors=1, codes=m)
 
     def ivfpq_search(
         self,
@@ -1025,52 +987,11 @@ class Engine:
         :func:`operators.similarity.ann_ivfpq_topk`.
         ``exclude_query_ids`` as in :meth:`pq_search`: pass False
         when the external query id space may collide with vec_ids.
-        Raises on a torn build; the heavy member scan is memoized per
-        build id like ann_topk's."""
-        codes, vectors, cents, cb = (
-            self.table(f"{name}_{t}")
-            for t in ("codes", "vectors", "centroids", "codebook")
-        )
-        # ONE collect over the two bounded quantizer tables serves the
-        # freshness check AND pq_m
-        cid, m = _quantizer_state(cents, cb)
-        if self._verified.get(("ivfpq", name)) != (cid, m):
-            if m is None:
-                raise _torn_codebook("IVFPQ", name, "ivfpq")
-            # a failure BETWEEN append_to_ivfpq_index's two table
-            # appends leaves vectors without codes under the SAME
-            # build id — invisible to the id check, silently absent
-            # from ADC scoring. Every vector carries exactly m code
-            # rows, so the count identity detects the tear.
-            heavy, n = _member_builds(codes=codes, vectors=vectors)
-            if n["codes"] != m * n["vectors"]:
-                raise ValueError(
-                    f"IVFPQ index {name!r} is torn: {n['vectors']} vectors "
-                    f"but {n['codes']} code rows (expected "
-                    f"{m * n['vectors']}) — a failed append; re-run "
-                    "build_ivfpq_index"
-                )
-            if len(cid) != 1 or (heavy and heavy != cid):
-                raise ValueError(
-                    f"IVFPQ index {name!r} is torn (quantizer builds {cid} vs "
-                    f"codes/vectors builds {heavy}) — re-run build_ivfpq_index"
-                )
-            if heavy:
-                self._verified[("ivfpq", name)] = (cid, m)
-        probes = similarity.ivfpq_probe_lists(
-            queries,
-            cents.select("centroid_id", "cvec"),
-            nprobe,
-            query_id_col,
-            query_vec_col,
-        )
-        lut = similarity.pq_query_lut(
-            queries,
-            cb.select("m", "code", "cvec"),
-            m,
-            query_id_col,
-            query_vec_col,
-        )
+        Raises on a torn index (see :func:`_stamp`)."""
+        man = self._manifest(name, "ivfpq")
+        codes, vectors = (self.table(f"{name}_{t}") for t in ("codes", "vectors"))
+        probes = self._probe_lists(man, queries, nprobe, query_id_col, query_vec_col)
+        lut = self._lut(man, queries, query_id_col, query_vec_col)
         if not rerank:
             return similarity.ann_ivfpq_topk(
                 codes.select("vec_id", "centroid_id", "m", "code"),
@@ -1116,25 +1037,26 @@ class Engine:
         packed bits vs 256 B of float32). Probe I/O at 100 TB ~
         corpus x (nprobe/n_list) x (1/16).
 
-        Stores three tables under a shared build id:
+        Stores two tables under a shared build id,
         ``{name}_vectors`` (vec_id, embedding, sim_micro,
         centroid_id) and ``{name}_codes`` (vec_id, sig_lo, sig_hi,
         centroid_id), both directory-PARTITIONED by centroid_id so a
         probe's broadcast list join dynamically prunes the files
-        read to the probed lists; ``{name}_centroids`` (the
-        k-means-refined coarse quantizer, carrying the build-mean
-        drift baseline). Unlike IVFPQ there is NO codebook table —
-        the sign quantizer is parameterless, so the coarse centroids
-        are the only trained state. The sign encode rides the stored
-        assignment (zero extra corpus pass); heavy writes land
-        first; :meth:`ivfbq_search` verifies build-id agreement and
-        the 1-code-per-vector count identity before serving (the
-        stored-index protocol, see :func:`_stamp`). Returns the
-        build id, so build_cascade_index composes without re-reading
-        the just-written centroids."""
-        return self._build_lists(
-            "ivfbq", name, emb, n_list, kmeans_iters, id_col, vec_col, _bq_codes
+        read to the probed lists; the k-means-refined coarse
+        quantizer and its build-mean drift baseline live in the
+        index manifest. Unlike IVFPQ there is NO codebook — the sign
+        quantizer is parameterless, so the coarse centroids are the
+        only trained state. The sign encode rides the stored
+        assignment (zero extra corpus pass); the manifest commits
+        last, and :meth:`ivfbq_search` verifies the tables against
+        it before serving (the stored-index protocol, see
+        :func:`_stamp`). Returns the build id."""
+        build_id, state = self._build_lists(
+            name, emb, n_list, kmeans_iters, id_col, vec_col, _bq_codes
         )
+        members = {"vectors": {}, "codes": {}}
+        self._commit_build(name, "ivfbq", build_id, members, **state)
+        return build_id
 
     def append_to_ivfbq_index(
         self,
@@ -1144,36 +1066,30 @@ class Engine:
         vec_col: str = "embedding",
     ) -> DataFrame:
         """[EXT] Incremental append to the IVF+BQ index: the batch is
-        assigned against the STORED centroids (read once, as
-        literals; one pass over the batch only — the corpus is never
-        rescanned) and sign-packed in the same projection; both
-        centroid-partitioned tables grow under the build's id, and
-        the one-row drift report of :meth:`append_to_ivf_index`
-        returns — (appended_rows, batch_mean_sim_micro,
-        build_mean_sim_micro, drift_micro), the REBUILD TRIGGER.
-        The sign quantizer being parameterless, appended codes are
-        BY CONSTRUCTION what a rebuild against the same centroids
-        would store — the only drift that exists is coarse-
-        assignment drift, which the report measures. The two table
-        appends are not atomic; a failure between them is caught by
-        ivfbq_search's 1-code-per-vector count identity (checked
-        whenever the build-id memo misses)."""
-        build_id, build_mean, cents, _, _ = self._read_quantizers(
-            name, "IVFBQ", "ivfbq"
-        )
-        batch = similarity._assign_scored(
-            new_emb, cents, id_col, vec_col
-        ).localCheckpoint()
-        self._verified.pop(("ivfbq", name), None)
-        _append_stored(
-            f"{name}_vectors",
-            _vector_rows(batch, build_id, id_col, vec_col),
-            "centroid_id",
-        )
-        _append_stored(
-            f"{name}_codes", _bq_codes(batch, build_id, id_col, vec_col), "centroid_id"
-        )
-        return self._drift_report(batch, build_mean)
+        assigned against the manifest's centroids (plan literals; one
+        pass over the batch only — the corpus is never rescanned) and
+        sign-packed in the same projection; both centroid-partitioned
+        tables grow under the build's id, the manifest commits at
+        revision + 1, and the one-row drift report of
+        :meth:`append_to_ivf_index` returns — (appended_rows,
+        batch_mean_sim_micro, build_mean_sim_micro, drift_micro), the
+        REBUILD TRIGGER. The sign quantizer being parameterless,
+        appended codes are BY CONSTRUCTION what a rebuild against the
+        same centroids would store — the only drift that exists is
+        coarse-assignment drift, which the report measures. A failure
+        before the commit leaves member counts above the committed
+        ones, which every later search and append refuses."""
+        man = self._manifest(name, "ivfbq")
+        build_id = man["build_id"]
+        cents = _rows(man["centroids"])
+        batch = similarity._assign_scored(new_emb, cents, id_col, vec_col)
+        batch = batch.localCheckpoint()
+        self._verified.pop(name, None)
+        vectors = _vector_rows(batch, build_id, id_col, vec_col)
+        _append_stored(f"{name}_vectors", vectors, "centroid_id")
+        codes = _bq_codes(batch, build_id, id_col, vec_col)
+        _append_stored(f"{name}_codes", codes, "centroid_id")
+        return self._commit_append(name, man, batch, vectors=1, codes=1)
 
     def ivfbq_search(
         self,
@@ -1200,42 +1116,11 @@ class Engine:
         the same way. ``rerank=False`` returns the raw Hamming
         ranking (query_id, vec_id, centroid_id, hamming, rank).
         ``filter_ids`` / ``exclude_query_ids`` as in
-        :meth:`ivfpq_search`. Raises on a torn build (mismatched
-        build ids, or a half-appended index caught by the
-        1-code-per-vector count identity); the heavy member scan is
-        memoized per build id like ann_topk's."""
-        codes, vectors, cents = (
-            self.table(f"{name}_{t}") for t in ("codes", "vectors", "centroids")
-        )
-        cid, _ = _quantizer_state(cents)
-        if self._verified.get(("ivfbq", name)) != cid:
-            # a failure BETWEEN append_to_ivfbq_index's two appends
-            # leaves vectors without sign codes under the SAME build
-            # id — invisible to the id check, silently absent from
-            # Hamming scoring. Every vector carries exactly one code
-            # row.
-            heavy, n = _member_builds(codes=codes, vectors=vectors)
-            if n["codes"] != n["vectors"]:
-                raise ValueError(
-                    f"IVFBQ index {name!r} is torn: {n['vectors']} vectors "
-                    f"but {n['codes']} code rows — a failed append; "
-                    "re-run build_ivfbq_index"
-                )
-            if len(cid) != 1 or (heavy and heavy != cid):
-                raise ValueError(
-                    f"IVFBQ index {name!r} is torn (centroid builds "
-                    f"{cid} vs codes/vectors builds {heavy}) — "
-                    "re-run build_ivfbq_index"
-                )
-            if heavy:
-                self._verified[("ivfbq", name)] = cid
-        probes = similarity.ivfpq_probe_lists(
-            queries,
-            cents.select("centroid_id", "cvec"),
-            nprobe,
-            query_id_col,
-            query_vec_col,
-        )
+        :meth:`ivfpq_search`. Raises on a torn index (see
+        :func:`_stamp`)."""
+        man = self._manifest(name, "ivfbq")
+        codes, vectors = (self.table(f"{name}_{t}") for t in ("codes", "vectors"))
+        probes = self._probe_lists(man, queries, nprobe, query_id_col, query_vec_col)
         qc = similarity.bq_query_codes(queries, query_id_col, query_vec_col)
         if not rerank:
             return similarity.ann_ivfbq_topk(
@@ -1292,18 +1177,22 @@ class Engine:
         reads the STORED vectors (deterministic: the md5-seeded PQ
         init keys on vec_id, so codebooks equal an emb-direct
         train), and the PQ encode reads them too, so each code row
-        carries its vector's centroid_id without a join."""
-        self._verified.pop(("cascade", name), None)
-        build_id = self.build_ivfbq_index(
-            name, emb, n_list, kmeans_iters, id_col, vec_col
+        carries its vector's centroid_id without a join. The coarse
+        quantizer and the codebook live in the index manifest, which
+        commits last."""
+        build_id, state = self._build_lists(
+            name, emb, n_list, kmeans_iters, id_col, vec_col, _bq_codes
         )
         m, k, iters = _pq_params(m, k, pq_iters)
         stored = self.table(f"{name}_vectors")
-        cb = similarity.pq_codebooks(stored, m, k, iters, "vec_id", "embedding")
-        self.materialize_partitioned(
-            f"{name}_codes_pq", _pq_codes(stored, cb, m, build_id), ["centroid_id"]
+        cb = _bounded(
+            similarity.pq_codebooks(stored, m, k, iters, "vec_id", "embedding")
         )
-        self._write_codebook(name, cb, build_id, m, k)
+        codes = _pq_codes(stored, _rows(cb), m, build_id)
+        self.materialize_partitioned(f"{name}_codes_pq", codes, ["centroid_id"])
+        state["params"].update(pq_m=m, pq_k=k)
+        members = {"vectors": {}, "codes": {}, "codes_pq": {}}
+        self._commit_build(name, "cascade", build_id, members, codebook=cb, **state)
 
     def cascade_search(
         self,
@@ -1332,40 +1221,12 @@ class Engine:
         survivors' float vectors via the same pruned point lookups.
         Probe I/O ~ corpus x (nprobe/n_list) x (17 B/256 B of the
         compressed tiers) + bounded-pair work; no stage rescans the
-        corpus. Torn-build discipline: all five tables must agree on
-        one build id and both code tables must carry exactly one row
-        per vector (memoized per build like :meth:`ivfbq_search`)."""
-        codes_bq, codes_pq, vectors, cents, cb = (
-            self.table(f"{name}_{t}")
-            for t in ("codes", "codes_pq", "vectors", "centroids", "codebook")
+        corpus. Raises on a torn index (see :func:`_stamp`)."""
+        man = self._manifest(name, "cascade")
+        codes_bq, codes_pq, vectors = (
+            self.table(f"{name}_{t}") for t in ("codes", "codes_pq", "vectors")
         )
-        # ONE collect over the two bounded quantizer tables serves the
-        # freshness check AND pq_m
-        cid, pq_m = _quantizer_state(cents, cb)
-        if self._verified.get(("cascade", name)) != (cid, pq_m):
-            heavy, n = _member_builds(bq=codes_bq, pq=codes_pq, vec=vectors)
-            if len(cid) != 1 or heavy != cid:
-                raise ValueError(
-                    f"cascade index {name!r} is torn (centroid builds "
-                    f"{cid} vs member builds {heavy}) — re-run "
-                    "build_cascade_index"
-                )
-            if pq_m is None:
-                raise _torn_codebook("cascade", name, "cascade")
-            if n["bq"] != n["vec"] or n["pq"] != n["vec"] * pq_m:
-                raise ValueError(
-                    f"cascade index {name!r} is torn: code counts do "
-                    "not match the vector count — a failed write; "
-                    "re-run build_cascade_index"
-                )
-            self._verified[("cascade", name)] = (cid, pq_m)
-        probes = similarity.ivfpq_probe_lists(
-            queries,
-            cents.select("centroid_id", "cvec"),
-            nprobe,
-            query_id_col,
-            query_vec_col,
-        )
+        probes = self._probe_lists(man, queries, nprobe, query_id_col, query_vec_col)
         qc = similarity.bq_query_codes(queries, query_id_col, query_vec_col)
         stage1 = similarity.ann_ivfbq_topk(
             codes_bq.select("vec_id", "centroid_id", "sig_lo", "sig_hi"),
@@ -1375,13 +1236,7 @@ class Engine:
             allowed=filter_ids,
             exclude_self=exclude_query_ids,
         )
-        lut = similarity.pq_query_lut(
-            queries,
-            cb.select("m", "code", "cvec"),
-            m=pq_m,
-            id_col=query_id_col,
-            vec_col=query_vec_col,
-        )
+        lut = self._lut(man, queries, query_id_col, query_vec_col)
         stage2 = similarity.ann_cascade_pq_narrow(
             stage1,
             codes_pq.select("vec_id", "centroid_id", "m", "code"),
@@ -1406,42 +1261,32 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Incremental append to the cascade index — the
         nightly-crawl story for the full funnel: the batch is
-        assigned against the STORED centroids, sign-packed AND
-        PQ-encoded against the STORED codebook in bounded batch
-        passes (no quantizer retrains; the corpus is never
-        rescanned), appended to ALL THREE centroid-partitioned
-        tables under the build's id, and returns the one-row drift
+        assigned against the manifest's centroids, sign-packed AND
+        PQ-encoded against its codebook in bounded batch passes (no
+        quantizer retrains; the corpus is never rescanned), appended
+        to ALL THREE centroid-partitioned tables under the build's
+        id, committed at revision + 1, and returns the one-row drift
         report — (appended_rows, batch_mean_sim_micro,
         build_mean_sim_micro, drift_micro), the REBUILD TRIGGER.
         Appended sign codes ≡ a same-centroid rebuild BY
         CONSTRUCTION (parameterless quantizer); appended PQ codes ≡
-        a frozen-codebook re-encode (the IVFPQ append property). The
-        three appends are not atomic; a failure between them is
-        caught by cascade_search's per-tier count identities
-        (1 sign-code row and exactly M PQ-code rows per vector),
-        checked whenever the build-id memo misses."""
-        build_id, build_mean, cents, cb, pq_m = self._read_quantizers(
-            name, "cascade", "cascade", codebook=True
-        )
-        batch = similarity._assign_scored(
-            new_emb, cents, id_col, vec_col
-        ).localCheckpoint()
-        self._verified.pop(("cascade", name), None)
-        self._verified.pop(("ivfbq", name), None)
-        _append_stored(
-            f"{name}_vectors",
-            _vector_rows(batch, build_id, id_col, vec_col),
-            "centroid_id",
-        )
-        _append_stored(
-            f"{name}_codes", _bq_codes(batch, build_id, id_col, vec_col), "centroid_id"
-        )
-        _append_stored(
-            f"{name}_codes_pq",
-            _pq_codes(batch, cb, pq_m, build_id, id_col, vec_col),
-            "centroid_id",
-        )
-        return self._drift_report(batch, build_mean)
+        a frozen-codebook re-encode (the IVFPQ append property). A
+        failure before the commit leaves member counts above the
+        committed ones, which every later search and append
+        refuses."""
+        man = self._manifest(name, "cascade")
+        m, build_id = man["params"]["pq_m"], man["build_id"]
+        cents, cb = _rows(man["centroids"]), _rows(man["codebook"])
+        batch = similarity._assign_scored(new_emb, cents, id_col, vec_col)
+        batch = batch.localCheckpoint()
+        self._verified.pop(name, None)
+        vectors = _vector_rows(batch, build_id, id_col, vec_col)
+        _append_stored(f"{name}_vectors", vectors, "centroid_id")
+        codes = _bq_codes(batch, build_id, id_col, vec_col)
+        _append_stored(f"{name}_codes", codes, "centroid_id")
+        codes_pq = _pq_codes(batch, cb, m, build_id, id_col, vec_col)
+        _append_stored(f"{name}_codes_pq", codes_pq, "centroid_id")
+        return self._commit_append(name, man, batch, vectors=1, codes=1, codes_pq=m)
 
     def build_text_index(
         self,
@@ -1456,8 +1301,8 @@ class Engine:
         postings as ``{name}_postings`` BUCKETED by ``tok`` (every
         :meth:`text_search` term prune and df window reads
         co-located inverted lists — no index-side exchange; pinned
-        by tests/test_text_index.py) and the one-row corpus stats
-        (n_docs, sum_dl) as ``{name}_stats``.
+        by tests/test_text_index.py) and keep the corpus stats
+        (n_docs, sum_dl) in the index manifest.
 
         Pick ``n_buckets`` to match the probe side's target
         partitioning (``spark.sql.shuffle.partitions`` of the
@@ -1472,18 +1317,21 @@ class Engine:
         :meth:`append_to_text_index` keeps the index EXACT: probes
         over (build + appends) equal a rebuild-on-union to the bit.
 
-        Torn-state discipline: both tables carry a shared build id
-        plus a monotone revision; the heavy write (postings) lands
-        FIRST, and text_search verifies id + revision agreement
-        before serving (a failure between the two writes leaves a
-        detectable mismatch instead of silently wrong df/stats)."""
+        Torn-state discipline (the stored-index protocol, see
+        :func:`_stamp`): postings rows carry the build id and the
+        revision that wrote them, the manifest commits last, and
+        text_search verifies the postings against it before serving
+        (a failure before the commit leaves a detectable mismatch
+        instead of silently wrong df/stats)."""
         postings, stats = text.build_postings(docs, text_col)
         build_id = random_alphanum()
-        self._verified.pop(("text", name), None)
+        self._verified.pop(name, None)
         self.materialize_bucketed(
             f"{name}_postings", _stamp(postings, build_id, 0), ["tok"], n_buckets
         )
-        self._replace_table(f"{name}_stats", _stamp(stats, build_id, 0))
+        members = {"postings": {"bucket": ["tok", n_buckets]}}
+        srow = stats.collect()[0].asDict()
+        self._commit_build(name, "text", build_id, members, stats=srow)
 
     def append_to_text_index(
         self,
@@ -1496,7 +1344,8 @@ class Engine:
         for the text index: tokenize only the new batch (the corpus
         is never rescanned), append its postings to the bucketed
         inverted lists under the SAME build id at revision+1, and
-        fold the batch's (n_docs, sum_dl) into the stats row. df per
+        commit the batch's (n_docs, sum_dl) folded into the
+        manifest's stats. df per
         term is recomputed from postings at probe time, so the
         appended index serves IDENTICAL scores to a full rebuild on
         the union — pinned by tests/test_text_index.py.
@@ -1516,7 +1365,7 @@ class Engine:
 
         ``n_buckets`` must match the build's (Spark refuses a
         mismatched bucket spec loudly)."""
-        _, srow = self._text_stats(name)
+        man = self._manifest(name, "text")
         batch_postings, batch_stats = text.build_postings(new_docs, text_col)
         batch_postings = batch_postings.localCheckpoint()
         brow = batch_stats.collect()[0]
@@ -1526,39 +1375,19 @@ class Engine:
             self.table(f"{name}_postings"), batch_postings
         ).collect()[0]
         n_postings = batch_postings.count()
-        revision = int(srow.revision) + 1
-        self._verified.pop(("text", name), None)
-        _append_stored(
-            f"{name}_postings",
-            _stamp(batch_postings, srow.build_id, revision),
-            "tok",
-            n_buckets,
-        )
-        self._replace_table(
-            f"{name}_stats",
-            self.spark.createDataFrame(
-                [
-                    (
-                        int(srow.n_docs) + int(brow.n_docs),
-                        int(srow.sum_dl or 0) + int(brow.sum_dl or 0),
-                        srow.build_id,
-                        revision,
-                    )
-                ],
-                "n_docs bigint, sum_dl bigint, build_id string, "
-                "revision bigint",
-            ),
-        )
+        committed = _grown(man, postings=n_postings)
+        revision, stats = committed["revision"], man["stats"]
+        committed["stats"] = {
+            "n_docs": stats["n_docs"] + brow.n_docs,
+            "sum_dl": (stats["sum_dl"] or 0) + (brow.sum_dl or 0),
+        }
+        self._verified.pop(name, None)
+        stamped = _stamp(batch_postings, man["build_id"], revision)
+        _append_stored(f"{name}_postings", stamped, "tok", n_buckets)
+        self._commit(name, committed)
+        report = (brow.n_docs, n_postings, drift.new_terms, drift.new_term_ppm)
         return self.spark.createDataFrame(
-            [
-                (
-                    int(brow.n_docs),
-                    int(n_postings),
-                    int(drift.new_terms),
-                    int(drift.new_term_ppm),
-                    revision,
-                )
-            ],
+            [(*report, revision)],
             "appended_docs bigint, appended_postings bigint, "
             "new_terms bigint, new_term_ppm bigint, revision bigint",
         )
@@ -1577,15 +1406,10 @@ class Engine:
 
         The plan is built from two driver reads of bounded inputs:
 
-        - the one-row stats table, read ONCE: its build id and
-          revision serve the torn-state check, and its n_docs /
-          sum_dl enter the BM25 expression as literals
-          (text.bm25_probe_held). Raises if the two index tables
-          disagree on build id or revision (a torn build or append —
-          see build_text_index). The postings side of that check is
-          one column-pruned scan of (build_id, revision), memoized
-          per (id, revision), so serving calls after the first pay
-          only the stats read;
+        - the index manifest (no Spark job): its n_docs / sum_dl
+          enter the BM25 expression as literals
+          (text.bm25_probe_held). Raises on a torn build or append
+          (see :func:`_stamp`);
         - the query batch, read in one job and capped at
           ``max_pushdown_terms`` rows (text.held_batch). Its distinct
           terms become a literal IN filter on the postings scan, so
@@ -1598,41 +1422,24 @@ class Engine:
         The executed plan is then one bucketed postings scan (df as
         a tok-partitioned window, co-located), one exchange on
         query_id, and the per-query sum and top-``topn`` window:
-        four Spark jobs per steady-state call, both reads included
-        (pinned by tests/test_text_index.py).
+        three Spark jobs per steady-state call, the batch read
+        included (pinned by tests/test_text_index.py).
 
         A batch of more than ``max_pushdown_terms`` rows (or whose
         query_id type has no literal form) is not held on the
         driver: it runs text.bm25_probe's semi-join plan against the
         unpruned postings, with the same results (set
         ``max_pushdown_terms=0`` to force that path)."""
-        postings = self.table(f"{name}_postings")
-        stats_tbl, srow = self._text_stats(name)
-        want = (srow.build_id, int(srow.revision))
-        if self._verified.get(("text", name)) != want:
-            seen = _states(postings)
-            # postings land BEFORE the stats rewrite, so a torn
-            # append shows postings AHEAD of the stats revision (or
-            # under a foreign build id); postings trailing is the
-            # benign empty-append case (only stats bumped), and an
-            # empty `seen` is an empty-corpus build
-            ids = sorted({b for b, _ in seen})
-            max_rev = max((r for _, r in seen), default=want[1])
-            if seen and (ids != [want[0]] or max_rev > want[1]):
-                raise ValueError(
-                    f"text index {name!r} is torn (stats build/revision "
-                    f"{want} vs postings {seen}) — re-run build_text_index"
-                )
-            self._verified[("text", name)] = want
-        index = postings.select("doc_id", "dl", "tok", "tf")
+        stats = self._manifest(name, "text")["stats"]
+        index = self.table(f"{name}_postings").select("doc_id", "dl", "tok", "tf")
         held = text.held_batch(queries, max_pushdown_terms)
         if held is None:
-            return text.bm25_probe(
-                index, stats_tbl.select("n_docs", "sum_dl"), queries, topn
-            )
+            row = [(stats["n_docs"], stats["sum_dl"])]
+            stats_df = self.spark.createDataFrame(row, "n_docs bigint, sum_dl bigint")
+            return text.bm25_probe(index, stats_df, queries, topn)
         batch, qid_type = held
         return text.bm25_probe_held(
-            index, srow.n_docs, srow.sum_dl, batch, qid_type, topn
+            index, stats["n_docs"], stats["sum_dl"], batch, qid_type, topn
         )
 
     def build_graph_index(
@@ -1663,15 +1470,13 @@ class Engine:
         * ``{name}_nodes`` ``(node, build_id, revision)`` — every
           distinct endpoint; its count seeds the rank frame.
 
-        Torn-state detection (the text-index revision discipline —
-        an append under an UNCHANGED build id would otherwise be
-        undetectable, review r16): the build stamps revision 0
-        everywhere; each append writes edges at revision+1 FIRST,
-        then rewrites degrees and nodes at revision+1.
-        pagerank_served refuses when edges run AHEAD of the degrees
-        revision (crash after the edge append) or nodes lag it
-        (crash between the side-table rewrites), as well as on any
-        build-id mismatch."""
+        Torn-state detection (the stored-index protocol, see
+        :func:`_stamp`): the build stamps revision 0 everywhere and
+        commits the manifest last; each append writes edges at
+        revision+1, rewrites degrees and nodes at revision+1, then
+        commits. pagerank_served refuses tables that disagree with
+        the committed manifest — a crash anywhere in an append
+        leaves a member above its committed count or revision."""
         deduped = (
             edges.select(
                 F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -1680,7 +1485,7 @@ class Engine:
             .localCheckpoint()  # reused by all three writes below
         )
         build_id = random_alphanum()
-        self._verified.pop(("graph", name), None)
+        self._verified.pop(name, None)
         self._release_graph_frames(name)
         self.materialize_bucketed(
             f"{name}_edges", _stamp(deduped, build_id, 0), ["src"], n_buckets
@@ -1695,6 +1500,8 @@ class Engine:
             .distinct()
         )
         self._replace_table(f"{name}_nodes", _stamp(nodes, build_id, 0))
+        members = dict(edges={"bucket": ["src", n_buckets]}, degrees={}, nodes={})
+        self._commit_build(name, "graph", build_id, members)
 
     def append_to_graph_index(
         self,
@@ -1721,23 +1528,15 @@ class Engine:
         mass already present (re-crawl overlap), new_nodes the graph
         growth an operator alerts on. Appended state ≡ what
         build_graph_index would store for the union — pinned by
-        tests/test_bucketing.py. The edge batch lands FIRST at
-        revision+1, then degrees and nodes rewrite at revision+1 —
-        a crash at any point leaves a revision mismatch
-        pagerank_served refuses (review r16: the build id alone
-        cannot detect a torn APPEND because appends keep it; the
-        text-index revision discipline). ``n_buckets`` must match
-        the build's (Spark refuses a mismatched bucket spec
-        loudly)."""
+        tests/test_bucketing.py. The edge batch lands at revision+1,
+        degrees and nodes rewrite at revision+1, then the manifest
+        commits — a crash at any point leaves members that disagree
+        with the committed manifest, which pagerank_served refuses.
+        ``n_buckets`` must match the build's (Spark refuses a
+        mismatched bucket spec loudly)."""
+        man = self._manifest(name, "graph")
+        bid, revision = man["build_id"], man["revision"] + 1
         degrees_tbl = self.table(f"{name}_degrees")
-        state = _states(degrees_tbl)
-        if len(state) != 1:
-            raise ValueError(
-                f"graph index {name!r} degrees carry build/revision "
-                f"states {state} — re-run build_graph_index before "
-                "appending"
-            )
-        bid, revision = state[0][0], state[0][1] + 1
         batch = (
             new_edges.select(
                 F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -1751,7 +1550,7 @@ class Engine:
             "left_anti",
         ).localCheckpoint()  # frozen before the append writes below
         n_batch, n_fresh = batch.count(), fresh.count()
-        self._verified.pop(("graph", name), None)
+        self._verified.pop(name, None)
         self._release_graph_frames(name)
         _append_stored(f"{name}_edges", _stamp(fresh, bid, revision), "src", n_buckets)
         merged_deg = (
@@ -1787,6 +1586,9 @@ class Engine:
         )
         n_total = merged_nodes.count()
         self._replace_table(f"{name}_nodes", _stamp(merged_nodes, bid, revision))
+        committed = _grown(man, edges=n_fresh, nodes=n_new_nodes)
+        committed["members"]["degrees"]["rows"] = merged_deg.count()
+        self._commit(name, committed)
         return self.spark.createDataFrame(
             [(n_fresh, n_batch - n_fresh, n_new_nodes, n_total)],
             "appended_edges bigint, duplicate_edges bigint, "
@@ -1809,43 +1611,15 @@ class Engine:
         (``operators.iterate.pagerank_rounds`` — one shared loop, so
         served ranks are bit-identical to ``pagerank`` over the same
         edges; the graph_pagerank_served conformance query pins that
-        against the unrolled-CTE oracle). Raises on a torn REBUILD
-        (mismatched build ids) and on a torn APPEND (the text-index
-        revision discipline, review r16: edges running AHEAD of the
-        degrees revision = crash after the edge append; nodes
-        lagging it = crash between the side-table rewrites — the
-        build id alone cannot see either, because appends keep it).
-        Verification is memoized per (build id, revision) exactly
-        like text_search's."""
+        against the unrolled-CTE oracle). Raises on a torn build or
+        append (see :func:`_stamp`)."""
         from .operators.iterate import pagerank_rounds
 
+        man = self._manifest(name, "graph")
+        want = (man["build_id"], man["revision"])
         edges = self.table(f"{name}_edges")
         degrees_tbl = self.table(f"{name}_degrees")
         nodes_tbl = self.table(f"{name}_nodes")
-        dstate = _states(degrees_tbl)
-        want = dstate[0] if len(dstate) == 1 else None
-        if want is None or self._verified.get(("graph", name)) != want:
-            estate, nstate = _states(edges), _states(nodes_tbl)
-            torn = (
-                want is None
-                # foreign build id anywhere, or edges from a FUTURE
-                # revision (crash after an edge append, before the
-                # degrees rewrite); PAST-revision edge rows are the
-                # normal append-only layering
-                or any(b != want[0] for b, _ in (*estate, *nstate))
-                or max((r for _, r in estate), default=0) > want[1]
-                # nodes rewrite LAST: a single row set strictly at
-                # the degrees revision, or the append tore between
-                # the two side-table rewrites
-                or nstate != [want]
-            )
-            if torn:
-                raise ValueError(
-                    f"graph index {name!r} is torn (degrees "
-                    f"build/revision {dstate} vs edges {estate} / "
-                    f"nodes {nstate}) — re-run build_graph_index"
-                )
-            self._verified[("graph", name)] = want
         from . import cache
 
         # persist the degree-attached edge frame and the node frame
@@ -1912,7 +1686,6 @@ class Engine:
         flock protocol as the table catalog (see sequences.py)."""
         if self._sequences is None:
             from .sequences import Sequences
-            from .sources.sink import warehouse_dir
 
             self._sequences = Sequences(warehouse_dir(self.spark))
         return self._sequences
@@ -1924,7 +1697,6 @@ class Engine:
         JSON state beside the sequence registry (see schemas.py)."""
         if self._schemas is None:
             from .schemas import Schemas
-            from .sources.sink import warehouse_dir
 
             self._schemas = Schemas(warehouse_dir(self.spark))
         return self._schemas
@@ -1936,7 +1708,6 @@ class Engine:
         the sequence registry (see constraints.py)."""
         if self._constraints is None:
             from .constraints import Constraints
-            from .sources.sink import warehouse_dir
 
             self._constraints = Constraints(warehouse_dir(self.spark))
         return self._constraints
@@ -1951,7 +1722,6 @@ class Engine:
         the parquet scans (zero materialization at any scale)."""
         if self._views is None:
             from .views import Views
-            from .sources.sink import warehouse_dir
 
             self._views = Views(warehouse_dir(self.spark))
         return self._views
@@ -1966,7 +1736,6 @@ class Engine:
         enforcement, INFORMATION_SCHEMA and SCRIPT dumps read."""
         if self._colmeta is None:
             from .colmeta import ColumnMeta
-            from .sources.sink import warehouse_dir
 
             self._colmeta = ColumnMeta(warehouse_dir(self.spark))
         return self._colmeta
@@ -2154,8 +1923,9 @@ class Engine:
         path and fail with LOCATION_ALREADY_EXISTS. Re-register the
         warehouse directory as a parquet table (schema and partition
         columns inferred from the existing files, partition list
-        recovered from its ``col=value`` directories) before any DML
-        write. The first call per name in a process also settles a
+        recovered from its ``col=value`` directories, bucket spec
+        restored from the manifest of the index it belongs to) before
+        any DML write. The first call per name in a process also settles a
         directory swap a failed :meth:`_rewrite` left behind
         (:func:`_settle_swap`). No-op when already memoized."""
         from .sources.sink import warehouse_path
@@ -2171,16 +1941,6 @@ class Engine:
             return
         if os.path.isdir(path):
             escaped = path.replace("'", "''")
-            self.spark.sql(
-                f"CREATE TABLE {hygienic_ident(physical)} USING parquet "
-                f"LOCATION '{escaped}'"
-            )
-            self._refresh_files(physical, path)
-            # metadata-only ADD COLUMNs (colmeta 'added_type') are
-            # invisible to footer inference until some file carries
-            # them — re-apply the declared columns the inferred
-            # schema is missing (skip any a later rewrite already
-            # materialized)
             logical = next(
                 (
                     l
@@ -2189,6 +1949,26 @@ class Engine:
                 ),
                 None,
             )
+            bucket = self._bucket_spec(logical) if logical is not None else None
+            spec = "USING parquet"
+            if bucket is not None:
+                # Spark takes a bucket spec only beside a column list
+                key, n_buckets = hygienic_ident(bucket[0]), int(bucket[1])
+                cols = self.spark.read.parquet(path).schema.toDDL()
+                spec = (
+                    f"({cols}) USING parquet CLUSTERED BY ({key}) "
+                    f"SORTED BY ({key}) INTO {n_buckets} BUCKETS"
+                )
+            self.spark.sql(
+                f"CREATE TABLE {hygienic_ident(physical)} {spec} "
+                f"LOCATION '{escaped}'"
+            )
+            self._refresh_files(physical, path)
+            # metadata-only ADD COLUMNs (colmeta 'added_type') are
+            # invisible to footer inference until some file carries
+            # them — re-apply the declared columns the inferred
+            # schema is missing (skip any a later rewrite already
+            # materialized)
             if logical is not None:
                 have = {
                     c.casefold() for c in self.spark.table(physical).columns
@@ -2996,11 +2776,14 @@ class Engine:
 
     def drop_all_objects(self) -> None:
         """H2's ``DROP ALL OBJECTS`` scoped to what this engine owns:
-        every catalog table and every sequence. Bounded driver work
-        (catalog-sized loop); each drop reuses the existing
-        flock-protected paths."""
+        every catalog table, index manifest and sequence. Bounded
+        driver work (catalog-sized loop); each drop reuses the
+        existing flock-protected paths."""
         for logical in list(self.sink.catalog):
             self.drop_table_if_exists(logical)
+        wh = glob.escape(warehouse_dir(self.spark))
+        for manifest in glob.glob(os.path.join(wh, "_index_*")):
+            os.remove(manifest)
         for name in self.sequences.names():
             self.sequences.drop(name, if_exists=True)
         self.views.drop_all()

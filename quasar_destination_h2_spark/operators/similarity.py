@@ -196,9 +196,9 @@ def _centroid_rows(
 ) -> list[tuple[int, list[float]]]:
     """Driver-collected (centroid_id, cvec) pairs of a BOUNDED
     quantizer frame (n_list or m x k rows — never corpus-sized).
-    ``cents`` may also be rows the caller already collected (any Row
-    carrying ``centroid_id`` and ``cvec``), so one read of a stored
-    centroid table can serve a build-id check and the literals.
+    ``cents`` may also be rows the caller already holds (any Row or
+    mapping carrying ``centroid_id`` and ``cvec`` — e.g. the centroids
+    an index manifest stores), which then cost no Spark job.
 
     r16 optimization (guide §2.4 — remove shuffles outright): the
     assign/encode argmaxes used to be broadcast-crossJoin + groupBy
@@ -820,9 +820,9 @@ def ann_search(
     (ivf_assign + ivf_centroids/kmeans_refine), typically stored
     ONCE via ``engine.build_ivf_index`` with the assignment
     bucketed BY centroid_id so every probe join reads co-located
-    inverted lists. ``cents`` is the centroid frame or its rows
-    already collected (engine.ann_topk reads them once for its
-    build-id check and passes them on).
+    inverted lists. ``cents`` is the centroid frame or rows the
+    caller already holds (engine.ann_topk passes the centroids of
+    the index manifest).
 
     Shape: the n_list centroids are driver-held plan LITERALS
     (:func:`_centroid_rows`, the literal-argmax of :func:`ivf_assign`).
@@ -1404,9 +1404,9 @@ def _codebook_by_m(
 ) -> dict[int, list[tuple[int, list[float]]]]:
     """Driver-collected codebook grouped by subspace — the
     _centroid_rows idiom for the m x k PQ quantizer. ``cb`` may also
-    be rows the caller already collected (any Row carrying ``m``,
-    ``code`` and ``cvec``), so one read of a stored codebook table can
-    serve a build-id check and the encode literals."""
+    be rows the caller already holds (any Row or mapping carrying
+    ``m``, ``code`` and ``cvec`` — e.g. the codebook an index manifest
+    stores), which then cost no Spark job."""
     rows = cb if isinstance(cb, list) else cb.select("m", "code", "cvec").collect()
     by_m: dict[int, list[tuple[int, list[float]]]] = {}
     for r in rows:

@@ -1100,8 +1100,8 @@ def _bm25_u12_sql(n_docs: str, sum_dl: str) -> str:
     6-rounded tf-norm, each lifted to bigint micro-units through
     DECIMAL (the :func:`bm25_search` arithmetic). ``n_docs`` and
     ``sum_dl`` are bigint SQL operands: the stats columns, or literals
-    of the driver-read stats row (same types, same operations, so the
-    same doubles)."""
+    of the stats an index manifest holds (same types, same operations,
+    so the same doubles)."""
     return (
         f"CAST(CAST(round(ln(1.0 + ({n_docs} - df + 0.5) / (df + 0.5)), 6)"
         f" AS DECIMAL(28,10)) * 1000000 AS BIGINT)"
@@ -1224,7 +1224,7 @@ def bm25_probe_held(
     topn: int = 10,
 ) -> DataFrame:
     """BM25 probe of a driver-held query batch (:func:`held_batch`)
-    against a postings index, with the corpus stats row already read
+    against a postings index, with the corpus stats already known
     (``n_docs``, ``sum_dl``): the serving plan engine.text_search
     runs. Everything bounded is a plan literal, so the only inputs
     the plan reads are the postings:

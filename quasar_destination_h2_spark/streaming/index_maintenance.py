@@ -96,16 +96,19 @@ def stream_append_to_index(
     # micro-batches run in a CLONED session; the appends commit to
     # disk, but the MAIN session's cached file listing of the index
     # tables would not see the new files until invalidated (the
-    # stream_to_table lesson) — refresh them after every append
+    # stream_to_table lesson) — refresh exactly the member tables the
+    # index manifest lists after every append
     main_session = batches.sparkSession
 
     def _refresh_index_tables() -> None:
-        for logical, physical in dict(engine.sink.catalog).items():
-            if str(logical).startswith(f"{name}_"):
-                try:
-                    main_session.catalog.refreshTable(physical)
-                except Exception:  # pragma: no cover — cache hygiene only
-                    pass
+        for logical in engine._index_tables(name):
+            physical = engine.sink.catalog.get(logical)
+            if physical is None:
+                continue
+            try:
+                main_session.catalog.refreshTable(physical)
+            except Exception:  # pragma: no cover — cache hygiene only
+                pass
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         if not batch.take(1):

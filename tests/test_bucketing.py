@@ -218,12 +218,14 @@ def test_ann_index_lifecycle(engine, spark):
 
     assert rows1 == rows2 and len(rows1) == 15
     assert "annix_assigned" in plan and "annix_centroids" not in plan
+    # the centroids live in the index manifest, not in a table
+    assert "annix_centroids" not in engine.sink.catalog
     n_emb_scans = len(
         _re.findall(r"FileScan parquet [^\n]*embeddings\.parquet", plan)
     )
     assert n_emb_scans == 1, plan
     # parity with the operator composition over the same index frames
-    cents = engine.table("annix_centroids")
+    cents = _stored(engine, "annix")
     assigned = engine.table("annix_assigned")
     direct = sorted(
         map(
@@ -253,7 +255,13 @@ def test_ann_index_lifecycle(engine, spark):
     assert bx <= ux, (bx, ux)
     # kmeans_iters=0 keeps the md5 seeds (baseline index)
     engine.build_ivf_index("annix0", emb, n_list=8, kmeans_iters=0)
-    assert engine.table("annix0_centroids").count() == 8
+    assert _stored(engine, "annix0").count() == 8
+
+
+def _stored(engine, name, state="centroids"):
+    """An index's bounded state (centroids, codebook) from its
+    manifest, as a frame."""
+    return engine._frame(engine._read_manifest(name)[state])
 
 
 def _window_ann_reference(assigned, cents, queries, k, nprobe):
@@ -318,7 +326,7 @@ def probe_index(engine, spark):
     engine.build_ivf_index(
         "annp", _clustered(spark, per=10), n_list=8, kmeans_iters=1, n_buckets=4
     )
-    return engine.table("annp_assigned"), engine.table("annp_centroids")
+    return engine.table("annp_assigned"), _stored(engine, "annp")
 
 
 @pytest.mark.parametrize("nprobe", [1, 3, 8, 20])
@@ -382,15 +390,15 @@ def test_ann_probe_tied_centroids_pick_lower_id(spark):
 
 
 def test_ann_probe_job_budget(engine, spark, probe_index):
-    """A steady-state probe (verify memo warm) runs at most 4 Spark
-    jobs: the centroid read, the probe-frame broadcast, the list-join
-    stage and the per-query top-k stage."""
+    """A steady-state probe (verify memo warm) runs at most 3 Spark
+    jobs — the probe-frame broadcast, the list-join stage and the
+    per-query top-k stage; the centroids come from the manifest."""
     sched = spark._jsparkSession.sparkContext().dagScheduler()
     engine.ann_topk("annp", _probe_queries(spark), k=6, nprobe=3).collect()
     queries = _probe_queries(spark)
     start = sched.nextJobId()
     engine.ann_topk("annp", queries, k=6, nprobe=3).collect()
-    assert sched.nextJobId() - start <= 4
+    assert sched.nextJobId() - start <= 3
 
 
 @pytest.fixture(scope="module")
@@ -408,19 +416,19 @@ def compressed_indexes(engine, spark):
 @pytest.mark.parametrize(
     "search, name, budget",
     [
-        ("pq_search", "budpq", 8),
-        ("ivfpq_search", "budipq", 13),
-        ("ivfbq_search", "budibq", 13),
-        ("cascade_search", "budcas", 18),
+        ("pq_search", "budpq", 6),
+        ("ivfpq_search", "budipq", 11),
+        ("ivfbq_search", "budibq", 11),
+        ("cascade_search", "budcas", 16),
     ],
 )
 def test_compressed_probe_job_budget(
     engine, spark, compressed_indexes, search, name, budget
 ):
     """A steady-state compressed-family probe (verify memo warm)
-    stays within its Spark job budget: one freshness read of the
-    bounded quantizer tables plus the probe's own stages — the heavy
-    member verification is not repeated."""
+    stays within its Spark job budget: the probe's own stages only —
+    the quantizers come from the manifest and the member
+    verification is not repeated."""
     sched = spark._jsparkSession.sparkContext().dagScheduler()
     probe = getattr(engine, search)
     probe(name, _probe_queries(spark), topk=5).collect()
@@ -433,16 +441,16 @@ def test_compressed_probe_job_budget(
 @pytest.mark.parametrize(
     "append, name, budget",
     [
-        ("append_to_ivfpq_index", "budipq", 9),
-        ("append_to_ivfbq_index", "budibq", 7),
-        ("append_to_cascade_index", "budcas", 10),
+        ("append_to_ivfpq_index", "budipq", 7),
+        ("append_to_ivfbq_index", "budibq", 6),
+        ("append_to_cascade_index", "budcas", 7),
     ],
 )
 def test_compressed_append_job_budget(
     engine, spark, compressed_indexes, append, name, budget
 ):
-    """An append reads each bounded quantizer table (centroids,
-    codebook) once and plans its assign/encode from those rows."""
+    """An append plans its assign/encode from the manifest's
+    quantizers: no Spark job reads index state."""
     sched = spark._jsparkSession.sparkContext().dagScheduler()
     batch = _clustered(spark, per=2, start=50_000)
     start = sched.nextJobId()
@@ -450,30 +458,70 @@ def test_compressed_append_job_budget(
     assert sched.nextJobId() - start <= budget
 
 
-@pytest.mark.parametrize(
-    "family, name", [("ivfpq", "ecbipq"), ("cascade", "ecbcas")]
-)
-def test_append_refuses_empty_codebook(engine, spark, family, name):
-    """An empty codebook contributes no build id, so the id check
-    passes vacuously; encoding against it would append vectors with
-    no code rows. The append refuses with the torn-index error
-    before it writes anything, and the search refuses to serve."""
-    getattr(engine, f"build_{family}_index")(
-        name, _clustered(spark, per=10), n_list=8, kmeans_iters=0, pq_iters=0
+#: (build kwargs, search method) of the ANN families the manifest
+#: tests below build small and untrained
+_ANN = {
+    "ivf": (dict(n_list=8, kmeans_iters=0, n_buckets=4), "ann_topk"),
+    "ivfpq": (dict(n_list=8, kmeans_iters=0, pq_iters=0), "ivfpq_search"),
+    "cascade": (dict(n_list=8, kmeans_iters=0, pq_iters=0), "cascade_search"),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_ANN))
+def test_failed_manifest_commit_refuses_until_rebuild(
+    engine, spark, monkeypatch, family
+):
+    """An append whose manifest write fails leaves rows the manifest
+    never committed: the index then refuses to serve AND to append
+    (the member count sits above the committed one), and a rebuild
+    repairs it. No bounded state table exists at any point."""
+    name = f"mfail_{family}"
+    kwargs, search = _ANN[family]
+    build = getattr(engine, f"build_{family}_index")
+    append = getattr(engine, f"append_to_{family}_index")
+    probe = getattr(engine, search)
+    build(name, _clustered(spark, per=10), **kwargs)
+    append_kw = {"n_buckets": 4} if family == "ivf" else {}
+    append(name, _clustered(spark, per=2, start=60_000), **append_kw).collect()
+    served = sorted(map(tuple, probe(name, _probe_queries(spark)).collect()))
+    assert served
+    for state in ("centroids", "codebook", "stats"):
+        assert f"{name}_{state}" not in engine.sink.catalog
+
+    def boom(*_):
+        raise OSError("manifest write failed")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(engine, "_commit", boom)
+        with pytest.raises(OSError, match="manifest write failed"):
+            append(name, _clustered(spark, per=2, start=70_000), **append_kw)
+    with pytest.raises(ValueError, match="is torn.*re-run build_"):
+        probe(name, _probe_queries(spark))
+    with pytest.raises(ValueError, match="is torn.*re-run build_"):
+        append(name, _clustered(spark, per=2, start=80_000), **append_kw)
+    build(name, _clustered(spark, per=10), **kwargs)
+    append(name, _clustered(spark, per=2, start=60_000), **append_kw).collect()
+    assert sorted(map(tuple, probe(name, _probe_queries(spark)).collect())) == served
+
+
+def test_index_without_manifest_refuses(engine, spark):
+    """An index without a manifest (its file removed, or stored
+    before manifests existed) is refused by search and append alike,
+    with the rebuild hint; so is a manifest of another family."""
+    import os
+
+    batch = _clustered(spark, per=2, start=90_000)
+    engine.build_ivf_index(
+        "nomani", _clustered(spark, per=10), n_list=8, kmeans_iters=0, n_buckets=4
     )
-    empty = (
-        engine.table(f"{name}_codebook").where(F.lit(False)).localCheckpoint()
-    )
-    engine.drop_table_if_exists(f"{name}_codebook")
-    engine.create_table_as(f"{name}_codebook", empty)
-    n_vectors = engine.table(f"{name}_vectors").count()
-    with pytest.raises(ValueError, match="torn.*codebook.*re-run build_"):
-        getattr(engine, f"append_to_{family}_index")(
-            name, _clustered(spark, per=2, start=60_000)
-        )
-    assert engine.table(f"{name}_vectors").count() == n_vectors
-    with pytest.raises(ValueError, match="torn"):
-        getattr(engine, f"{family}_search")(name, _probe_queries(spark), topk=3)
+    engine.ann_topk("nomani", _probe_queries(spark)).collect()
+    with pytest.raises(ValueError, match="re-run build_ivfpq_index"):
+        engine.ivfpq_search("nomani", _probe_queries(spark))
+    os.remove(engine._index_store("nomani").path)
+    with pytest.raises(ValueError, match="no committed manifest.*build_ivf_index"):
+        engine.ann_topk("nomani", _probe_queries(spark))
+    with pytest.raises(ValueError, match="no committed manifest.*build_ivf_index"):
+        engine.append_to_ivf_index("nomani", batch, n_buckets=4)
 
 
 def _clustered(spark, K=8, per=40, dim=64, start=0, shift=0.0):
@@ -514,7 +562,7 @@ def test_ann_index_append_lifecycle(engine, spark):
     assert len(ids) == 1
     # appended rows == what assigning the batch against the stored
     # centroids yields (exact mechanical equivalence, no rows lost)
-    cents = engine.table("apx_centroids")
+    cents = _stored(engine, "apx")
     stored = engine.table("apx_assigned").where("vec_id >= 10000")
     direct = similarity._assign_scored(
         batch, cents.select("centroid_id", "cvec")
@@ -623,7 +671,7 @@ def test_pq_index_lifecycle(engine, spark):
         .localCheckpoint(),  # break lineage: can't overwrite a read target
         ["vec_id"],
     )
-    engine._verified.pop(("pq", "pqix"), None)
+    engine._verified.pop("pqix", None)
     with pytest.raises(ValueError, match="torn"):
         engine.pq_search("pqix", queries, topk=5)
 
@@ -692,7 +740,7 @@ def test_ivfpq_index_lifecycle(engine, spark):
         .localCheckpoint(),
         ["centroid_id"],
     )
-    engine._verified.pop(("ivfpq", "ipqix"), None)
+    engine._verified.pop("ipqix", None)
     with pytest.raises(ValueError, match="torn"):
         engine.ivfpq_search("ipqix", queries, topk=5)
 
@@ -716,8 +764,8 @@ def test_ivfpq_index_append(engine, spark):
         == report.build_mean_sim_micro - report.batch_mean_sim_micro
     )
     # appended codes == operator encode against the stored quantizers
-    cents = engine.table("ipqap_centroids").select("centroid_id", "cvec")
-    cb = engine.table("ipqap_codebook").select("m", "code", "cvec")
+    cents = _stored(engine, "ipqap")
+    cb = _stored(engine, "ipqap", "codebook")
     stored = sorted(
         (r.vec_id, r.centroid_id, r.m, r.code)
         for r in engine.table("ipqap_codes").where("vec_id % 2 = 1").collect()
@@ -794,11 +842,11 @@ def test_ivfpq_search_detects_half_appended_index(engine, spark):
         .partitionBy("centroid_id")
         .saveAsTable(storage_safe_name("ipqtear_vectors"))
     )
-    engine._verified.pop(("ivfpq", "ipqtear"), None)
+    engine._verified.pop("ipqtear", None)
     queries = emb.where("vec_id < 2").select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    with pytest.raises(ValueError, match="torn.*code rows"):
+    with pytest.raises(ValueError, match="torn: ipqtear_vectors holds"):
         engine.ivfpq_search("ipqtear", queries, topk=3)
 
 
@@ -896,7 +944,7 @@ def test_ivfbq_index_lifecycle(engine, spark):
         .localCheckpoint(),
         ["centroid_id"],
     )
-    engine._verified.pop(("ivfbq", "ibqix"), None)
+    engine._verified.pop("ibqix", None)
     with pytest.raises(ValueError, match="torn"):
         engine.ivfbq_search("ibqix", queries, topk=5)
 
@@ -922,7 +970,7 @@ def test_ivfbq_index_append_and_tear(engine, spark):
     # match a fresh encode of the odd half against the stored quantizer
     from quasar_destination_h2_spark.operators import similarity
 
-    cents = engine.table("ibqap_centroids").select("centroid_id", "cvec")
+    cents = _stored(engine, "ibqap")
     expect = sorted(
         map(
             tuple,
@@ -948,7 +996,6 @@ def test_ivfbq_index_append_and_tear(engine, spark):
     )
     assert engine.ivfbq_search("ibqap", queries, topk=3).count() == 6
     # tear: append vectors WITHOUT codes under the same build id
-    bid = engine.table("ibqap_centroids").select("build_id").first()[0]
     from quasar_destination_h2_spark.idents import storage_safe_name
 
     (
@@ -960,8 +1007,8 @@ def test_ivfbq_index_append_and_tear(engine, spark):
         .partitionBy("centroid_id")
         .saveAsTable(storage_safe_name("ibqap_vectors"))
     )
-    engine._verified.pop(("ivfbq", "ibqap"), None)
-    with pytest.raises(ValueError, match="torn.*code rows"):
+    engine._verified.pop("ibqap", None)
+    with pytest.raises(ValueError, match="torn: ibqap_vectors holds"):
         engine.ivfbq_search("ibqap", queries, topk=3)
 
 
@@ -1045,7 +1092,7 @@ def test_cascade_index_lifecycle(engine, spark):
         .localCheckpoint(),
         ["centroid_id"],
     )
-    engine._verified.pop(("cascade", "cascix"), None)
+    engine._verified.pop("cascix", None)
     with pytest.raises(ValueError, match="torn"):
         engine.cascade_search("cascix", queries, topk=5)
 
@@ -1073,7 +1120,7 @@ def test_cascade_index_append_and_tear(engine, spark):
         == rep.build_mean_sim_micro - rep.batch_mean_sim_micro
     )
     # appended PQ codes ≡ frozen-codebook re-encode of the odd half
-    cb = engine.table("cscap_codebook").select("m", "code", "cvec")
+    cb = _stored(engine, "cscap", "codebook")
     expect_pq = sorted(
         map(
             tuple,
@@ -1099,7 +1146,7 @@ def test_cascade_index_append_and_tear(engine, spark):
     assert engine.cascade_search("cscap", queries, topk=3).count() == 6
     # tear: append vectors + sign codes WITHOUT PQ codes under the
     # same build id — caught by the M-codes-per-vector identity
-    bid = engine.table("cscap_centroids").select("build_id").first()[0]
+    bid = engine._read_manifest("cscap")["build_id"]
     extra = (
         engine.table("cscap_vectors")
         .where("vec_id < 4")
@@ -1125,8 +1172,8 @@ def test_cascade_index_append_and_tear(engine, spark):
         .saveAsTable(storage_safe_name("cscap_codes"))
     )
     engine.spark.catalog.refreshTable(storage_safe_name("cscap_codes"))
-    engine._verified.pop(("cascade", "cscap"), None)
-    with pytest.raises(ValueError, match="torn"):
+    engine._verified.pop("cscap", None)
+    with pytest.raises(ValueError, match="torn: cscap_vectors holds"):
         engine.cascade_search("cscap", queries, topk=3)
 
 
@@ -1242,7 +1289,7 @@ def test_graph_index_append_and_tear(engine, spark):
     deg_state = engine.table("gix2_degrees").select(
         "build_id", "revision"
     ).first()
-    engine._verified.pop(("graph", "gix2"), None)
+    engine._verified.pop("gix2", None)
     (
         spark.createDataFrame([(999999, 999998)], "src long, dst long")
         .withColumn("build_id", F.lit(deg_state.build_id))

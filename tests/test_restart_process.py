@@ -161,6 +161,15 @@ SCRIPT_ADDCOL_A = textwrap.dedent(
                   e.ivfpq_search("rs_ipq", queries, topk=3).collect())
     assert len(hits) == 12, hits
     print("IVFPQ=" + json.dumps(hits))
+    # a bucketed index: the next process appends to rs_ivf; its twin
+    # takes the same append here, and its hits are what rs_ivf must
+    # serve after that append
+    batch = base.selectExpr("vec_id + 100 AS vec_id", "embedding")
+    for name in ("rs_ivf", "rs_ivf_twin"):
+        e.build_ivf_index(name, base, n_list=4, kmeans_iters=0, n_buckets=2)
+    e.append_to_ivf_index("rs_ivf_twin", batch, n_buckets=2).collect()
+    ann = sorted(list(r) for r in e.ann_topk("rs_ivf_twin", queries).collect())
+    print("IVF=" + json.dumps(ann))
     print("ADDED")
     spark.stop()
     """
@@ -195,6 +204,22 @@ SCRIPT_ADDCOL_B = textwrap.dedent(
     hits = sorted(list(r) for r in
                   e.ivfpq_search("rs_ipq", queries, topk=3).collect())
     assert hits == {hits!r}, hits
+    # the bucketed member keeps its bucket spec across the restart:
+    # the append matches it and the probe reads co-located buckets
+    from quasar_destination_h2_spark.idents import storage_safe_name
+    base = spark.createDataFrame(
+        [(i, [float(i % 8 == d // 8) + ((i * 31 + d * 7) % 13 - 6) / 12.0
+              for d in range(64)]) for i in range(32)],
+        "vec_id long, embedding array<double>",
+    )
+    batch = base.selectExpr("vec_id + 100 AS vec_id", "embedding")
+    e.append_to_ivf_index("rs_ivf", batch, n_buckets=2).collect()
+    ann = sorted(list(r) for r in e.ann_topk("rs_ivf", queries).collect())
+    assert ann == {ann!r}, ann
+    desc = {{r.col_name: r.data_type for r in spark.sql(
+        "DESCRIBE TABLE EXTENDED " + storage_safe_name("rs_ivf_assigned")
+    ).collect()}}
+    assert desc.get("Num Buckets") == "2", desc
     print("ADDCOL-OK")
     spark.stop()
     """
@@ -207,7 +232,10 @@ def test_metadata_only_add_column_survives_restart():
     _ensure_registered re-applies the declared type. So must a
     directory-partitioned table: the IVFPQ index's centroid-partitioned
     members serve the same hits in the next process, because
-    _ensure_registered recovers their partition list."""
+    _ensure_registered recovers their partition list. And a bucketed
+    one: the next process appends to an IVF index and serves what a
+    same-process twin served after the same append, because
+    _ensure_registered restores the bucket spec its manifest records."""
     import json
     import os
 
@@ -218,5 +246,8 @@ def test_metadata_only_add_column_survives_restart():
     hits = json.loads(
         next(l for l in out1.splitlines() if l.startswith("IVFPQ="))[6:]
     )
-    out2 = _run(SCRIPT_ADDCOL_B.format(repo=repo, wh=wh, hits=hits))
+    ann = json.loads(
+        next(l for l in out1.splitlines() if l.startswith("IVF="))[4:]
+    )
+    out2 = _run(SCRIPT_ADDCOL_B.format(repo=repo, wh=wh, hits=hits, ann=ann))
     assert "ADDCOL-OK" in out2

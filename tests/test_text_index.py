@@ -114,10 +114,11 @@ def test_append_equals_rebuild_on_union(engine, spark):
     got = rows_of(engine.text_search("ti_inc", qdf(spark), topn=10))
     want = rows_of(engine.text_search("ti_union", qdf(spark), topn=10))
     assert got == want and got
-    # stats fold is exact: n_docs and sum_dl equal the union build's
-    a = engine.table("ti_inc_stats").select("n_docs", "sum_dl").collect()[0]
-    b = engine.table("ti_union_stats").select("n_docs", "sum_dl").collect()[0]
-    assert (a.n_docs, a.sum_dl) == (b.n_docs, b.sum_dl)
+    # stats fold is exact: n_docs and sum_dl equal the union build's,
+    # and they live in the manifest, not in a table
+    a = engine._read_manifest("ti_inc")["stats"]
+    assert a == engine._read_manifest("ti_union")["stats"]
+    assert "ti_inc_stats" not in engine.sink.catalog
 
 
 def test_drift_report_flags_vocabulary_shift(engine, spark):
@@ -258,30 +259,28 @@ def test_over_cap_batch_runs_semi_join_plan(engine, spark, edge_docs):
 
 
 def test_text_probe_job_budget(engine, spark, edge_docs):
-    """A steady-state probe (verify memo warm) runs at most 4 Spark
-    jobs: the stats read, the batch read, the postings stage and the
-    per-query top-N stage."""
+    """A steady-state probe (verify memo warm) runs at most 3 Spark
+    jobs: the batch read, the postings stage and the per-query top-N
+    stage; the stats come from the manifest."""
     sched = spark._jsparkSession.sparkContext().dagScheduler()
     engine.text_search("ti_edge", qdf(spark), topn=5).collect()
     start = sched.nextJobId()
     engine.text_search("ti_edge", qdf(spark), topn=5).collect()
-    assert sched.nextJobId() - start <= 4
+    assert sched.nextJobId() - start <= 3
 
 
 def test_torn_append_refuses_to_serve(engine, spark):
     engine.build_text_index("ti_torn", docs_df(spark, DOCS_A), n_buckets=nb(spark))
     engine.text_search("ti_torn", qdf(spark), topn=3).collect()
-    # simulate an append whose stats rewrite never landed: postings
-    # rows appear at revision 1 while the stats row still says 0
+    # simulate an append whose manifest commit never landed: postings
+    # rows appear at revision 1 while the manifest still says 0
     from quasar_destination_h2_spark.idents import storage_safe_name
 
     postings, _ = text.build_postings(docs_df(spark, DOCS_B))
     (
         postings.withColumn(
             "build_id",
-            F.lit(
-                engine.table("ti_torn_stats").collect()[0].build_id
-            ),
+            F.lit(engine._read_manifest("ti_torn")["build_id"]),
         )
         .withColumn("revision", F.lit(1).cast("bigint"))
         .write.mode("append")
@@ -290,7 +289,7 @@ def test_torn_append_refuses_to_serve(engine, spark):
         .sortBy("tok")
         .saveAsTable(storage_safe_name("ti_torn_postings"))
     )
-    engine._verified.pop(("text", "ti_torn"), None)
+    engine._verified.pop("ti_torn", None)
     with pytest.raises(ValueError, match="torn"):
         engine.text_search("ti_torn", qdf(spark), topn=3)
     # a fresh build repairs the index
@@ -312,7 +311,7 @@ def test_foreign_build_id_refuses_to_serve(engine, spark):
         .sortBy("tok")
         .saveAsTable(storage_safe_name("ti_mix_postings"))
     )
-    engine._verified.pop(("text", "ti_mix"), None)
+    engine._verified.pop("ti_mix", None)
     with pytest.raises(ValueError, match="torn"):
         engine.text_search("ti_mix", qdf(spark), topn=3)
 

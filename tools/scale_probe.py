@@ -15,27 +15,12 @@ near-linear wall time is the inverted-index design claim verified
 empirically; a quadratic candidate generator would blow up 100x at
 the 10x point.
 
-``--ivf`` mode: measure the window formulation of the IVF nearest-
-centroid assignment against the shipped ``max_by`` aggregation at
-n_list in {16, 256}. The aggregation's shuffle carries |corpus| rows
-regardless of n_list (map-side partial collapse of the broadcast
-cross join's consecutive scored rows); the window shuffles
-|corpus| x n_list rows each dragging the full embedding — this probe
-is the checked-in measurement behind ``similarity.ivf_assign``'s
-design note.
-
-``--profile`` mode: replicate the documents corpus 1x/3x/10x (plain
-row replication — the profiler is structure-insensitive) and time
-``table_profile`` at each point. Linear wall growth confirms the
-multi-distinct Expand's (n_cols+1)x row multiplication stays
-map-side and the fan-out repartition is a no-op on splittable
-input.
-
-``--text`` mode: replicate the documents corpus 1x/3x/10x and time
-the round-7 text analytics (tfidf_top_terms, pmi_collocations,
-perplexity_buckets). Near-linear wall growth confirms the
-model-build aggregations (tf / bigram / unigram frequency tables)
-stay vocabulary-sized while only the corpus passes scale.
+The per-family and round-named modes (``--ivf``, ``--profile``,
+``--text``, ``--r9``, ``--kmeans``, ``--r10``, ``--textindex``,
+``--pq``, ``--ivfpq``, ``--bq``, ``--ivfbq``, ``--cascade``,
+``--views``, ``--r11``) were removed: several read index state tables
+that no longer exist. Commit ``f570135`` still has them; SCALE.md
+points each of its sections there.
 
 ``--serving`` mode (r17 verdict task 3): the "sf1.0" spot check the
 sf0.1 bench cannot provide — at sf0.1 the index entries are Spark-
@@ -52,8 +37,8 @@ measures how each phase parallelizes. One JSON line:
 {"cpus", "sizes": {"1x"|"10x": {family: {build_sec, probe_sec,
 build_jobs, probe_jobs, ...}}}}.
 
-Usage: python tools/scale_probe.py [--ivf|--profile|--text|--serving]
-[sf_dir] (writes one JSON line)
+Usage: python tools/scale_probe.py [--serving] [sf_dir] (writes one JSON
+line)
 """
 
 from __future__ import annotations
@@ -94,152 +79,6 @@ def _replicate_embeddings(spark, base_emb, k: int, prefix: str):
     return spark.read.parquet(path), path
 
 
-def _dir_bytes(path: str) -> int:
-    """Recursive on-disk byte total of a staged directory."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
-
-def ivf_probe(spark, sf_dir: str) -> dict:
-    """Window-vs-aggregation assignment cost at n_list in {16, 256}.
-
-    The window variant below is the NAIVE formulation the shipped
-    operator replaced (row_number over partitionBy(vector) ordered by
-    similarity): identical output, but the exchange carries every
-    scored (vector x centroid) row. Timing both over the same staged
-    scan isolates the shuffle-volume difference."""
-    import time
-
-    from pyspark.sql import Window, functions as F
-
-    from quasar_destination_h2_spark.operators import similarity as sim
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    emb = TableSet(spark, sf_dir).embeddings.select("vec_id", "embedding")
-
-    def window_assign(emb, cents):
-        scored = emb.select(
-            F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
-        ).crossJoin(F.broadcast(cents)).select(
-            "_id",
-            "_v",
-            "centroid_id",
-            F.round(sim.cosine(F.col("_v"), F.col("cvec")), 6).alias("_sim"),
-        )
-        w = Window.partitionBy("_id").orderBy(
-            F.col("_sim").desc(), F.col("centroid_id").asc()
-        )
-        return (
-            scored.withColumn("_rn", F.row_number().over(w))
-            .where("_rn = 1")
-            .select(
-                F.col("_id").alias("vec_id"),
-                F.col("_v").alias("embedding"),
-                "centroid_id",
-            )
-        )
-
-    out = {"sf_dir": sf_dir, "n_vectors": emb.count(), "points": []}
-    for n_list in (16, 256):
-        cents = sim.ivf_centroids(emb, n_list=n_list, id_col="vec_id")
-        cents.cache().count()
-        times = {}
-        for label, fn in (
-            ("agg", lambda: sim.ivf_assign(emb, cents, id_col="vec_id")),
-            ("window", lambda: window_assign(emb, cents)),
-        ):
-            t0 = time.perf_counter()
-            n = fn().count()
-            times[label] = (round(time.perf_counter() - t0, 2), n)
-        (agg_s, agg_n), (win_s, win_n) = times["agg"], times["window"]
-        assert agg_n == win_n, (agg_n, win_n)
-        out["points"].append(
-            {
-                "n_list": n_list,
-                "n_assigned": agg_n,
-                "agg_sec": agg_s,
-                "window_sec": win_s,
-                "window_over_agg": round(win_s / agg_s, 2),
-            }
-        )
-        cents.unpersist()
-    return out
-
-
-def profile_probe(spark, sf_dir: str) -> dict:
-    """table_profile wall time at 1x/3x/10x replicated documents."""
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.operators.profile import table_profile
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    base = TableSet(spark, sf_dir).documents
-    out = {"sf_dir": sf_dir, "n_base_docs": base.count(), "points": []}
-    for k in (1, 3, 10):
-        df = base
-        for r in range(1, k):
-            df = df.unionByName(
-                base.withColumn(
-                    "doc_id", F.col("doc_id") + r * 10_000_000
-                )
-            )
-        path = tempfile.mkdtemp(prefix=f"profile-probe-{k}x-")
-        df.write.mode("overwrite").parquet(path)
-        staged = spark.read.parquet(path)
-        n = staged.count()
-        t0 = time.perf_counter()
-        rows = table_profile(staged).collect()
-        sec = round(time.perf_counter() - t0, 2)
-        n_rows_col = {r.column_name: r.n_rows for r in rows}
-        assert all(v == n for v in n_rows_col.values()), n_rows_col
-        out["points"].append(
-            {"replicas": k, "n_docs": n, "n_cols": len(rows), "sec": sec}
-        )
-    return out
-
-
-def text_probe(spark, sf_dir: str) -> dict:
-    """tfidf / PMI / perplexity wall time at 1x/3x/10x documents."""
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.operators import text
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    base = TableSet(spark, sf_dir).documents.select("doc_id", "text")
-    out = {"sf_dir": sf_dir, "n_base_docs": base.count(), "points": []}
-    for k in (1, 3, 10):
-        df = base
-        for r in range(1, k):
-            df = df.unionByName(
-                base.withColumn("doc_id", F.col("doc_id") + r * 10_000_000)
-            )
-        path = tempfile.mkdtemp(prefix=f"text-probe-{k}x-")
-        df.write.mode("overwrite").parquet(path)
-        staged = spark.read.parquet(path)
-        n = staged.count()
-        point = {"replicas": k, "n_docs": n}
-        for label, fn in (
-            ("tfidf", lambda: text.tfidf_top_terms(staged)),
-            ("pmi", lambda: text.pmi_collocations(staged)),
-            ("perplexity", lambda: text.perplexity_buckets(staged)),
-        ):
-            t0 = time.perf_counter()
-            point[f"{label}_rows"] = fn().count()
-            point[f"{label}_sec"] = round(time.perf_counter() - t0, 2)
-        out["points"].append(point)
-    return out
-
-
 def _replicate_docs(spark, base, k: int):
     """k retagged replicas of the documents corpus, staged as parquet
     (the default dedup-mode replicate, factored for reuse): ~30% of
@@ -277,1272 +116,6 @@ def _replicate_docs(spark, base, k: int):
     path = tempfile.mkdtemp(prefix=f"scale-probe-{k}x-")
     df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
-
-
-def r9_probe(spark, sf_dir: str) -> dict:
-    """1x/3x/10x wall-time probes for the operators round 8 shipped
-    unprobed (r8 VERDICT item 5): dedup_cross_corpus, bm25_search
-    (plus the r9 batch form bm25_search_many), events_anomaly_zscore
-    — each run through its REGISTERED query over a staged sf-dir so
-    the probed plan is exactly the production plan. Documents
-    replicate with the retag transform (preserves per-replica
-    near-dup structure); events replicate with a +30d-per-replica
-    timestamp shift, so the hourly aggregate grows in BUCKETS and
-    the z-score window frame count scales with data, not just rows
-    per bucket.
-
-    The k=10 point also demonstrates the cross-corpus operator's
-    documented 100 TB path: reference postings materialized BUCKETED
-    by the shingle hash (engine.materialize_bucketed) — same pair
-    rows, strictly fewer exchanges than the inline-postings plan
-    (the reference-side valve groupBy and join read co-located
-    buckets with no shuffle)."""
-    import json as _json
-    import tempfile
-    import time
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark import cache, plans
-    from quasar_destination_h2_spark.operators import dedup
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    qs = plans.all_queries()
-    t = TableSet(spark, sf_dir)
-    base_docs = t.documents.select("doc_id", "text", "lang", "source")
-    base_events = t.events
-    out = {"sf_dir": sf_dir, "n_base_docs": base_docs.count(), "points": []}
-    for k in (1, 3, 10):
-        stage = tempfile.mkdtemp(prefix=f"r9-probe-{k}x-")
-        docs = _replicate_docs(spark, base_docs, k)
-        docs.write.mode("overwrite").parquet(f"{stage}/documents.parquet")
-        ev = base_events
-        for r in range(1, k):
-            ev = ev.unionByName(
-                base_events.withColumn(
-                    "ts", F.col("ts") + F.expr(f"INTERVAL {30 * r} DAYS")
-                )
-            )
-        ev.write.mode("overwrite").parquet(f"{stage}/events.parquet")
-        point = {"replicas": k}
-        for label, qname in (
-            ("cross", "dedup_cross_corpus"),
-            ("bm25", "bm25_search"),
-            ("bm25_many", "bm25_search_many"),
-            ("anomaly", "events_anomaly_zscore"),
-        ):
-            t0 = time.perf_counter()
-            point[f"{label}_rows"] = qs[qname](spark, stage).count()
-            point[f"{label}_sec"] = round(time.perf_counter() - t0, 2)
-            cache.release()
-        if k == 10:
-            # bucketed-reference demonstration on the largest point
-            sdocs = spark.read.parquet(f"{stage}/documents.parquet")
-            new_docs = sdocs.where("source = 'src0'")
-            ref_docs = sdocs.where("source <> 'src0'")
-            from quasar_destination_h2_spark.engine import Engine
-
-            engine = Engine.from_config(
-                _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-            )
-            posts = dedup.cross_corpus_postings(ref_docs)
-            engine.materialize_bucketed("ref_postings", posts, ["s"], 32)
-            bucketed = engine.table("ref_postings")
-            inline = dedup.cross_corpus_pairs(new_docs, ref_docs)
-            buck = dedup.cross_corpus_pairs(new_docs, ref_postings=bucketed)
-            px = (
-                inline._jdf.queryExecution().executedPlan().toString()
-            ).count("Exchange hashpartitioning")
-            bx = (
-                buck._jdf.queryExecution().executedPlan().toString()
-            ).count("Exchange hashpartitioning")
-            t0 = time.perf_counter()
-            n_b = buck.count()
-            b_sec = round(time.perf_counter() - t0, 2)
-            assert n_b == point["cross_rows"], (n_b, point["cross_rows"])
-            assert bx < px, (bx, px)
-            point["bucketed_rows"] = n_b
-            point["bucketed_sec"] = b_sec
-            point["exchanges_inline"] = px
-            point["exchanges_bucketed"] = bx
-        out["points"].append(point)
-    return out
-
-
-def kmeans_probe(spark, sf_dir: str) -> dict:
-    """What Lloyd refinement buys on the REAL fixture, quantified
-    through the shipped instruments: mean recall@5 (nprobe 1 and 2)
-    for the md5 baseline vs 2- and 4-round refined quantizers, the
-    objective trace, and the index balance (max inverted-list share).
-    The fixture embeddings are near-uniform, so the recall gain here
-    is expected to be small-to-none — the clustered-corpus gain is
-    pinned by pytest; THIS probe documents the honest real-fixture
-    numbers plus the refine cost (seconds per round)."""
-    import time
-
-    from quasar_destination_h2_spark import cache
-    from quasar_destination_h2_spark.operators import similarity as sim
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    emb = TableSet(spark, sf_dir).embeddings
-    out = {"sf_dir": sf_dir, "n_vectors": emb.count(), "points": []}
-
-    def mean_recall(cents, nprobe):
-        rows = sim.ivf_recall(emb, nprobe=nprobe, cents=cents).collect()
-        return round(sum(r.recall_ppm for r in rows) / len(rows))
-
-    def max_share(cents):
-        rows = sim.ivf_cluster_profile(emb, cents=cents).collect()
-        return max(r.share_ppm for r in rows)
-
-    for label, iters in (("md5_seed", 0), ("kmeans_2", 2), ("kmeans_4", 4)):
-        t0 = time.perf_counter()
-        cents = (
-            sim.kmeans_refine(emb, iters=iters) if iters else None
-        )
-        build_sec = round(time.perf_counter() - t0, 2)
-        out["points"].append(
-            {
-                "quantizer": label,
-                "build_sec": build_sec,
-                "recall_ppm_nprobe1": mean_recall(cents, 1),
-                "recall_ppm_nprobe2": mean_recall(cents, 2),
-                "max_list_share_ppm": max_share(cents),
-            }
-        )
-        cache.release()
-    conv = sorted(
-        sim.kmeans_convergence(emb, iters=4).collect(), key=lambda r: r.iter
-    )
-    cache.release()
-    out["objective_micro"] = [
-        {"iter": r.iter, "n_clusters": r.n_clusters, "sum_sim": r.sum_sim_micro}
-        for r in conv
-    ]
-    return out
-
-
-def r10_probe(spark, sf_dir: str) -> dict:
-    """Scale probes for the r9-shipped operators (r9 VERDICT task 5):
-
-    * weighted_sample_topk / weighted_sample_stratified at 1x/3x/10x
-      replicated documents — the expectation is a LINEAR single scan
-      with flat top-k cost (the global form is a
-      TakeOrderedAndProject over per-partition heaps; output size is
-      constant, so wall time should track the scan, never the rank);
-    * ann_search probe latency as a function of QUERY-BATCH size at
-      a FIXED corpus (the serving contract): linear in queries,
-      corpus-scan count flat — asserted from the executed plan (one
-      FileScan of the stored assignment regardless of batch size);
-    * kmeans_refine wall vs rounds at 1x/3x/10x replicated
-      embeddings — each round is one corpus pass, so wall should be
-      ~affine in (rounds x corpus)."""
-    import json as _json
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark import cache, plans
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.operators import similarity
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    qs = plans.all_queries()
-    t = TableSet(spark, sf_dir)
-    base_docs = t.documents.select("doc_id", "text", "lang", "source")
-    base_emb = t.embeddings
-    out = {
-        "sf_dir": sf_dir,
-        "n_base_docs": base_docs.count(),
-        "n_base_vecs": base_emb.count(),
-        "weighted": [],
-        "kmeans": [],
-        "ann_batch": [],
-    }
-
-    def _replicate_emb(k: int):
-        return _replicate_embeddings(spark, base_emb, k, "r10")[0]
-
-    # -- weighted sampling: linear scan, flat top-k --------------------
-    for k in (1, 3, 10):
-        stage = tempfile.mkdtemp(prefix=f"r10-docs-{k}x-")
-        _replicate_docs(spark, base_docs, k).write.mode("overwrite").parquet(
-            f"{stage}/documents.parquet"
-        )
-        point = {"replicas": k}
-        for label, qname in (
-            ("topk", "weighted_sample_topk"),
-            ("strat", "weighted_sample_stratified"),
-        ):
-            t0 = time.perf_counter()
-            point[f"{label}_rows"] = qs[qname](spark, stage).count()
-            point[f"{label}_sec"] = round(time.perf_counter() - t0, 2)
-            cache.release()
-        out["weighted"].append(point)
-
-    # -- kmeans_refine: wall vs rounds vs corpus -----------------------
-    for k in (1, 3, 10):
-        emb = _replicate_emb(k)
-        point = {"replicas": k, "n_vecs": emb.count()}
-        for iters in (1, 2, 4):
-            t0 = time.perf_counter()
-            similarity.kmeans_refine(emb, iters=iters).count()
-            point[f"iters{iters}_sec"] = round(time.perf_counter() - t0, 2)
-            cache.release()
-        out["kmeans"].append(point)
-
-    # -- ann_search: latency vs query-batch size at fixed corpus -------
-    emb10 = _replicate_emb(10)
-    stage = tempfile.mkdtemp(prefix="r10-ann-")
-    engine = Engine.from_config(
-        _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-    )
-    t0 = time.perf_counter()
-    engine.build_ivf_index("r10ix", emb10, kmeans_iters=2)
-    out["ann_build_sec"] = round(time.perf_counter() - t0, 2)
-    for nq in (5, 50, 500):
-        queries = (
-            emb10.orderBy("vec_id")
-            .limit(nq)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 0.5 + 0.01, 6),
-                ).alias("qv"),
-            )
-            .localCheckpoint()
-        )
-        import re as _re
-
-        probe = engine.ann_topk("r10ix", queries, k=5, nprobe=2)
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        n_scans = len(
-            _re.findall(r"FileScan parquet [^\n]*r10ix_assigned", plan)
-        )
-        t0 = time.perf_counter()
-        rows = probe.count()
-        sec = round(time.perf_counter() - t0, 2)
-        # the serving contract: ONE stored-list scan no matter how
-        # many queries ride the batch
-        assert n_scans == 1, (nq, n_scans)
-        out["ann_batch"].append(
-            {
-                "n_queries": nq,
-                "rows": rows,
-                "sec": sec,
-                "assigned_scans": n_scans,
-            }
-        )
-    return out
-
-
-def pq_probe(spark, sf_dir: str) -> dict:
-    """PQ serving scale probe (round 10):
-
-    * build_pq_index wall at 1x/3x/10x replicated embeddings —
-      training is iters+1 corpus passes + one encode pass, so build
-      should be ~linear in corpus;
-    * probe-only pq_search wall at a fixed nq=5 batch per corpus
-      size — the ADC pass is linear in the CODES (skinny integer
-      rows), the rerank bounded by nq x shortlist;
-    * probe wall vs query-batch size (5/50/500) at the 10x corpus —
-      one stored-codes scan regardless of batch size (asserted from
-      the plan);
-    * the compression evidence: on-disk bytes of the stored codes
-      vs the stored vectors (the 100 TB argument in one number)."""
-    import json as _json
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.sources.tables import TableSet
-    from quasar_destination_h2_spark.sources.sink import warehouse_path
-
-    t = TableSet(spark, sf_dir)
-    base_emb = t.embeddings
-    out = {"sf_dir": sf_dir, "n_base_vecs": base_emb.count(), "points": []}
-
-    def _replicate_emb(k: int):
-        return _replicate_embeddings(spark, base_emb, k, "pq")[0]
-
-    _du = _dir_bytes
-
-    engine = None
-    for k in (1, 3, 10):
-        emb = _replicate_emb(k)
-        stage = tempfile.mkdtemp(prefix=f"pq-wh-{k}x-")
-        engine = Engine.from_config(
-            _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-        )
-        t0 = time.perf_counter()
-        engine.build_pq_index("pqp", emb)
-        build = round(time.perf_counter() - t0, 2)
-        queries = (
-            emb.orderBy("vec_id")
-            .limit(5)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 0.5 + 0.01, 6),
-                ).alias("qv"),
-            )
-            .localCheckpoint()
-        )
-        engine.pq_search("pqp", queries).count()  # warm + memoize check
-        t0 = time.perf_counter()
-        rows = engine.pq_search("pqp", queries).count()
-        probe = round(time.perf_counter() - t0, 2)
-        codes_b = _du(
-            warehouse_path(spark, engine.sink.catalog["pqp_codes"])
-        )
-        vecs_b = _du(
-            warehouse_path(spark, engine.sink.catalog["pqp_vectors"])
-        )
-        out["points"].append(
-            {
-                "replicas": k,
-                "n_vecs": emb.count(),
-                "build_sec": build,
-                "probe_sec": probe,
-                "probe_rows": rows,
-                "codes_bytes": codes_b,
-                "vectors_bytes": vecs_b,
-                "compression_x": round(vecs_b / codes_b, 2) if codes_b else None,
-            }
-        )
-    # probe vs batch size at the 10x corpus (engine still holds it)
-    emb10_queries = None
-    out["probe_vs_queries"] = []
-    for nq in (5, 50, 500):
-        emb10_queries = (
-            engine.table("pqp_vectors")
-            .orderBy("vec_id")
-            .limit(nq)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 0.5 + 0.01, 6),
-                ).alias("qv"),
-            )
-            .localCheckpoint()
-        )
-        probe_df = engine.pq_search("pqp", emb10_queries)
-        plan = probe_df._jdf.queryExecution().executedPlan().toString()
-        n_scans = len(_re.findall(r"FileScan parquet [^\n]*pqp_codes", plan))
-        t0 = time.perf_counter()
-        rows = probe_df.count()
-        sec = round(time.perf_counter() - t0, 2)
-        assert n_scans == 1, (nq, n_scans)
-        out["probe_vs_queries"].append(
-            {"n_queries": nq, "rows": rows, "sec": sec, "codes_scans": n_scans}
-        )
-    return out
-
-
-def ivfpq_probe(spark, sf_dir: str) -> dict:
-    """IVF+PQ composed-index scale probe (round 10):
-
-    * build_ivfpq_index wall at 1x/3x/10x replicated embeddings —
-      the coarse k-means rounds + PQ training + one composed encode
-      pass, each ~linear in corpus;
-    * probe-only ivfpq_search wall at fixed nq=5, nprobe=2 per
-      corpus size — the ADC pass reads only the probed lists'
-      compressed codes (dynamic partition pruning), the rerank only
-      their vectors;
-    * the IVF I/O contract measured: at the 10x corpus, probed-list
-      bytes (the files DPP restricts each probe to) as a fraction of
-      the stored index across nprobe = 1/2/4/8 — this fraction IS
-      the 100 TB read bound, and it should track nprobe/n_list;
-    * probe wall vs query-batch size (5/50/500) at 10x — one stored
-      codes scan regardless of batch size (asserted from the plan)."""
-    import json as _json
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.operators import similarity
-    from quasar_destination_h2_spark.sources.sink import warehouse_path
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    t = TableSet(spark, sf_dir)
-    base_emb = t.embeddings
-    out = {"sf_dir": sf_dir, "n_base_vecs": base_emb.count(), "points": []}
-
-    def _replicate_emb(k: int):
-        return _replicate_embeddings(spark, base_emb, k, "ipq")[0]
-
-    _du = _dir_bytes
-
-    def _queries(src, nq):
-        return (
-            src.orderBy("vec_id")
-            .limit(nq)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 0.5 + 0.01, 6),
-                ).alias("qv"),
-            )
-            .localCheckpoint()
-        )
-
-    engine = None
-    for k in (1, 3, 10):
-        emb = _replicate_emb(k)
-        stage = tempfile.mkdtemp(prefix=f"ipq-wh-{k}x-")
-        engine = Engine.from_config(
-            _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-        )
-        t0 = time.perf_counter()
-        engine.build_ivfpq_index("ipqp", emb)
-        build = round(time.perf_counter() - t0, 2)
-        queries = _queries(emb, 5)
-        engine.ivfpq_search("ipqp", queries).count()  # warm + memoize
-        t0 = time.perf_counter()
-        rows = engine.ivfpq_search("ipqp", queries).count()
-        probe = round(time.perf_counter() - t0, 2)
-        out["points"].append(
-            {
-                "replicas": k,
-                "n_vecs": emb.count(),
-                "build_sec": build,
-                "probe_sec": probe,
-                "probe_rows": rows,
-                "codes_bytes": _du(
-                    warehouse_path(spark, engine.sink.catalog["ipqp_codes"])
-                ),
-                "vectors_bytes": _du(
-                    warehouse_path(spark, engine.sink.catalog["ipqp_vectors"])
-                ),
-            }
-        )
-    # the IVF I/O contract at the 10x corpus: what fraction of the
-    # stored index do the probed lists cover, per nprobe (DPP
-    # restricts each probe's file reads to exactly these directories)
-    codes_root = warehouse_path(spark, engine.sink.catalog["ipqp_codes"])
-    total_codes = _du(codes_root)
-    cents = engine.table("ipqp_centroids").select("centroid_id", "cvec")
-    queries10 = _queries(engine.table("ipqp_vectors"), 5)
-    out["probed_fraction_vs_nprobe"] = []
-    for nprobe in (1, 2, 4, 8):
-        probed = sorted(
-            set(
-                r.centroid_id
-                for r in similarity.ivfpq_probe_lists(
-                    queries10, cents, nprobe
-                ).collect()
-            )
-        )
-        probed_bytes = sum(
-            _du(os.path.join(codes_root, f"centroid_id={c}")) for c in probed
-        )
-        t0 = time.perf_counter()
-        rows = engine.ivfpq_search("ipqp", queries10, nprobe=nprobe).count()
-        sec = round(time.perf_counter() - t0, 2)
-        out["probed_fraction_vs_nprobe"].append(
-            {
-                "nprobe": nprobe,
-                "n_probed_lists": len(probed),
-                "probed_bytes": probed_bytes,
-                "total_codes_bytes": total_codes,
-                "probed_ppm": int(probed_bytes * 1_000_000 // total_codes),
-                "probe_sec": sec,
-                "rows": rows,
-            }
-        )
-    # probe wall vs query-batch size — the codes-scan count must be
-    # INDEPENDENT of the batch size (the rendering prints the scan
-    # once in the main plan and once under the DPP subquery, so the
-    # constant is 2, not 1 — what matters is that it doesn't grow)
-    out["probe_vs_queries"] = []
-    scan_counts = set()
-    for nq in (5, 50, 500):
-        qb = _queries(engine.table("ipqp_vectors"), nq)
-        probe_df = engine.ivfpq_search("ipqp", qb)
-        plan = probe_df._jdf.queryExecution().executedPlan().toString()
-        n_scans = len(_re.findall(r"FileScan parquet [^\n]*ipqp_codes", plan))
-        scan_counts.add(n_scans)
-        t0 = time.perf_counter()
-        rows = probe_df.count()
-        sec = round(time.perf_counter() - t0, 2)
-        out["probe_vs_queries"].append(
-            {"n_queries": nq, "rows": rows, "sec": sec, "codes_scans": n_scans}
-        )
-    assert len(scan_counts) == 1, scan_counts
-    return out
-
-
-def bq_probe(spark, sf_dir: str) -> dict:
-    """Binary-quantization scale probe (round 10):
-
-    * the compression evidence: on-disk bytes of the packed sign-bit
-      codes vs the float vectors at 1x/3x/10x replicated corpora —
-      the claimed ~32x, measured through parquet encoding;
-    * probe wall (hamming top-10, fixed nq=3) per corpus size — one
-      pass over 16 bytes/row, XOR+popcount only;
-    * serving wall (shortlist + exact rerank) per corpus size — the
-      rerank reads only nq x shortlist float rows."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.operators import similarity
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    t = TableSet(spark, sf_dir)
-    base_emb = t.embeddings
-    out = {"sf_dir": sf_dir, "n_base_vecs": base_emb.count(), "points": []}
-
-    def _replicate_emb(k: int):
-        return _replicate_embeddings(spark, base_emb, k, "bq")
-
-    _du = _dir_bytes
-
-    for k in (1, 3, 10):
-        emb, vec_path = _replicate_emb(k)
-        codes_path = tempfile.mkdtemp(prefix=f"bq-codes-{k}x-")
-        t0 = time.perf_counter()
-        similarity.bq_encode(emb).write.mode("overwrite").parquet(codes_path)
-        encode = round(time.perf_counter() - t0, 2)
-        codes = spark.read.parquet(codes_path)
-        qc = similarity.bq_encode(emb.orderBy("vec_id").limit(3)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("sig_lo").alias("q_lo"),
-            F.col("sig_hi").alias("q_hi"),
-        ).localCheckpoint()
-        q = emb.orderBy("vec_id").limit(3).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qv"),
-        ).localCheckpoint()
-        similarity.ann_bq_topk(codes, qc, 10).count()  # warm
-        t0 = time.perf_counter()
-        similarity.ann_bq_topk(codes, qc, 10).count()
-        probe = round(time.perf_counter() - t0, 2)
-        t0 = time.perf_counter()
-        short = similarity.ann_bq_topk(codes, qc, similarity.PQ_SHORTLIST)
-        similarity.ann_bq_rerank(emb, short, q, 10).count()
-        serve = round(time.perf_counter() - t0, 2)
-        codes_b, vecs_b = _du(codes_path), _du(vec_path)
-        out["points"].append(
-            {
-                "replicas": k,
-                "n_vecs": emb.count(),
-                "encode_sec": encode,
-                "hamming_probe_sec": probe,
-                "serve_sec": serve,
-                "codes_bytes": codes_b,
-                "vectors_bytes": vecs_b,
-                "compression_x": round(vecs_b / codes_b, 2)
-                if codes_b
-                else None,
-            }
-        )
-    return out
-
-
-def textindex_probe(spark, sf_dir: str) -> dict:
-    """Scale probe for the r10 BM25 text-index serving lifecycle:
-
-    * build_text_index wall at 1x/3x/10x replicated documents —
-      expect ~linear (tokenize + one bucketed shuffle write);
-    * text_search probe wall at each corpus size, fixed query batch —
-      expect SUB-linear (bucket pruning + pushed IN filter size the
-      read by the query terms' postings, not the corpus), and an
-      order below the build at 10x;
-    * probe wall vs query-batch size at the fixed 10x index — expect
-      ~flat-to-linear in queries with the postings scan count
-      constant (2 branches: prune + df), never per-query scans;
-    * append_to_text_index wall for a 1x batch onto the 10x index —
-      the nightly-crawl increment, expect ~1x-build-sized."""
-    import json as _json
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    base = TableSet(spark, sf_dir).documents.select(
-        "doc_id", "text", "lang", "source"
-    )
-    stage = tempfile.mkdtemp(prefix="tix-probe-")
-    engine = Engine.from_config(
-        _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-    )
-    queries = spark.createDataFrame(
-        [
-            (1, "query"), (1, "spark"), (1, "window"),
-            (2, "data"), (2, "join"),
-            (3, "stream"), (3, "state"), (3, "window"),
-        ],
-        "query_id bigint, term string",
-    ).localCheckpoint()
-    out = {"sf_dir": sf_dir, "n_base_docs": base.count(), "points": []}
-    nb = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    for k in (1, 3, 10):
-        corpus = _replicate_docs(spark, base, k).select("doc_id", "text")
-        name = f"tixp{k}"
-        t0 = time.perf_counter()
-        engine.build_text_index(name, corpus, n_buckets=nb)
-        build_sec = round(time.perf_counter() - t0, 2)
-        engine.text_search(name, queries).count()  # warm + verify memo
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            rows = engine.text_search(name, queries).count()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        plan = (
-            engine.text_search(name, queries)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        pruned = _re.findall(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
-        n_scans = len(
-            _re.findall(r"FileScan parquet [^\n]*_postings", plan)
-        )
-        out["points"].append(
-            {
-                "replicas": k,
-                "build_sec": build_sec,
-                "probe_sec": round(best, 3),
-                "probe_rows": rows,
-                "postings_scans": n_scans,
-                "buckets_read": pruned,
-            }
-        )
-    # probe vs query-batch size at the fixed 10x index
-    out["probe_vs_queries"] = []
-    vocab = (
-        engine.table("tixp10_postings")
-        .groupBy("tok")
-        .count()
-        .orderBy(F.desc("count"), "tok")
-        .limit(600)
-        .collect()
-    )
-    for nq in (5, 50, 500):
-        qb = spark.createDataFrame(
-            [(i, vocab[i % len(vocab)].tok) for i in range(nq)],
-            "query_id bigint, term string",
-        ).localCheckpoint()
-        engine.text_search("tixp10", qb).count()
-        t0 = time.perf_counter()
-        rows = engine.text_search("tixp10", qb).count()
-        out["probe_vs_queries"].append(
-            {
-                "n_queries": nq,
-                "rows": rows,
-                "sec": round(time.perf_counter() - t0, 3),
-            }
-        )
-    # incremental append of a 1x batch onto the 10x index
-    batch = _replicate_docs(spark, base, 1).select(
-        (F.col("doc_id") + 900_000_000).alias("doc_id"), "text"
-    )
-    t0 = time.perf_counter()
-    rep = engine.append_to_text_index("tixp10", batch, n_buckets=nb).collect()[0]
-    out["append_sec"] = round(time.perf_counter() - t0, 2)
-    out["append_report"] = rep.asDict()
-    return out
-
-
-def ivfbq_probe(spark, sf_dir: str) -> dict:
-    """IVF+BQ composed-index scale probe (round 11 — the
-    partition-pruned form of the r10 flat Hamming scan):
-
-    * build_ivfbq_index wall at 1x/3x/10x replicated embeddings (the
-      coarse k-means rounds + one assign+sign-pack pass, ~linear);
-    * probe-only ivfbq_search wall at fixed nq=5, nprobe=2 per corpus
-      size — Hamming reads only the probed lists' packed codes
-      (dynamic partition pruning), the rerank only their vectors;
-    * compression evidence: on-disk packed-codes bytes vs the float
-      vectors (BQ stores 16 B of sign words per row);
-    * the IVF I/O contract measured: at the 10x corpus, probed-list
-      bytes as a fraction of the stored codes across nprobe=1/2/4/8 —
-      this fraction IS the 100 TB read bound and should track
-      nprobe/n_list (the flat r10 probe read 1_000_000 ppm by
-      design; see BQ_PROBE_r10.json);
-    * probe wall vs query-batch size (5/50/500) at 10x — the codes
-      scan count must be independent of the batch size."""
-    import json as _json
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.operators import similarity
-    from quasar_destination_h2_spark.sources.sink import warehouse_path
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    t = TableSet(spark, sf_dir)
-    base_emb = t.embeddings
-    out = {"sf_dir": sf_dir, "n_base_vecs": base_emb.count(), "points": []}
-
-    def _queries(src, nq):
-        return (
-            src.orderBy("vec_id")
-            .limit(nq)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 0.5 + 0.01, 6),
-                ).alias("qv"),
-            )
-            .localCheckpoint()
-        )
-
-    engine = None
-    for k in (1, 3, 10):
-        emb = _replicate_embeddings(spark, base_emb, k, "ibq")[0]
-        stage = tempfile.mkdtemp(prefix=f"ibq-wh-{k}x-")
-        engine = Engine.from_config(
-            _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-        )
-        t0 = time.perf_counter()
-        engine.build_ivfbq_index("ibqp", emb)
-        build = round(time.perf_counter() - t0, 2)
-        queries = _queries(emb, 5)
-        engine.ivfbq_search("ibqp", queries).count()  # warm + memoize
-        t0 = time.perf_counter()
-        rows = engine.ivfbq_search("ibqp", queries).count()
-        probe = round(time.perf_counter() - t0, 2)
-        cb = _dir_bytes(
-            warehouse_path(spark, engine.sink.catalog["ibqp_codes"])
-        )
-        vb = _dir_bytes(
-            warehouse_path(spark, engine.sink.catalog["ibqp_vectors"])
-        )
-        out["points"].append(
-            {
-                "replicas": k,
-                "n_vecs": emb.count(),
-                "build_sec": build,
-                "probe_sec": probe,
-                "probe_rows": rows,
-                "codes_bytes": cb,
-                "vectors_bytes": vb,
-                "compression_x": round(vb / cb, 1) if cb else None,
-            }
-        )
-    codes_root = warehouse_path(spark, engine.sink.catalog["ibqp_codes"])
-    total_codes = _dir_bytes(codes_root)
-    cents = engine.table("ibqp_centroids").select("centroid_id", "cvec")
-    queries10 = _queries(engine.table("ibqp_vectors"), 5)
-    out["probed_fraction_vs_nprobe"] = []
-    for nprobe in (1, 2, 4, 8):
-        probed = sorted(
-            set(
-                r.centroid_id
-                for r in similarity.ivfpq_probe_lists(
-                    queries10, cents, nprobe
-                ).collect()
-            )
-        )
-        probed_bytes = sum(
-            _dir_bytes(os.path.join(codes_root, f"centroid_id={c}"))
-            for c in probed
-        )
-        t0 = time.perf_counter()
-        rows = engine.ivfbq_search("ibqp", queries10, nprobe=nprobe).count()
-        sec = round(time.perf_counter() - t0, 2)
-        out["probed_fraction_vs_nprobe"].append(
-            {
-                "nprobe": nprobe,
-                "n_probed_lists": len(probed),
-                "probed_bytes": probed_bytes,
-                "total_codes_bytes": total_codes,
-                "probed_ppm": int(probed_bytes * 1_000_000 // total_codes),
-                "probe_sec": sec,
-                "rows": rows,
-            }
-        )
-    out["probe_vs_queries"] = []
-    scan_counts = set()
-    for nq in (5, 50, 500):
-        qb = _queries(engine.table("ibqp_vectors"), nq)
-        probe_df = engine.ivfbq_search("ibqp", qb)
-        plan = probe_df._jdf.queryExecution().executedPlan().toString()
-        n_scans = len(_re.findall(r"FileScan parquet [^\n]*ibqp_codes", plan))
-        scan_counts.add(n_scans)
-        t0 = time.perf_counter()
-        rows = probe_df.count()
-        sec = round(time.perf_counter() - t0, 2)
-        out["probe_vs_queries"].append(
-            {"n_queries": nq, "rows": rows, "sec": sec, "codes_scans": n_scans}
-        )
-    assert len(scan_counts) == 1, scan_counts
-    return out
-
-
-def cascade_probe(spark, sf_dir: str) -> dict:
-    """Cascade-funnel scale probe (round 12 — the steady-state
-    serving split of the production retrieval funnel, r11 verdict
-    task 3):
-
-    * build_cascade_index + probe-only cascade_search wall at
-      1x/3x/10x replicated embeddings — probe wall must stay ~flat
-      (every stage reads only the probed lists);
-    * the funnel's PER-STAGE contract measured at the 10x corpus:
-      candidate counts (Hamming-200 cut -> ADC narrow to 50 -> exact
-      top-5) and the per-tier probed bytes over the probed lists of
-      each centroid-partitioned store (sign codes ~16 B/row, PQ
-      codes ~M ints/row, float vectors ~256 B/row) as ppm of that
-      tier's total — each stage reads MORE bytes per candidate than
-      the one below but touches FEWER candidates, which is the
-      whole design;
-    * probe wall vs query-batch size (5/50/500) with the
-      scan-count-constancy pin on all three partitioned stores."""
-    import json as _json
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.operators import similarity
-    from quasar_destination_h2_spark.sources.sink import warehouse_path
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    t = TableSet(spark, sf_dir)
-    base_emb = t.embeddings
-    out = {"sf_dir": sf_dir, "n_base_vecs": base_emb.count(), "points": []}
-
-    def _queries(src, nq):
-        return (
-            src.orderBy("vec_id")
-            .limit(nq)
-            .select(
-                F.col("vec_id").alias("query_id"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 0.5 + 0.01, 6),
-                ).alias("qv"),
-            )
-            .localCheckpoint()
-        )
-
-    engine = None
-    for k in (1, 3, 10):
-        emb = _replicate_embeddings(spark, base_emb, k, "csc")[0]
-        stage = tempfile.mkdtemp(prefix=f"csc-wh-{k}x-")
-        engine = Engine.from_config(
-            _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-        )
-        t0 = time.perf_counter()
-        engine.build_cascade_index("cscp", emb)
-        build = round(time.perf_counter() - t0, 2)
-        queries = _queries(emb, 5)
-        engine.cascade_search("cscp", queries).count()  # warm + memoize
-        t0 = time.perf_counter()
-        rows = engine.cascade_search("cscp", queries).count()
-        probe = round(time.perf_counter() - t0, 2)
-        out["points"].append(
-            {
-                "replicas": k,
-                "n_vecs": emb.count(),
-                "build_sec": build,
-                "probe_sec": probe,
-                "probe_rows": rows,
-                "bq_codes_bytes": _dir_bytes(
-                    warehouse_path(spark, engine.sink.catalog["cscp_codes"])
-                ),
-                "pq_codes_bytes": _dir_bytes(
-                    warehouse_path(
-                        spark, engine.sink.catalog["cscp_codes_pq"]
-                    )
-                ),
-                "vectors_bytes": _dir_bytes(
-                    warehouse_path(spark, engine.sink.catalog["cscp_vectors"])
-                ),
-            }
-        )
-    # ---- the per-stage funnel contract at the 10x corpus ----
-    cents = engine.table("cscp_centroids").select("centroid_id", "cvec")
-    cb = engine.table("cscp_codebook")
-    queries10 = _queries(engine.table("cscp_vectors"), 5)
-    probes = similarity.ivfpq_probe_lists(queries10, cents, 2)
-    probed = sorted(set(r.centroid_id for r in probes.collect()))
-    qc = similarity.bq_query_codes(queries10)
-    codes_bq = engine.table("cscp_codes")
-    codes_pq = engine.table("cscp_codes_pq")
-    vectors = engine.table("cscp_vectors")
-    stage1 = similarity.ann_ivfbq_topk(
-        codes_bq.select("vec_id", "centroid_id", "sig_lo", "sig_hi"),
-        qc, probes, 200,
-    ).localCheckpoint()
-    lut = similarity.pq_query_lut(
-        queries10, cb.select("m", "code", "cvec"),
-        id_col="query_id", vec_col="qv",
-    )
-    stage2 = similarity.ann_cascade_pq_narrow(
-        stage1, codes_pq.select("vec_id", "centroid_id", "m", "code"),
-        lut, 50,
-    ).localCheckpoint()
-    stage3 = similarity.ann_ivfpq_rerank(
-        vectors.select("vec_id", "centroid_id", "embedding"),
-        stage2, queries10, 5,
-    )
-    stages = []
-    for label, tbl, n_cand in (
-        ("hamming_cut", "cscp_codes", stage1.count()),
-        ("pq_narrow", "cscp_codes_pq", stage2.count()),
-        ("exact_rerank", "cscp_vectors", stage3.count()),
-    ):
-        root = warehouse_path(spark, engine.sink.catalog[tbl])
-        total = _dir_bytes(root)
-        probed_bytes = sum(
-            _dir_bytes(os.path.join(root, f"centroid_id={c}"))
-            for c in probed
-        )
-        stages.append(
-            {
-                "stage": label,
-                "candidates": n_cand,
-                "store": tbl,
-                "probed_bytes": probed_bytes,
-                "total_bytes": total,
-                "probed_ppm": int(probed_bytes * 1_000_000 // total),
-            }
-        )
-    out["funnel_stages"] = stages
-    # each stage passes FEWER candidates up than it received
-    assert stages[0]["candidates"] >= stages[1]["candidates"] >= stages[2]["candidates"], stages
-    # ---- probe wall vs query-batch size; scan-count constancy ----
-    out["probe_vs_queries"] = []
-    scan_counts = {"cscp_codes": set(), "cscp_codes_pq": set(), "cscp_vectors": set()}
-    for nq in (5, 50, 500):
-        qb = _queries(engine.table("cscp_vectors"), nq)
-        probe_df = engine.cascade_search("cscp", qb)
-        plan = probe_df._jdf.queryExecution().executedPlan().toString()
-        for tbl in scan_counts:
-            # match the PHYSICAL (fingerprint-suffixed) name — exact,
-            # so cscp_codes never counts cscp_codes_pq's scans
-            phys = engine.sink.catalog[tbl]
-            pat = rf"FileScan parquet [^\n]*{_re.escape(phys)}"
-            scan_counts[tbl].add(len(_re.findall(pat, plan)))
-        t0 = time.perf_counter()
-        rows = probe_df.count()
-        sec = round(time.perf_counter() - t0, 2)
-        out["probe_vs_queries"].append({"n_queries": nq, "rows": rows, "sec": sec})
-    for tbl, counts in scan_counts.items():
-        assert len(counts) == 1, (tbl, counts)
-    out["scan_count_constancy"] = {
-        tbl: sorted(c)[0] for tbl, c in scan_counts.items()
-    }
-    return out
-
-
-def views_probe(spark, sf_dir: str) -> dict:
-    """View-resolution scale probe (round 12 — the zero-cost claim
-    measured): a registered view inlines its definition at ANALYSIS
-    time, so (a) the OPTIMIZED plan of a filtered query through a
-    view must equal the direct query's plan (same pushdown, same
-    scans — a view adds zero materialization and zero I/O at any
-    corpus size), (b) wall time through the view tracks the direct
-    query at 1x/3x/10x the corpus, and (c) a views-over-views chain
-    costs only per-query ANALYSIS work — measured as the wall delta
-    of a depth-8 chain over depth-1 on the same corpus."""
-    import json as _json
-    import re as _re
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.sources.tables import TableSet
-
-    t = TableSet(spark, sf_dir)
-    base = t.documents.select("doc_id", "source", "text")
-    out = {"sf_dir": sf_dir, "n_base_docs": base.count(), "points": []}
-    stage = tempfile.mkdtemp(prefix="vwp-wh-")
-    engine = Engine.from_config(
-        _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-    )
-    # idempotence against a previous probe run's registry leftovers
-    # (the view registry lives in the shared session warehouse):
-    # drop the chain deepest-first, then each per-scale view
-    for d in range(8, 1, -1):
-        engine.execute_sql(f'DROP VIEW IF EXISTS "vwp_chain{d}"')
-    for k in (1, 3, 10):
-        engine.execute_sql(f'DROP VIEW IF EXISTS "vwp_v{k}"')
-
-    def _scan_contract(df) -> list:
-        """The plan facts that carry the zero-I/O claim: every
-        FileScan line's pushed filters + read schema (aliases in the
-        aggregate layer legitimately differ between the view and the
-        direct spelling — the SCANS must not)."""
-        p = df._jdf.queryExecution().executedPlan().toString()
-        out = []
-        for ln in p.splitlines():
-            if "FileScan" in ln:
-                pf = _re.search(r"PushedFilters: \[[^\]]*\]", ln)
-                rs = _re.search(r"ReadSchema: [^,\s]+", ln)
-                out.append(
-                    (pf.group(0) if pf else "", rs.group(0) if rs else "")
-                )
-        return sorted(out)
-
-    for k in (1, 3, 10):
-        reps = [
-            base.withColumn(
-                "doc_id", (F.col("doc_id") + F.lit(i * 10_000_000)).cast("long")
-            )
-            for i in range(k)
-        ]
-        corpus = reps[0]
-        for r in reps[1:]:
-            corpus = corpus.unionByName(r)
-        engine.drop_table_if_exists(f"vwp_docs_{k}")
-        engine.create_table_as(f"vwp_docs_{k}", corpus)
-        engine.execute_sql(f'DROP VIEW IF EXISTS "vwp_v{k}"')
-        engine.execute_sql(
-            f'CREATE VIEW "vwp_v{k}" AS SELECT "doc_id", "source", '
-            f'LENGTH("text") AS n_chars FROM "vwp_docs_{k}"'
-        )
-        q_view = (
-            f"SELECT source, COUNT(*) AS n, SUM(n_chars) AS chars "
-            f"FROM vwp_v{k} WHERE doc_id % 7 = 0 GROUP BY source"
-        )
-        q_direct = (
-            f"SELECT source, COUNT(*) AS n, SUM(LENGTH(text)) AS chars "
-            f"FROM vwp_docs_{k} WHERE doc_id % 7 = 0 GROUP BY source"
-        )
-        dfv = engine.execute_sql(q_view)
-        dfd = engine.execute_sql(q_direct)
-        scans_equal = _scan_contract(dfv) == _scan_contract(dfd)
-        pushed = any(
-            "isnotnull" in pf.lower() or "IsNotNull" in pf or pf != "PushedFilters: []"
-            for pf, _ in _scan_contract(dfv)
-        )
-        engine.execute_sql(q_view).count()  # warm
-        t0 = time.perf_counter()
-        rows_v = engine.execute_sql(q_view).count()
-        wall_view = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        rows_d = engine.execute_sql(q_direct).count()
-        wall_direct = round(time.perf_counter() - t0, 3)
-        assert rows_v == rows_d
-        out["points"].append(
-            {
-                "replicas": k,
-                "rows": rows_v,
-                "wall_view_sec": wall_view,
-                "wall_direct_sec": wall_direct,
-                "scan_contracts_equal": scans_equal,
-                "filter_pushed_to_scan": pushed,
-            }
-        )
-    # (c) analysis cost of a deep view chain: depth-8 over the 10x
-    # corpus vs depth-1 — the data work is identical, so the delta
-    # is the recursive bind/analysis overhead per query
-    prev = "vwp_v10"
-    for d in range(2, 9):
-        engine.execute_sql(f'DROP VIEW IF EXISTS "vwp_chain{d}"')
-        engine.execute_sql(
-            f'CREATE VIEW "vwp_chain{d}" AS SELECT * FROM "{prev}"'
-        )
-        prev = f"vwp_chain{d}"
-    q1 = "SELECT COUNT(*) AS n FROM vwp_v10 WHERE doc_id % 7 = 0"
-    q8 = f"SELECT COUNT(*) AS n FROM {prev} WHERE doc_id % 7 = 0"
-    engine.execute_sql(q8).count()  # warm
-    t0 = time.perf_counter()
-    engine.execute_sql(q1).count()
-    w1 = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    engine.execute_sql(q8).count()
-    w8 = round(time.perf_counter() - t0, 3)
-    out["chain"] = {
-        "depth1_sec": w1,
-        "depth8_sec": w8,
-        "analysis_overhead_sec": round(w8 - w1, 3),
-    }
-    return out
-
-
-def r11_probe(spark, sf_dir: str) -> dict:
-    """Round-11 probes for the r10 operators the earlier probes don't
-    cover (r10 VERDICT task 5):
-
-    * MMR wall vs k (3/5/10 at n_cand=50) and vs shortlist size
-      (20/50/100 at k=5) — the cost driver is k x shortlist;
-    * MMR corpus-independence: the SAME-SIZED candidate frame drawn
-      from a 1x vs a 10x corpus (checkpointed, so candidate BUILD
-      cost is excluded) must select in the same wall — the corpus is
-      never touched after the shortlist exists;
-    * RRF fusion wall — trivially bounded (reads two top-k frames),
-      one point suffices: fusion time for nq x 10 + nq x 10 rows;
-    * streaming index maintenance: per-batch append wall vs batch
-      size (streamed vs the same batch appended directly — the
-      difference is the foreachBatch + drift-log write overhead) and
-      the replay-skip cost (re-running a committed batch id)."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from quasar_destination_h2_spark.engine import Engine
-    from quasar_destination_h2_spark.operators import similarity, text
-    from quasar_destination_h2_spark.sources.tables import TableSet
-    from quasar_destination_h2_spark.streaming import (
-        read_embeddings_stream,
-        stream_append_to_index,
-    )
-
-    t = TableSet(spark, sf_dir)
-    base_emb = t.embeddings
-    out = {"sf_dir": sf_dir, "n_base_vecs": base_emb.count()}
-
-    def _cand(emb, nq, n_cand):
-        return (
-            similarity.brute_force_topk(emb, nq, n_cand)
-            .select(
-                "query_id",
-                F.col("neighbor_id").alias("vec_id"),
-                (F.col("cos_sim").cast("decimal(28,10)") * 1000000)
-                .cast("bigint")
-                .alias("rel_micro"),
-            )
-            .join(emb.select("vec_id", "embedding"), "vec_id")
-            .localCheckpoint()  # exclude the candidate BUILD from timing
-        )
-
-    # MMR wall vs k and vs shortlist
-    out["mmr_vs_k"] = []
-    cand50 = _cand(base_emb, 3, 50)
-    for k in (3, 5, 10):
-        similarity.mmr_select(cand50, k).count()  # warm
-        t0 = time.perf_counter()
-        similarity.mmr_select(cand50, k).count()
-        out["mmr_vs_k"].append(
-            {"k": k, "n_cand": 50, "sec": round(time.perf_counter() - t0, 2)}
-        )
-    out["mmr_vs_shortlist"] = []
-    for n_cand in (20, 50, 100):
-        cand = _cand(base_emb, 3, n_cand)
-        similarity.mmr_select(cand, 5).count()  # warm
-        t0 = time.perf_counter()
-        similarity.mmr_select(cand, 5).count()
-        out["mmr_vs_shortlist"].append(
-            {
-                "k": 5,
-                "n_cand": n_cand,
-                "sec": round(time.perf_counter() - t0, 2),
-            }
-        )
-    # MMR corpus-independence: same-sized shortlists from 1x vs 10x
-    emb10 = _replicate_embeddings(spark, base_emb, 10, "mmr")[0]
-    out["mmr_vs_corpus"] = []
-    for label, emb in (("1x", base_emb), ("10x", emb10)):
-        cand = _cand(emb, 3, 50)
-        similarity.mmr_select(cand, 5).count()  # warm
-        t0 = time.perf_counter()
-        similarity.mmr_select(cand, 5).count()
-        out["mmr_vs_corpus"].append(
-            {
-                "corpus": label,
-                "n_cand": 50,
-                "sec": round(time.perf_counter() - t0, 2),
-            }
-        )
-
-    # RRF: bounded fusion of two top-k frames (one point suffices)
-    docs = t.documents
-    qdf = spark.createDataFrame(
-        [(1, "data"), (2, "spark"), (3, "query")],
-        "query_id bigint, term string",
-    )
-    lex = text.bm25_search_many(docs, qdf, topn=10).select(
-        "query_id", "doc_id", "rank"
-    ).localCheckpoint()
-    sem = similarity.brute_force_topk(base_emb, 3, 10).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
-    ).localCheckpoint()
-    text.rrf_fuse([lex, sem], 60, 10).count()  # warm
-    t0 = time.perf_counter()
-    n = text.rrf_fuse([lex, sem], 60, 10).count()
-    out["rrf_fusion"] = {
-        "input_rows": lex.count() + sem.count(),
-        "fused_rows": n,
-        "sec": round(time.perf_counter() - t0, 2),
-    }
-
-    # Streaming index maintenance: streamed append vs direct append
-    # (the delta = foreachBatch + drift-log overhead), then the
-    # replay-skip cost of a committed batch id
-    out["stream_maintenance"] = []
-    for k in (1, 3):
-        stage = tempfile.mkdtemp(prefix=f"sm-wh-{k}x-")
-        engine = Engine.from_config(
-            _json.dumps({"connectionUri": f"{stage}/wh"}), spark=spark
-        )
-        engine.build_ivfbq_index("smix", base_emb)
-        batch = _replicate_embeddings(spark, base_emb, k, f"smb{k}")[0]
-        batch = batch.select(
-            (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
-        )
-        src = tempfile.mkdtemp(prefix="sm-src-")
-        ck = tempfile.mkdtemp(prefix="sm-ck-")
-        try:
-            batch.coalesce(1).write.mode("overwrite").parquet(f"{src}/b")
-            n_batch = spark.read.parquet(f"{src}/b").count()
-            t0 = time.perf_counter()
-            q = stream_append_to_index(
-                engine,
-                read_embeddings_stream(spark, f"{src}/b"),
-                "smix",
-                "ivfbq",
-                checkpoint=f"{ck}/1",
-            )
-            q.awaitTermination()
-            streamed = round(time.perf_counter() - t0, 2)
-            # replay: same checkpoint, already-committed batch -> the
-            # marker lookup skips the append entirely
-            t0 = time.perf_counter()
-            q = stream_append_to_index(
-                engine,
-                read_embeddings_stream(spark, f"{src}/b"),
-                "smix",
-                "ivfbq",
-                checkpoint=f"{ck}/1",
-            )
-            q.awaitTermination()
-            replay = round(time.perf_counter() - t0, 2)
-            # the same batch appended DIRECTLY to a fresh same-base
-            # index — the no-streaming baseline
-            engine.build_ivfbq_index("smref", base_emb)
-            t0 = time.perf_counter()
-            engine.append_to_ivfbq_index(
-                "smref", spark.read.parquet(f"{src}/b")
-            )
-            direct = round(time.perf_counter() - t0, 2)
-            out["stream_maintenance"].append(
-                {
-                    "batch_replicas": k,
-                    "n_batch_rows": n_batch,
-                    "streamed_append_sec": streamed,
-                    "direct_append_sec": direct,
-                    "stream_overhead_sec": round(streamed - direct, 2),
-                    "replay_skip_sec": replay,
-                }
-            )
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
-            shutil.rmtree(ck, ignore_errors=True)
-    return out
 
 
 def serving_probe(spark, sf_dir: str) -> dict:
@@ -1734,24 +307,10 @@ def serving_probe(spark, sf_dir: str) -> dict:
 
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    ivf_mode = "--ivf" in sys.argv[1:]
-    profile_mode = "--profile" in sys.argv[1:]
-    text_mode = "--text" in sys.argv[1:]
-    r9_mode = "--r9" in sys.argv[1:]
-    kmeans_mode = "--kmeans" in sys.argv[1:]
-    r10_mode = "--r10" in sys.argv[1:]
-    textindex_mode = "--textindex" in sys.argv[1:]
-    pq_mode = "--pq" in sys.argv[1:]
-    ivfpq_mode = "--ivfpq" in sys.argv[1:]
-    bq_mode = "--bq" in sys.argv[1:]
-    ivfbq_mode = "--ivfbq" in sys.argv[1:]
-    cascade_mode = "--cascade" in sys.argv[1:]
-    views_mode = "--views" in sys.argv[1:]
-    r11_mode = "--r11" in sys.argv[1:]
     serving_mode = "--serving" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import SparkSession
 
     spark = (
         SparkSession.builder.master(
@@ -1775,62 +334,6 @@ def main() -> int:
 
     if serving_mode:
         print(json.dumps(serving_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if ivf_mode:
-        print(json.dumps(ivf_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if profile_mode:
-        print(json.dumps(profile_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if text_mode:
-        print(json.dumps(text_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if r9_mode:
-        print(json.dumps(r9_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if kmeans_mode:
-        print(json.dumps(kmeans_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if pq_mode:
-        print(json.dumps(pq_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if ivfpq_mode:
-        print(json.dumps(ivfpq_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if bq_mode:
-        print(json.dumps(bq_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if cascade_mode:
-        print(json.dumps(cascade_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if views_mode:
-        print(json.dumps(views_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if ivfbq_mode:
-        print(json.dumps(ivfbq_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if r11_mode:
-        print(json.dumps(r11_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if r10_mode:
-        print(json.dumps(r10_probe(spark, sf_dir)))
-        spark.stop()
-        return 0
-    if textindex_mode:
-        print(json.dumps(textindex_probe(spark, sf_dir)))
         spark.stop()
         return 0
 

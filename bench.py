@@ -29,20 +29,18 @@ spread calibration 23% and disagreed on which queries "regressed"):
   basis) runs FIRST in the fresh session, before any of the heavy
   index-build entries can pollute GC/cache;
 * every family (common / index conformance / index serving) is
-  BRACKETED by its own calibration probes — ``family_calibration``
-  in the output — so drift WITHIN a run is visible, not just across
-  runs;
+  BRACKETED by the multi-core calibration probe —
+  ``family_calibration`` in the output — so drift WITHIN a run is
+  visible, not just across runs; the run's best probe reading is
+  ``calibration_mc_sec`` (on both output lines);
 * per query: one warm run, then best-of-3 timed runs with the
   relative spread recorded (``queries_spread``: (max-min)/min of the
   timed runs) — a query whose spread is large is noise, not signal.
 
-Round-over-round comparison: use ``queries_norm_cpu`` (per-query
-best / calibration_cpu_sec — the codegen-THROUGHPUT probe, which
-tracks the uniform CPU drift the planless probe misses) over the
-common set, and treat any per-query delta smaller than its recorded
-spread as noise. ``queries_norm`` (planless fixed-overhead divisor)
-remains for continuity with r8-r10 files. See BASELINE.md for the
-full protocol.
+Cross-tree comparison: ``tools/bench_ab.py`` (alternating worktree
+runs over ``queries``, ``queries_spread`` and ``common_set``), never
+a division by a calibration probe — probe-normalised comparisons
+proved untrustworthy (BASELINE.md).
 """
 
 from __future__ import annotations
@@ -161,45 +159,6 @@ INDEX_CONFORMANCE = (
     # cascade_probe_only is the amortized steady-state number)
     "cascade_index_search",
 )
-
-
-def _calibration(spark) -> float:
-    """Fixed-overhead probe (r8 VERDICT item 3): time a PLANLESS
-    workload — a codegen-trivial range count plus an empty-stage
-    scheduler roundtrip — whose cost is pure machine/image overhead
-    (JVM, scheduler, py4j), independent of every query plan in this
-    repo. Round-over-round bench comparisons divide by this to
-    separate machine drift from code regressions mechanically."""
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(1_000_000).count()
-        spark.sparkContext.parallelize([], 32).count()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 4)
-
-
-def _calibration_cpu(spark) -> float:
-    """Compute-THROUGHPUT probe (r11): the planless probe above
-    captures fixed overhead (JVM/scheduler/py4j) but not CPU-speed
-    drift — a same-tree rerun measured uniformly ~13% slower showed
-    near-identical planless calibration (thermal/co-tenant CPU
-    contention moves per-core throughput, not the scheduler
-    roundtrip). This probe times a pure whole-stage-codegen
-    aggregation whose cost is ~all CPU, so uniform throughput drift
-    shows up HERE and divides out of ``queries_norm_cpu``."""
-    best = None
-    for _ in range(3):
-        t0 = time.perf_counter()
-        # avg, not sum: a bigint sum of 150M hashes overflows under
-        # ANSI mode; the double mean costs the same hashing work
-        spark.range(600_000_000).selectExpr(
-            "avg(xxhash64(id)) AS s"
-        ).collect()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 4)
 
 
 def _calibration_mc(spark) -> float:
@@ -369,20 +328,13 @@ def main() -> int:
         j1 = _next_job_id(spark)
         if j0 >= 0 and j1 >= 0:
             jobs[key] = round((j1 - j0) / n_execs, 1)
-    # per-family brackets for BOTH calibrators: "fixed" (planless
-    # overhead) and "cpu" (codegen throughput) — [start, end] each
+    # per-family [start, end] brackets of the multi-core probe
     fam_calib: dict[str, dict[str, list[float]]] = {}
 
     def bracket_start(fam: str) -> None:
-        fam_calib[fam] = {
-            "fixed": [_calibration(spark)],
-            "cpu": [_calibration_cpu(spark)],
-            "mc": [_calibration_mc(spark)],
-        }
+        fam_calib[fam] = {"mc": [_calibration_mc(spark)]}
 
     def bracket_end(fam: str) -> None:
-        fam_calib[fam]["fixed"].append(_calibration(spark))
-        fam_calib[fam]["cpu"].append(_calibration_cpu(spark))
         fam_calib[fam]["mc"].append(_calibration_mc(spark))
 
     def run_query(name: str) -> None:
@@ -407,9 +359,6 @@ def main() -> int:
         # ONE query — unchanged measurement — but never leaks into
         # the next query's memory budget)
         cache.release()
-
-    # warm the scheduler/JIT before calibrating
-    _calibration(spark)
 
     # ---- family: the round-over-round COMMON set — FIRST, in the
     # fresh session, before any heavy index build runs (r10 task 2)
@@ -655,8 +604,6 @@ def main() -> int:
     )
     bracket_end("index_serving")
 
-    calib = min(v for f in fam_calib.values() for v in f["fixed"])
-    calib_cpu = min(v for f in fam_calib.values() for v in f["cpu"])
     calib_mc = min(v for f in fam_calib.values() for v in f["mc"])
     total = round(sum(times.values()), 4)
     pair_extra = {}
@@ -678,9 +625,6 @@ def main() -> int:
             # basis IS what "flat within noise" can mean this round
             "queries_pair_b": times_b,
             "queries_spread_pair_b": spreads_b,
-            "queries_norm_cpu_pair_b": {
-                k: round(v / calib_cpu, 2) for k, v in times_b.items()
-            },
             "pair_median_delta": round(med, 4),
             "pair_basis_n": len(basis),
         }
@@ -693,29 +637,17 @@ def main() -> int:
                 "sf": sf,
                 # the explicit round-over-round comparison basis
                 # (COMMON + load path + the amortized serving
-                # numbers) — compare queries_norm_cpu over exactly
-                # these keys
+                # numbers) — compare over exactly these keys
                 "common_set": [*COMMON, "csv_load", *PROBE_ONLY],
                 **pair_extra,
-                # machine fixed-overhead denominator — divide query
-                # times by this to compare rounds across machine
-                # drift; family brackets expose WITHIN-run drift
-                "calibration_sec": calib,
-                "calibration_cpu_sec": calib_cpu,
+                # the run's best multi-core probe reading; family
+                # brackets expose WITHIN-run drift
                 "calibration_mc_sec": calib_mc,
                 "family_calibration": fam_calib,
                 "queries": times,
                 # per-query noise bar: (max-min)/min of the timed
                 # runs — deltas below the spread are noise
                 "queries_spread": spreads,
-                "queries_norm": {
-                    k: round(v / calib, 2) for k, v in times.items()
-                },
-                # normalized by codegen THROUGHPUT — the divisor that
-                # tracks uniform CPU drift between same-tree runs
-                "queries_norm_cpu": {
-                    k: round(v / calib_cpu, 2) for k, v in times.items()
-                },
                 # Spark jobs per execution (r17): the structural
                 # signal — at sf0.1 the heavy entries are
                 # scheduler-bound (~0.15-0.2 s/job), and the job
@@ -733,7 +665,6 @@ def main() -> int:
                 # non-empty means the comparison set silently shrank
                 "missing": missing,
                 "total_sec": total,
-                "total_norm": round(total / calib, 2),
             }
         )
     )
@@ -755,6 +686,7 @@ def main() -> int:
                 "unit": "sec",
                 "sf": sf,
                 "total_sec": total,
+                "calibration_mc_sec": calib_mc,
                 "queries": {k: round(v, 2) for k, v in times.items()},
                 **({"missing": missing} if missing else {}),
             },

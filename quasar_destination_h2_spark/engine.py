@@ -637,9 +637,11 @@ class Engine:
         return similarity.pq_query_lut(queries, cb, m, qid_col, qvec_col)
 
     def _probe_lists(self, man, queries, nprobe, qid_col, qvec_col) -> DataFrame:
-        """Each query's ``nprobe`` nearest lists against the manifest's
-        centroids (similarity.ivfpq_probe_lists)."""
-        cents = self._frame(man["centroids"])
+        """Each query's ``nprobe`` nearest lists, picked in a per-row
+        expression against the manifest's centroids as plan literals
+        (similarity.ivfpq_probe_lists) — no centroid broadcast, no
+        Spark job."""
+        cents = _rows(man["centroids"])
         return similarity.ivfpq_probe_lists(queries, cents, nprobe, qid_col, qvec_col)
 
     def _index_tables(self, name: str) -> list:
@@ -973,8 +975,9 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Query-table-driven search over an IVF+PQ index built
         by :meth:`build_ivfpq_index`: per query, the nprobe nearest
-        coarse lists are selected against the bounded stored
-        centroids, the ADC lookup table scores ONLY the codes in
+        coarse lists are picked in a per-row expression against the
+        manifest's centroids (plan literals — no centroid broadcast,
+        no cross join), the ADC lookup table scores ONLY the codes in
         those lists (the broadcast probe join dynamically prunes the
         partitioned codes scan to nprobe/n_list of the files), and
         the ``shortlist`` best candidates are exact-cosine reranked
@@ -987,7 +990,9 @@ class Engine:
         :func:`operators.similarity.ann_ivfpq_topk`.
         ``exclude_query_ids`` as in :meth:`pq_search`: pass False
         when the external query id space may collide with vec_ids.
-        Raises on a torn index (see :func:`_stamp`)."""
+        Raises on a torn index (see :func:`_stamp`). Nine Spark jobs
+        per steady-state call without ``filter_ids`` (pinned by
+        tests/test_bucketing.py)."""
         man = self._manifest(name, "ivfpq")
         codes, vectors = (self.table(f"{name}_{t}") for t in ("codes", "vectors"))
         probes = self._probe_lists(man, queries, nprobe, query_id_col, query_vec_col)
@@ -1106,8 +1111,9 @@ class Engine:
     ) -> DataFrame:
         """[EXT] Query-table-driven search over an IVF+BQ index built
         by :meth:`build_ivfbq_index`: per query, the nprobe nearest
-        coarse lists are selected against the bounded stored
-        centroids, the query's own sign bits score ONLY the codes in
+        coarse lists are picked against the manifest's centroids as
+        plan literals (the :meth:`ivfpq_search` list choice), the
+        query's own sign bits score ONLY the codes in
         those lists by XOR+popcount (the broadcast probe join
         dynamically prunes the partitioned codes scan to
         nprobe/n_list of the files), and the ``shortlist`` best
@@ -1117,7 +1123,8 @@ class Engine:
         ranking (query_id, vec_id, centroid_id, hamming, rank).
         ``filter_ids`` / ``exclude_query_ids`` as in
         :meth:`ivfpq_search`. Raises on a torn index (see
-        :func:`_stamp`)."""
+        :func:`_stamp`). Nine Spark jobs per steady-state call
+        without ``filter_ids``."""
         man = self._manifest(name, "ivfbq")
         codes, vectors = (self.table(f"{name}_{t}") for t in ("codes", "vectors"))
         probes = self._probe_lists(man, queries, nprobe, query_id_col, query_vec_col)
@@ -1210,7 +1217,8 @@ class Engine:
         """[EXT] The production retrieval FUNNEL over a built cascade
         index (r11 verdict task 3 — the steady-state serving split of
         ``ann_cascade_search``, which trains per run): (1) the
-        bounded stored centroids pick each query's nprobe lists, (2)
+        manifest's centroids, as plan literals, pick each query's
+        nprobe lists in a per-row expression, (2)
         XOR+popcount over ONLY those lists' 16 B sign codes keeps
         ``hamming_cut`` candidates (the probe join dynamically prunes
         the partitioned codes scan to nprobe/n_list of the files),
@@ -1221,7 +1229,9 @@ class Engine:
         survivors' float vectors via the same pruned point lookups.
         Probe I/O ~ corpus x (nprobe/n_list) x (17 B/256 B of the
         compressed tiers) + bounded-pair work; no stage rescans the
-        corpus. Raises on a torn index (see :func:`_stamp`)."""
+        corpus. Raises on a torn index (see :func:`_stamp`).
+        Fourteen Spark jobs per steady-state call without
+        ``filter_ids``."""
         man = self._manifest(name, "cascade")
         codes_bq, codes_pq, vectors = (
             self.table(f"{name}_{t}") for t in ("codes", "codes_pq", "vectors")

@@ -54,6 +54,19 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _topk(scored: DataFrame, k: int, score: Column, tie: str) -> DataFrame:
+    """Per query, the ``k`` best rows of ``scored`` by the ordering
+    ``score`` (``F.desc(similarity)``, or an ascending distance), ties
+    to the lower ``tie`` id, with their ``rank`` 1..k: the one top-k
+    cut of every ranking operator here — a row_number window
+    partitioned by query_id, per-query work and never a global sort
+    (the per-partition top-k of REPOSE, ICDE 2021)."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col(tie))
+    return scored.withColumn("rank", F.row_number().over(w).cast("int")).where(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -75,14 +88,7 @@ def brute_force_topk(
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _topk(scored, k, F.desc("cos_sim"), "neighbor_id")
 
 
 def bucket_expr(vec_col: Column, planes: list[list[float]]) -> Column:
@@ -147,14 +153,7 @@ def lsh_bucketed_topk(
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "bucket", "cos_sim", "rank")
-    )
+    return _topk(scored, k, F.desc("cos_sim"), "neighbor_id")
 
 
 #: IVF coarse-quantizer: centroids are dataset vectors picked by a
@@ -681,6 +680,66 @@ def semantic_dedup(
     )
 
 
+def _top_lists(rows: list[tuple[int, list[float]]], nprobe: int) -> Column:
+    """Per row of a (query_id, qv) frame, its ``nprobe`` nearest IVF
+    lists as an array of struct(s, nc = -centroid_id), nearest first.
+    The centroids are driver-held plan LITERALS (``rows`` of
+    :func:`_centroid_rows`, the literal-argmax of :func:`ivf_assign`):
+    each query row scores every centroid in one per-row expression,
+    ``sort_array``s the (6-rounded cosine, -centroid_id) structs
+    descending and keeps the first ``nprobe`` — the scores and the
+    lower-id tie order of a window top-nprobe, with no centroid
+    broadcast, no cross join and no window."""
+    if not rows:
+        return F.expr("CAST(array() AS array<struct<s: double, nc: bigint>>)")
+    return F.expr(
+        _entry_scores_sql(
+            "qv", rows, f"slice(sort_array({{}}, false), 1, {max(nprobe, 0)})"
+        )
+    )
+
+
+def _nearest_lists(
+    qv: DataFrame, rows: list[tuple[int, list[float]]], nprobe: int
+) -> DataFrame:
+    """``qv`` (query_id, qv) with each query exploded to its
+    ``nprobe`` nearest lists (:func:`_top_lists`): + centroid_id."""
+    return qv.select(
+        "query_id", "qv", F.explode(_top_lists(rows, nprobe)).alias("_p")
+    ).select("query_id", "qv", (-F.col("_p.nc")).alias("centroid_id"))
+
+
+def _scan_lists(
+    assigned: DataFrame,
+    q: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    broadcast: bool = True,
+    exclude_self: bool = False,
+) -> DataFrame:
+    """The probe of the (query_id, qv, centroid_id) frame ``q`` over
+    the inverted lists ``assigned``: ONE equality join on centroid_id
+    (``q`` broadcast unless ``broadcast`` is False), exact 6-rounded
+    cosines, a per-query top-k. Output (query_id, neighbor_id,
+    centroid_id, cos_sim, rank)."""
+    c = assigned.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+        "centroid_id",
+    )
+    j = c.join(F.broadcast(q) if broadcast else q, "centroid_id")
+    if exclude_self:
+        j = j.where(F.col("query_id") != F.col("neighbor_id"))
+    scored = j.select(
+        "query_id",
+        "neighbor_id",
+        "centroid_id",
+        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
+    )
+    return _topk(scored, k, F.desc("cos_sim"), "neighbor_id")
+
+
 def ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -689,116 +748,38 @@ def ivf_topk(
     vec_col: str = "embedding",
     n_list: int = IVF_N_LIST,
     cents: DataFrame | None = None,
+    nprobe: int = 1,
 ) -> DataFrame:
-    """IVF-flat ANN (nprobe=1): search only the query's own centroid
-    list. At scale the corpus is partitioned (or stored bucketed) by
-    centroid_id, so a probe scans one inverted list, not the corpus.
-    ``cents`` swaps in a refined coarse quantizer (kmeans_refine);
-    default = the md5-seeded draw.
+    """IVF-flat ANN: each corpus vector with id < ``n_queries``
+    searches its ``nprobe`` nearest centroid lists (itself excluded).
+    At scale the corpus is partitioned (or stored bucketed) by
+    centroid_id, so a probe scans nprobe inverted lists, not the
+    corpus; every joined pair is unique because a corpus vector lives
+    in exactly one list. ``cents`` swaps in a refined coarse quantizer
+    (kmeans_refine); default = the md5-seeded draw.
 
-    The assignment is MATERIALIZED (``localCheckpoint``) — that is
-    the IVF index build, done once and probed many times; leaving it
-    declarative makes every subtree that touches the index re-scan
-    and re-assign the whole corpus (verified: 4 embedding scans
-    without, 1 with)."""
+    The centroids are collected once and serve both the assignment
+    and the list selection. The assignment is MATERIALIZED
+    (``localCheckpoint``) — that is the IVF index build, done once and
+    probed many times; leaving it declarative makes every subtree that
+    touches the index re-scan and re-assign the whole corpus
+    (verified: 4 embedding scans without, 1 with). The queries are
+    read from it: at nprobe=1 each query's own list is the one its
+    assignment names (its nearest centroid — reading it measured
+    faster than scoring the literal centroids again); above, the lists
+    are the literal top-nprobe of :func:`ann_search`."""
     if cents is None:
         cents = ivf_centroids(emb, id_col, vec_col, n_list)
-    assigned = ivf_assign(emb, cents, id_col, vec_col).localCheckpoint()
+    rows = cents.select("centroid_id", "cvec").collect()
+    assigned = ivf_assign(emb, rows, id_col, vec_col).localCheckpoint()
     q = assigned.where(F.col(id_col) < n_queries).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
         "centroid_id",
     )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "centroid_id",
-    )
-    scored = (
-        c.join(F.broadcast(q), "centroid_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "centroid_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "centroid_id", "cos_sim", "rank")
-    )
-
-
-def ivf_topk_nprobe(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 3,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_list: int = IVF_N_LIST,
-    cents: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-flat ANN with multi-probe (nprobe > 1): each query searches
-    its `nprobe` nearest centroid lists instead of only its own —
-    the standard recall lever when the true neighbor's list differs
-    from the query's (cell-boundary misses). Cost scales linearly in
-    nprobe and stays ∝ corpus/n_list per probe; every joined pair is
-    unique because a corpus vector lives in exactly one inverted
-    list. Same probed-bucket equality join as nprobe=1 — never a
-    corpus scan per query. Centroids (n_list rows) and the
-    assignment (the index) are both materialized once — index build,
-    then probe. ``cents`` swaps in a refined coarse quantizer
-    (kmeans_refine); default = the md5-seeded draw."""
-    if cents is None:
-        cents = ivf_centroids(emb, id_col, vec_col, n_list)
-    cents = cents.localCheckpoint()
-    assigned = ivf_assign(emb, cents, id_col, vec_col).localCheckpoint()
-    qv = emb.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    probes = qv.crossJoin(F.broadcast(cents)).select(
-        "query_id",
-        "qv",
-        "centroid_id",
-        F.round(cosine(F.col("qv"), F.col("cvec")), 6).alias("_sim"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("centroid_id")
-    )
-    q = (
-        probes.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "centroid_id",
-    )
-    scored = (
-        c.join(F.broadcast(q), "centroid_id")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "centroid_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "centroid_id", "cos_sim", "rank")
-    )
+    if nprobe != 1:
+        q = _nearest_lists(q.drop("centroid_id"), _centroid_rows(rows), nprobe)
+    return _scan_lists(assigned, q, k, id_col, vec_col, exclude_self=True)
 
 
 def ann_search(
@@ -824,22 +805,17 @@ def ann_search(
     caller already holds (engine.ann_topk passes the centroids of
     the index manifest).
 
-    Shape: the n_list centroids are driver-held plan LITERALS
-    (:func:`_centroid_rows`, the literal-argmax of :func:`ivf_assign`).
-    Each query row scores every literal centroid in one per-row
-    expression, ``sort_array``s the (6-rounded cosine, -centroid_id)
-    structs descending and keeps the first ``nprobe`` — the same
-    scores and the same lower-id tie order as a window top-nprobe,
-    with no centroid broadcast, no cross join and no window. The
-    exploded (query, list) frame then meets the stored lists in ONE
-    equality join on centroid_id — per query, nprobe lists are
-    scanned, never the corpus — and a per-query row_number top-k.
-    No rebuild, no per-query replanning; query count scales the
-    probe join's small side only.
+    Shape: each query picks its ``nprobe`` lists against the literal
+    centroids (:func:`_nearest_lists`); the exploded (query, list)
+    frame then meets the stored lists in ONE equality join on
+    centroid_id — per query, nprobe lists are scanned, never the
+    corpus — and a per-query row_number top-k. No rebuild, no
+    per-query replanning; query count scales the probe join's small
+    side only.
 
     ``broadcast_queries`` (default True — the serving contract: a
     probe call carries a bounded query BATCH) hints the probe frame
-    into the list join exactly like ivf_topk_nprobe, so the stored
+    into the list join exactly like :func:`ivf_topk`, so the stored
     corpus streams with zero corpus-side exchange. Pass False for a
     query table that rivals the corpus (offline all-pairs scoring):
     the join falls back to a key join AQE plans — with the index
@@ -847,43 +823,12 @@ def ann_search(
     co-located buckets without a shuffle.
 
     Output: (query_id, neighbor_id, centroid_id, cos_sim, rank)."""
-    rows = _centroid_rows(cents)
     qv = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("qv"),
     )
-    if rows:
-        top = _entry_scores_sql(
-            "qv", rows, f"slice(sort_array({{}}, false), 1, {max(nprobe, 0)})"
-        )
-        q = qv.select(
-            "query_id", "qv", F.explode(F.expr(top)).alias("_p")
-        ).select("query_id", "qv", (-F.col("_p.nc")).alias("centroid_id"))
-    else:
-        q = qv.select(
-            "query_id", "qv", F.lit(None).cast("bigint").alias("centroid_id")
-        ).where(F.lit(False))
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "centroid_id",
-    )
-    scored = c.join(
-        F.broadcast(q) if broadcast_queries else q, "centroid_id"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        "centroid_id",
-        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "centroid_id", "cos_sim", "rank")
-    )
+    q = _nearest_lists(qv, _centroid_rows(cents), nprobe)
+    return _scan_lists(assigned, q, k, id_col, vec_col, broadcast_queries)
 
 
 def ivf_recall(
@@ -919,8 +864,8 @@ def ivf_recall(
     exact = brute_force_topk(emb, n_queries, k, id_col, vec_col).select(
         "query_id", "neighbor_id"
     )
-    approx = ivf_topk_nprobe(
-        emb, n_queries, k, nprobe, id_col, vec_col, n_list, cents
+    approx = ivf_topk(
+        emb, n_queries, k, id_col, vec_col, n_list, cents, nprobe
     ).select("query_id", "neighbor_id", F.lit(1).alias("_hit"))
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")
@@ -1290,21 +1235,7 @@ def hard_negative_mining(
         "neighbor_label",
         F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            "cos_sim",
-            "rank",
-        )
-    )
+    return _topk(scored, k, F.desc("cos_sim"), "neighbor_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1596,14 +1527,7 @@ def ann_pq_topk(
     )
     if exclude_self:
         scored = scored.where(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score_micro", "rank")
-    )
+    return _topk(scored, k, F.desc("score_micro"), "vec_id")
 
 
 def pq_recall(
@@ -1642,11 +1566,8 @@ def pq_recall(
         "neighbor_id",
         F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    exact = scored.withColumn("r", F.row_number().over(w)).where(
-        F.col("r") <= k
+    exact = _topk(scored, k, F.desc("sim"), "neighbor_id").select(
+        "query_id", "neighbor_id"
     )
     hits = exact.join(
         topk_pq.withColumnRenamed("vec_id", "neighbor_id"),
@@ -1673,6 +1594,44 @@ def pq_recall(
     )
 
 
+def ann_flat_rerank(
+    emb: DataFrame,
+    shortlist: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "qv",
+) -> DataFrame:
+    """Exact cosine rerank of a per-query candidate shortlist
+    (query_id, vec_id) — the second step of the compressed serving
+    paths: a PQ or 1-bit probe prunes the corpus to nq x shortlist
+    candidates, then ONLY those float vectors of ``emb`` are read back
+    (a join on the id, then the bounded query frame broadcast).
+    :func:`ann_ivfpq_rerank` is the centroid-pruned form for a
+    centroid-partitioned vector store. Output (query_id, vec_id, sim,
+    rank), ties to the lower vec_id."""
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.col(query_vec_col).alias("qv"),
+    )
+    j = (
+        shortlist.select("query_id", "vec_id")
+        .join(
+            emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
+            "vec_id",
+        )
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "vec_id",
+            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
+        )
+    )
+    return _topk(j, k, F.desc("sim"), "vec_id")
+
+
 def ann_pq_rerank(
     emb: DataFrame,
     codes: DataFrame,
@@ -1688,46 +1647,24 @@ def ann_pq_rerank(
 ) -> DataFrame:
     """The production PQ serving path: ADC prunes the corpus to a
     per-query shortlist (one compressed-codes pass), then ONLY the
-    shortlisted float vectors are read back for an exact cosine
-    rerank — nq x shortlist vector reads instead of a corpus scan,
-    which is what makes exact-quality top-k affordable at 100 TB.
-    Pass ``queries`` (the LUT's input frame) so the rerank reads the
-    query vectors from it directly; without it they are fished back
-    out of ``emb`` via the shortlist's query ids (an extra corpus
-    scan — fine for one-shot analysis, not for serving).
-    ``exclude_self`` as in :func:`ann_pq_topk`.
+    shortlisted float vectors are read back for the exact cosine
+    rerank of :func:`ann_flat_rerank` — nq x shortlist vector reads
+    instead of a corpus scan, which is what makes exact-quality top-k
+    affordable at 100 TB. Pass ``queries`` (the LUT's input frame) so
+    the rerank reads the query vectors from it directly; without it
+    they are fished back out of ``emb`` via the shortlist's query ids
+    (an extra corpus scan — fine for one-shot analysis, not for
+    serving). ``exclude_self`` as in :func:`ann_pq_topk`.
     Output (query_id, vec_id, sim, rank), ties to the lower vec_id."""
     short = ann_pq_topk(codes, lut, shortlist, exclude_self)
-    if queries is not None:
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("qv"),
-        )
-    else:
+    if queries is None:
         qids = short.select("query_id").distinct()
-        q = emb.join(
+        queries = emb.join(
             F.broadcast(qids), emb[id_col] == qids["query_id"]
         ).select("query_id", F.col(vec_col).alias("qv"))
-    j = (
-        short.select("query_id", "vec_id")
-        .join(
-            emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
-            "vec_id",
-        )
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
+        query_id_col, query_vec_col = "query_id", "qv"
+    return ann_flat_rerank(
+        emb, short, queries, k, id_col, vec_col, query_id_col, query_vec_col
     )
 
 
@@ -1796,29 +1733,35 @@ def ivfpq_encode(
 
 def ivfpq_probe_lists(
     queries: DataFrame,
-    cents: DataFrame,
+    cents: "DataFrame | list",
     nprobe: int = 2,
     query_id_col: str = "query_id",
     query_vec_col: str = "qv",
 ) -> DataFrame:
     """Per query, the nprobe nearest IVF lists (max rounded cosine,
     ties to the lower centroid id) — (query_id, centroid_id), a
-    bounded nq x nprobe frame built from a broadcast centroid
-    cross."""
-    scored = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("_q")
-    ).crossJoin(F.broadcast(cents.select("centroid_id", "cvec"))).select(
-        "query_id",
-        "centroid_id",
-        F.round(cosine(F.col("_q"), F.col("cvec")), 6).alias("_sim"),
+    bounded nq x nprobe frame: the literal top-nprobe of
+    :func:`ann_search` (:func:`_top_lists`). ``cents`` is the
+    centroid frame or rows the caller already holds (the engine
+    passes the centroids of the index manifest, which cost no Spark
+    job).
+
+    The frame is broadcast into joins with centroid-PARTITIONED
+    tables, and Spark plans dynamic partition pruning into such a join
+    only when the broadcast side carries a selective predicate — and
+    one on centroid_id itself measured no pruning (it reaches the
+    partitioned scan as a static filter instead). So the lists are
+    exploded with their position, and ``position < nprobe`` is that
+    predicate: true of every row, like the window top-nprobe filter it
+    stands in for."""
+    qv = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_sim").desc(), F.col("centroid_id")
-    )
+    top = _top_lists(_centroid_rows(cents), nprobe)
     return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .where(F.col("_r") <= nprobe)
-        .select("query_id", "centroid_id")
+        qv.select("query_id", F.posexplode(top).alias("_i", "_p"))
+        .where(F.col("_i") < nprobe)
+        .select("query_id", (-F.col("_p.nc")).alias("centroid_id"))
     )
 
 
@@ -1863,14 +1806,7 @@ def ann_ivfpq_topk(
     )
     if exclude_self:
         scored = scored.where(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "centroid_id", "score_micro", "rank")
-    )
+    return _topk(scored, k, F.desc("score_micro"), "vec_id")
 
 
 def ann_ivfpq_rerank(
@@ -1878,15 +1814,17 @@ def ann_ivfpq_rerank(
     shortlist: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "qv",
 ) -> DataFrame:
-    """Exact cosine rerank of an IVFPQ shortlist. The join carries
-    (centroid_id, vec_id), so over a centroid_id-partitioned vector
-    store the read prunes to the probed lists before the point
-    lookups. Output (query_id, vec_id, sim, rank)."""
+    """Exact cosine rerank of an IVFPQ shortlist — the centroid-pruned
+    form of :func:`ann_flat_rerank`. ``vectors`` carries vec_id and
+    ``vec_col`` (and centroid_id, when stored by list). The broadcast
+    shortlist joins on (centroid_id, vec_id), so over a
+    centroid_id-partitioned vector store dynamic partition pruning
+    restricts the read to the probed lists before the point lookups.
+    Output (query_id, vec_id, sim, rank)."""
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(query_vec_col).alias("qv"),
@@ -1905,14 +1843,7 @@ def ann_ivfpq_rerank(
             F.round(cosine(F.col("qv"), F.col(vec_col)), 6).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    return _topk(j, k, F.desc("sim"), "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2240,14 +2171,7 @@ def ann_ivfpq_residual_topk(
     :func:`ann_ivfpq_topk` — (query_id, vec_id, centroid_id,
     score_micro, rank)."""
     scored = ivfpq_residual_scores(codes, lut, probes, coarse, exclude_self)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "centroid_id", "score_micro", "rank")
-    )
+    return _topk(scored, k, F.desc("score_micro"), "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2276,6 +2200,31 @@ _BQ_SIG = (
 )
 
 
+def _sign_words(vec_col: str, dim: int, who: str) -> list:
+    """The sign pattern of ``vec_col`` as two bigint words — bits
+    0..31 and 32..63 — rather than one, so no value ever touches the
+    sign bit (engine-portable arithmetic; DuckDB replays the packing
+    exactly). Specialized to dim == 64 (this repo's embedding
+    convention): other dims are REFUSED rather than silently
+    truncated (``who`` names the caller in the error) — extend the
+    word slices to ceil(dim/32) words for wider vectors."""
+    if dim != 64:
+        raise ValueError(
+            f"{who} packs exactly 64 sign bits (got dim={dim}); "
+            "extend the _BQ_SIG word slices for other dimensions"
+        )
+    return [F.expr(_BQ_SIG.format(v=vec_col, off=off)) for off in (1, 33)]
+
+
+def _hamming() -> Column:
+    """Differing sign bits between a code's (sig_lo, sig_hi) and its
+    query's (q_lo, q_hi): XOR + popcount per word, integer only."""
+    return (
+        F.bit_count(F.col("sig_lo").bitwiseXOR(F.col("q_lo")))
+        + F.bit_count(F.col("sig_hi").bitwiseXOR(F.col("q_hi")))
+    ).cast("bigint")
+
+
 def bq_encode(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -2283,24 +2232,13 @@ def bq_encode(
     dim: int = EMBED_DIM,
 ) -> DataFrame:
     """One corpus pass producing the 1-bit codes: (vec_id, sig_lo,
-    sig_hi) — bits 0..31 and 32..63 of the 64-dim sign pattern. Two
-    bigint halves rather than one so no value ever touches the sign
-    bit (engine-portable arithmetic; DuckDB replays the packing
-    exactly). Zero-shuffle codegen projection. The packing is
-    specialized to dim == 64 (this repo's embedding convention) and
-    REFUSES other dims rather than silently truncating — extend the
-    _BQ_SIG slices to ceil(dim/32) words for wider vectors.
-    Precondition (like every encoder here): vectors actually carry
-    ``dim`` elements."""
-    if dim != 64:
-        raise ValueError(
-            f"bq_encode packs exactly 64 sign bits (got dim={dim}); "
-            "extend the _BQ_SIG word slices for other dimensions"
-        )
+    sig_hi) — the two words of the 64-dim sign pattern
+    (:func:`_sign_words`, which refuses other dims). Zero-shuffle
+    codegen projection. Precondition (like every encoder here):
+    vectors actually carry ``dim`` elements."""
+    lo, hi = _sign_words(vec_col, dim, "bq_encode")
     return emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.expr(_BQ_SIG.format(v=vec_col, off=1)).alias("sig_lo"),
-        F.expr(_BQ_SIG.format(v=vec_col, off=33)).alias("sig_hi"),
+        F.col(id_col).alias("vec_id"), lo.alias("sig_lo"), hi.alias("sig_hi")
     )
 
 
@@ -2326,67 +2264,9 @@ def ann_bq_topk(
             if exclude_self
             else F.lit(True)
         )
-        .select(
-            "query_id",
-            "vec_id",
-            (
-                F.bit_count(F.col("sig_lo").bitwiseXOR(F.col("q_lo")))
-                + F.bit_count(F.col("sig_hi").bitwiseXOR(F.col("q_hi")))
-            )
-            .cast("bigint")
-            .alias("hamming"),
-        )
+        .select("query_id", "vec_id", _hamming().alias("hamming"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming"), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "hamming", "rank")
-    )
-
-
-def ann_bq_rerank(
-    emb: DataFrame,
-    shortlist: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "qv",
-) -> DataFrame:
-    """Exact cosine rerank of a hamming shortlist — the BQ serving
-    path: the 1-bit probe prunes the corpus to nq x shortlist
-    candidates (a 32x-compressed scan), then ONLY those float vectors
-    are read back. Output (query_id, vec_id, sim, rank), ties to the
-    lower vec_id."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-    )
-    j = (
-        shortlist.select("query_id", "vec_id")
-        .join(
-            emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("cv")),
-            "vec_id",
-        )
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "sim", "rank")
-    )
+    return _topk(scored, k, F.col("hamming"), "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -2417,18 +2297,14 @@ def ivfbq_encode(
     zero-shuffle codegen projection, so composing costs exactly the
     coarse assignment; pass ``assigned`` (id, vec, centroid_id —
     e.g. the engine's stored vectors table) to skip even that."""
-    if dim != 64:
-        raise ValueError(
-            f"ivfbq_encode packs exactly 64 sign bits (got dim={dim}); "
-            "extend the _BQ_SIG word slices for other dimensions"
-        )
+    lo, hi = _sign_words(vec_col, dim, "ivfbq_encode")
     if assigned is None:
         assigned = ivf_assign(emb, cents, id_col, vec_col)
     return assigned.select(
         F.col(id_col).alias("vec_id"),
         "centroid_id",
-        F.expr(_BQ_SIG.format(v=vec_col, off=1)).alias("sig_lo"),
-        F.expr(_BQ_SIG.format(v=vec_col, off=33)).alias("sig_hi"),
+        lo.alias("sig_lo"),
+        hi.alias("sig_hi"),
     )
 
 
@@ -2454,26 +2330,11 @@ def ann_ivfbq_topk(
     if allowed is not None:
         cand = cand.join(allowed.select("vec_id"), "vec_id", "left_semi")
     scored = cand.join(F.broadcast(query_codes), "query_id").select(
-        "query_id",
-        "vec_id",
-        "centroid_id",
-        (
-            F.bit_count(F.col("sig_lo").bitwiseXOR(F.col("q_lo")))
-            + F.bit_count(F.col("sig_hi").bitwiseXOR(F.col("q_hi")))
-        )
-        .cast("bigint")
-        .alias("hamming"),
+        "query_id", "vec_id", "centroid_id", _hamming().alias("hamming")
     )
     if exclude_self:
         scored = scored.where(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming"), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "centroid_id", "hamming", "rank")
-    )
+    return _topk(scored, k, F.col("hamming"), "vec_id")
 
 
 def ann_cascade_pq_narrow(
@@ -2512,14 +2373,7 @@ def ann_cascade_pq_narrow(
         .groupBy("query_id", "vec_id", *carry)
         .agg(F.sum("part_micro").alias("score_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", *carry, "score_micro", "rank")
-    )
+    return _topk(scored, k, F.desc("score_micro"), "vec_id")
 
 
 def bq_query_codes(
@@ -2537,11 +2391,7 @@ def bq_query_codes(
     validates the actual array lengths with one pass over the query
     table: a short vector would otherwise silently pack zero bits
     and return confidently wrong rankings."""
-    if dim != 64:
-        raise ValueError(
-            f"bq_query_codes packs exactly 64 sign bits (got dim={dim}); "
-            "extend the _BQ_SIG word slices for other dimensions"
-        )
+    lo, hi = _sign_words(query_vec_col, dim, "bq_query_codes")
     bad = queries.where(F.size(F.col(query_vec_col)) != dim).take(1)
     if bad:
         raise ValueError(
@@ -2550,9 +2400,7 @@ def bq_query_codes(
             f"{len(bad[0][query_vec_col] or [])} dims, expected {dim}"
         )
     return queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.expr(_BQ_SIG.format(v=query_vec_col, off=1)).alias("q_lo"),
-        F.expr(_BQ_SIG.format(v=query_vec_col, off=33)).alias("q_hi"),
+        F.col(query_id_col).alias("query_id"), lo.alias("q_lo"), hi.alias("q_hi")
     )
 
 
@@ -2594,19 +2442,12 @@ def mmr_select(
     inv = F.lit(1_000_000 - lam_ppm).cast("bigint")
 
     def pick(scored: DataFrame, step: int) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("mmr_score").desc(), F.col("vec_id")
-        )
-        return (
-            scored.withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") == 1)
-            .select(
-                "query_id",
-                F.lit(step).cast("int").alias("step"),
-                "vec_id",
-                "_v",
-                "mmr_score",
-            )
+        return _topk(scored, 1, F.desc("mmr_score"), "vec_id").select(
+            "query_id",
+            F.lit(step).cast("int").alias("step"),
+            "vec_id",
+            "_v",
+            "mmr_score",
         )
 
     selected = pick(

@@ -1133,7 +1133,7 @@ def q_ivf_topk_ann_nprobe2(t: TableSet) -> DataFrame:
     """IVF-flat ANN with multi-probe (nprobe=2): each query searches
     its two nearest inverted lists — the recall lever for
     cell-boundary misses; cost stays ∝ nprobe * corpus / n_list."""
-    return similarity.ivf_topk_nprobe(t.embeddings)
+    return similarity.ivf_topk(t.embeddings, nprobe=2)
 
 
 @query(
@@ -4670,8 +4670,8 @@ def _ivfpq_spark_parts(t: TableSet, nq: int = 3):
 )
 def q_ann_ivfpq_adc(t: TableSet) -> DataFrame:
     """The composed IVF+PQ probe at the ADC level: each query picks
-    its nprobe=2 nearest k-means-refined lists (bounded centroid
-    cross), and ONLY the compressed codes in those lists are scored
+    its nprobe=2 nearest k-means-refined lists (the centroids scored
+    as plan literals per query row), and ONLY the compressed codes in those lists are scored
     by the bigint LUT sums — candidate cost ~ corpus x
     (nprobe/n_list) x (M ints / dim floats), the multiplicative
     prune that makes 100 TB ANN affordable. Exact integer arithmetic
@@ -5280,7 +5280,7 @@ def q_ann_bq_search(t: TableSet) -> DataFrame:
     scan, same contract as the PQ/IVFPQ serving forms."""
     emb, codes, qc, q = _bq_spark_parts(t)
     short = similarity.ann_bq_topk(codes, qc, similarity.PQ_SHORTLIST)
-    return similarity.ann_bq_rerank(emb, short, q, 5).orderBy(
+    return similarity.ann_flat_rerank(emb, short, q, 5).orderBy(
         "query_id", "rank"
     )
 
@@ -5371,7 +5371,7 @@ def q_ann_bq_recall(t: TableSet) -> DataFrame:
         F.col("recall_ppm").alias("recall_adc_ppm"),
     )
     rr = similarity.pq_recall(
-        emb, similarity.ann_bq_rerank(emb, short, q, 5), 5, query_ids=q
+        emb, similarity.ann_flat_rerank(emb, short, q, 5), 5, query_ids=q
     ).select(
         "query_id",
         F.col("n_hit").alias("n_hit_rerank"),
@@ -5588,8 +5588,8 @@ def _ivfbq_spark_parts(t: TableSet, nq: int = 3):
 )
 def q_ann_ivfbq_hamming(t: TableSet) -> DataFrame:
     """The composed IVF+BQ probe at the Hamming level: each query
-    picks its nprobe=2 nearest k-means-refined lists (bounded
-    centroid cross), and ONLY the packed sign codes in those lists
+    picks its nprobe=2 nearest k-means-refined lists (the centroids
+    scored as plan literals per query row), and ONLY the packed sign codes in those lists
     are XOR+popcount-scored — candidate I/O ~ corpus x
     (nprobe/n_list) x (16 B / 256 B float32), turning the flat
     ann_bq_topk scan into a pruned one. Pure integer arithmetic;
@@ -6010,7 +6010,7 @@ def q_ann_cascade_search(t: TableSet) -> DataFrame:
     stage1 = similarity.ann_ivfbq_topk(codes_bq, qc, probes, 200)
     lut = similarity.pq_query_lut(q, cb, id_col="query_id", vec_col="qv")
     stage2 = similarity.ann_cascade_pq_narrow(stage1, codes_pq, lut, 50)
-    return similarity.ann_bq_rerank(emb, stage2, q, 5).orderBy(
+    return similarity.ann_flat_rerank(emb, stage2, q, 5).orderBy(
         "query_id", "rank"
     )
 

@@ -264,29 +264,39 @@ def _stored(engine, name, state="centroids"):
     return engine._frame(engine._read_manifest(name)[state])
 
 
-def _window_ann_reference(assigned, cents, queries, k, nprobe):
-    """The reference IVF probe, all in the plan: every centroid scored
-    against every query through a cross join, a window top-nprobe per
-    query (ties to the lower centroid id), the list join and a
-    per-query window top-k."""
-    from pyspark.sql import Window
-
+def _sim(a, b):
     from quasar_destination_h2_spark.operators import similarity
 
-    sim = lambda a, b: F.round(similarity.cosine(F.col(a), F.col(b)), 6)  # noqa: E731
-    lists = (
+    return F.round(similarity.cosine(F.col(a), F.col(b)), 6)
+
+
+def _window_lists(cents, queries, nprobe):
+    """The reference list choice, all in the plan: every centroid
+    scored against every query through a cross join, a window
+    top-nprobe per query (ties to the lower centroid id)."""
+    from pyspark.sql import Window
+
+    return (
         queries.crossJoin(cents.select("centroid_id", "cvec"))
         .withColumn(
             "_rn",
             F.row_number().over(
                 Window.partitionBy("query_id").orderBy(
-                    sim("qv", "cvec").desc(), "centroid_id"
+                    _sim("qv", "cvec").desc(), "centroid_id"
                 )
             ),
         )
         .where(F.col("_rn") <= nprobe)
         .select("query_id", "qv", "centroid_id")
     )
+
+
+def _window_ann_reference(assigned, cents, queries, k, nprobe):
+    """The reference IVF probe, all in the plan: the window list
+    choice, the list join and a per-query window top-k."""
+    from pyspark.sql import Window
+
+    lists = _window_lists(cents, queries, nprobe)
     scored = (
         assigned.select(
             F.col("vec_id").alias("neighbor_id"),
@@ -298,7 +308,7 @@ def _window_ann_reference(assigned, cents, queries, k, nprobe):
             "query_id",
             "neighbor_id",
             "centroid_id",
-            sim("qv", "cv").alias("cos_sim"),
+            _sim("qv", "cv").alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
@@ -333,13 +343,22 @@ def probe_index(engine, spark):
 def test_ann_probe_matches_window_reference(engine, spark, probe_index, nprobe):
     """The literal-centroid probe equals the cross-join + window
     reference row for row at nprobe=1, a middle value, nprobe = n_list
-    and nprobe > n_list — and probing every list is the exact top-k."""
+    and nprobe > n_list — and probing every list is the exact top-k.
+    ivfpq_probe_lists (the list choice of the compressed families,
+    given the centroids as rows like the manifest's) picks the
+    reference's lists."""
+    from quasar_destination_h2_spark.operators import similarity
+
     assigned, cents = probe_index
     queries = _probe_queries(spark)
     rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     got = rows(engine.ann_topk("annp", queries, k=6, nprobe=nprobe))
     assert got == rows(_window_ann_reference(assigned, cents, queries, 6, nprobe))
     assert len(got) == 5 * 6
+    lists = similarity.ivfpq_probe_lists(queries, cents.collect(), nprobe)
+    ref = _window_lists(cents, queries, nprobe).select("query_id", "centroid_id")
+    assert rows(lists) == rows(ref)
+    assert len(rows(lists)) == 5 * min(nprobe, cents.count())
     if nprobe >= cents.count():
         # every list probed: the exact top-k over the whole assignment
         from pyspark.sql import Window
@@ -368,7 +387,8 @@ def test_ann_probe_matches_window_reference(engine, spark, probe_index, nprobe):
 def test_ann_probe_tied_centroids_pick_lower_id(spark):
     """Centroids 3 and 5 are the same vector, so every query scores
     them equally: nprobe=1 probes list 3 only, nprobe=2 both — the
-    window reference's lower-id tie order."""
+    window reference's lower-id tie order, in ann_search and in
+    ivfpq_probe_lists alike."""
     from quasar_destination_h2_spark.operators import similarity
 
     cents = spark.createDataFrame(
@@ -382,11 +402,16 @@ def test_ann_probe_tied_centroids_pick_lower_id(spark):
     queries = spark.createDataFrame(
         [(0, [1.0, 0.2, 0.0]), (1, [0.9, 0.0, 0.1])], "query_id int, qv array<double>"
     )
+    rows = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     for nprobe, lists in ((1, {3}), (2, {3, 5})):
         got = similarity.ann_search(assigned, cents, queries, k=10, nprobe=nprobe)
         ref = _window_ann_reference(assigned, cents, queries, 10, nprobe)
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+        assert rows(got) == rows(ref)
         assert {r.centroid_id for r in got.collect()} == lists
+        picked = similarity.ivfpq_probe_lists(queries, cents, nprobe)
+        want = _window_lists(cents, queries, nprobe).select("query_id", "centroid_id")
+        assert rows(picked) == rows(want)
+        assert {r.centroid_id for r in picked.collect()} == lists
 
 
 def test_ann_probe_job_budget(engine, spark, probe_index):
@@ -417,9 +442,9 @@ def compressed_indexes(engine, spark):
     "search, name, budget",
     [
         ("pq_search", "budpq", 6),
-        ("ivfpq_search", "budipq", 11),
-        ("ivfbq_search", "budibq", 11),
-        ("cascade_search", "budcas", 16),
+        ("ivfpq_search", "budipq", 9),
+        ("ivfbq_search", "budibq", 9),
+        ("cascade_search", "budcas", 14),
     ],
 )
 def test_compressed_probe_job_budget(
@@ -1080,7 +1105,7 @@ def test_cascade_index_lifecycle(engine, spark):
     direct = sorted(
         map(
             tuple,
-            similarity.ann_bq_rerank(emb, stage2, queries, 5).collect(),
+            similarity.ann_flat_rerank(emb, stage2, queries, 5).collect(),
         )
     )
     assert direct == rows1

@@ -624,7 +624,7 @@ def test_single_fact_scan_after_materialization(t):
     assert n_scans(rollup.rollup_cascade(t.events), "events") <= 1
     assert n_scans(rollup.user_sketch_rollup(t.events), "events") <= 1
     assert n_scans(similarity.ivf_topk(t.embeddings), "embeddings") <= 1
-    assert n_scans(similarity.ivf_topk_nprobe(t.embeddings), "embeddings") <= 1
+    assert n_scans(similarity.ivf_topk(t.embeddings, nprobe=2), "embeddings") <= 1
     assert n_scans(similarity.semantic_dedup(t.embeddings), "embeddings") <= 1
 
 
@@ -2111,7 +2111,7 @@ def test_ivf_recall_bounds_and_self_consistency(t):
     }
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in S.ivf_topk_nprobe(t.embeddings, k=5).collect()
+        for r in S.ivf_topk(t.embeddings, k=5, nprobe=2).collect()
     }
     want_hits = {}
     for q, nbr in exact:
@@ -2776,11 +2776,11 @@ def test_weighted_sample_stratified_per_group(spark, t):
 
 
 def test_ann_search_parity_with_ivf_topk_nprobe(t):
-    """ann_search and ivf_topk_nprobe share probe semantics (same
+    """ann_search and ivf_topk at nprobe=2 share probe semantics (same
     rounding, same tie-breaks): probing the SAME index with corpus
     rows as the query table, ann_search's rank-1 hit is the query
-    itself (cos 1.0) and ranks 2..k+1 reproduce ivf_topk_nprobe's
-    1..k exactly — pinning the two implementations together so a
+    itself (cos 1.0) and ranks 2..k+1 reproduce ivf_topk's 1..k
+    exactly — pinning the two implementations together so a
     change to one cannot silently drift the other (r9 review)."""
     from pyspark.sql import functions as F
 
@@ -2789,8 +2789,8 @@ def test_ann_search_parity_with_ivf_topk_nprobe(t):
     assigned = similarity.ivf_assign(emb, cents).localCheckpoint()
     via_nprobe = {
         (r.query_id, r.rank): (r.neighbor_id, r.cos_sim)
-        for r in similarity.ivf_topk_nprobe(
-            emb, n_queries=10, k=3, nprobe=2, cents=cents
+        for r in similarity.ivf_topk(
+            emb, n_queries=10, k=3, cents=cents, nprobe=2
         ).collect()
     }
     queries = emb.where("vec_id < 10").select(
@@ -3189,7 +3189,7 @@ def test_bq_rerank_recall_on_clustered_corpus(spark):
     rer = {
         r.query_id: r.recall_ppm
         for r in similarity.pq_recall(
-            emb, similarity.ann_bq_rerank(emb, short, q, 10), 10
+            emb, similarity.ann_flat_rerank(emb, short, q, 10), 10
         ).collect()
     }
     cache.release()

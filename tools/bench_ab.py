@@ -5,10 +5,11 @@ Why this exists: normalized round-over-round comparison broke in
 round 13. The same r12-close tree ran a measured 1.21x slower than at
 its own gate while the single-threaded calibration probe read
 IDENTICAL (0.142 vs 0.143) — the probe is blind to multi-core /
-memory-bandwidth / co-tenant drift, so `queries_norm_cpu` deltas
+memory-bandwidth / co-tenant drift, so probe-normalised deltas
 manufactured a 16-query false regression that four alternating
 worktree runs disproved in an hour (`tools/gatelogs/
-JUDGE_AB_r13_{old,new}_{1,2}.json`). The only drift-proof
+JUDGE_AB_r13_{old,new}_{1,2}.json`); bench.py has since dropped its
+probe-normalised fields. The only drift-proof
 round-over-round comparison is the controlled experiment itself:
 BOTH trees, SAME machine, SAME hour, runs ALTERNATED so anything
 slower than one run hits both trees symmetrically.
@@ -19,8 +20,9 @@ This tool mechanizes exactly that:
    commit, `round N: ...`) into a git worktree;
 2. run the FULL bench alternately — old, new, old, new (N runs per
    tree, each a fresh `python bench.py` subprocess in its tree);
-3. compare best-of-N RAW seconds per query over the intersection of
-   the two trees' emitted `common_set`;
+3. compare best-of-N RAW seconds per query (`queries`, with the
+   per-query `queries_spread`) over the intersection of the two
+   trees' emitted `common_set`;
 4. write the verdict JSON (per-run files + summary) into
    `tools/gatelogs/`.
 

@@ -12,8 +12,11 @@ Usage: python tools/oracle_check.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -76,9 +79,15 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    # the index catalog entries store member tables under fixed names:
+    # a warehouse of this run's own keeps concurrent gate runs apart
+    warehouse = tempfile.mkdtemp(prefix="gate-warehouse-")
+    atexit.register(shutil.rmtree, warehouse, True)
+
     spark = (
         SparkSession.builder.master("local[8]")
         .appName("oracle-check")
+        .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", "8g")

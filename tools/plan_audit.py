@@ -8,9 +8,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import atexit
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -154,15 +157,11 @@ MARKERS = (
 # ---------------------------------------------------------------------------
 
 #: BroadcastNestedLoopJoin is tolerated only where it is the declared
-#: design (brute-force cosine baseline, IVF probe match, literal tiny
-#: cross joins).
+#: design (the brute-force cosine baseline, one-row totals broadcasts,
+#: literal tiny cross joins).
 NLJ_OK = frozenset({
     "embed_cosine_topk",
-    "ivf_topk_ann",
-    "ivf_topk_ann_nprobe2",  # same 16-row centroid broadcast as nprobe=1
-    "semantic_dedup",  # same 16-row centroid-assignment broadcast
     "sketch_theta_overlap",  # literal 1x1 join of two sketch rows
-    "ann_lsh_bucketed",
     "join_cross",  # literal CROSS JOIN of two broadcast-size dims
     "mixture_sample",  # 1-row totals aggregate broadcast onto rates
     "tfidf_top_terms",  # 1-row corpus-count broadcast onto the idf frame
@@ -180,92 +179,39 @@ NLJ_OK = frozenset({
     "bm25_search",
     # r9: the batch form's identical one-row stats broadcast
     "bm25_search_many",
-    # r8: composition of the two declared-NLJ ANN sides (brute-force
-    # baseline + IVF centroid broadcasts) into the recall contract
+    # the ANN recall contracts: the exact side is the declared
+    # brute-force baseline — bounded query rows broadcast onto the
+    # corpus (the embed_cosine_topk shape); the index side picks its
+    # probe lists against literal centroids and joins on centroid_id
     "ann_ivf_recall",
-    # r8: centroid broadcast join + 1-row total broadcast
-    "ivf_cluster_profile",
+    "ann_ivf_recall_kmeans",
+    "ann_pq_recall",
+    "ann_ivfpq_recall",
+    "ann_bq_recall",
+    "ann_ivfbq_recall",
+    "ann_ivfpq_residual_recall",
     # r8: 1-row totals broadcast onto the n_shards-row aggregate
     "shard_balance",
-    # r9 k-means family: every NLJ is the bounded n_list-row centroid
-    # frame broadcast onto the corpus (the ivf_topk_ann design) or a
-    # 1-row totals broadcast; the objective trace runs one such
-    # broadcast per Lloyd round, all bounded by the n_list PARAMETER
-    "kmeans_convergence",
-    "ann_ivf_recall_kmeans",
-    "ivf_kmeans_profile",
-    # r10: the 1-row drift-report frame crossJoin-broadcast onto the
-    # n_list-row per-centroid aggregate (both sides bounded)
+    # the index appends: the 1-row drift-report frame crossJoin-
+    # broadcast onto the n_list-row per-centroid aggregate (both
+    # sides bounded)
     "ann_index_append",
-    # r10 PQ recall contract: the exact side is brute_force-shaped —
-    # bounded query rows (vec_id < 3) broadcast-NLJ onto the corpus,
-    # the accepted ann_ivf_recall shape
-    "ann_pq_recall",
+    "ivfpq_index_append",
+    "ivfbq_index_append",
+    "cascade_index_append",
     # r10: the 1-row new-terms aggregate crossJoin-broadcast onto
     # the 1-row batch-vocab aggregate (both sides single rows)
     "text_index_drift",
-    # r10 IVFPQ composition: every NLJ is a bounded frame — the
-    # n_list-row centroid broadcast of the kmeans family (training +
-    # coarse assignment), the nq-row query cross in probe-list
-    # selection (ivfpq_probe_lists), and for the recall contract the
-    # accepted ann_ivf_recall exact-baseline shape (bounded query
-    # rows broadcast onto the corpus)
-    "ann_ivfpq_adc",
-    "ann_ivfpq_search",
-    "ann_ivfpq_recall",
-    "ivfpq_index_search",
-    "ivfpq_list_profile",
-    # r10: frozen-quantizer batch assignment (bounded centroid
-    # broadcast) + the 1-row drift-report crossJoin — the
-    # ann_index_append shape over both quantizers
-    "ivfpq_index_append",
-    # r10: the ivfpq probe shapes + the allow-list semi-join
-    "ann_ivfpq_filtered",
     # r10 binary quantization: the bounded query-codes broadcast onto
     # the packed-codes scan (the embed_cosine_topk shape, integer
-    # scoring); the recall contract adds the accepted exact-baseline
-    # broadcast
+    # scoring)
     "ann_bq_topk",
     "ann_bq_search",
-    "ann_bq_recall",
-    # r10 MMR: the candidate build is the declared brute-force
-    # baseline; each greedy step joins two BOUNDED frames (shortlist
-    # x selected set)
-    "mmr_diverse_topk",
     # r10: the semantic leg is the declared brute-force baseline
     # (embed_cosine_topk's bounded-query broadcast NLJ); the lexical
     # leg carries bm25_search_many's 1-row stats broadcast; fusion
     # itself is bounded frames only
     "hybrid_search_rrf",
-    # r11 IVF+BQ composition: the same bounded shapes as the IVFPQ
-    # family — n_list-row centroid broadcasts (kmeans training +
-    # coarse assignment), the nq-row query cross in probe-list
-    # selection, and for the recall contract the accepted
-    # exact-baseline broadcast (bounded query rows onto the corpus)
-    "ann_ivfbq_hamming",
-    "ann_ivfbq_search",
-    "ann_ivfbq_recall",
-    "ivfbq_index_search",
-    # r11: frozen-centroid batch assignment (bounded broadcast) + the
-    # 1-row drift-report crossJoin — the ivfpq_index_append shape
-    "ivfbq_index_append",
-    # r11 cascade funnel: composes the reviewed ivfbq shapes (centroid
-    # broadcasts, nq-row probe cross) with bounded-pair PQ narrowing —
-    # every NLJ is a bounded frame
-    "ann_cascade_search",
-    # r11 residual IVFADC: the same bounded shapes (n_list centroid
-    # broadcasts in coarse training/assignment + residual anchoring,
-    # the nq-row probe cross, the exact-baseline recall broadcast)
-    "ann_ivfpq_residual_search",
-    "ann_ivfpq_residual_recall",
-    "ivfpq_residual_calibration",
-    # r12 cascade ENGINE lifecycle: the ivfbq serving shapes — the
-    # n_list-row centroid broadcast in probe-list selection (nq-row
-    # query cross) and the bounded-pair narrowing broadcasts; the
-    # append adds the frozen-quantizer batch assignment + 1-row
-    # drift crossJoin (the ivfpq_index_append shape)
-    "cascade_index_search",
-    "cascade_index_append",
 })
 
 #: Tables whose repeated FileScan in one plan is a 100 TB scale killer.
@@ -556,8 +502,14 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    # the index catalog entries store member tables under fixed names:
+    # a warehouse of this run's own keeps concurrent gate runs apart
+    warehouse = tempfile.mkdtemp(prefix="gate-warehouse-")
+    atexit.register(shutil.rmtree, warehouse, True)
+
     spark = (
         SparkSession.builder.master("local[8]")
+        .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
